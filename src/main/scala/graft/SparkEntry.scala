@@ -165,7 +165,7 @@ object SparkEntry {
     // a low-cardinality window — at corpus scale the scale path is the
     // custom TopKPerKey operator (q_topk_custom) whose map-side partial
     // bounds the shuffle to k rows/key/partition and streams k-heaps
-    // instead of sorting (DbgTopKAB on a 20M-row skewed 5-key input:
+    // instead of sorting (SCALE.md: on a 20M-row skewed 5-key input,
     // 0.34s vs 1.95s for the built-in WindowGroupLimit plan vs 29.5s/20M
     // shuffled records for the naive window plan).
     "q_topk" -> ((s: SparkSession, dir: String) => {

@@ -33,19 +33,6 @@ object Pipeline {
     spark.read.format("graft.sources.PagesDataSource")
       .option("path", sfDir).load()
 
-  /** The typed-Dataset formulation of the same table. NOT a production
-    * path (Catalyst cannot prune or push through the map) — kept as the
-    * independent cross-check reference for the connector (SparkJobsSpec
-    * asserts row-for-row equality). */
-  def pagesTyped(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select($"doc_id", $"text", $"lang")
-      .as[(Long, String, String)]
-      .map { case (id, text, lang) => Synth.pageFor(id, text, lang) }
-      .toDF()
-  }
-
   /** Deterministically amplified pages table for benchmarking: each seed doc
     * yields `factor` distinct pages (ids spread so synth variants and the
     * PDF route are hit proportionally). The driver's documents table tops
@@ -68,9 +55,12 @@ object Pipeline {
     * free of the case-class-encoder serialize hop a Scala UDF pays per row
     * on this hottest path. */
   def extracted(pages: DataFrame): DataFrame = {
-    graft.plans.ExtractDoc.register(pages.sparkSession)
+    import org.apache.spark.sql.graftbridge.GraftBridge
+    val doc = GraftBridge.column(graft.plans.ExtractDoc(
+      GraftBridge.expression(col("html")), GraftBridge.expression(col("text")),
+      GraftBridge.expression(col("warc_ts"))))
     pages
-      .withColumn("r", expr("graft_extract_doc(html, text, warc_ts)"))
+      .withColumn("r", doc)
       .select(col("url"), col("warc_ts"), col("lang"),
         col("r.extracted_text").as("extracted_text"),
         col("r.spans").as("spans"),
@@ -171,14 +161,6 @@ object Pipeline {
     val domain = domainOf
     val isHot = if (hot.isEmpty) lit(false) else domain.isin(hot.toSeq: _*)
     pmod(when(isHot, xxhash64(col("url"))).otherwise(xxhash64(domain)), lit(nBuckets))
-  }
-
-  /** Repartition pages into `nBuckets` salted buckets. */
-  def repartitionSalted(pages: DataFrame, nBuckets: Int,
-      share: Double = defaultHotThresholdShare): DataFrame = {
-    val hot = hotDomains(pages, share).keySet
-    pages.withColumn("bucket", saltedBucket(hot, nBuckets))
-      .repartition(nBuckets, col("bucket"))
   }
 
   // ---- metrics sidecar (A9-A11 analog + BASELINE.json lineage) -------------

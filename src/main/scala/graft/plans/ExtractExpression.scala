@@ -1,76 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression wrapper for the extraction kernel — the
-  * optional-polish path named in SURVEY.md §4: explicit null handling and
-  * `CodegenFallback` (the kernel is a black box to codegen, but staying an
-  * `Expression` keeps it inside the Project so column pruning, filter
-  * pushdown around it, and WholeStageCodegen of the surrounding operators
-  * all hold; a plain Scala UDF achieves the same plan shape, this variant
-  * removes the UDF encoder/decoder hop for the String output path).
-  *
-  * Null semantics mirror the kernel's R1 error isolation: a null html falls
-  * back to the text column; both null -> empty string (never null output,
-  * never a thrown error).
-  */
-case class ExtractText(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_extract_text"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (BINARY, STRING), got (${left.dataType}, ${right.dataType})")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val html = left.eval(input)
-    val text = right.eval(input)
-    val textStr = if (text == null) "" else text.toString
-    val htmlBytes = if (html == null) Array.emptyByteArray else html.asInstanceOf[Array[Byte]]
-    UTF8String.fromString(
-      graft.extract.Extractor.extract(htmlBytes, textStr).extractedText)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ExtractText =
-    copy(left = newLeft, right = newRight)
-}
-
-object ExtractText {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[ExtractText].getName, null, "graft_extract_text",
-    "_FUNC_(html, text) - main-content extraction of an html/pdf binary " +
-      "payload, falling back to the text column.", "")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_extract_text(html, text) takes 2 arguments")
-    ExtractText(exprs.head, exprs(1))
-  }
-
-  /** Register on an existing session (tests / notebooks). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_extract_text", builder, "built-in")
-}
-
 /** The HOT-PATH extraction expression: the whole kernel result as ONE
-  * Catalyst struct — `graft_extract_doc(html, text, warc_ts)`. This is what
-  * `Pipeline.extracted` plans (round-3: replaces the Scala UDF, removing the
-  * case-class-encoder serialize hop per row on the hottest path; null
-  * handling is explicit below instead of buried in the encoder).
+  * Catalyst struct, shown in plans as `graft_extract_doc(html, text,
+  * warc_ts)`. `Pipeline.extracted` builds it as a typed Column through
+  * `GraftBridge.column` (there is no SQL function name to call). It
+  * replaces a Scala UDF, removing the case-class-encoder serialize hop per
+  * row on the hottest path; null handling is explicit below instead of
+  * buried in the encoder.
   *
   * The kernel is a black box to codegen (`CodegenFallback`), but staying an
   * `Expression` keeps it inside the Project: column pruning, pushdown of
@@ -166,38 +109,5 @@ object ExtractDoc {
     row.update(19, u(r.meta.revision)); row.update(20, u(r.meta.lastPrinted))
     row.update(21, u(r.meta.application)); row.update(22, u(r.meta.company))
     row
-  }
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[ExtractDoc].getName, null, "graft_extract_doc",
-    "_FUNC_(html, text, warc_ts) - full main-content extraction of an " +
-      "html/pdf binary payload as a struct (text, spans, links, metadata, " +
-      "structure scores, error).", "")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 3, "graft_extract_doc(html, text, warc_ts) takes 3 arguments")
-    ExtractDoc(exprs(0), exprs(1), exprs(2))
-  }
-
-  /** Register on an existing session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_extract_doc", builder, "built-in")
-}
-
-/** spark-submit registration hook:
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_extract_text"),
-      ExtractText.info, ExtractText.builder))
-    ext.injectFunction((FunctionIdentifier("graft_extract_doc"),
-      ExtractDoc.info, ExtractDoc.builder))
-    ext.injectFunction((FunctionIdentifier("graft_fix_url"),
-      FixUrl.info, FixUrl.builder))
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      CosineSim.info, CosineSim.builder))
-    ext.injectFunction((FunctionIdentifier("graft_simhash64"),
-      Simhash64Fn.info, Simhash64Fn.builder))
   }
 }

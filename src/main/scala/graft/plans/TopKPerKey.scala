@@ -131,8 +131,8 @@ final case class TopKPerKeyExec(
     copy(child = newChild)
 }
 
-/** Planner strategy mapping the logical node to the exec (injectable via
-  * GraftExtensions or `spark.experimental.extraStrategies`). */
+/** Planner strategy mapping the logical node to the exec (added to
+  * `spark.experimental.extraStrategies` by `GraftBridge.topKPerKey`). */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyNode(g, o, k, child) =>

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -18,11 +18,10 @@ import org.apache.spark.sql.types._
   * double accumulation in element order over min(len) elements,
   * dot / (sqrt(dot(a,a)) * sqrt(dot(b,b))); both-zero vectors yield NaN
   * either way. Null ARRAY inputs are null-propagated. A null ELEMENT
-  * yields NaN (round-5 review: this is the one expression registered for
-  * arbitrary user SQL, and parquet array columns are containsNull=true by
-  * default, so a strict rejection like Simhash64's would refuse every
-  * real embedding column — NaN is the honest "undefined similarity" and
-  * every threshold comparison drops it). The null guard is generated only
+  * yields NaN (parquet array columns are containsNull=true by default, so
+  * a strict rejection like Simhash64's would refuse every real embedding
+  * column — NaN is the honest "undefined similarity" and every threshold
+  * comparison drops it). The null guard is generated only
   * when an input's type says nulls are possible.
   */
 case class CosineSim(left: Expression, right: Expression)
@@ -289,8 +288,8 @@ case class Simhash64(child: Expression)
   // containsNull inputs are REJECTED (ADVICE r4): compute reads getLong on
   // every slot, so a null element would read undefined garbage and silently
   // corrupt the fingerprint. The internal pipelines always feed
-  // transform(tokens, xxhash64) — containsNull=false — and arbitrary user
-  // SQL now gets an analysis error instead of a wrong answer.
+  // transform(tokens, xxhash64) — containsNull=false — and any other
+  // caller gets an analysis error instead of a wrong answer.
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
@@ -409,36 +408,4 @@ object CentroidArgsort {
     }
     idx
   }
-}
-
-object CosineSim {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[CosineSim].getName, null, "graft_cosine",
-    "_FUNC_(a, b) - cosine similarity of two FLOAT/DOUBLE embedding arrays " +
-      "(double accumulation, fused codegen loop).", "")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_cosine(a, b) takes 2 arguments")
-    CosineSim(exprs.head, exprs(1))
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", builder, "built-in")
-}
-
-object Simhash64Fn {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[Simhash64].getName, null, "graft_simhash64",
-    "_FUNC_(hashes) - 64-bit SimHash of an ARRAY<BIGINT> of token hashes " +
-      "(single fused pass over all 64 bit counters).", "")
-
-  val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, "graft_simhash64(hashes) takes 1 argument")
-    Simhash64(exprs.head)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", builder, "built-in")
 }

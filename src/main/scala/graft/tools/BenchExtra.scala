@@ -12,6 +12,7 @@ import org.apache.spark.sql.SparkSession
   * Usage: `sbt "runMain graft.tools.BenchExtra <mode> [args...]"`
   *   split                         phase split of the extracted-table commit
   *   plans <outDir> <suffix> [q..] write .explain("formatted") per query
+  *   dump  <outDir> [q..]          write each query's output as parquet
   *   time  [q...]                  Bench-identical count() timing
   *   noop  [q...]                  noop-sink timing (full-column compute)
   * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench.
@@ -215,11 +216,24 @@ object BenchExtra {
         }
 
       case "dump" =>
-        // materialize named query outputs to parquet (Verify-style) for
-        // before/after byte-diffs when a declared query is reformulated
+        // materialize query outputs (all of them by default) to parquet
+        // (Verify-style) for before/after diffs when a declared query is
+        // reformulated. Row order within the single coalesced partition
+        // follows shuffle fetch order and varies between runs of the same
+        // code, so compare the rows as multisets: equal bytes prove equal
+        // output, unequal bytes prove nothing.
         val outDir = java.nio.file.Paths.get(args(1))
+        val known = graft.SparkEntry.queries.keys.toSeq.sorted
+        val names = if (args.length > 2) args.drop(2).toSeq else known
+        val unknown = names.filterNot(known.contains)
+        if (unknown.nonEmpty) {
+          System.err.println(s"unknown queries: ${unknown.mkString(", ")}\n" +
+            s"known queries: ${known.mkString(", ")}")
+          s.stop()
+          sys.exit(2)
+        }
         java.nio.file.Files.createDirectories(outDir)
-        args.drop(2).foreach { q =>
+        names.foreach { q =>
           graft.SparkEntry.queries(q)(s, sfDir)
             .coalesce(1).write.mode("overwrite")
             .parquet(outDir.resolve(q).toString)

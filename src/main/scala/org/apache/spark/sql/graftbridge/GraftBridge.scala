@@ -4,8 +4,13 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrd
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
 import graft.plans.{TopKPerKeyNode, TopKStrategy}
 
-/** Bridge into Spark's private[sql] Dataset constructor so the custom
-  * TopKPerKey logical node is exposed as a DataFrame -> DataFrame operator.
+/** The single construction path for every custom Catalyst node. Custom
+  * expressions (`ExtractDoc`, `CosineSim`, `DotProduct`, `Simhash64`,
+  * `MinhashSigs`, `HyperplaneSigs`, `CentroidArgsort`) enter a plan as
+  * typed Columns, `column(Node(expression(..)))`; none is registered under
+  * a SQL function name. The custom TopKPerKey logical node is exposed as a
+  * DataFrame -> DataFrame operator through Spark's private[sql] Dataset
+  * constructor, and its planner strategy is registered on first use.
   * Lives under org.apache.spark.sql.* for access scope only — the standard
   * pattern for Catalyst extension libraries.
   */
