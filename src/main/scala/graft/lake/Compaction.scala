@@ -6,55 +6,40 @@ import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction for a committed table (the Iceberg `rewriteDataFiles`
   * analog — the first operational gap a long-lived 100 TB deployment hits
-  * after resume correctness): every incremental/chunked commit and every
-  * dynamic-partition write task adds files to a bucket, and a year of
-  * appends turns each bucket into thousands of tiny parquet files whose
-  * open/footer cost dominates scans.
+  * after resume correctness): every incremental commit and every appended
+  * write adds files to a bucket, and a year of appends turns each bucket
+  * into thousands of tiny parquet files whose open/footer cost dominates
+  * scans.
   *
-  * `compact` rewrites any bucket holding more than `maxFiles` data files
-  * into `targetFiles` files and re-commits it through the NORMAL snapshot
-  * protocol — single-writer, like the rest of the log (ADVICE r4: the swap
+  * `compact` re-stages every bucket holding more than `maxFiles` data
+  * files through [[ResumableRun.stageAndCommit]] — the same hash-distributed
+  * staging job as a normal run, so each rewritten bucket is one file with
+  * freshly observed stats — and re-commits it through the NORMAL snapshot
+  * protocol, single-writer like the rest of the log (ADVICE r4: the swap
   * is move-aside + move-in, so a concurrent lister could still catch a
   * brief not-found window between the two renames; readers must resolve
-  * paths from a manifest before or after the commit, never during). The
-  * commit appends a new manifest version like any other commit. Time travel: all
-  * manifests remain readable, but versions older than the compaction now
-  * resolve to the compacted files (the log keeps manifests, not data copies
-  * — the documented SnapshotLog caveat, same trade Iceberg makes once old
-  * files are expired). Pair with `SnapshotLog.expireManifests` to bound
-  * manifest growth.
+  * paths from a manifest before or after the commit, never during). Each
+  * commit appends a new manifest version. Time travel: all manifests remain
+  * readable, but versions older than the compaction now resolve to the
+  * compacted files (the log keeps manifests, not data copies — the
+  * documented SnapshotLog caveat, same trade Iceberg makes once old files
+  * are expired). Pair with `SnapshotLog.expireManifests` to bound manifest
+  * growth.
   */
 object Compaction {
 
   /** Compact over-fragmented buckets; returns the buckets rewritten. */
-  def compact(spark: SparkSession, tableDir: String,
-      maxFiles: Int = 1, targetFiles: Int = 1): Vector[Int] = {
+  def compact(spark: SparkSession, tableDir: String, maxFiles: Int = 1): Vector[Int] = {
     val log = new SnapshotLog(tableDir)
     log.init()
     log.sweepStaleStages()
     val todo = log.committedBuckets().toVector.sorted
       .filter(b => parquetFiles(log.bucketDataDir(b)).size > maxFiles)
-    // Round 6 (guide §2.6): the per-bucket rewrite jobs are independent —
-    // run a few concurrently so one bucket's task tail doesn't idle the
-    // cluster between jobs. Staging paths are computed UP FRONT (they
-    // embed latestVersion, which the commit loop advances) and the
-    // manifest commits stay strictly sequential: the snapshot log is
-    // single-writer by contract.
-    val staged = todo.map(b => b -> log.stagingDir(b))
-    if (staged.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(3, staged.size))
-      try {
-        staged.map { case (b, dir) =>
-          pool.submit(new Runnable {
-            def run(): Unit =
-              spark.read.parquet(log.bucketDataDir(b).toString)
-                .coalesce(targetFiles)
-                .write.mode("overwrite").parquet(dir.toString)
-          })
-        }.foreach(_.get())
-      } finally pool.shutdown()
-      staged.foreach { case (b, dir) => log.commitBucket(b, dir) }
+    todo.grouped(ResumableRun.maxObservedBuckets).foreach { chunk =>
+      // partition discovery under data/ yields the `bucket` column
+      val rows = spark.read.option("basePath", log.dataDir.toString)
+        .parquet(chunk.map(b => log.bucketDataDir(b).toString): _*)
+      ResumableRun.stageAndCommit(log, rows, chunk)
     }
     todo
   }

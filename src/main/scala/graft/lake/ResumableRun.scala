@@ -9,42 +9,32 @@ import graft.pipeline.Pipeline
   * bucket — the BASELINE.json requirement "resumes from Iceberg snapshot
   * checkpoints so a killed run restarts at partition granularity".
   *
-  * Scale note: uncommitted buckets are extracted in chunks of
-  * `chunkBuckets`; each chunk is ONE job — a single input scan whose output
-  * is dynamic-partition-written to `_tmp/stage-<v>/bucket=N/`, then each
-  * staged bucket dir is atomically committed in its own snapshot. The write
-  * is a dynamic partition write with NO shuffle: each task streams rows to
-  * at most chunk-size open files.
-  *
-  * Crash-resume granularity vs scan count (ADVICE r3): commits land only
-  * AFTER a chunk's staging job finishes, so a run killed mid-job loses at
-  * most one chunk of work — but each chunk re-scans the input (the bucket
-  * is a url-hash, which no source can push down). Pick the trade per table:
-  *   - chunkBuckets = nBuckets (default): one scan total, resume
-  *     granularity = the whole run. Right when the input scan is expensive
-  *     relative to checkpoint value (or the table is temp/rebuilt per app,
-  *     e.g. Pipeline.extractedCommitted).
-  *   - chunkBuckets ~ 4*executors: resume granularity = one chunk at the
-  *     cost of nBuckets/chunkBuckets scans. Right for long multi-hour runs
-  *     over a stored corpus where a kill must not forfeit hours.
-  * Stale `stage-*` dirs from previously killed runs are swept before
-  * staging (the next run's stagingRoot has a new version suffix, so
-  * leftovers would otherwise leak forever).
+  * Every lake write goes through [[stageAndCommit]]: ONE job per chunk of
+  * at most [[maxObservedBuckets]] buckets hash-distributes the chunk's rows
+  * by bucket and dynamic-partition-writes them to `_tmp/stage-<v>/bucket=N/`
+  * (one file per bucket), computing each bucket's manifest stats in the
+  * same pass via observe(); then each staged bucket dir is atomically
+  * committed in its own snapshot. A run killed mid-job loses at most one
+  * chunk of work; each chunk scans the input once (the bucket is a
+  * url-hash, which no source can push down), so a table of up to 64
+  * buckets is written by a single scan. [[Compaction]] re-stages committed
+  * buckets through the same path. Stale `stage-*` dirs from previously
+  * killed runs are swept before staging (the next run's stagingRoot has a
+  * new version suffix, so leftovers would otherwise leak forever).
   */
 object ResumableRun {
 
-  /** Optional phase-timing hook for benchmarking (tools/BenchExtra
-    * `split` mode): called with (phase, seconds) after each internal phase
-    * of a run. Null (the default) disables timing entirely — production
-    * paths never set it, so the hot path pays one volatile read per phase,
-    * not per row. */
+  /** Optional phase-timing hook for benchmarking (perfbench `--trace 1`,
+    * BenchExtra `scale`): called with (phase, seconds) after each internal
+    * phase of a run. Null (the default) disables timing entirely —
+    * production paths never set it, so the hot path pays one volatile read
+    * per phase, not per row. */
   @volatile private[graft] var onPhase: (String, Double) => Unit = null
 
-  /** Widest chunk whose per-bucket manifest stats are computed inline with
-    * the staging write via observe() (6 conditional aggregates per bucket
-    * in one flat CollectMetrics); wider chunks fall back to the staged-
-    * parquet re-read so codegen never sees many thousands of aggregate
-    * expressions. */
+  /** Buckets per staging job. Each bucket's manifest stats are 6
+    * conditional aggregates in the job's one flat CollectMetrics node, so
+    * this width bounds that node's codegen (many thousands of aggregate
+    * expressions would bloat it); it is also the crash-loss bound above. */
   val maxObservedBuckets: Int = 64
 
   @inline private def phase[T](name: String)(f: => T): T = {
@@ -60,11 +50,9 @@ object ResumableRun {
 
   /** Run (or resume) extraction into `tableDir`. `maxBuckets` caps how many
     * uncommitted buckets to process this invocation (used to simulate a
-    * killed run in tests); `chunkBuckets` sets the commit granularity (see
-    * object scaladoc). `bucketExpr` is the table's PARTITION SPEC — a pure
-    * Column mapping each row to [0, nBuckets) over columns present on BOTH
-    * the input and the extracted output (url, warc_ts, lang — it is
-    * re-evaluated on the output so the kernel column set stays clean); the
+    * killed run in tests). `bucketExpr` is the table's PARTITION SPEC — a
+    * pure Column mapping each row to [0, nBuckets) over columns present on
+    * BOTH the input and the extracted output (url, warc_ts, lang); the
     * default is the skew-safe salted url-hash. Choose a spec that CLUSTERS
     * the stats columns (e.g. a domain- or lang-derived bucket) when
     * manifest-stats pruning ([[readTablePruned]]) matters for the table's
@@ -73,7 +61,6 @@ object ResumableRun {
     * the buckets processed this run. */
   def run(spark: SparkSession, pages: DataFrame, tableDir: String,
       nBuckets: Int, maxBuckets: Int = Int.MaxValue,
-      chunkBuckets: Int = Int.MaxValue,
       bucketExpr: Option[org.apache.spark.sql.Column] = None): Vector[Int] = {
     val log = new SnapshotLog(tableDir)
     val todo = phase("log_init") {
@@ -87,61 +74,56 @@ object ResumableRun {
       bucketExpr.getOrElse(
         Pipeline.saltedBucket(Pipeline.hotDomains(pages).keySet, nBuckets))
     }
-    todo.grouped(math.max(1, chunkBuckets)).foreach { chunk =>
-      stageAndCommit(spark, pages, log, bucket, nBuckets, chunk)
+    todo.grouped(maxObservedBuckets).foreach { chunk =>
+      val input =
+        if (chunk.size == nBuckets) pages
+        else pages.filter(bucket.isin(chunk.map(Integer.valueOf): _*))
+      // The bucket is a pure function of input columns, so it is
+      // (re)computed on the extracted OUTPUT — the kernel column set stays
+      // clean and the input needs no bucket column threaded through the
+      // kernel expression.
+      stageAndCommit(log, Pipeline.extracted(input).withColumn("bucket", bucket), chunk)
     }
     todo
   }
 
-  private def stageAndCommit(spark: SparkSession, pages: DataFrame,
-      log: SnapshotLog, bucket: org.apache.spark.sql.Column, nBuckets: Int,
+  /** Stage `rows` (carrying an int `bucket` column, every value in `chunk`)
+    * in one job and commit each bucket of `chunk` in its own snapshot with
+    * the min/max stats observed on the rows it wrote. A bucket with no rows
+    * commits an empty schema-bearing parquet write and no stats. */
+  private[lake] def stageAndCommit(log: SnapshotLog, rows: DataFrame,
       chunk: Vector[Int]): Unit = {
-    // The bucket is a pure function of input columns, so it is (re)computed
-    // on the extracted OUTPUT — the kernel column set stays clean and the
-    // input needs no bucket column threaded through the kernel expression.
-    val input =
-      if (chunk.size == nBuckets) pages
-      else pages.filter(bucket.isin(chunk.map(Integer.valueOf): _*))
+    require(chunk.size <= maxObservedBuckets,
+      s"${chunk.size} buckets exceed one staging job's $maxObservedBuckets")
+    val spark = rows.sparkSession
     val stageRoot = log.stagingRoot()
     import org.apache.spark.sql.functions.{col, min, max, when}
-    val extracted = Pipeline.extracted(input)
-      .withColumn("bucket", bucket)
-    // Per-bucket (url, lang, warc_ts) min/max for the manifest (VERDICT r4
-    // #6). Round 6 (VERDICT r5 #1): folded into the STAGING JOB via
-    // observe() — the stats are an aggregate of the very rows the job
-    // writes, so a CollectMetrics node on the write computes them in the
-    // same pass instead of re-reading the staged parquet (measured 1.7-3.9s
-    // of pure re-scan per commit at sf0.1). Conditional min/max per bucket
-    // keeps it one flat (ungrouped) aggregate, which is all observe()
-    // supports; 6 aggregates per bucket is fine for commit-sized chunks but
-    // would bloat codegen for a many-thousand-bucket chunk, so chunks wider
-    // than `maxObservedBuckets` keep the old staged-parquet re-read.
-    val useObserve = chunk.size <= maxObservedBuckets
-    val obs = if (useObserve) Some(org.apache.spark.sql.Observation()) else None
-    val staged = obs match {
-      case Some(o) =>
-        val exprs = chunk.flatMap { b =>
-          Seq(min(when(col("bucket") === b, col("url"))).as(s"u0_$b"),
-            max(when(col("bucket") === b, col("url"))).as(s"u1_$b"),
-            min(when(col("bucket") === b, col("lang"))).as(s"l0_$b"),
-            max(when(col("bucket") === b, col("lang"))).as(s"l1_$b"),
-            min(when(col("bucket") === b, col("warc_ts"))).as(s"t0_$b"),
-            max(when(col("bucket") === b, col("warc_ts"))).as(s"t1_$b"))
-        }
-        extracted.observe(o, exprs.head, exprs.tail: _*)
-      case None => extracted
+    // Per-bucket (url, lang, warc_ts) min/max for the manifest, folded into
+    // the STAGING JOB: the stats aggregate the very rows the job writes, so
+    // a CollectMetrics node on the write computes them in the same pass
+    // instead of re-reading the staged parquet (measured 1.7-3.9s of pure
+    // re-scan per commit at sf0.1). Conditional min/max per bucket keeps it
+    // one flat (ungrouped) aggregate, which is all observe() supports.
+    val obs = org.apache.spark.sql.Observation()
+    val exprs = chunk.flatMap { b =>
+      Seq(min(when(col("bucket") === b, col("url"))).as(s"u0_$b"),
+        max(when(col("bucket") === b, col("url"))).as(s"u1_$b"),
+        min(when(col("bucket") === b, col("lang"))).as(s"l0_$b"),
+        max(when(col("bucket") === b, col("lang"))).as(s"l1_$b"),
+        min(when(col("bucket") === b, col("warc_ts"))).as(s"t0_$b"),
+        max(when(col("bucket") === b, col("warc_ts"))).as(s"t1_$b"))
     }
     phase("stage_write") {
       // Hash-distribute by bucket before the dynamic-partition write — the
-      // Iceberg write.distribution-mode=hash analog (round 6). Without it
-      // every scan task streams rows to up to chunk-size open files, so the
-      // staged file count is tasks x buckets (measured 4x the write time at
-      // sf0.1 from per-file writer setup alone, and at corpus scale a
-      // small-files explosion on the table). One payload shuffle keyed on
-      // the partition column buys files-per-bucket ~ 1; partition count =
-      // the chunk's bucket count, so the layout is scale-derived, not a
-      // tuned constant.
-      staged.repartition(chunk.size, col("bucket"))
+      // Iceberg write.distribution-mode=hash analog. Without it every task
+      // streams rows to up to chunk-size open files, so the staged file
+      // count is tasks x buckets (measured 4x the write time at sf0.1 from
+      // per-file writer setup alone, and at corpus scale a small-files
+      // explosion on the table). One payload shuffle keyed on the partition
+      // column buys one file per bucket; partition count = the chunk's
+      // bucket count, so the layout is scale-derived, not a tuned constant.
+      rows.observe(obs, exprs.head, exprs.tail: _*)
+        .repartition(chunk.size, col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(stageRoot.toString)
     }
     // warc_ts bounds: min/max the RAW timestamp (an absolute instant —
@@ -156,54 +138,32 @@ object ResumableRun {
     val utcFmt = java.time.format.DateTimeFormatter
       .ofPattern("yyyy-MM-dd HH:mm:ss", java.util.Locale.ROOT)
       .withZone(java.time.ZoneOffset.UTC)
-    def fmtAny(v: Any): String = v match {
+    // null-safe and independent of spark.sql.datetime.java8API.enabled
+    // (Instant vs Timestamp external type); an all-NULL column in a bucket
+    // yields a null bound — recorded as "" (= unknown, never prunes)
+    def fmt(v: Any): String = v match {
       case null => ""
       case t: java.sql.Timestamp => utcFmt.format(t.toInstant)
       case i: java.time.Instant => utcFmt.format(i)
       case other => other.toString
     }
-    // an all-NULL column in a bucket yields a null bound — record it as ""
-    // (= unknown, never prunes) instead of NPE-ing the commit
-    def str(v: Any): String = if (v == null) "" else v.toString
     val stats: Map[Int, BucketStats] = phase("stats_agg") {
-      obs match {
-        case Some(o) =>
-          val m = o.get
-          chunk.flatMap { b =>
-            m(s"u0_$b") match {
-              case null => None // empty bucket: no bounds to record
-              case umin => Some(b -> BucketStats(str(umin),
-                str(m(s"u1_$b")), str(m(s"l0_$b")), str(m(s"l1_$b")),
-                fmtAny(m(s"t0_$b")), fmtAny(m(s"t1_$b"))))
-            }
-          }.toMap
-        case None =>
-          val anyStaged = chunk.exists(b =>
-            java.nio.file.Files.exists(stageRoot.resolve(s"bucket=$b")))
-          if (!anyStaged) Map.empty
-          else spark.read.parquet(stageRoot.toString)
-            .groupBy(col("bucket"))
-            .agg(min(col("url")).as("umin"), max(col("url")).as("umax"),
-              min(col("lang")).as("lmin"), max(col("lang")).as("lmax"),
-              min(col("warc_ts")).as("tmin"), max(col("warc_ts")).as("tmax"))
-            .collect()
-            .flatMap { r =>
-              if (r.isNullAt(1)) None // empty bucket: no bounds to record
-              // r.get + str/fmtAny (not getString/getTimestamp): null-safe
-              // and independent of spark.sql.datetime.java8API.enabled
-              // (Instant vs Timestamp external type)
-              else Some(r.getInt(0) -> BucketStats(str(r.get(1)), str(r.get(2)),
-                str(r.get(3)), str(r.get(4)),
-                fmtAny(r.get(5)), fmtAny(r.get(6))))
-            }.toMap
-      }
+      val m = obs.get
+      chunk.flatMap { b =>
+        m(s"u0_$b") match {
+          case null => None // empty bucket: no bounds to record
+          case umin => Some(b -> BucketStats(fmt(umin),
+            fmt(m(s"u1_$b")), fmt(m(s"l0_$b")), fmt(m(s"l1_$b")),
+            fmt(m(s"t0_$b")), fmt(m(s"t1_$b"))))
+        }
+      }.toMap
     }
     // schema of the staged DATA files: partitionBy moves `bucket` out
     val dataSchema = org.apache.spark.sql.types.StructType(
-      extracted.schema.filterNot(_.name == "bucket"))
+      rows.schema.filterNot(_.name == "bucket"))
     phase("commit_loop") { chunk.foreach { b =>
       val staged = stageRoot.resolve(s"bucket=$b")
-      // a bucket with zero input rows stages no dir; commit an EMPTY parquet
+      // a bucket with zero rows stages no dir; commit an EMPTY parquet
       // write carrying the schema (ADVICE r3: a table whose committed
       // buckets are all file-less dirs has no footers to infer schema from,
       // so readTable would fail on an empty input)

@@ -15,8 +15,8 @@ import scala.jdk.CollectionConverters._
   *   <table>/_snapshots/LATEST         current manifest version (atomic swap)
   *
   * Commit protocol (crash-safe on POSIX rename semantics):
-  *   1. job writes bucket data to <table>/_tmp/<bucket>-<nonce>/
-  *   2. tmp dir atomically renamed to data/bucket=<N>/
+  *   1. job writes bucket data to <table>/_tmp/stage-<K>/bucket=<N>/
+  *   2. staged dir atomically renamed to data/bucket=<N>/
   *   3. new manifest v<K+1>.json written, then LATEST swapped via
   *      temp-file + ATOMIC_MOVE
   * A killed run leaves only _tmp garbage and an un-referenced data dir at
@@ -25,7 +25,7 @@ import scala.jdk.CollectionConverters._
 final class SnapshotLog(tableDir: String) {
   private val root: Path = Paths.get(tableDir)
   private val snapsDir = root.resolve("_snapshots")
-  private val dataDir = root.resolve("data")
+  private[lake] val dataDir = root.resolve("data")
   private val tmpDir = root.resolve("_tmp")
 
   def init(): Unit = {
@@ -72,10 +72,6 @@ final class SnapshotLog(tableDir: String) {
 
   def bucketDataDir(bucket: Int): Path = dataDir.resolve(s"bucket=$bucket")
 
-  /** A scratch dir for the job to write bucket output into. */
-  def stagingDir(bucket: Int): Path =
-    tmpDir.resolve(s"$bucket-${latestVersion()}-stage")
-
   /** A scratch ROOT for one job staging many buckets at once via
     * `write.partitionBy("bucket")` — each `bucket=N` child dir is then
     * committed individually with [[commitBucket]]. Single-writer assumption
@@ -93,11 +89,11 @@ final class SnapshotLog(tableDir: String) {
     * the old data ASIDE first and deletes it only after the new dir is in
     * place, so the not-found window is two renames, not a recursive delete
     * (the previous delete-then-move ordering left a half-deleted bucket
-    * visible for the whole delete). */
-  /** `stats = Some(s)` records fresh min/max bounds for this bucket in the
-    * new manifest; `None` CARRIES FORWARD the previous bounds (correct for
-    * rewrites of the same rows — compaction; a caller re-committing
-    * CHANGED data must pass fresh stats or the carried bounds go stale).
+    * visible for the whole delete).
+    *
+    * `stats` are the min/max bounds of exactly the rows being committed
+    * and replace the bucket's previous entry; `None` (no rows, or bounds
+    * unknown) records none, so the bucket is never pruned.
     *
     * The previous manifest is read and parsed ONCE per commit (round-5
     * review — the per-field helper calls re-read it several times). Each
@@ -121,10 +117,7 @@ final class SnapshotLog(tableDir: String) {
       if (v0 <= 0) ""
       else new String(Files.readAllBytes(snapsDir.resolve(s"v$v0.json")), "UTF-8")
     val newBuckets = SnapshotLog.parseBuckets(json0) + bucket
-    val newStats = stats match {
-      case Some(s) => SnapshotLog.parseStats(json0) + (bucket -> s)
-      case None => SnapshotLog.parseStats(json0) // carry forward
-    }
+    val newStats = SnapshotLog.parseStats(json0) - bucket ++ stats.map(bucket -> _)
     val v = v0 + 1
     val json =
       s"""{"version":$v,"buckets":[${newBuckets.toVector.sorted.mkString(",")}],""" +
@@ -161,8 +154,9 @@ final class SnapshotLog(tableDir: String) {
     * BACK first (round-5 review: the earlier indiscriminate sweep would
     * have destroyed it, turning a crash window into permanent loss).
     * `replaced-*` dirs whose bucket dir EXISTS are leftovers of a swap
-    * that completed its second rename, and stage dirs (`stage-*` /
-    * `<bucket>-<v>-stage`) are re-creatable job output — both garbage. */
+    * that completed its second rename, and stage dirs (`stage-*`, and the
+    * `<bucket>-<v>-stage` dirs older compactions staged into) are
+    * re-creatable job output — both garbage. */
   def sweepStaleStages(): Unit =
     if (Files.exists(tmpDir)) {
       val stream = Files.list(tmpDir)

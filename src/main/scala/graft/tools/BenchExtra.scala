@@ -10,12 +10,13 @@ import org.apache.spark.sql.SparkSession
   * per the optimization guide §1.4.
   *
   * Usage: `sbt "runMain graft.tools.BenchExtra <mode> [args...]"`
-  *   split                         phase split of the extracted-table commit
+  *   scale [factor] [nBuckets]     replicated corpus -> commit -> pruned read
   *   plans <outDir> <suffix> [q..] write .explain("formatted") per query
   *   dump  <outDir> [q..]          write each query's output as parquet
-  *   time  [q...]                  Bench-identical count() timing
+  *   time  [q...]                  Bench-identical count() timing (default)
   *   noop  [q...]                  noop-sink timing (full-column compute)
-  * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench.
+  * An unknown mode exits 2 listing these. Reads SPARK_GRAFT_SF_DIR /
+  * SPARK_GRAFT_CPUS like Bench.
   */
 object BenchExtra {
   private def session(cores: Int): SparkSession = {
@@ -33,59 +34,15 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val mode = if (args.nonEmpty) args(0) else "time"
+    val modes = Seq("scale", "plans", "dump", "time", "noop")
+    if (!modes.contains(mode)) {
+      System.err.println(s"unknown mode: $mode\nknown modes: ${modes.mkString(", ")}")
+      sys.exit(2)
+    }
     val s = session(cpus)
     def d(v: Double): String = f"$v%.3f"
 
     mode match {
-      case "split" =>
-        def timed(label: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime(); f
-          println(f"PHASE $label%-16s ${d((System.nanoTime() - t0) / 1e9)}%8s s")
-        }
-        timed("warmup_job")(s.range(1000L).selectExpr("sum(id)").collect())
-        timed("hot_domains_1")(graft.pipeline.Pipeline.hotDomains(
-          graft.pipeline.Pipeline.pages(s, sfDir)))
-        timed("hot_domains_2")(graft.pipeline.Pipeline.hotDomains(
-          graft.pipeline.Pipeline.pages(s, sfDir)))
-        graft.lake.ResumableRun.onPhase =
-          (n, sec) => println(f"PHASE $n%-16s ${d(sec)}%8s s")
-        timed("total_commit")(
-          graft.pipeline.Pipeline.extractedCommitted(s, sfDir).count())
-        timed("read_count_warm")(
-          graft.pipeline.Pipeline.extractedCommitted(s, sfDir).count())
-
-      case "stagex" =>
-        // isolate the staging-write cost: kernel-only (noop) vs plain
-        // parquet vs dynamic-partition parquet, all on the same extracted df
-        def timed(label: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime(); f
-          println(f"PHASE $label%-18s ${d((System.nanoTime() - t0) / 1e9)}%8s s")
-        }
-        timed("warmup_job")(s.range(1000L).selectExpr("sum(id)").collect())
-        val pages = graft.pipeline.Pipeline.pages(s, sfDir)
-        val hot = graft.pipeline.Pipeline.hotDomains(pages).keySet
-        val bucket = graft.pipeline.Pipeline.saltedBucket(hot, 16)
-        val extracted = graft.pipeline.Pipeline.extracted(pages)
-          .withColumn("bucket", bucket)
-        val base = java.nio.file.Files.createTempDirectory("graft-stagex-")
-        (1 to 3).foreach { pass =>
-          timed(s"noop_$pass")(
-            extracted.write.format("noop").mode("overwrite").save())
-          timed(s"parquet_flat_$pass")(extracted.write.mode("overwrite")
-            .parquet(base.resolve(s"flat$pass").toString))
-          timed(s"parquet_part_$pass")(extracted.write.mode("overwrite")
-            .partitionBy("bucket").parquet(base.resolve(s"part$pass").toString))
-          timed(s"parquet_hashdist_$pass")(
-            extracted.repartition(16, org.apache.spark.sql.functions.col("bucket"))
-              .write.mode("overwrite")
-              .partitionBy("bucket").parquet(base.resolve(s"hash$pass").toString))
-        }
-        val du = new ProcessBuilder("du", "-sh", base.toString).start()
-        println(new String(du.getInputStream.readAllBytes(), "UTF-8"))
-        println("files: " + java.nio.file.Files.walk(base)
-          .filter(p => p.toString.endsWith(".parquet")).count())
-        graft.lake.SnapshotLog.deleteRecursively(base)
-
       case "scale" =>
         // VERDICT r5 #8 (stretch): drive the extraction -> snapshot-commit ->
         // stats-pruned-read pipeline end to end at `factor` x the committed-
@@ -163,58 +120,6 @@ object BenchExtra {
           println(s"range rows: full=$full pruned=$pruned equal=${full == pruned}")
         } finally graft.lake.SnapshotLog.deleteRecursively(base)
 
-      case "jx" =>
-        // piecewise timing of dd_jaccard_lsh internals (round-6 diagnosis)
-        import org.apache.spark.sql.functions._
-        def timed(label: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime(); f
-          println(f"PHASE $label%-18s ${d((System.nanoTime() - t0) / 1e9)}%8s s")
-        }
-        timed("warmup_job")(s.range(1000L).selectExpr("sum(id)").collect())
-        (1 to 2).foreach { pass =>
-          val base = s.read.parquet(s"$sfDir/documents.parquet")
-            .select(col("doc_id"), col("text"),
-              filter(split(col("text"), " "), x => length(x) > 0).as("t"))
-            .filter(size(col("t")) > 0)
-          var groups: org.apache.spark.sql.DataFrame = null
-          timed(s"groups_ckpt_$pass") {
-            groups = graft.OpsQueries.minhashGroups(base, 3, 16).localCheckpoint()
-          }
-          var cand: org.apache.spark.sql.DataFrame = null
-          timed(s"cand_ckpt_$pass") {
-            cand = graft.OpsQueries.repCandidates(
-              graft.OpsQueries.bandBuckets(groups, 16, 4)).localCheckpoint()
-          }
-          println("cand rows=" + cand.count())
-          val candIds = cand.select(col("a_id").as("doc_id"))
-            .unionAll(cand.select(col("b_id").as("doc_id"))).distinct()
-          var shsets: org.apache.spark.sql.DataFrame = null
-          timed(s"shsets_ckpt_$pass") {
-            shsets = base
-              .join(candIds, Seq("doc_id"), "left_semi")
-              .select(col("doc_id"), transform(col("t"), x => xxhash64(x)).as("th"))
-              .select(col("doc_id"),
-                array_distinct(graft.OpsQueries.shingleHashes(col("th"), 3)).as("shset"))
-              .localCheckpoint()
-          }
-          println("shsets rows=" + shsets.count())
-          timed(s"rerank_expand_$pass") {
-            val repPairs = cand
-              .join(shsets.select(col("doc_id").as("a_id"), col("shset").as("a_sh")), Seq("a_id"))
-              .join(shsets.select(col("doc_id").as("b_id"), col("shset").as("b_sh")), Seq("b_id"))
-              .withColumn("inter", size(array_intersect(col("a_sh"), col("b_sh"))))
-              .withColumn("uni", size(col("a_sh")) + size(col("b_sh")) - col("inter"))
-              .filter(col("uni") > 0)
-              .withColumn("jaccard", round(col("inter").cast("double") / col("uni"), 4))
-              .filter(col("jaccard") >= 0.8)
-              .select(col("a_id"), col("b_id"), col("jaccard"))
-            val n = graft.OpsQueries.expandMemberPairs(repPairs, groups,
-              withinValues = Seq("jaccard" -> lit(1.0)))
-              .orderBy("a_id", "b_id").count()
-            println("out rows=" + n)
-          }
-        }
-
       case "dump" =>
         // materialize query outputs (all of them by default) to parquet
         // (Verify-style) for before/after diffs when a declared query is
@@ -288,9 +193,6 @@ object BenchExtra {
           if (args.length > 1) args.drop(1).toSeq
           else graft.SparkEntry.queries.keys.toSeq.sorted
         names.foreach(run)
-
-      case other =>
-        System.err.println(s"unknown mode: $other")
     }
     s.stop()
   }

@@ -901,10 +901,11 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("chunked resumable run commits per chunk and equals the single-job table") {
+    // two bucket chunks beyond one staging job's width: two chunk jobs
     val p = pages
-    val nBuckets = 8
+    val nBuckets = ResumableRun.maxObservedBuckets + 2
     val dir = tmp()
-    val done = ResumableRun.run(spark, p, dir, nBuckets, chunkBuckets = 3)
+    val done = ResumableRun.run(spark, p, dir, nBuckets)
     assert(done == (0 until nBuckets).toVector)
     val got = ResumableRun.readTable(spark, dir)
       .select("url", "extracted_text").collect()
@@ -915,7 +916,20 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == expected)
     // every bucket still committed individually (resume granularity in the
     // log is unchanged; the chunking bounds work LOST to a mid-job kill)
-    assert(new SnapshotLog(dir).latestVersion() == nBuckets)
+    val log = new SnapshotLog(dir)
+    assert(log.latestVersion() == nBuckets)
+    // both chunks' observed stats equal an independent per-bucket
+    // aggregation over the committed data (empty buckets: no entry)
+    val agg = spark.read.option("basePath", s"$dir/data").parquet(log.committedPaths(): _*)
+      .groupBy(col("bucket"))
+      .agg(min(col("url")), max(col("url")), min(col("lang")), max(col("lang")),
+        date_format(min(col("warc_ts")), "yyyy-MM-dd HH:mm:ss"),
+        date_format(max(col("warc_ts")), "yyyy-MM-dd HH:mm:ss"))
+      .collect().map(r => r.getInt(0) -> graft.lake.BucketStats(r.getString(1),
+        r.getString(2), r.getString(3), r.getString(4), r.getString(5), r.getString(6)))
+      .toMap
+    assert(agg.keySet.exists(_ >= ResumableRun.maxObservedBuckets), "second chunk is empty")
+    assert(log.bucketStats() == agg)
   }
 
   test("resumable run on empty input commits schema-bearing buckets; readTable still works") {
@@ -967,16 +981,16 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val none = ResumableRun.readTablePruned(spark, dir,
       Seq(ColBound("url", ">=", beyond), ColBound("lang", "=", "zz")))
     assert(none.count() == 0 && none.columns.contains("extracted_text"))
-    // compaction re-commits buckets with stats CARRIED FORWARD (same rows)
-    val compacted = graft.lake.Compaction.compact(spark, dir, maxFiles = 1)
-    if (compacted.nonEmpty) {
-      val after = new SnapshotLog(dir).bucketStats()
-      assert(after == stats, "compaction must carry bucket stats forward")
-      val prunedAfter = ResumableRun.readTablePruned(spark, dir,
-        Seq(ColBound("lang", "=", target)))
-        .filter(col("lang") === target).select("url").collect().map(_.getString(0)).toSet
-      assert(prunedAfter == full)
-    }
+    // compaction re-stages every bucket and re-observes its stats: the same
+    // rows give the same bounds
+    val compacted = graft.lake.Compaction.compact(spark, dir, maxFiles = 0)
+    assert(compacted.nonEmpty)
+    val after = new SnapshotLog(dir).bucketStats()
+    assert(after == stats, "compaction must keep bucket stats")
+    val prunedAfter = ResumableRun.readTablePruned(spark, dir,
+      Seq(ColBound("lang", "=", target)))
+      .filter(col("lang") === target).select("url").collect().map(_.getString(0)).toSet
+    assert(prunedAfter == full)
     // time travel to v1 still resolves (stats do not affect historical reads)
     assert(ResumableRun.readTableAsOf(spark, dir, 1).count() >= 0)
 
@@ -1025,8 +1039,9 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("wide-chunk staging uses the staged-parquet stats fallback and matches the observe path") {
-    // a chunk wider than maxObservedBuckets takes the re-read fallback;
-    // bounds must come out identical to the observe path modulo bucket ids
+    // a run wider than maxObservedBuckets; the staged-parquet re-read
+    // fallback is gone, so these bounds come from observe() chunk by chunk
+    // and must keep the observe path's form for every bucket
     assert(ResumableRun.maxObservedBuckets < 66)
     val dir = tmp()
     ResumableRun.run(spark, pages, dir, nBuckets = 66)
@@ -1049,10 +1064,10 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ONE file, so the write itself no longer fragments; fragment a bucket
     // explicitly (the append / maxRecordsPerFile-split history compaction
     // exists for) by re-committing the same rows as 3 files
-    val staged0 = log.stagingDir(0)
+    val staged0 = log.stagingRoot()
     spark.read.parquet(log.bucketDataDir(0).toString).repartition(3)
       .write.parquet(staged0.toString)
-    log.commitBucket(0, staged0) // same rows: stats carry forward
+    log.commitBucket(0, staged0, log.bucketStats().get(0)) // same rows, same bounds
     val before = ResumableRun.readTable(spark, dir).count()
     assert(before > 0)
     val vPre = log.latestVersion()
