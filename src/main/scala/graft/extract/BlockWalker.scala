@@ -1,7 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
-import graft.html.{Elem, Node, TextNode}
+import graft.html.{Elem, Node, TextNode, TreeCursor}
 import graft.model._
 
 /** DOM -> ordered content blocks, the web analog of the reference's
@@ -35,9 +35,14 @@ object BlockWalker {
       }
     }
 
+    val boilerplate = new Boilerplate.Classifier()
+    // children of every walked element in document order, on an explicit
+    // stack; loose inline content between blocks collects in `pending`
+    val cur = new TreeCursor(root)
+
     def handle(el: Elem): Unit = el.tag match {
       case t if skipTags.contains(t) => ()
-      case t if Boilerplate.isBoilerplate(el) => ()
+      case t if boilerplate.isBoilerplate(el) => ()
       case "h1" =>
         Runs.paragraphOf(el).foreach(p => blocks += TextBlock("title", Vector(p)))
       case "h2" =>
@@ -69,14 +74,20 @@ object BlockWalker {
         blocks += chartOf(el, "")
       case "a" if linkWrappedChart(el).isDefined =>
         blocks += chartOf(linkWrappedChart(el).get, UrlFix.fixUrl(el.attr("href")))
-      case t if containerTags.contains(t) => walkInto(el)
+      case t if containerTags.contains(t) => cur.descend(el)
       case t if inlineTags.contains(t) => pending += el
-      case _ => walkInto(el) // unknown tags: recurse, err on inclusion
+      case _ => cur.descend(el) // unknown tags: walk into, err on inclusion
         // (content_extractor.py:289-300: "err on the side of inclusion")
     }
 
-    def walkInto(el: Elem): Unit = {
-      el.children.foreach {
+    def isBlockImageAnchor(e: Elem): Boolean =
+      e.tag == "a" && (linkWrappedImage(e).isDefined || linkWrappedChart(e).isDefined)
+
+    while (cur.depth > 0) {
+      cur.nextChild() match {
+        case null =>
+          flushPending()
+          cur.ascend()
         case t: TextNode =>
           if (t.value.exists(!_.isWhitespace)) pending += t
         case e: Elem if inlineTags.contains(e.tag) && !isBlockImageAnchor(e) =>
@@ -85,13 +96,7 @@ object BlockWalker {
           flushPending()
           handle(e)
       }
-      flushPending()
     }
-
-    def isBlockImageAnchor(e: Elem): Boolean =
-      e.tag == "a" && (linkWrappedImage(e).isDefined || linkWrappedChart(e).isDefined)
-
-    walkInto(root)
     blocks.toVector
   }
 
@@ -116,38 +121,46 @@ object BlockWalker {
     * (text_processor.py:193-285): <li> nesting depth is the level, <ol>
     * ancestry means numbered. */
   def listParagraphs(listEl: Elem, level: Int): Vector[Paragraph] = {
-    val numbered = listEl.tag == "ol"
-    listEl.children.toVector.flatMap {
-      case li: Elem if li.tag == "li" =>
-        val own = Runs.paragraphOf(li,
-          isBullet = !numbered, isNumbered = numbered,
-          bulletLevel = if (numbered) -1 else level,
-          stopAtNestedLists = true)
-        val nested = li.children.toVector.flatMap {
-          case e: Elem if e.tag == "ul" || e.tag == "ol" =>
-            listParagraphs(e, level + 1)
-          case _ => Vector.empty
-        }
-        own.toVector ++ nested
-      case _ => Vector.empty
+    val out = Vector.newBuilder[Paragraph]
+    // frames alternate list, li, list, li, ...: a list at odd depth d sits
+    // at level + d / 2
+    val cur = new TreeCursor(listEl)
+    while (cur.depth > 0) {
+      val inList = cur.depth % 2 == 1
+      cur.nextChild() match {
+        case null => cur.ascend()
+        case li: Elem if inList && li.tag == "li" =>
+          val numbered = cur.current.tag == "ol"
+          out ++= Runs.paragraphOf(li,
+            isBullet = !numbered, isNumbered = numbered,
+            bulletLevel = if (numbered) -1 else level + cur.depth / 2,
+            stopAtNestedLists = true)
+          cur.descend(li)
+        case e: Elem if !inList && (e.tag == "ul" || e.tag == "ol") => cur.descend(e)
+        case _ => ()
+      }
     }
+    out.result()
   }
 
   /** Table rows in document order; cell text is the normalized inline text
     * (content_extractor.py:334-366 analog: list-of-rows of strings). */
   def tableData(tableEl: Elem): Vector[Vector[String]] = {
     val rows = new ArrayBuffer[Vector[String]]()
-    def findRows(el: Elem): Unit = el.children.foreach {
-      case e: Elem if e.tag == "tr" =>
-        val cells = e.children.collect {
-          case c: Elem if c.tag == "td" || c.tag == "th" => cellContent(c)
-        }.toVector
-        if (cells.nonEmpty) rows += cells
-      case e: Elem if e.tag == "thead" || e.tag == "tbody" || e.tag == "tfoot" =>
-        findRows(e)
-      case _ => ()
+    val cur = new TreeCursor(tableEl)
+    while (cur.depth > 0) {
+      cur.nextChild() match {
+        case null => cur.ascend()
+        case e: Elem if e.tag == "tr" =>
+          val cells = e.children.collect {
+            case c: Elem if c.tag == "td" || c.tag == "th" => cellContent(c)
+          }.toVector
+          if (cells.nonEmpty) rows += cells
+        case e: Elem if e.tag == "thead" || e.tag == "tbody" || e.tag == "tfoot" =>
+          cur.descend(e)
+        case _ => ()
+      }
     }
-    findRows(tableEl)
     rows.toVector
   }
 

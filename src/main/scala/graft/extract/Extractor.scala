@@ -2,7 +2,7 @@ package graft.extract
 
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
-import graft.html.{Elem, HtmlParser}
+import graft.html.{Elem, HtmlParser, TreeCursor}
 import graft.model._
 
 /** The extraction kernel: one pure, deterministic, executor-local function
@@ -115,13 +115,16 @@ object Extractor {
     * the analog of the reference's slide explode (F2). */
   private def collectPages(root: Elem): Vector[Elem] = {
     val out = new ArrayBuffer[Elem]()
-    def go(el: Elem): Unit = el.children.foreach {
-      case e: Elem =>
-        if (e.tag == "section" && hasClassToken(e, "page")) out += e
-        else go(e)
-      case _ => ()
+    val cur = new TreeCursor(root)
+    while (cur.depth > 0) {
+      cur.nextChild() match {
+        case null => cur.ascend()
+        case e: Elem =>
+          if (e.tag == "section" && hasClassToken(e, "page")) out += e
+          else cur.descend(e)
+        case _ => ()
+      }
     }
-    go(root)
     out.toVector
   }
 

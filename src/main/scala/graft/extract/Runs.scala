@@ -1,7 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
-import graft.html.{Elem, Node, TextNode}
+import graft.html.{Elem, TextNode, TreeCursor}
 import graft.model.{Hints, Paragraph, Run}
 
 /** Inline-content -> formatted runs, with HTML whitespace collapsing and the
@@ -35,28 +35,40 @@ object Runs {
 
   private def rawRuns(el: Elem, stopAtNestedLists: Boolean): Vector[(String, Flags)] = {
     val out = new ArrayBuffer[(String, Flags)]()
-    def go(n: Node, f: Flags): Unit = n match {
-      case t: TextNode => if (t.value.nonEmpty) out += ((t.value, f))
-      case e: Elem =>
-        e.tag match {
-          case "ul" | "ol" if stopAtNestedLists => ()
-          case "script" | "style" | "template" | "noscript" => ()
-          case "br" => out += (("\n", f))
-          case "b" | "strong" => e.children.foreach(go(_, f.copy(bold = true)))
-          case "i" | "em"     => e.children.foreach(go(_, f.copy(italic = true)))
-          case "a" =>
-            val href = UrlFix.fixUrl(e.attr("href"))
-            val f2 = if (href.nonEmpty) f.copy(link = href) else f
-            e.children.foreach(go(_, f2))
-          case tag if blockBoundary.contains(tag) =>
-            out += (("\n", f))
-            e.children.foreach(go(_, f))
-            out += (("\n", f))
-          case _ => e.children.foreach(go(_, f))
-        }
-      case _ => ()
+    /** Emit what precedes `e`'s children; the flags of its children, or
+      * null when its children are skipped. */
+    def open(e: Elem, f: Flags): Flags = e.tag match {
+      case "ul" | "ol" if stopAtNestedLists => null
+      case "script" | "style" | "template" | "noscript" => null
+      case "br" => out += (("\n", f)); null
+      case "b" | "strong" => f.copy(bold = true)
+      case "i" | "em"     => f.copy(italic = true)
+      case "a" =>
+        val href = UrlFix.fixUrl(e.attr("href"))
+        if (href.nonEmpty) f.copy(link = href) else f
+      case tag if blockBoundary.contains(tag) => out += (("\n", f)); f
+      case _ => f
     }
-    go(el, Flags(bold = false, italic = false, link = ""))
+    val rootFlags = open(el, Flags(bold = false, italic = false, link = ""))
+    if (rootFlags != null) {
+      // flags of each open element's children, parallel to the cursor's stack
+      val flags = new ArrayBuffer[Flags]()
+      flags += rootFlags
+      val cur = new TreeCursor(el)
+      while (cur.depth > 0) {
+        val f = flags.last
+        cur.nextChild() match {
+          case null =>
+            // a block boundary passes its own flags on unchanged
+            if (blockBoundary.contains(cur.ascend().tag)) out += (("\n", f))
+            flags.remove(flags.length - 1)
+          case t: TextNode => if (t.value.nonEmpty) out += ((t.value, f))
+          case e: Elem =>
+            val g = open(e, f)
+            if (g != null) { cur.descend(e); flags += g }
+        }
+      }
+    }
     out.toVector
   }
 

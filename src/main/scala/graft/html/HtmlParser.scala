@@ -12,23 +12,77 @@ final class Elem(val tag: String, val attrs: Map[String, String]) extends Node {
   val children: ArrayBuffer[Node] = new ArrayBuffer[Node]()
   def attr(name: String): String = attrs.getOrElse(name, "")
   /** depth-first descendant elements, document order, self excluded */
-  def descendants: Iterator[Elem] = children.iterator.flatMap {
-    case e: Elem => Iterator.single(e) ++ e.descendants
-    case _       => Iterator.empty
+  def descendants: Iterator[Elem] = new Iterator[Elem] {
+    private val cur = new TreeCursor(Elem.this)
+    private var upcoming = advance()
+    private def advance(): Elem = {
+      while (cur.depth > 0) {
+        cur.nextChild() match {
+          case null    => cur.ascend()
+          case e: Elem => cur.descend(e); return e
+          case _       => ()
+        }
+      }
+      null
+    }
+    def hasNext: Boolean = upcoming != null
+    def next(): Elem = { val e = upcoming; upcoming = advance(); e }
   }
   def find(t: String): Option[Elem] =
     if (tag == t) Some(this) else descendants.find(_.tag == t)
   /** concatenated decoded text of the subtree (raw, not normalized) */
   def rawText: String = {
     val sb = new StringBuilder
-    def go(n: Node): Unit = n match {
-      case t: TextNode => sb.append(t.value)
-      case e: Elem     => e.children.foreach(go)
+    val cur = new TreeCursor(this)
+    while (cur.depth > 0) {
+      cur.nextChild() match {
+        case null        => cur.ascend()
+        case t: TextNode => sb.append(t.value)
+        case e: Elem     => cur.descend(e)
+      }
     }
-    go(this); sb.toString
+    sb.toString
   }
 }
 final class TextNode(val value: String) extends Node
+
+/** Depth-first cursor over a DOM subtree with an explicit stack of
+  * (element, next child) frames, so a walk's depth is bounded by the heap
+  * rather than the thread stack. Starts with `root` as the only frame;
+  * `depth` is the number of open frames (0 when the walk is done). */
+final class TreeCursor(root: Elem) {
+  private var elems = new Array[Elem](16)
+  private var next = new Array[Int](16)
+  private var size = 0
+  descend(root)
+
+  def depth: Int = size
+  /** the element whose children are being visited */
+  def current: Elem = elems(size - 1)
+  /** the next child of `current`, or null when its children are exhausted */
+  def nextChild(): Node = {
+    val e = elems(size - 1)
+    val i = next(size - 1)
+    if (i < e.children.length) { next(size - 1) = i + 1; e.children(i) } else null
+  }
+  /** open `e` (normally the child just returned) as the new current element */
+  def descend(e: Elem): Unit = {
+    if (size == elems.length) {
+      elems = java.util.Arrays.copyOf(elems, size * 2)
+      next = java.util.Arrays.copyOf(next, size * 2)
+    }
+    elems(size) = e
+    next(size) = 0
+    size += 1
+  }
+  /** close `current` and return it */
+  def ascend(): Elem = {
+    size -= 1
+    val e = elems(size)
+    elems(size) = null
+    e
+  }
+}
 
 /** WHATWG-subset tokenizer + tree builder: tags, attributes
   * (quoted/unquoted/bare), decimal/hex/named entities, comments, doctype,
@@ -47,10 +101,108 @@ object HtmlParser {
     "dl", "fieldset", "figure", "footer", "form", "h1", "h2", "h3", "h4", "h5",
     "h6", "header", "hr", "main", "nav", "ol", "p", "pre", "section", "table", "ul")
 
+  // scopes of the implied end tags: the open element is closed only when
+  // no element of its scope sits above it (the #root at index 0 bounds
+  // every scope and is never closed)
+  private val listScope = Array("ul", "ol")
+  private val cellScope = Array("tr", "table")
+  private val rowScope = Array("table")
+  private val selectScope = Array("select")
+  private val paragraphScope = Array("body")
+
+  /** The stack of open elements, with the index of the topmost open
+    * element of each tag name and, per entry, the next lower entry of the
+    * same tag. The element a close tag or an implied end tag ends is then
+    * found in O(1) instead of by scanning the stack, so parsing stays
+    * linear in nesting depth. Tag names are slots of an open-addressing
+    * table; the root (index 0) has no slot. */
+  private final class OpenElements(root: Elem) {
+    private var elems = new Array[Elem](32)
+    private var below = new Array[Int](32) // next lower index with the same tag, -1 = none
+    private var keys = new Array[String](32)
+    private var tops = new Array[Int](32) // topmost open index per slot, -1 = none
+    private var used = 0
+    private var size = 1
+    elems(0) = root
+
+    def last: Elem = elems(size - 1)
+
+    /** the slot holding `tag`, or the empty slot where it belongs (-1 - slot) */
+    private def probe(tag: String): Int = {
+      val mask = keys.length - 1
+      val h = tag.hashCode
+      var i = (h ^ (h >>> 16)) & mask
+      while (keys(i) != null) {
+        if (keys(i) == tag) return i
+        i = (i + 1) & mask
+      }
+      -1 - i
+    }
+
+    /** index of the topmost open element with this tag, -1 when none is open */
+    def top(tag: String): Int = {
+      val s = probe(tag)
+      if (s < 0) -1 else tops(s)
+    }
+
+    def push(e: Elem): Unit = {
+      if (size == elems.length) {
+        elems = java.util.Arrays.copyOf(elems, size * 2)
+        below = java.util.Arrays.copyOf(below, size * 2)
+      }
+      var s = probe(e.tag)
+      if (s < 0) {
+        if (2 * (used + 1) > keys.length) { rehash(); s = probe(e.tag) }
+        s = -1 - s
+        keys(s) = e.tag
+        tops(s) = -1
+        used += 1
+      }
+      elems(size) = e
+      below(size) = tops(s)
+      tops(s) = size
+      size += 1
+    }
+
+    /** close every open element from index `from` up */
+    def popTo(from: Int): Unit =
+      while (size > from) {
+        size -= 1
+        tops(probe(elems(size).tag)) = below(size)
+        elems(size) = null
+      }
+
+    /** close the topmost open `tag` unless an element of `scope` is above it */
+    def closeInScope(tag: String, scope: Array[String]): Unit = {
+      val t = top(tag)
+      if (t > 0) {
+        var bound = 0
+        var k = 0
+        while (k < scope.length) { bound = math.max(bound, top(scope(k))); k += 1 }
+        if (t > bound) popTo(t)
+      }
+    }
+
+    private def rehash(): Unit = {
+      val oldKeys = keys
+      val oldTops = tops
+      keys = new Array[String](oldKeys.length * 2)
+      tops = new Array[Int](oldKeys.length * 2)
+      var i = 0
+      while (i < oldKeys.length) {
+        if (oldKeys(i) != null) {
+          val s = -1 - probe(oldKeys(i))
+          keys(s) = oldKeys(i)
+          tops(s) = oldTops(i)
+        }
+        i += 1
+      }
+    }
+  }
+
   def parse(html: String): Elem = {
     val root = new Elem("#root", Map.empty)
-    val stack = new ArrayBuffer[Elem]()
-    stack += root
+    val stack = new OpenElements(root)
     val n = html.length
     var i = 0
     val text = new StringBuilder
@@ -62,30 +214,17 @@ object HtmlParser {
       }
     }
 
-    def impliedCloses(tag: String): Unit = {
+    def impliedCloses(tag: String): Unit = tag match {
       // </li> implied by <li>; </td>/<th> by td/th/tr; </tr> by tr; </option> by option
-      def closeUpTo(target: String, barrier: Set[String]): Unit = {
-        var j = stack.length - 1
-        var found = -1
-        while (j > 0 && found < 0) {
-          val t = stack(j).tag
-          if (t == target) found = j
-          else if (barrier.contains(t)) j = 0 // stop: don't cross the barrier
-          j -= 1
-        }
-        if (found > 0) stack.remove(found, stack.length - found)
-      }
-      tag match {
-        case "li" => closeUpTo("li", Set("ul", "ol"))
-        case "td" | "th" =>
-          closeUpTo("td", Set("tr", "table")); closeUpTo("th", Set("tr", "table"))
-        case "tr" =>
-          closeUpTo("td", Set("tr", "table")); closeUpTo("th", Set("tr", "table"))
-          closeUpTo("tr", Set("table"))
-        case "option" => closeUpTo("option", Set("select"))
-        case t if pClosers.contains(t) => closeUpTo("p", Set("#root", "body"))
-        case _ => ()
-      }
+      case "li" => stack.closeInScope("li", listScope)
+      case "td" | "th" =>
+        stack.closeInScope("td", cellScope); stack.closeInScope("th", cellScope)
+      case "tr" =>
+        stack.closeInScope("td", cellScope); stack.closeInScope("th", cellScope)
+        stack.closeInScope("tr", rowScope)
+      case "option" => stack.closeInScope("option", selectScope)
+      case t if pClosers.contains(t) => stack.closeInScope("p", paragraphScope)
+      case _ => ()
     }
 
     while (i < n) {
@@ -112,10 +251,8 @@ object HtmlParser {
           else {
             val name = html.substring(i + 2, end).trim.toLowerCase(java.util.Locale.ROOT)
             // pop to the matching open element if present; else ignore stray close
-            var j = stack.length - 1
-            var found = -1
-            while (j > 0 && found < 0) { if (stack(j).tag == name) found = j; j -= 1 }
-            if (found > 0) stack.remove(found, stack.length - found)
+            val found = stack.top(name)
+            if (found > 0) stack.popTo(found)
             i = end + 1
           }
         } else if (c1.isLetter) {
@@ -183,7 +320,7 @@ object HtmlParser {
               if (gt < 0) n else gt + 1
             }
           } else if (!selfClose && !voidTags.contains(tag)) {
-            stack += el
+            stack.push(el)
           }
         } else { text.append(c); i += 1 }
       } else { text.append(c); i += 1 }

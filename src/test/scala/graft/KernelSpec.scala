@@ -564,4 +564,63 @@ class KernelSpec extends AnyFunSuite {
     assert(Fidelity.pyFormat1f(1.0) == "1.0")
     assert(Fidelity.pyFormat1f(2.0 / 3.0) == "0.7")
   }
+
+  // ---- nesting depth: extraction is linear in depth and needs no deep stack
+
+  private val deepPara = "<p>" + (1 to 36).map(i => s"word$i").mkString(" ") +
+    """ see <a href="https://docs.example.com/guide">the guide</a></p>"""
+
+  /** Hostile nesting shapes at depth `d`, after ROADMAP's hostile cases. */
+  private def deepShapes(d: Int): Seq[(String, String)] = Seq(
+    "div" -> ("<html><body>" + "<div>" * d + deepPara + "</div>" * d + "</body></html>"),
+    "font" -> ("<html><body>" + """<font size="2">""" * d + deepPara + "</body></html>"),
+    "b" -> ("<html><body><p>" + "<b>" * d + "bold words at the bottom</p></body></html>"),
+    "ul" -> ("<html><body>" + "<ul><li>" * d + "innermost item" + "</li></ul>" * d +
+      "</body></html>"),
+    "stray" -> ("<html><body>" + "<div>" * d + deepPara + "</span>" * d + "</body></html>"))
+
+  /** Run `f` on a thread with a 256 KB stack: deep input must not need more. */
+  private def onSmallStack[A](f: => A): A = {
+    var result: Either[Throwable, A] = null
+    val t = new Thread(null, () => result = try Right(f) catch { case e: Throwable => Left(e) },
+      "small-stack", 256L * 1024)
+    t.start(); t.join()
+    result.fold(e => throw e, identity)
+  }
+
+  test("depth law: hostile nesting extracts without error in time linear in depth") {
+    def minMs(html: Array[Byte]): Double = (1 to 3).map { _ =>
+      val t0 = System.nanoTime()
+      val r = Extractor.extract(html, "fb")
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(r.error == null, s"error: ${r.error}")
+      ms
+    }.min
+    onSmallStack {
+      val shallow = deepShapes(2000)
+      val deep = deepShapes(16000).toMap
+      shallow.foreach { case (_, h) => (1 to 5).foreach(_ => Extractor.extract(h.getBytes("UTF-8"), "fb")) }
+      shallow.foreach { case (name, h) =>
+        val t2k = minMs(h.getBytes("UTF-8"))
+        val t16k = minMs(deep(name).getBytes("UTF-8"))
+        assert(t16k <= 24 * t2k, f"$name: 16k levels took $t16k%.2f ms, 2k levels $t2k%.2f ms")
+      }
+    }
+  }
+
+  test("nesting invariance: a wrapped paragraph extracts the same at any depth") {
+    def afterMeta(html: String): String = {
+      val r = Extractor.extract(html.getBytes("UTF-8"), "fb")
+      assert(r.error == null, s"error: ${r.error}")
+      r.extractedText.substring(r.spans.head.end) // the meta comment carries the byte size
+    }
+    def wrapped(name: String, d: Int): String = deepShapes(d).toMap.apply(name)
+    onSmallStack {
+      Seq("div", "font").foreach { name =>
+        val flat = afterMeta(wrapped(name, 1))
+        assert(flat.contains("word36 see [the guide](https://docs.example.com/guide)"), flat)
+        Seq(100, 900, 5000).foreach(d => assert(afterMeta(wrapped(name, d)) == flat, s"$name depth $d"))
+      }
+    }
+  }
 }

@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.extract.Extractor
-import graft.html.HtmlParser
+import graft.extract.{Boilerplate, Extractor}
+import graft.html.{Elem, HtmlParser, Node, TextNode}
 
 /** Property tests (SURVEY.md §5): the extractor is total, deterministic,
   * and its spans always form a sorted, non-overlapping index into the
@@ -115,6 +115,101 @@ class PropertySpec extends AnyFunSuite {
       assert(r.error == null)
       assert(r.extractedText.nonEmpty)
     }
+  }
+
+  // ---- link-density rule: the memoized classifier against a brute-force count
+
+  private val densityContainers = Set("div", "section", "ul", "ol", "table", "header")
+
+  /** (visible chars, chars under an <a>, words) of the subtree by a full
+    * count: no early exit, no memo. */
+  private def bruteCounts(el: Elem): (Int, Int, Int) = {
+    var total = 0; var linked = 0; var words = 0
+    def go(n: Node, inA: Boolean): Unit = n match {
+      case t: TextNode =>
+        var inWord = false
+        t.value.foreach { c =>
+          if (!Character.isWhitespace(c)) {
+            total += 1
+            if (inA) linked += 1
+            if (!inWord) words += 1
+            inWord = true
+          } else inWord = false
+        }
+      case e: Elem => e.tag match {
+        case "script" | "style" | "template" | "noscript" => ()
+        case "a" => e.children.foreach(go(_, inA = true))
+        case _   => e.children.foreach(go(_, inA))
+      }
+    }
+    go(el, inA = false)
+    (total, linked, words)
+  }
+
+  /** Rule 3 of [[Boilerplate]]: over half the visible chars under an <a>,
+    * and under 50 words. */
+  private def bruteLinkFurniture(el: Elem): Boolean = {
+    val (total, linked, words) = bruteCounts(el)
+    total > 0 && linked.toDouble / total > 0.5 && words < 50
+  }
+
+  /** Random attribute-free DOMs (so rule 3 decides every container):
+    * container chains, <a>-wrapped containers, script text, and text runs
+    * whose word counts put subtrees at 49, 50 and 51 words. */
+  private def randomDom(r: java.util.Random): Elem = {
+    val tags = Array("div", "section", "ul", "ol", "table", "header", "a", "a",
+      "span", "b", "p", "li", "script")
+    val wordCounts = Array(0, 1, 2, 7, 16, 17, 24, 25, 26, 33, 49, 50, 51)
+    def text(): TextNode = {
+      val n = wordCounts(r.nextInt(wordCounts.length))
+      val sep = Array(" ", "  ", "\t", "\n ")
+      val body = (1 to n).map(i => "w" * (1 + r.nextInt(3)) + i).mkString(sep(r.nextInt(sep.length)))
+      new TextNode((if (r.nextBoolean()) " " else "") + body + (if (r.nextBoolean()) " " else ""))
+    }
+    def node(depth: Int): Elem = {
+      val e = new Elem(tags(r.nextInt(tags.length)), Map.empty)
+      if (r.nextInt(4) == 0 && depth < 60) e.children += node(depth + 1) // chains
+      else (0 until r.nextInt(4)).foreach { _ =>
+        if (depth >= 6 || r.nextBoolean()) e.children += text()
+        else e.children += node(depth + 1)
+      }
+      e
+    }
+    val root = new Elem("div", Map.empty)
+    (0 until 1 + r.nextInt(3)).foreach(_ => root.children += node(1))
+    root
+  }
+
+  test("link density: memoized classifier matches a brute-force count on every container") {
+    val r = new java.util.Random(7L)
+    var checked = 0
+    var furniture = 0
+    val atBoundary = scala.collection.mutable.Map(49 -> 0, 50 -> 0, 51 -> 0)
+    (1 to 800).foreach { i =>
+      val root = randomDom(r)
+      val preorder = (Iterator.single(root) ++ root.descendants)
+        .filter(e => densityContainers.contains(e.tag)).toVector
+      val expected = preorder.map(bruteLinkFurniture)
+      // walk order (ancestors first), children first, and a shuffled order:
+      // each reuses the memo of the earlier queries differently
+      Seq(preorder.indices, preorder.indices.reverse,
+        new scala.util.Random(r).shuffle(preorder.indices.toVector)
+      ).foreach { order =>
+        val classifier = new Boilerplate.Classifier()
+        order.foreach { k =>
+          assert(classifier.isBoilerplate(preorder(k)) == expected(k),
+            s"dom $i, container $k (<${preorder(k).tag}>)")
+        }
+      }
+      checked += preorder.size
+      furniture += expected.count(identity)
+      preorder.foreach { e =>
+        val w = bruteCounts(e)._3
+        if (atBoundary.contains(w)) atBoundary(w) += 1
+      }
+    }
+    assert(checked > 3000 && furniture > 100 && atBoundary.values.forall(_ >= 10),
+      s"checked $checked, furniture $furniture, containers at 49/50/51 words $atBoundary")
   }
 
   // ---- fused hash-kernel laws (implementation-independent properties, on
