@@ -10,17 +10,19 @@ import graft.pipeline.Pipeline
   * checkpoints so a killed run restarts at partition granularity".
   *
   * Every lake write goes through [[stageAndCommit]]: ONE job per chunk of
-  * at most [[maxObservedBuckets]] buckets hash-distributes the chunk's rows
-  * by bucket and dynamic-partition-writes them to `_tmp/stage-<v>/bucket=N/`
-  * (one file per bucket), computing each bucket's manifest stats in the
-  * same pass via observe(); then each staged bucket dir is atomically
-  * committed in its own snapshot. A run killed mid-job loses at most one
-  * chunk of work; each chunk scans the input once (the bucket is a
-  * url-hash, which no source can push down), so a table of up to 64
-  * buckets is written by a single scan. [[Compaction]] re-stages committed
-  * buckets through the same path. Stale `stage-*` dirs from previously
-  * killed runs are swept before staging (the next run's stagingRoot has a
-  * new version suffix, so leftovers would otherwise leak forever).
+  * at most [[maxObservedBuckets]] buckets shuffles the chunk's rows so each
+  * bucket lands whole in one of at most one-per-core write tasks and
+  * dynamic-partition-writes them to `_tmp/stage-<v>/bucket=N/` (one file
+  * per bucket, permission bits set in-process by [[NioLocalFileSystem]]),
+  * computing each bucket's manifest stats in the same pass via observe();
+  * then each staged bucket dir is atomically committed in its own
+  * snapshot. A run killed mid-job loses at most one chunk of work; each
+  * chunk scans the input once (the bucket is a url-hash, which no source
+  * can push down), so a table of up to 64 buckets is written by a single
+  * scan. [[Compaction]] re-stages committed buckets through the same path.
+  * Stale `stage-*` dirs from previously killed runs are swept before
+  * staging (the next run's stagingRoot has a new version suffix, so
+  * leftovers would otherwise leak forever).
   */
 object ResumableRun {
 
@@ -87,17 +89,18 @@ object ResumableRun {
     todo
   }
 
-  /** Stage `rows` (carrying an int `bucket` column, every value in `chunk`)
-    * in one job and commit each bucket of `chunk` in its own snapshot with
-    * the min/max stats observed on the rows it wrote. A bucket with no rows
-    * commits an empty schema-bearing parquet write and no stats. */
+  /** Stage `rows` (carrying a BIGINT or INT `bucket` column, every value in
+    * `chunk`) in one job and commit each bucket of `chunk` in its own
+    * snapshot with the min/max stats observed on the rows it wrote. A bucket
+    * with no rows commits an empty schema-bearing parquet write and no
+    * stats. */
   private[lake] def stageAndCommit(log: SnapshotLog, rows: DataFrame,
       chunk: Vector[Int]): Unit = {
     require(chunk.size <= maxObservedBuckets,
       s"${chunk.size} buckets exceed one staging job's $maxObservedBuckets")
     val spark = rows.sparkSession
     val stageRoot = log.stagingRoot()
-    import org.apache.spark.sql.functions.{col, min, max, when}
+    import org.apache.spark.sql.functions.{array_position, col, min, max, typedLit, when}
     // Per-bucket (url, lang, warc_ts) min/max for the manifest, folded into
     // the STAGING JOB: the stats aggregate the very rows the job writes, so
     // a CollectMetrics node on the write computes them in the same pass
@@ -113,18 +116,25 @@ object ResumableRun {
         min(when(col("bucket") === b, col("warc_ts"))).as(s"t0_$b"),
         max(when(col("bucket") === b, col("warc_ts"))).as(s"t1_$b"))
     }
+    // Each bucket goes whole to ONE write task before the dynamic-partition
+    // write — the Iceberg write.distribution-mode analog. Without it every
+    // task streams rows to up to chunk-size open files, so the staged file
+    // count is tasks x buckets (measured 4x the write time at sf0.1 from
+    // per-file writer setup alone, and at corpus scale a small-files
+    // explosion on the table). The task of a bucket is its index in
+    // `chunk` mod P, P = min(chunk size, default parallelism): one task per
+    // core at most, and every task gets a bucket. A hash of the bucket id
+    // would leave tasks empty (murmur3 puts 16 bucket ids in only 10 of 16
+    // partitions, while every task pays its fixed start-up), and strided
+    // resumed subsets such as {3, 7, 11, 15} would collide on an id mod P.
+    val parts = math.min(chunk.size, spark.sparkContext.defaultParallelism)
+    val task = ((array_position(typedLit(chunk.map(_.toLong)),
+      col("bucket").cast("long")) - 1) % parts).cast("int")
     phase("stage_write") {
-      // Hash-distribute by bucket before the dynamic-partition write — the
-      // Iceberg write.distribution-mode=hash analog. Without it every task
-      // streams rows to up to chunk-size open files, so the staged file
-      // count is tasks x buckets (measured 4x the write time at sf0.1 from
-      // per-file writer setup alone, and at corpus scale a small-files
-      // explosion on the table). One payload shuffle keyed on the partition
-      // column buys one file per bucket; partition count = the chunk's
-      // bucket count, so the layout is scale-derived, not a tuned constant.
       rows.observe(obs, exprs.head, exprs.tail: _*)
-        .repartition(chunk.size, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(stageRoot.toString)
+        .repartitionById(parts, task)
+        .write.options(NioLocalFileSystem.writeOptions)
+        .mode("overwrite").partitionBy("bucket").parquet(stageRoot.toString)
     }
     // warc_ts bounds: min/max the RAW timestamp (an absolute instant —
     // timezone-free) and render driver-side with an explicit UTC
@@ -170,7 +180,7 @@ object ResumableRun {
       if (!java.nio.file.Files.exists(staged))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
-          .write.parquet(staged.toString)
+          .write.options(NioLocalFileSystem.writeOptions).parquet(staged.toString)
       log.commitBucket(b, staged, stats.get(b))
     } }
     // only write-protocol leftovers (_SUCCESS) remain under the stage root

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.synth.Synth
@@ -126,33 +126,40 @@ object Pipeline {
 
   /** Hot domains: any domain holding more than `share` of rows is salted
     * across the full bucket space (SURVEY.md §4 partitioning row). Returns
-    * domain -> rowCount for domains above the cut (bounded: at most
-    * 1/share of them can exist).
+    * domain -> rowCount for domains above the cut, cut = max(1, ⌊rows ×
+    * share⌋).
     *
-    * ONE full groupBy pass (round 6). The previous sampled pre-pass
-    * (filter 1% of rows by url-hash, then group) never reduced the scan —
-    * a hash-mod filter cannot be pushed into any source, so every url was
-    * read either way — and saved only the partial-aggregation probes on
-    * the filtered-out rows, at roughly the price of the xxhash64 it spent
-    * deciding them. Below its 10k-sample floor it then re-scanned the
-    * whole input a second time, which is the measured common case at every
-    * bench scale (2 scans + 4 actions -> 1 scan + 2 actions, ~2.6s ->
-    * ~1.2s steady-state at sf0.1). The groupBy is map-side combinable, so
-    * shuffle bytes are bounded by distinct-domains-per-task at any scale.
-    * The tiny per-domain aggregate feeds two actions (total, then the
-    * filtered collect), so it is persisted for the pair. */
+    * ONE action over one url-only scan: [[hotDomainsQuery]] observes the
+    * row count on the scan and keeps only the ⌈1 / share⌉ + 1 largest
+    * per-domain counts, so the driver receives at most that many rows and
+    * applies the cut itself. The limit loses nothing: a domain above the
+    * cut holds more than rows × share rows (when the cut is clamped to 1,
+    * at least 2 of fewer than 2 / share rows), so fewer than 1 / share
+    * domains can be above it, and each of them outranks every domain at or
+    * below it. The cut is computed in floating point and can round down by
+    * one row, which lets exactly ⌈1 / share⌉ domains pass it (share 1/161
+    * over 322 rows: cut 1, and 161 two-row domains); the + 1 is margin. */
   def hotDomains(pages: DataFrame,
       share: Double = defaultHotThresholdShare): Map[String, Long] = {
-    val counts = pages.select(domainOf.as("domain")).groupBy("domain").count()
-    counts.persist()
-    try {
-      val total = Option(counts.agg(sum(col("count"))).first.get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      val cut = math.max(1L, (total * share).toLong)
-      counts.filter(col("count") > cut).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    } finally counts.unpersist()
+    val rows = Observation()
+    val top = hotDomainsQuery(pages, share, rows).collect()
+    // an input the optimizer proves empty completes `rows` with no metrics
+    val total = rows.get.get("rows").fold(0L)(_.asInstanceOf[Long])
+    val cut = math.max(1L, (total * share).toLong)
+    top.collect { case r if r.getLong(1) > cut => r.getString(0) -> r.getLong(1) }.toMap
   }
+
+  /** The query [[hotDomains]] runs (PlanCheck plans the same one):
+    * (domain, count) for the ⌈1 / share⌉ + 1 largest domains,
+    * with the scan's row count observed into `rows` as `rows`. The groupBy
+    * is map-side combinable, so shuffle bytes are bounded by
+    * distinct-domains-per-task at any scale. */
+  def hotDomainsQuery(pages: DataFrame, share: Double, rows: Observation): DataFrame =
+    pages.select(domainOf.as("domain"))
+      .observe(rows, count(lit(1)).as("rows"))
+      .groupBy("domain").count()
+      .orderBy(col("count").desc)
+      .limit(math.ceil(1 / share).toInt + 1)
 
   /** Bucket expression: cold domains co-locate by domain hash (politeness /
     * locality); hot domains spread by url hash so no bucket exceeds ~1/P of

@@ -174,17 +174,15 @@ object PlanCheck {
       }
       md.append("\n")
     }
-    // Round 4 (VERDICT r3 #5): Pipeline.pages is the DSv2 connector, so the
-    // sampled hot-domain pre-pass must read urls WITHOUT synthesizing page
-    // bodies — the scan's required column set shows the pruning.
+    // Pipeline.pages is the DSv2 connector, so the hot-domain pass must
+    // read urls WITHOUT synthesizing page bodies — the scan's required
+    // column set shows the pruning. The plan is the one hotDomains runs.
     locally {
-      import org.apache.spark.sql.functions._
-      val prePass = graft.pipeline.Pipeline.pages(spark, sfDir)
-        .filter(pmod(xxhash64(col("url")), lit(100)) === 0)
-        .select(graft.pipeline.Pipeline.domainOf.as("domain"))
-        .groupBy("domain").count()
-      val plan = prePass.queryExecution.executedPlan.toString
-      md.append("## hot-domain pre-pass (Pipeline.hotDomains sample scan)\n\n")
+      import graft.pipeline.Pipeline
+      val hot = Pipeline.hotDomainsQuery(Pipeline.pages(spark, sfDir),
+        Pipeline.defaultHotThresholdShare, org.apache.spark.sql.Observation())
+      val plan = hot.queryExecution.executedPlan.toString
+      md.append("## hot-domain pass (Pipeline.hotDomainsQuery)\n\n")
       md.append(s"```\n$plan\n```\n\n")
       def check(label: String, ok: Boolean): Unit = {
         md.append(s"- ${if (ok) "PASS" else "FAIL"}: $label\n")

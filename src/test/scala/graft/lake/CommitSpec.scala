@@ -1,0 +1,161 @@
+package graft.lake
+
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+import graft.pipeline.Pipeline
+
+/** The commit's fixed-cost paths: the one-action hot-domain pass, the
+  * staging write's task layout (one task per core at most, each bucket in
+  * exactly one task) and the in-process permission setting of staged
+  * files. */
+class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-commit-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+  }
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private def tmp(): String = Files.createTempDirectory("graft-commit-test").toString
+
+  private lazy val pages = Pipeline.pages(spark, "/root/testdata/sf0.001").cache()
+
+  /** Records written by each task of the one stage that wrote records while
+    * `f` ran (the staging write), zero-record tasks of that stage included. */
+  private def writeStageTasks(f: => Unit): Vector[Long] = {
+    val sc = spark.sparkContext
+    val tasks = new ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          tasks.add(e.stageId -> e.taskMetrics.outputMetrics.recordsWritten)
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try f finally { ListenerDrain(sc); sc.removeSparkListener(listener) }
+    val writing = tasks.asScala.toVector.groupBy(_._1).filter(_._2.exists(_._2 > 0))
+    assert(writing.size == 1, s"expected one stage writing records: $writing")
+    writing.head._2.map(_._2)
+  }
+
+  test("hot-domain pass equals a brute-force groupBy/count/cut") {
+    val sp = spark
+    import sp.implicits._
+    def brute(df: DataFrame, share: Double): Map[String, Long] = {
+      val cut = math.max(1L, (df.count() * share).toLong)
+      df.groupBy(Pipeline.domainOf.as("domain")).count()
+        .filter(col("count") > cut).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    def urls(domains: Seq[(String, Int)]): DataFrame =
+      domains.flatMap { case (d, n) => (0 until n).map(i => s"https://$d/p$i") }.toDF("url")
+    // 10,000 rows, cut 200: 49 domains of 201 rows — the most that can be
+    // above the cut at this share — and 151 one-row domains
+    val fortyNine = urls((0 until 49).map(i => s"hot$i.example" -> 201) ++
+      (0 until 151).map(i => s"cold$i.example" -> 1))
+    // 30 rows: 0.6 rows is clamped to a cut of 1, so every pair is hot
+    val cutOne = urls((0 until 12).map(i => s"pair$i.example" -> 2) ++
+      (0 until 6).map(i => s"one$i.example" -> 1))
+    // 322 × (1/161) evaluates to 1.999…, so the cut is 1 and all 161
+    // two-row domains are above it: ⌈1 / share⌉ hot domains
+    val roundedDown = urls((0 until 161).map(i => s"twin$i.example" -> 2))
+    val cases = Seq(("synth pages", pages, 0.02), ("49 above the cut", fortyNine, 0.02),
+      ("cut of 1", cutOne, 0.02), ("empty", urls(Nil), 0.02),
+      ("cut rounded down", roundedDown, 1.0 / 161))
+    val sizes = cases.map { case (name, df, share) =>
+      val (got, want) = (Pipeline.hotDomains(df, share), brute(df, share))
+      if (got != want) fail(s"$name: missed ${(want.keySet -- got.keySet).size} " +
+        s"of ${want.size} hot domains, wrong ${got.toSet -- want.toSet}")
+      want.size
+    }
+    assert(sizes == Seq(2, 49, 12, 0, 161), "test inputs drifted")
+  }
+
+  test("staging writes through min(buckets, parallelism) tasks, each bucket in exactly one") {
+    val p = math.min(16, spark.sparkContext.defaultParallelism)
+    val bucket = Pipeline.saltedBucket(Pipeline.hotDomains(pages).keySet, 16)
+    val perBucket = pages.groupBy(bucket.as("b")).count().collect()
+      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    assert(perBucket.size == 16, s"test setup: an empty bucket in $perBucket")
+
+    // a fresh 16-bucket run: one task per core, none of them idle
+    val dir = tmp()
+    val fresh = writeStageTasks(ResumableRun.run(spark, pages, dir, nBuckets = 16))
+    assert(fresh.size == p, s"write tasks: $fresh")
+    assert(fresh.forall(_ > 0), s"a write task wrote nothing: $fresh")
+    assert(fresh.sum == perBucket.values.sum)
+    val log = new SnapshotLog(dir)
+    (0 until 16).foreach(b =>
+      assert(Compaction.parquetFiles(log.bucketDataDir(b)).size == 1, s"bucket $b files"))
+
+    // a resumed run over a strided subset: one bucket per task, so each
+    // task writes exactly one bucket's rows
+    val strided = Vector(3, 7, 11, 15)
+    val rest = (0 until 16).filterNot(strided.contains).toVector
+    val dirR = tmp()
+    val logR = new SnapshotLog(dirR)
+    logR.init()
+    ResumableRun.stageAndCommit(logR, Pipeline.extracted(pages.filter(bucket.isin(rest: _*)))
+      .withColumn("bucket", bucket), rest)
+    var resumed = Vector.empty[Int]
+    val perTask = writeStageTasks { resumed = ResumableRun.run(spark, pages, dirR, nBuckets = 16) }
+    assert(resumed == strided)
+    assert(perTask.sorted == strided.map(perBucket).sorted, s"write tasks: $perTask")
+    strided.foreach(b =>
+      assert(Compaction.parquetFiles(logR.bucketDataDir(b)).size == 1, s"bucket $b files"))
+    assert(ResumableRun.readTable(spark, dirR).count() == perBucket.values.sum)
+  }
+
+  test("staged files, .crc sidecars and dirs get the default local FS's mode bits; checksums verify") {
+    val dir = tmp()
+    ResumableRun.run(spark, pages, dir, nBuckets = 4)
+    // reference modes: a file and a directory written through the
+    // session's default (cached, checksummed) local file system
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.getLocal(conf)
+    val ref = Paths.get(tmp(), "ref")
+    fs.mkdirs(new Path(ref.resolve("d").toUri))
+    fs.create(new Path(ref.resolve("f").toUri)).close()
+    def mode(p: java.nio.file.Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val (fileMode, crcMode, dirMode) =
+      (mode(ref.resolve("f")), mode(ref.resolve(".f.crc")), mode(ref.resolve("d")))
+
+    val verifying = new LocalFileSystem()
+    verifying.initialize(java.net.URI.create("file:///"), conf)
+    verifying.setVerifyChecksum(true)
+    val log = new SnapshotLog(dir)
+    assert(log.committedBuckets() == Set(0, 1, 2, 3))
+    log.committedBuckets().foreach { b =>
+      val bucketDir = log.bucketDataDir(b)
+      assert(mode(bucketDir) == dirMode, s"bucket $b dir")
+      val data = Compaction.parquetFiles(bucketDir)
+      assert(data.nonEmpty)
+      data.foreach { f =>
+        assert(mode(f) == fileMode, s"$f")
+        val crc = f.resolveSibling(s".${f.getFileName}.crc")
+        assert(Files.exists(crc), s"no checksum sidecar for $f")
+        assert(mode(crc) == crcMode, s"$crc")
+        val in = verifying.open(new Path(f.toUri))
+        try in.readAllBytes() finally in.close() // ChecksumException on a mismatch
+      }
+    }
+    assert(ResumableRun.readTable(spark, dir).count() == pages.count())
+  }
+}
