@@ -12,11 +12,11 @@ import graft.model._
   * SURVEY.md §2.2 "the whole extraction kernel becomes one typed per-row
   * function". No subprocesses, no temp files (eliminates S5/S11 by design).
   *
-  * Error semantics = R1 (file_converter.py:99-100): any exception yields the
-  * `text` column as fallback output plus a non-null `error`; the job never
-  * fails on a bad document. Empty-parse fallback = R2
-  * (powerpoint_processor.py:196-203): error stays null, output falls back to
-  * the plain `text` column.
+  * Error semantics = R1 (file_converter.py:99-100): any document error
+  * ([[Extractor.documentError]]) yields the `text` column as fallback
+  * output plus a non-null `error`; the job never fails on a bad document.
+  * Empty-parse fallback = R2 (powerpoint_processor.py:196-203): error
+  * stays null, output falls back to the plain `text` column.
   */
 object Extractor {
 
@@ -35,10 +35,19 @@ object Extractor {
       val dom = HtmlParser.parse(new String(html, StandardCharsets.UTF_8))
       extractHtml(dom, text, html.length.toLong, warcTsUs, bodyOnly)
     } catch {
-      case e: Throwable =>
+      case e: Throwable if documentError(e) =>
         fallback(text, s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
     }
   }
+
+  /** Errors that belong to the document and become a fallback row: any
+    * non-fatal exception, and a `StackOverflowError` (a page nested past
+    * the thread stack). Other JVM errors (`OutOfMemoryError`,
+    * `InternalError`), `InterruptedException` and `LinkageError` say
+    * nothing about the page — a fallback row for them would make the same
+    * url extract differently between runs — so they fail the task. */
+  def documentError(t: Throwable): Boolean =
+    scala.util.control.NonFatal(t) || t.isInstanceOf[StackOverflowError]
 
   def isPdf(bytes: Array[Byte]): Boolean =
     bytes.length >= 5 && bytes(0) == '%' && bytes(1) == 'P' &&

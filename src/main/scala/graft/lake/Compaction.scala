@@ -12,19 +12,19 @@ import org.apache.spark.sql.SparkSession
   * scans.
   *
   * `compact` re-stages every bucket holding more than `maxFiles` data
-  * files through [[ResumableRun.stageAndCommit]] — the same hash-distributed
+  * files through [[ResumableRun.stageAndCommit]] — the same single
   * staging job as a normal run, so each rewritten bucket is one file with
-  * freshly observed stats — and re-commits it through the NORMAL snapshot
-  * protocol, single-writer like the rest of the log (ADVICE r4: the swap
-  * is move-aside + move-in, so a concurrent lister could still catch a
-  * brief not-found window between the two renames; readers must resolve
-  * paths from a manifest before or after the commit, never during). Each
-  * commit appends a new manifest version. Time travel: all manifests remain
-  * readable, but versions older than the compaction now resolve to the
-  * compacted files (the log keeps manifests, not data copies — the
-  * documented SnapshotLog caveat, same trade Iceberg makes once old files
-  * are expired). Pair with `SnapshotLog.expireManifests` to bound manifest
-  * growth.
+  * stats read from its fresh footers — and re-commits it through the
+  * NORMAL snapshot protocol, single-writer like the rest of the log
+  * (ADVICE r4: the swap is move-aside + move-in, so a concurrent lister
+  * could still catch a brief not-found window between the two renames;
+  * readers must resolve paths from a manifest before or after the commit,
+  * never during). Each commit appends a new manifest version. Time
+  * travel: all manifests remain readable, but versions older than the
+  * compaction now resolve to the compacted files (the log keeps manifests,
+  * not data copies — the documented SnapshotLog caveat, same trade Iceberg
+  * makes once old files are expired). Pair with
+  * `SnapshotLog.expireManifests` to bound manifest growth.
   */
 object Compaction {
 
@@ -35,12 +35,9 @@ object Compaction {
     log.sweepStaleStages()
     val todo = log.committedBuckets().toVector.sorted
       .filter(b => parquetFiles(log.bucketDataDir(b)).size > maxFiles)
-    todo.grouped(ResumableRun.maxObservedBuckets).foreach { chunk =>
-      // partition discovery under data/ yields the `bucket` column
-      val rows = spark.read.option("basePath", log.dataDir.toString)
-        .parquet(chunk.map(b => log.bucketDataDir(b).toString): _*)
-      ResumableRun.stageAndCommit(log, rows, chunk)
-    }
+    if (todo.nonEmpty) // partition discovery under data/ yields the `bucket` column
+      ResumableRun.stageAndCommit(log, spark.read.option("basePath", log.dataDir.toString)
+        .parquet(todo.map(b => log.bucketDataDir(b).toString): _*), todo)
     todo
   }
 

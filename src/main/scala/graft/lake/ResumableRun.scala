@@ -1,6 +1,18 @@
 package graft.lake
 
+import java.nio.file.Path
+import scala.jdk.CollectionConverters._
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveComparator
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import graft.pipeline.Pipeline
 
 /** Resumable extraction run: pages are hashed into salted buckets
@@ -9,20 +21,18 @@ import graft.pipeline.Pipeline
   * bucket — the BASELINE.json requirement "resumes from Iceberg snapshot
   * checkpoints so a killed run restarts at partition granularity".
   *
-  * Every lake write goes through [[stageAndCommit]]: ONE job per chunk of
-  * at most [[maxObservedBuckets]] buckets shuffles the chunk's rows so each
-  * bucket lands whole in one of at most one-per-core write tasks and
-  * dynamic-partition-writes them to `_tmp/stage-<v>/bucket=N/` (one file
-  * per bucket, permission bits set in-process by [[NioLocalFileSystem]]),
-  * computing each bucket's manifest stats in the same pass via observe();
-  * then each staged bucket dir is atomically committed in its own
-  * snapshot. A run killed mid-job loses at most one chunk of work; each
-  * chunk scans the input once (the bucket is a url-hash, which no source
-  * can push down), so a table of up to 64 buckets is written by a single
-  * scan. [[Compaction]] re-stages committed buckets through the same path.
-  * Stale `stage-*` dirs from previously killed runs are swept before
-  * staging (the next run's stagingRoot has a new version suffix, so
-  * leftovers would otherwise leak forever).
+  * Every lake write goes through [[stageAndCommit]]: ONE job scans the
+  * input once and shuffles its rows so each bucket lands whole in one of at
+  * most one-per-core write tasks, which dynamic-partition-write them to
+  * `_tmp/stage-<v>/bucket=N/` (one file per bucket, permission bits set
+  * in-process by [[NioLocalFileSystem]]); each bucket's manifest stats are
+  * then read from the footers of the files it staged, and each staged
+  * bucket dir is atomically committed in its own snapshot. A run killed
+  * mid-job loses that whole job; a run killed in the commit loop keeps
+  * every bucket it committed. [[Compaction]] re-stages committed buckets
+  * through the same path. Stale `stage-*` dirs from previously killed runs
+  * are swept before staging (the next run's stagingRoot has a new version
+  * suffix, so leftovers would otherwise leak forever).
   */
 object ResumableRun {
 
@@ -32,12 +42,6 @@ object ResumableRun {
     * production paths never set it, so the hot path pays one volatile read
     * per phase, not per row. */
   @volatile private[graft] var onPhase: (String, Double) => Unit = null
-
-  /** Buckets per staging job. Each bucket's manifest stats are 6
-    * conditional aggregates in the job's one flat CollectMetrics node, so
-    * this width bounds that node's codegen (many thousands of aggregate
-    * expressions would bloat it); it is also the crash-loss bound above. */
-  val maxObservedBuckets: Int = 64
 
   @inline private def phase[T](name: String)(f: => T): T = {
     val cb = onPhase
@@ -55,15 +59,17 @@ object ResumableRun {
     * killed run in tests). `bucketExpr` is the table's PARTITION SPEC — a
     * pure Column mapping each row to [0, nBuckets) over columns present on
     * BOTH the input and the extracted output (url, warc_ts, lang); the
-    * default is the skew-safe salted url-hash. Choose a spec that CLUSTERS
-    * the stats columns (e.g. a domain- or lang-derived bucket) when
-    * manifest-stats pruning ([[readTablePruned]]) matters for the table's
-    * query mix — hash buckets defeat min/max pruning by construction, the
-    * same trade Iceberg documents for partition spec + sort order. Returns
-    * the buckets processed this run. */
+    * default is the skew-safe salted url-hash. A row it maps to NULL or
+    * outside [0, nBuckets) fails the run before anything is committed.
+    * Choose a spec that CLUSTERS the stats columns (e.g. a domain- or
+    * lang-derived bucket) when manifest-stats pruning ([[readTablePruned]])
+    * matters for the table's query mix — hash buckets defeat min/max
+    * pruning by construction, the same trade Iceberg documents for
+    * partition spec + sort order. Returns the buckets processed this run. */
   def run(spark: SparkSession, pages: DataFrame, tableDir: String,
       nBuckets: Int, maxBuckets: Int = Int.MaxValue,
       bucketExpr: Option[org.apache.spark.sql.Column] = None): Vector[Int] = {
+    import org.apache.spark.sql.functions.{coalesce, concat, lit, raise_error, when}
     val log = new SnapshotLog(tableDir)
     val todo = phase("log_init") {
       log.init()
@@ -72,119 +78,125 @@ object ResumableRun {
       (0 until nBuckets).filterNot(done.contains).take(maxBuckets).toVector
     }
     if (todo.isEmpty) return todo
-    val bucket = phase("hot_domains") {
+    val b = phase("hot_domains") {
       bucketExpr.getOrElse(
         Pipeline.saltedBucket(Pipeline.hotDomains(pages).keySet, nBuckets))
     }
-    todo.grouped(maxObservedBuckets).foreach { chunk =>
-      val input =
-        if (chunk.size == nBuckets) pages
-        else pages.filter(bucket.isin(chunk.map(Integer.valueOf): _*))
-      // The bucket is a pure function of input columns, so it is
-      // (re)computed on the extracted OUTPUT — the kernel column set stays
-      // clean and the input needs no bucket column threaded through the
-      // kernel expression.
-      stageAndCommit(log, Pipeline.extracted(input).withColumn("bucket", bucket), chunk)
-    }
+    // a row without a bucket in [0, nBuckets) would stage under a dir no
+    // commit picks up (`bucket=__HIVE_DEFAULT_PARTITION__` for NULL) and
+    // vanish from the table, so it fails the staging job instead
+    val bucket = when(b.isNull || b < 0 || b >= nBuckets,
+      raise_error(concat(lit(s"bucketExpr must map every row to [0, $nBuckets), got "),
+        coalesce(b.cast("string"), lit("NULL"))))).otherwise(b)
+    val input =
+      if (todo.size == nBuckets) pages
+      else pages.filter(bucket.isin(todo.map(Integer.valueOf): _*))
+    // The bucket is a pure function of input columns, so it is (re)computed
+    // on the extracted OUTPUT — the kernel column set stays clean and the
+    // input needs no bucket column threaded through the kernel expression.
+    stageAndCommit(log, Pipeline.extracted(input).withColumn("bucket", bucket), todo)
     todo
   }
 
   /** Stage `rows` (carrying a BIGINT or INT `bucket` column, every value in
-    * `chunk`) in one job and commit each bucket of `chunk` in its own
-    * snapshot with the min/max stats observed on the rows it wrote. A bucket
-    * with no rows commits an empty schema-bearing parquet write and no
-    * stats. */
+    * `buckets`) in one job and commit each of `buckets` in its own snapshot
+    * with the min/max stats of the rows it staged. A bucket with no rows
+    * commits an empty schema-bearing parquet write and no stats. */
   private[lake] def stageAndCommit(log: SnapshotLog, rows: DataFrame,
-      chunk: Vector[Int]): Unit = {
-    require(chunk.size <= maxObservedBuckets,
-      s"${chunk.size} buckets exceed one staging job's $maxObservedBuckets")
-    val spark = rows.sparkSession
+      buckets: Vector[Int]): Unit = {
     val stageRoot = log.stagingRoot()
-    import org.apache.spark.sql.functions.{array_position, col, min, max, typedLit, when}
-    // Per-bucket (url, lang, warc_ts) min/max for the manifest, folded into
-    // the STAGING JOB: the stats aggregate the very rows the job writes, so
-    // a CollectMetrics node on the write computes them in the same pass
-    // instead of re-reading the staged parquet (measured 1.7-3.9s of pure
-    // re-scan per commit at sf0.1). Conditional min/max per bucket keeps it
-    // one flat (ungrouped) aggregate, which is all observe() supports.
-    val obs = org.apache.spark.sql.Observation()
-    val exprs = chunk.flatMap { b =>
-      Seq(min(when(col("bucket") === b, col("url"))).as(s"u0_$b"),
-        max(when(col("bucket") === b, col("url"))).as(s"u1_$b"),
-        min(when(col("bucket") === b, col("lang"))).as(s"l0_$b"),
-        max(when(col("bucket") === b, col("lang"))).as(s"l1_$b"),
-        min(when(col("bucket") === b, col("warc_ts"))).as(s"t0_$b"),
-        max(when(col("bucket") === b, col("warc_ts"))).as(s"t1_$b"))
-    }
+    import org.apache.spark.sql.functions.{array_position, col, typedLit}
+    val spark = rows.sparkSession
     // Each bucket goes whole to ONE write task before the dynamic-partition
     // write — the Iceberg write.distribution-mode analog. Without it every
-    // task streams rows to up to chunk-size open files, so the staged file
-    // count is tasks x buckets (measured 4x the write time at sf0.1 from
-    // per-file writer setup alone, and at corpus scale a small-files
+    // task streams rows to up to one open file per bucket, so the staged
+    // file count is tasks x buckets (measured 4x the write time at sf0.1
+    // from per-file writer setup alone, and at corpus scale a small-files
     // explosion on the table). The task of a bucket is its index in
-    // `chunk` mod P, P = min(chunk size, default parallelism): one task per
-    // core at most, and every task gets a bucket. A hash of the bucket id
-    // would leave tasks empty (murmur3 puts 16 bucket ids in only 10 of 16
-    // partitions, while every task pays its fixed start-up), and strided
+    // `buckets` mod P, P = min(bucket count, default parallelism): one task
+    // per core at most, and every task gets a bucket. A hash of the bucket
+    // id would leave tasks empty (murmur3 puts 16 bucket ids in only 10 of
+    // 16 partitions, while every task pays its fixed start-up), and strided
     // resumed subsets such as {3, 7, 11, 15} would collide on an id mod P.
-    val parts = math.min(chunk.size, spark.sparkContext.defaultParallelism)
-    val task = ((array_position(typedLit(chunk.map(_.toLong)),
+    val parts = math.min(buckets.size, spark.sparkContext.defaultParallelism)
+    val task = ((array_position(typedLit(buckets.map(_.toLong)),
       col("bucket").cast("long")) - 1) % parts).cast("int")
     phase("stage_write") {
-      rows.observe(obs, exprs.head, exprs.tail: _*)
-        .repartitionById(parts, task)
-        .write.options(NioLocalFileSystem.writeOptions)
-        .mode("overwrite").partitionBy("bucket").parquet(stageRoot.toString)
-    }
-    // warc_ts bounds: min/max the RAW timestamp (an absolute instant —
-    // timezone-free) and render driver-side with an explicit UTC
-    // formatter. date_format would render in spark.sql.session.timeZone,
-    // so a non-UTC writer session would record shifted bounds a UTC
-    // reader then prunes WRONGLY with (round-5 review). Truncation to
-    // whole seconds is sound: it only LOWERS each bound, and ColBound
-    // values are second-granularity, so a `hi < value` prune still
-    // implies value > trueMax (the sub-second remainder is < the 1s
-    // granularity step) — pruning stays conservative.
-    val utcFmt = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd HH:mm:ss", java.util.Locale.ROOT)
-      .withZone(java.time.ZoneOffset.UTC)
-    // null-safe and independent of spark.sql.datetime.java8API.enabled
-    // (Instant vs Timestamp external type); an all-NULL column in a bucket
-    // yields a null bound — recorded as "" (= unknown, never prunes)
-    def fmt(v: Any): String = v match {
-      case null => ""
-      case t: java.sql.Timestamp => utcFmt.format(t.toInstant)
-      case i: java.time.Instant => utcFmt.format(i)
-      case other => other.toString
+      rows.repartitionById(parts, task)
+        .write.format(classOf[MicrosParquet].getName).options(NioLocalFileSystem.writeOptions)
+        .mode("overwrite").partitionBy("bucket").save(stageRoot.toString)
     }
     val stats: Map[Int, BucketStats] = phase("stats_agg") {
-      val m = obs.get
-      chunk.flatMap { b =>
-        m(s"u0_$b") match {
-          case null => None // empty bucket: no bounds to record
-          case umin => Some(b -> BucketStats(fmt(umin),
-            fmt(m(s"u1_$b")), fmt(m(s"l0_$b")), fmt(m(s"l1_$b")),
-            fmt(m(s"t0_$b")), fmt(m(s"t1_$b"))))
-        }
+      buckets.flatMap { b =>
+        val staged = stageRoot.resolve(s"bucket=$b")
+        // empty bucket: no dir, no bounds to record
+        if (java.nio.file.Files.exists(staged)) Some(b -> footerStats(staged)) else None
       }.toMap
     }
     // schema of the staged DATA files: partitionBy moves `bucket` out
     val dataSchema = org.apache.spark.sql.types.StructType(
       rows.schema.filterNot(_.name == "bucket"))
-    phase("commit_loop") { chunk.foreach { b =>
+    phase("commit_loop") { buckets.foreach { b =>
       val staged = stageRoot.resolve(s"bucket=$b")
       // a bucket with zero rows stages no dir; commit an EMPTY parquet
       // write carrying the schema (ADVICE r3: a table whose committed
       // buckets are all file-less dirs has no footers to infer schema from,
       // so readTable would fail on an empty input)
-      if (!java.nio.file.Files.exists(staged))
+      if (!stats.contains(b))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
-          .write.options(NioLocalFileSystem.writeOptions).parquet(staged.toString)
+          .write.format(classOf[MicrosParquet].getName)
+          .options(NioLocalFileSystem.writeOptions).save(staged.toString)
       log.commitBucket(b, staged, stats.get(b))
     } }
     // only write-protocol leftovers (_SUCCESS) remain under the stage root
     SnapshotLog.deleteRecursively(stageRoot)
+  }
+
+  // built once: the no-argument builder loads a fresh Hadoop Configuration,
+  // ~10 ms per footer
+  private lazy val footerOptions =
+    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
+
+  /** (url, lang, warc_ts) bounds of the parquet files in `dir`, folded over
+    * the min/max every row group records in its file's footer — the Iceberg
+    * per-file metrics, read instead of re-scanning rows. A column's bounds
+    * are "" (unknown, never prunes) when no row holds a value, or when a
+    * row group holds values but recorded no min/max: parquet drops them
+    * for values over 4 KB, and INT96 timestamps never have them. warc_ts
+    * is INT64 micros, rendered as whole UTC seconds; flooring only lowers
+    * a bound, and ColBound values are second-granularity, so a prune on
+    * `hi < value` still implies value > the true max. */
+  private[lake] def footerStats(dir: Path): BucketStats = {
+    val chunks = Compaction.parquetFiles(dir).flatMap { f =>
+      val file = new LocalInputFile(f)
+      val in = file.newStream()
+      val footer =
+        try ParquetFileReader.readFooter(file, footerOptions, in)
+        finally in.close()
+      footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
+    }
+    def bounds(column: String)(render: Any => String): (String, String) = {
+      var lo, hi: Any = null
+      var unknown = false
+      chunks.filter(_.getPath.toDotString == column).foreach { c =>
+        val s: Statistics[_] = c.getStatistics
+        if (s.hasNonNullValue) {
+          val cmp = s.comparator().asInstanceOf[PrimitiveComparator[Any]]
+          if (lo == null || cmp.compare(s.genericGetMin, lo) < 0) lo = s.genericGetMin
+          if (hi == null || cmp.compare(s.genericGetMax, hi) > 0) hi = s.genericGetMax
+        } else if (!s.isNumNullsSet || s.getNumNulls < c.getValueCount) unknown = true
+      }
+      if (unknown || lo == null) ("", "") else (render(lo), render(hi))
+    }
+    val utf8 = (v: Any) => v.asInstanceOf[Binary].toStringUsingUTF8
+    val (u0, u1) = bounds("url")(utf8)
+    val (l0, l1) = bounds("lang")(utf8)
+    val (t0, t1) = bounds("warc_ts") { v =>
+      ColBound.utcFmt.format(java.time.Instant.ofEpochSecond(
+        Math.floorDiv(v.asInstanceOf[java.lang.Long].longValue, 1000000L)))
+    }
+    BucketStats(u0, u1, l0, l1, t0, t1)
   }
 
   /** Read the committed table back (all committed buckets). */
@@ -235,5 +247,23 @@ object ResumableRun {
     val paths = log.committedPathsAt(version)
     require(paths.nonEmpty, s"no committed buckets at snapshot v$version under $tableDir")
     spark.read.parquet(paths: _*)
+  }
+}
+
+/** The staging write's parquet: timestamps as INT64 micros, which parquet
+  * footers carry min/max for (the INT96 default has none), so
+  * [[ResumableRun.footerStats]] can read `warc_ts` bounds. A write option
+  * cannot set this — `prepareWrite` copies the session's
+  * `spark.sql.parquet.outputTimestampType` over it — and writing through a
+  * session clone that sets it recompiled every generated class of the job
+  * on each commit (9 per run, measured on Spark 4.1). Files read back as
+  * plain parquet. */
+private[lake] final class MicrosParquet extends ParquetFileFormat {
+  override def prepareWrite(spark: SparkSession, job: org.apache.hadoop.mapreduce.Job,
+      options: Map[String, String], dataSchema: org.apache.spark.sql.types.StructType)
+      : OutputWriterFactory = {
+    val writers = super.prepareWrite(spark, job, options, dataSchema)
+    job.getConfiguration.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+    writers
   }
 }

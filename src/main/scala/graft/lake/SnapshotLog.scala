@@ -99,9 +99,8 @@ final class SnapshotLog(tableDir: String) {
     * review — the per-field helper calls re-read it several times). Each
     * manifest still lists every committed bucket, so a B-bucket table
     * writes O(B) manifest bytes per commit — the same bound as Iceberg's
-    * manifest lists, amortized there by multi-bucket commits, here by
-    * [[ResumableRun]]'s chunked staging (many buckets per job, few
-    * commits). */
+    * manifest lists, amortized there by multi-bucket commits; here each
+    * staged bucket is one commit. */
   def commitBucket(bucket: Int, staged: Path,
       stats: Option[BucketStats] = None): Unit = {
     val v0 = latestVersion()
@@ -254,7 +253,7 @@ final case class ColBound(col: String, op: String, value: String) {
 }
 
 object ColBound {
-  private val utcFmt = java.time.format.DateTimeFormatter
+  private[lake] val utcFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss", java.util.Locale.ROOT)
     .withZone(java.time.ZoneOffset.UTC)
 
@@ -319,10 +318,14 @@ object SnapshotLog {
       case None => Set.empty
     }
 
+  // one JSON string body: runs of plain chars, each escape then another
+  // run. The plain `(?:[^"\\]|\\.)*` alternation recurses once per char
+  // in java.util.regex and overflowed the stack on a 5 KB url bound.
+  private val str = """([^"\\]*+(?:\\.[^"\\]*+)*+)"""
   private val statsEntry =
-    (""""(\d+)":\{"url_min":"((?:[^"\\]|\\.)*)","url_max":"((?:[^"\\]|\\.)*)",""" +
-      """"lang_min":"((?:[^"\\]|\\.)*)","lang_max":"((?:[^"\\]|\\.)*)"""" +
-      """(?:,"ts_min":"((?:[^"\\]|\\.)*)","ts_max":"((?:[^"\\]|\\.)*)")?\}""").r
+    (raw""""(\d+)":\{"url_min":"$str","url_max":"$str",""" +
+      raw""""lang_min":"$str","lang_max":"$str"""" +
+      raw"""(?:,"ts_min":"$str","ts_max":"$str")?\}""").r
 
   private[lake] def parseStats(json: String): Map[Int, BucketStats] =
     statsEntry.findAllMatchIn(json).map { m =>

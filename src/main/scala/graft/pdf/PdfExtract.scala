@@ -113,7 +113,7 @@ object PdfExtract {
       ExtractResult(sb.toString, spans.result(), Links.dedupKeepLongest(links.toSeq),
         meta, Vector.empty, null)
     } catch {
-      case e: Throwable =>
+      case e: Throwable if graft.extract.Extractor.documentError(e) =>
         graft.extract.Extractor.fallback(textFallback,
           s"pdf: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
     }

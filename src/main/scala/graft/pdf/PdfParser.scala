@@ -136,7 +136,7 @@ object PdfParser {
             }
           case _ => Map.empty
         }
-      } catch { case _: Throwable => Map.empty }
+      } catch { case t: Throwable if graft.extract.Extractor.documentError(t) => Map.empty }
     }
 
     /** Xref-stream fallback: lowest-numbered indirect object whose dict
@@ -150,7 +150,7 @@ object PdfParser {
           case d: PDict if infoKeys.exists(k => d.get(k).isDefined) &&
               !structural.exists(k => d.get(k).isDefined) => infoOf(d)
         }.getOrElse(Map.empty)
-      } catch { case _: Throwable => Map.empty }
+      } catch { case t: Throwable if graft.extract.Extractor.documentError(t) => Map.empty }
     }
 
     /** All pages in page-tree order; falls back to scanning every object

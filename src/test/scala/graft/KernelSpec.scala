@@ -623,4 +623,16 @@ class KernelSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("kernel fallback only on document errors; JVM and thread errors fail the task") {
+    // a fallback row for an error that says nothing about the page would make
+    // the same url extract differently between runs
+    val document = Seq(new RuntimeException("bad page"), new IllegalArgumentException,
+      new ArrayIndexOutOfBoundsException(3), new NumberFormatException, new StackOverflowError)
+    val fatal = Seq(new OutOfMemoryError("Java heap space"), new InternalError,
+      new InterruptedException, new NoClassDefFoundError("graft/html/Elem"),
+      new LinkageError)
+    document.foreach(t => assert(Extractor.documentError(t), s"$t must fall back"))
+    fatal.foreach(t => assert(!Extractor.documentError(t), s"$t must fail the task"))
+  }
 }

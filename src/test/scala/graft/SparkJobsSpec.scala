@@ -7,9 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.lake.{ResumableRun, SnapshotLog}
 import graft.pipeline.Pipeline
-import graft.streaming.StreamPipeline
 
-/** End-to-end Spark job tests: resumable lake runs, streaming, salting,
+/** End-to-end Spark job tests: resumable lake runs, salting,
   * metrics. One shared local session (startup is the expensive part). */
 class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -44,6 +43,19 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (id, text, lang) => graft.synth.Synth.pageFor(id, text, lang) }
       .toDF()
   }
+
+  /** Per-bucket (url, lang, warc_ts) min/max of a table's committed rows
+    * by an independent groupBy aggregation, in the manifest's form (warc_ts
+    * in this session's UTC); buckets without rows have no entry. */
+  private def aggregatedStats(dir: String): Map[Int, graft.lake.BucketStats] =
+    spark.read.option("basePath", s"$dir/data").parquet(new SnapshotLog(dir).committedPaths(): _*)
+      .groupBy(col("bucket"))
+      .agg(min(col("url")), max(col("url")), min(col("lang")), max(col("lang")),
+        date_format(min(col("warc_ts")), "yyyy-MM-dd HH:mm:ss"),
+        date_format(max(col("warc_ts")), "yyyy-MM-dd HH:mm:ss"))
+      .collect().map(r => r.getInt(0) -> graft.lake.BucketStats(r.getString(1),
+        r.getString(2), r.getString(3), r.getString(4), r.getString(5), r.getString(6)))
+      .toMap
 
   test("resumable run: killed run resumes at bucket granularity, result equals full run") {
     val p = pages
@@ -104,59 +116,6 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val noSalt = p.withColumn("b", Pipeline.saltedBucket(Set.empty, nBuckets))
     val worst = noSalt.groupBy("b").count().collect().map(_.getLong(1)).max
     assert(worst > sizes.max, "salting should strictly reduce the max bucket")
-  }
-
-  test("streaming extract with AvailableNow processes increments exactly once") {
-    val inDir = tmp(); val outDir = tmp() + "/out"; val ckpt = tmp() + "/ckpt"
-    val p = pages
-    p.filter(col("url").rlike("doc-[0-9]$")).write.mode("append").parquet(inDir)
-    StreamPipeline.runExtractAvailableNow(spark, inDir, outDir, ckpt)
-    val n1 = spark.read.parquet(outDir).count()
-    assert(n1 == 10)
-    // append a second batch; rerun with same checkpoint -> only new rows
-    p.filter(col("url").rlike("doc-1[0-9]$")).write.mode("append").parquet(inDir)
-    StreamPipeline.runExtractAvailableNow(spark, inDir, outDir, ckpt)
-    val out = spark.read.parquet(outDir)
-    assert(out.count() == 20)
-    assert(out.select("url").distinct().count() == 20) // no reprocessing
-  }
-
-  test("streaming windowed counts match the batch computation") {
-    val inDir = tmp(); val outDir = tmp() + "/out"; val ckpt = tmp() + "/ckpt"
-    val p = pages
-    // feed time-ordered chunks (how a crawl table actually lands): each file
-    // is one micro-batch; the watermark advances between them and append
-    // mode emits every closed window with its complete count
-    (0 until 4).foreach { chunk =>
-      p.filter(col("warc_ts").cast("long").between(
-          1700000000L + chunk * 125 * 600, 1700000000L + (chunk + 1) * 125 * 600 - 1))
-        .coalesce(1).write.mode("append").parquet(inDir)
-    }
-    StreamPipeline.runWindowedCounts(spark, inDir, outDir, ckpt)
-    // append-mode emits only watermark-closed windows; every emitted row
-    // must match the batch aggregation exactly
-    val streamed = spark.read.parquet(outDir).collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val batch = StreamPipeline.windowedCountsBatch(p).collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed.subsetOf(batch))
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming dedup within watermark drops re-crawled duplicates exactly once") {
-    val inDir = tmp(); val outDir = tmp() + "/out"; val ckpt = tmp() + "/ckpt"
-    val p = pages.filter(col("url").rlike("doc-[0-9]$")).cache() // 10 docs
-    p.coalesce(1).write.mode("append").parquet(inDir)
-    // same content re-crawled 10 minutes later: same fp, within the 1h
-    // watermark -> must be dropped
-    p.withColumn("warc_ts", col("warc_ts") + expr("INTERVAL 10 MINUTES"))
-      .coalesce(1).write.mode("append").parquet(inDir)
-    // genuinely new docs
-    pages.filter(col("url").rlike("doc-1[0-9]$")).coalesce(1).write.mode("append").parquet(inDir)
-    StreamPipeline.runDedupAvailableNow(spark, inDir, outDir, ckpt)
-    val out = spark.read.parquet(outDir)
-    assert(out.count() == 20, s"expected 20 unique docs, got ${out.count()}")
-    assert(out.select("fp").distinct().count() == 20)
   }
 
   test("metrics sidecar counts docs and errors per partition") {
@@ -277,47 +236,6 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the same page with its warc_ts does carry the line, so the check above
     // is not vacuous
     assert(out("with-ts")._2.nonEmpty && out("with-ts")._1.contains("Crawl Date"), out("with-ts"))
-  }
-
-  test("stateful streaming sessionization emits closed sessions matching batch") {
-    val inDir = tmp(); val outDir = tmp() + "/out"; val ckpt = tmp() + "/ckpt"
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    // 4 time-ordered chunks (events are roughly time-ordered by event_id)
-    (0 until 4).foreach { chunk =>
-      events.filter(col("event_id") >= chunk * 250 && col("event_id") < (chunk + 1) * 250)
-        .coalesce(1).write.mode("append").parquet(inDir)
-    }
-    graft.streaming.Sessionize.run(spark, inDir, outDir, ckpt)
-    val streamed = spark.read.parquet(outDir)
-      .select("user_id", "start_us", "end_us", "n_events").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(streamed.nonEmpty)
-    // every emitted session must appear in the batch sessionization
-    val batch = SparkEntry.queries("q_sessionize")(spark, "/root/testdata/sf0.001")
-      .select("user_id", "start_us", "end_us", "n_events").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(streamed.subsetOf(batch),
-      s"streamed sessions not in batch: ${streamed.diff(batch).take(3)}")
-  }
-
-  test("sessionize updateState min-merges an out-of-order event within the watermark") {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import graft.streaming.Sessionize
-    import graft.streaming.Sessionize.{Ev, SessionState}
-    def ev(sec: Long) = Ev(7L, new java.sql.Timestamp(sec * 1000L))
-    // stored session: [2000s, 2500s], 2 events; a late event at 1800s arrives
-    // in a later micro-batch (within the 30-min gap of end_us)
-    val state = TestGroupState.create[SessionState](
-      org.apache.spark.api.java.Optional.of(
-        SessionState(2000L * 1000000L, 2500L * 1000000L, 2)),
-      GroupStateTimeout.EventTimeTimeout(), 0L,
-      org.apache.spark.api.java.Optional.of(1000L * 1000L), false)
-    val out = Sessionize.updateState(7L, Iterator(ev(1800L)), state).toVector
-    assert(out.isEmpty) // session extends, nothing closes
-    val s = state.get
-    assert(s.start_us == 1800L * 1000000L, "late event must lower session start")
-    assert(s.end_us == 2500L * 1000000L)
-    assert(s.n == 3)
   }
 
   test("DataSource V2 pages connector equals Pipeline.pages and prunes columns") {
@@ -778,22 +696,6 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fused == unfused)
   }
 
-  test("stream-static broadcast enrichment joins the hot-domain dim without shuffling the stream") {
-    val sp = spark
-    import sp.implicits._
-    val inDir = tmp(); val outDir = tmp() + "/out"; val ckpt = tmp() + "/ckpt"
-    pages.write.mode("append").parquet(inDir)
-    val hotDim = Pipeline.hotDomains(pages).keySet.toSeq.toDF("domain")
-      .withColumn("is_hot", lit(true))
-    StreamPipeline.runEnrichAvailableNow(spark, inDir, hotDim, outDir, ckpt)
-    val out = spark.read.parquet(outDir)
-    assert(out.count() == 500)
-    val hotRows = out.filter(col("is_hot")).select("domain").distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(hotRows == Set("big.example.com", "hub.example.org"))
-    assert(out.filter(!col("is_hot")).count() > 0)
-  }
-
   test("fused CentroidArgsort equals the literal struct-sort ranking") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = graft.ops.Ann.trainCentroids(e, k = 16, iters = 1)
@@ -900,13 +802,15 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fused == unfused)
   }
 
-  test("chunked resumable run commits per chunk and equals the single-job table") {
-    // two bucket chunks beyond one staging job's width: two chunk jobs
+  test("a 66-bucket run is one staging job; footer stats equal a groupBy aggregation") {
     val p = pages
-    val nBuckets = ResumableRun.maxObservedBuckets + 2
+    val nBuckets = 66
     val dir = tmp()
-    val done = ResumableRun.run(spark, p, dir, nBuckets)
+    val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    ResumableRun.onPhase = (ph: String, _: Double) => { phases.add(ph); () }
+    val done = try ResumableRun.run(spark, p, dir, nBuckets) finally ResumableRun.onPhase = null
     assert(done == (0 until nBuckets).toVector)
+    assert(phases.toArray.count(_ == "stage_write") == 1, s"phases: $phases")
     val got = ResumableRun.readTable(spark, dir)
       .select("url", "extracted_text").collect()
       .map(rw => (rw.getString(0), rw.getString(1))).toMap
@@ -914,22 +818,91 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("url", "extracted_text").collect()
       .map(rw => (rw.getString(0), rw.getString(1))).toMap
     assert(got == expected)
-    // every bucket still committed individually (resume granularity in the
-    // log is unchanged; the chunking bounds work LOST to a mid-job kill)
+    // every bucket still committed individually: the log resumes per bucket
     val log = new SnapshotLog(dir)
     assert(log.latestVersion() == nBuckets)
-    // both chunks' observed stats equal an independent per-bucket
-    // aggregation over the committed data (empty buckets: no entry)
-    val agg = spark.read.option("basePath", s"$dir/data").parquet(log.committedPaths(): _*)
-      .groupBy(col("bucket"))
-      .agg(min(col("url")), max(col("url")), min(col("lang")), max(col("lang")),
-        date_format(min(col("warc_ts")), "yyyy-MM-dd HH:mm:ss"),
-        date_format(max(col("warc_ts")), "yyyy-MM-dd HH:mm:ss"))
-      .collect().map(r => r.getInt(0) -> graft.lake.BucketStats(r.getString(1),
-        r.getString(2), r.getString(3), r.getString(4), r.getString(5), r.getString(6)))
-      .toMap
-    assert(agg.keySet.exists(_ >= ResumableRun.maxObservedBuckets), "second chunk is empty")
+    // footer stats equal an independent per-bucket aggregation over the
+    // committed data (empty buckets: no entry), past bucket 64 too
+    val agg = aggregatedStats(dir)
+    assert(agg.keySet.exists(_ >= 64), "no rows beyond bucket 64")
     assert(log.bucketStats() == agg)
+  }
+
+  test("a NULL or out-of-range bucket fails the run and commits nothing") {
+    val nBuckets = 4
+    val valid = pmod(xxhash64(col("url")), lit(nBuckets))
+    def raised(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("bucketExpr must map every row")))
+    Seq("NULL for lang en" -> when(col("lang") === "en", lit(null)).otherwise(valid),
+        "nBuckets" -> lit(nBuckets)).foreach { case (name, spec) =>
+      // a fresh run over every bucket, and a resumed run over a subset
+      val fresh = tmp()
+      val e1 = intercept[Exception](
+        ResumableRun.run(spark, pages, fresh, nBuckets, bucketExpr = Some(spec)))
+      assert(raised(e1), s"$name: $e1")
+      assert(new SnapshotLog(fresh).latestVersion() == 0, name)
+      val resumed = tmp()
+      ResumableRun.run(spark, pages, resumed, nBuckets, maxBuckets = 1, bucketExpr = Some(valid))
+      val e2 = intercept[Exception](
+        ResumableRun.run(spark, pages, resumed, nBuckets, bucketExpr = Some(spec)))
+      assert(raised(e2), s"$name resumed: $e2")
+      val log = new SnapshotLog(resumed)
+      assert(log.latestVersion() == 1 && log.committedBuckets() == Set(0), name)
+    }
+  }
+
+  test("a 5 KB url gets exact or unknown url bounds, and its bucket is never pruned") {
+    import graft.lake.ColBound
+    val maxUrl = pages.agg(max(col("url"))).first().getString(0)
+    val longUrl = maxUrl + "/" + "x" * 5000 // still the table's largest url
+    val p = pages.withColumn("url",
+      when(col("url") === maxUrl, lit(longUrl)).otherwise(col("url")))
+    val dir = tmp()
+    ResumableRun.run(spark, p, dir, nBuckets = 4)
+    val log = new SnapshotLog(dir)
+    val (stats, agg) = (log.bucketStats(), aggregatedStats(dir))
+    assert(stats.keySet == agg.keySet)
+    stats.foreach { case (b, s) =>
+      val a = agg(b)
+      assert(Set((a.urlMin, a.urlMax), ("", "")).contains((s.urlMin, s.urlMax)),
+        s"bucket $b url bounds (${s.urlMin.take(40)}, ${s.urlMax.take(40)})")
+      assert(s.copy(urlMin = a.urlMin, urlMax = a.urlMax) == a, s"bucket $b lang/ts bounds")
+    }
+    val b = agg.collectFirst { case (b, a) if a.urlMax == longUrl => b }.get
+    assert(stats(b).urlMax.isEmpty, "parquet kept a min/max over 4 KB: the unknown path is untested")
+    val (kept, _) = ResumableRun.prunedPaths(dir, Seq(ColBound("url", "=", longUrl)))
+    assert(kept.contains(log.bucketDataDir(b).toString))
+    assert(ResumableRun.readTablePruned(spark, dir, Seq(ColBound("url", "=", longUrl)))
+      .filter(col("url") === longUrl).count() == 1)
+  }
+
+  test("INT96 and INT64-staged buckets read back like an all-INT96 copy") {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val dir = tmp()
+    ResumableRun.run(spark, pages, dir, nBuckets = 4)
+    val log = new SnapshotLog(dir)
+    // re-commit bucket 0 from a plain write of this session: INT96 warc_ts
+    val staged = log.stagingRoot()
+    spark.read.parquet(log.bucketDataDir(0).toString).write.parquet(staged.toString)
+    log.commitBucket(0, staged, log.bucketStats().get(0))
+    def tsTypes(b: Int): Set[PrimitiveTypeName] =
+      graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).map { f =>
+        val file = new org.apache.parquet.io.LocalInputFile(f)
+        val in = file.newStream()
+        val schema = try org.apache.parquet.hadoop.ParquetFileReader.readFooter(file,
+            org.apache.parquet.ParquetReadOptions.builder().build(), in).getFileMetaData.getSchema
+          finally in.close()
+        schema.getType(schema.getFieldIndex("warc_ts")).asPrimitiveType.getPrimitiveTypeName
+      }.toSet
+    assert(tsTypes(0) == Set(PrimitiveTypeName.INT96))
+    (1 until 4).foreach(b => assert(tsTypes(b) == Set(PrimitiveTypeName.INT64), s"bucket $b"))
+    val copy = tmp() + "/copy"
+    Pipeline.extracted(pages).write.parquet(copy)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.getAs[String]("url"))
+    val table = ResumableRun.readTable(spark, dir)
+    assert(table.schema == spark.read.parquet(copy).schema)
+    val (got, want) = (rows(table), rows(spark.read.parquet(copy)))
+    assert(got.size == 500 && got == want)
   }
 
   test("resumable run on empty input commits schema-bearing buckets; readTable still works") {
@@ -981,8 +954,8 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val none = ResumableRun.readTablePruned(spark, dir,
       Seq(ColBound("url", ">=", beyond), ColBound("lang", "=", "zz")))
     assert(none.count() == 0 && none.columns.contains("extracted_text"))
-    // compaction re-stages every bucket and re-observes its stats: the same
-    // rows give the same bounds
+    // compaction re-stages every bucket and re-reads its stats from the new
+    // footers: the same rows give the same bounds
     val compacted = graft.lake.Compaction.compact(spark, dir, maxFiles = 0)
     assert(compacted.nonEmpty)
     val after = new SnapshotLog(dir).bucketStats()
@@ -1023,36 +996,11 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     log.committedBuckets().foreach { b =>
       assert(graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).size <= 1,
         s"bucket $b fragmented") }
-    // manifest stats now come from observe() on the staging job — they must
-    // equal an independent aggregation over the committed data
+    // manifest stats come from the staged files' parquet footers — they
+    // must equal an independent aggregation over the committed data
     val stats = log.bucketStats()
     assert(stats.nonEmpty)
-    stats.foreach { case (b, s) =>
-      val r = spark.read.parquet(log.bucketDataDir(b).toString)
-        .agg(min(col("url")), max(col("url")), min(col("lang")), max(col("lang")),
-          date_format(min(col("warc_ts")), "yyyy-MM-dd HH:mm:ss"),
-          date_format(max(col("warc_ts")), "yyyy-MM-dd HH:mm:ss")).first()
-      assert(s.urlMin == r.getString(0) && s.urlMax == r.getString(1), s"url bounds b=$b")
-      assert(s.langMin == r.getString(2) && s.langMax == r.getString(3), s"lang bounds b=$b")
-      assert(s.tsMin == r.getString(4) && s.tsMax == r.getString(5), s"ts bounds b=$b")
-    }
-  }
-
-  test("wide-chunk staging uses the staged-parquet stats fallback and matches the observe path") {
-    // a run wider than maxObservedBuckets; the staged-parquet re-read
-    // fallback is gone, so these bounds come from observe() chunk by chunk
-    // and must keep the observe path's form for every bucket
-    assert(ResumableRun.maxObservedBuckets < 66)
-    val dir = tmp()
-    ResumableRun.run(spark, pages, dir, nBuckets = 66)
-    val stats = new SnapshotLog(dir).bucketStats()
-    assert(stats.nonEmpty)
-    stats.foreach { case (b, s) =>
-      assert(s.urlMin.nonEmpty && s.urlMin <= s.urlMax, s"bucket $b url bounds")
-      assert(s.tsMin.matches("\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}"),
-        s"bucket $b ts bound format: '${s.tsMin}'")
-    }
-    assert(ResumableRun.readTable(spark, dir).count() == 500)
+    assert(stats == aggregatedStats(dir))
   }
 
   test("compaction rewrites fragmented buckets; time travel survives; manifest expiry bounds the log") {
@@ -1080,6 +1028,8 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     compacted.foreach(b =>
       assert(graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).size == 1))
     assert(ResumableRun.readTable(spark, dir).count() == before)
+    // the compacted INT96 bucket's stats come from its fresh footers
+    assert(log.bucketStats() == aggregatedStats(dir))
     // time travel to a PRE-compaction version still reads (resolving to the
     // compacted files — the documented manifests-not-data-copies caveat)
     assert(ResumableRun.readTableAsOf(spark, dir, vPre).count() == before)

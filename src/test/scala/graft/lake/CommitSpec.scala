@@ -14,9 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Pipeline
 
 /** The commit's fixed-cost paths: the one-action hot-domain pass, the
-  * staging write's task layout (one task per core at most, each bucket in
-  * exactly one task) and the in-process permission setting of staged
-  * files. */
+  * staging write's task layout (one job per run, one task per core at
+  * most, each bucket in exactly one task) and the in-process permission
+  * setting of staged files. */
 class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -121,6 +121,49 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     strided.foreach(b =>
       assert(Compaction.parquetFiles(logR.bucketDataDir(b)).size == 1, s"bucket $b files"))
     assert(ResumableRun.readTable(spark, dirR).count() == perBucket.values.sum)
+  }
+
+  test("a 200-bucket run stages in one job: exactly one stage writes records") {
+    val dir = tmp()
+    var done = Vector.empty[Int]
+    val perTask = writeStageTasks { done = ResumableRun.run(spark, pages, dir, nBuckets = 200) }
+    assert(done == (0 until 200).toVector)
+    assert(perTask.size == spark.sparkContext.defaultParallelism, s"write tasks: $perTask")
+    assert(perTask.sum == pages.count())
+    assert(new SnapshotLog(dir).latestVersion() == 200)
+    assert(ResumableRun.readTable(spark, dir).count() == pages.count())
+  }
+
+  test("footer stats: UTF-8 byte order, floored seconds, unknown without min/max") {
+    val sp = spark
+    import sp.implicits._
+    val (micros, int96) = (classOf[MicrosParquet].getName, "parquet")
+    // each Seq is one file of (url, lang, warc_ts micros) rows
+    def staged(files: Seq[(String, String, Option[Long])]*)(format: String) = {
+      val dir = Paths.get(tmp(), "bucket=0")
+      files.foreach { rows =>
+        rows.toDF("url", "lang", "us").select($"url", $"lang", timestamp_micros($"us").as("warc_ts"))
+          .coalesce(1).write.format(format).mode("append").save(dir.toString)
+      }
+      ResumableRun.footerStats(dir)
+    }
+    val a = Seq(("https://m.example/1", "en", Some(1700000000500000L)),
+      ("https://\u00e9.example/", null, Some(-500000L)))
+    val b = Seq(("https://a.example/", "de", Some(1700000100000000L)), ("https://z.example/", null, None))
+    // é (0xC3 0xA9) sorts after z in UTF-8 bytes, before it as a signed byte;
+    // -0.5 s floors to the second before the epoch
+    assert(staged(a, b)(micros) == BucketStats("https://a.example/", "https://\u00e9.example/",
+      "de", "en", "1969-12-31 23:59:59", "2023-11-14 22:15:00"))
+    // a url over 4 KB drops the file's url min/max: unknown, not the other file's bounds
+    val long = Seq(("https://b.example/" + "x" * 5000, "fr", Some(0L)))
+    assert(staged(a, long)(micros) == BucketStats("", "", "en", "fr", "1969-12-31 23:59:59",
+      "2023-11-14 22:13:20"))
+    // all-NULL lang: no bounds; INT96 timestamps carry no min/max: unknown
+    val nullLang = Seq(("https://c.example/", null, Some(0L)))
+    assert(staged(nullLang)(micros) == BucketStats("https://c.example/", "https://c.example/",
+      "", "", "1970-01-01 00:00:00", "1970-01-01 00:00:00"))
+    assert(staged(a)(int96) == BucketStats("https://m.example/1", "https://\u00e9.example/",
+      "en", "en", "", ""))
   }
 
   test("staged files, .crc sidecars and dirs get the default local FS's mode bits; checksums verify") {

@@ -27,6 +27,13 @@ class SnapshotLogSpec extends AnyFunSuite {
     assert(back == Map(3 -> nasty, 11 -> plain))
   }
 
+  test("stats parse round-trips bounds of several KB") {
+    // a 5 KB url bound, and one made of escapes
+    val long = BucketStats(urlMin = "https://l.example/" + "x" * 5000 + "?q=\"\\",
+      urlMax = "https://m.example/" + "a\"" * 1500, langMin = "en", langMax = "en")
+    assert(roundTrip(Map(0 -> long, 1 -> long)) == Map(0 -> long, 1 -> long))
+  }
+
   test("pre-timestamp manifests still parse (ts bounds read as unknown)") {
     val old = """{"version":2,"buckets":[0,4],"stats":{""" +
       """"4":{"url_min":"https://a","url_max":"https://b","lang_min":"en","lang_max":"fr"}}}"""
