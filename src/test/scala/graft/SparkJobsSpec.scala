@@ -802,30 +802,38 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fused == unfused)
   }
 
-  test("a 66-bucket run is one staging job; footer stats equal a groupBy aggregation") {
-    val p = pages
-    val nBuckets = 66
+  /** One 66-bucket run shared by the two tests below: its directory, what
+    * `run` returned, and the phases it reported. */
+  private lazy val wideRun = {
     val dir = tmp()
     val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     ResumableRun.onPhase = (ph: String, _: Double) => { phases.add(ph); () }
-    val done = try ResumableRun.run(spark, p, dir, nBuckets) finally ResumableRun.onPhase = null
-    assert(done == (0 until nBuckets).toVector)
-    assert(phases.toArray.count(_ == "stage_write") == 1, s"phases: $phases")
+    val done = try ResumableRun.run(spark, pages, dir, 66) finally ResumableRun.onPhase = null
+    (dir, done, phases.toArray.toSeq)
+  }
+
+  test("a 66-bucket run is one staging job and equals the single-job table") {
+    val (dir, done, phases) = wideRun
+    assert(done == (0 until 66).toVector)
+    assert(phases.count(_ == "stage_write") == 1, s"phases: $phases")
     val got = ResumableRun.readTable(spark, dir)
       .select("url", "extracted_text").collect()
       .map(rw => (rw.getString(0), rw.getString(1))).toMap
-    val expected = Pipeline.extracted(p)
+    val expected = Pipeline.extracted(pages)
       .select("url", "extracted_text").collect()
       .map(rw => (rw.getString(0), rw.getString(1))).toMap
     assert(got == expected)
     // every bucket still committed individually: the log resumes per bucket
-    val log = new SnapshotLog(dir)
-    assert(log.latestVersion() == nBuckets)
+    assert(new SnapshotLog(dir).latestVersion() == 66)
+  }
+
+  test("a 66-bucket run: footer stats equal a groupBy aggregation past bucket 64") {
+    val (dir, _, _) = wideRun
     // footer stats equal an independent per-bucket aggregation over the
     // committed data (empty buckets: no entry), past bucket 64 too
     val agg = aggregatedStats(dir)
     assert(agg.keySet.exists(_ >= 64), "no rows beyond bucket 64")
-    assert(log.bucketStats() == agg)
+    assert(new SnapshotLog(dir).bucketStats() == agg)
   }
 
   test("a NULL or out-of-range bucket fails the run and commits nothing") {
