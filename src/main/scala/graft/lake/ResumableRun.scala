@@ -10,7 +10,7 @@ import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveComparator
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import graft.pipeline.Pipeline
@@ -62,9 +62,9 @@ object ResumableRun {
     * default is the skew-safe salted url-hash. A row it maps to NULL or
     * outside [0, nBuckets) fails the run before anything is committed.
     * Choose a spec that CLUSTERS the stats columns (e.g. a domain- or
-    * lang-derived bucket) when manifest-stats pruning ([[readTablePruned]])
-    * matters for the table's query mix — hash buckets defeat min/max
-    * pruning by construction, the same trade Iceberg documents for
+    * lang-derived bucket) when manifest-stats pruning (a `.filter` on
+    * [[readTable]]) matters for the table's query mix — hash buckets defeat
+    * min/max pruning by construction, the same trade Iceberg documents for
     * partition spec + sort order. Returns the buckets processed this run. */
   def run(spark: SparkSession, pages: DataFrame, tableDir: String,
       nBuckets: Int, maxBuckets: Int = Int.MaxValue,
@@ -100,8 +100,8 @@ object ResumableRun {
 
   /** Stage `rows` (carrying a BIGINT or INT `bucket` column, every value in
     * `buckets`) in one job and commit each of `buckets` in its own snapshot
-    * with the min/max stats of the rows it staged. A bucket with no rows
-    * commits an empty schema-bearing parquet write and no stats. */
+    * with the min/max stats of the rows it staged and the data files'
+    * schema. A bucket with no rows commits an empty dir and no stats. */
   private[lake] def stageAndCommit(log: SnapshotLog, rows: DataFrame,
       buckets: Vector[Int]): Unit = {
     val stageRoot = log.stagingRoot()
@@ -133,21 +133,16 @@ object ResumableRun {
         if (java.nio.file.Files.exists(staged)) Some(b -> footerStats(staged)) else None
       }.toMap
     }
-    // schema of the staged DATA files: partitionBy moves `bucket` out
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      rows.schema.filterNot(_.name == "bucket"))
+    // schema of the staged DATA files (partitionBy moves `bucket` out), as
+    // a parquet read of them reports it: every field nullable
+    val dataSchema = org.apache.spark.sql.graftbridge.GraftBridge.asNullable(
+      org.apache.spark.sql.types.StructType(rows.schema.filterNot(_.name == "bucket")))
     phase("commit_loop") { buckets.foreach { b =>
       val staged = stageRoot.resolve(s"bucket=$b")
-      // a bucket with zero rows stages no dir; commit an EMPTY parquet
-      // write carrying the schema (ADVICE r3: a table whose committed
-      // buckets are all file-less dirs has no footers to infer schema from,
-      // so readTable would fail on an empty input)
-      if (!stats.contains(b))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
-          .write.format(classOf[MicrosParquet].getName)
-          .options(NioLocalFileSystem.writeOptions).save(staged.toString)
-      log.commitBucket(b, staged, stats.get(b))
+      // a bucket with zero rows stages no dir: it commits an empty one, the
+      // manifest carries the schema
+      if (!stats.contains(b)) java.nio.file.Files.createDirectories(staged)
+      log.commitBucket(b, staged, stats.get(b), Some(dataSchema))
     } }
     // only write-protocol leftovers (_SUCCESS) remain under the stage root
     SnapshotLog.deleteRecursively(stageRoot)
@@ -164,9 +159,9 @@ object ResumableRun {
     * are "" (unknown, never prunes) when no row holds a value, or when a
     * row group holds values but recorded no min/max: parquet drops them
     * for values over 4 KB, and INT96 timestamps never have them. warc_ts
-    * is INT64 micros, rendered as whole UTC seconds; flooring only lowers
-    * a bound, and ColBound values are second-granularity, so a prune on
-    * `hi < value` still implies value > the true max. */
+    * is INT64 micros, rendered as whole UTC seconds, floored: a max of
+    * 10 s stands for a true max below 11 s, which [[ColBound.prunes]]
+    * allows for. */
   private[lake] def footerStats(dir: Path): BucketStats = {
     val chunks = Compaction.parquetFiles(dir).flatMap { f =>
       val file = new LocalInputFile(f)
@@ -192,61 +187,49 @@ object ResumableRun {
     val utf8 = (v: Any) => v.asInstanceOf[Binary].toStringUsingUTF8
     val (u0, u1) = bounds("url")(utf8)
     val (l0, l1) = bounds("lang")(utf8)
-    val (t0, t1) = bounds("warc_ts") { v =>
-      ColBound.utcFmt.format(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(v.asInstanceOf[java.lang.Long].longValue, 1000000L)))
-    }
+    val (t0, t1) = bounds("warc_ts")(v => ColBound.utcSeconds(v.asInstanceOf[java.lang.Long]))
     BucketStats(u0, u1, l0, l1, t0, t1)
   }
 
-  /** Read the committed table back (all committed buckets). */
-  def readTable(spark: SparkSession, tableDir: String): DataFrame = {
-    val log = new SnapshotLog(tableDir)
-    val paths = log.committedPaths()
-    require(paths.nonEmpty, s"no committed snapshots under $tableDir")
-    spark.read.parquet(paths: _*)
+  /** The committed table as of manifest `version` (the latest when
+    * `None`; the Iceberg `VERSION AS OF` analog — every manifest is kept
+    * until `SnapshotLog.expireManifests`, and an expired version fails).
+    * Schema, buckets and files come from the manifest through a
+    * [[ManifestFileIndex]]: building the frame starts no Spark job and
+    * infers nothing. A `.filter` on it prunes buckets by their manifest
+    * stats. Time travel resolves a bucket re-committed after `version` to
+    * its current files (the log keeps manifests, not data copies). */
+  def readTable(spark: SparkSession, tableDir: String,
+      version: Option[Int] = None): DataFrame = {
+    val index = ManifestFileIndex(tableDir, version)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      index.schema, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** Bucket paths that SURVIVE stats pruning under `bounds` (every
     * predicate is a conjunct): a bucket is skipped only when its manifest
-    * min/max bounds prove no row can satisfy some bound — the Iceberg
-    * file-skipping analog (VERDICT r4 #6). Buckets without recorded stats
-    * are always kept. Returns (kept, skipped). */
+    * min/max bounds prove no row can satisfy some bound — the decision a
+    * `.filter` on [[readTable]] makes ([[ColBound.prunes]]). Buckets
+    * without recorded stats are always kept. Returns (kept, skipped). */
   def prunedPaths(tableDir: String,
       bounds: Seq[ColBound]): (Vector[String], Vector[String]) = {
     val log = new SnapshotLog(tableDir)
-    val stats = log.bucketStats()
-    val (skip, keep) = log.committedBuckets().toVector.sorted.partition { b =>
-      stats.get(b).exists(s => bounds.exists(_.prunes(s)))
+    val m = log.manifest(log.latestVersion())
+    val (skip, keep) = m.buckets.toVector.sorted.partition { b =>
+      m.stats.get(b).exists(ColBound.prunes(_, bounds.map(Seq(_))))
     }
     (keep.map(b => log.bucketDataDir(b).toString),
       skip.map(b => log.bucketDataDir(b).toString))
   }
 
-  /** Read the committed table with bucket-stats pruning: only buckets whose
-    * recorded (url, lang) bounds MAY satisfy every bound are opened. The
-    * caller must still apply the row-level filter — this shrinks the scan,
-    * it does not filter rows (same contract as partition pruning). On an
-    * empty survivor set, returns an empty frame with the table schema;
-    * a table with ZERO committed buckets has no schema to serve and throws
-    * readTable's clear "no committed snapshots" error instead (ADVICE r5
-    * clarification). warc_ts bounds must be UTC-rendered — build them with
-    * [[ColBound.warcTs]]. */
+  /** The committed table filtered to the rows satisfying every bound:
+    * [[readTable]] with the bounds as a `.filter`, which opens only the
+    * buckets [[prunedPaths]] keeps. warc_ts bounds must be UTC-rendered —
+    * build them with [[ColBound.warcTs]]. */
   def readTablePruned(spark: SparkSession, tableDir: String,
       bounds: Seq[ColBound]): DataFrame = {
-    val (keep, _) = prunedPaths(tableDir, bounds)
-    if (keep.nonEmpty) spark.read.parquet(keep: _*)
-    else readTable(spark, tableDir).limit(0)
-  }
-
-  /** Time travel: read the table as of snapshot `version` (the Iceberg
-    * `VERSION AS OF` analog — every manifest is retained by SnapshotLog
-    * until `expireManifests`). */
-  def readTableAsOf(spark: SparkSession, tableDir: String, version: Int): DataFrame = {
-    val log = new SnapshotLog(tableDir)
-    val paths = log.committedPathsAt(version)
-    require(paths.nonEmpty, s"no committed buckets at snapshot v$version under $tableDir")
-    spark.read.parquet(paths: _*)
+    val table = readTable(spark, tableDir)
+    if (bounds.isEmpty) table else table.filter(bounds.map(_.column).reduce(_ && _))
   }
 }
 

@@ -2,6 +2,7 @@ package graft.lake
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-style snapshot commit log over plain parquet (SURVEY.md §7:
   * "parquet + a tiny self-written snapshot/manifest commit log giving atomic
@@ -11,8 +12,15 @@ import scala.jdk.CollectionConverters._
   *
   * Layout:
   *   <table>/data/bucket=<N>/          committed parquet for bucket N
-  *   <table>/_snapshots/v<K>.json      manifest: all committed buckets at K
+  *   <table>/_snapshots/v<K>.json      manifest: all committed buckets at K,
+  *                                     their stats, and the table schema
   *   <table>/_snapshots/LATEST         current manifest version (atomic swap)
+  *
+  * The manifest's `"schema"` is the data files' Spark schema
+  * (`StructType.json`, escaped), so readers build the table from the
+  * manifest alone and never infer it from parquet footers. A bucket with
+  * no rows commits an empty dir: the schema lives in the manifest, not in
+  * a schema-only parquet file.
   *
   * Commit protocol (crash-safe on POSIX rename semantics):
   *   1. job writes bucket data to <table>/_tmp/stage-<K>/bucket=<N>/
@@ -41,34 +49,25 @@ final class SnapshotLog(tableDir: String) {
   }
 
   /** Buckets committed as of the latest snapshot. */
-  def committedBuckets(): Set[Int] = committedBucketsAt(latestVersion())
+  def committedBuckets(): Set[Int] = manifest(latestVersion()).buckets
 
-  /** Per-bucket (url, lang) min/max stats recorded in the latest manifest
-    * (VERDICT r4 #6 — the Iceberg file-skipping analog at bucket
-    * granularity). Buckets committed before stats existed, or with no rows,
-    * simply have no entry — readers treat missing stats as not-prunable. */
-  def bucketStats(): Map[Int, BucketStats] = bucketStatsAt(latestVersion())
+  /** Per-bucket (url, lang, warc_ts) min/max stats recorded in the latest
+    * manifest (the Iceberg file-skipping analog at bucket granularity).
+    * Buckets committed before stats existed, or with no rows, simply have
+    * no entry — readers treat missing stats as not-prunable. */
+  def bucketStats(): Map[Int, BucketStats] = manifest(latestVersion()).stats
 
-  def bucketStatsAt(v: Int): Map[Int, BucketStats] = {
-    if (v <= 0) Map.empty
+  /** Manifest version `v`, parsed once: buckets, stats and schema. Version
+    * 0 is the empty table; an expired or never-written version fails. Every
+    * manifest is retained until [[expireManifests]], so any historical
+    * snapshot can be read back — the Iceberg `VERSION AS OF` analog. */
+  private[lake] def manifest(v: Int): Manifest =
+    if (v <= 0) Manifest(Set.empty, Map.empty, None)
     else {
-      val manifest = snapsDir.resolve(s"v$v.json")
-      if (!Files.exists(manifest)) Map.empty
-      else SnapshotLog.parseStats(new String(Files.readAllBytes(manifest), "UTF-8"))
+      val path = snapsDir.resolve(s"v$v.json")
+      require(Files.exists(path), s"no snapshot v$v under $snapsDir")
+      SnapshotLog.parseManifest(new String(Files.readAllBytes(path), "UTF-8"))
     }
-  }
-
-  /** Time travel: buckets committed as of manifest version `v` (0 = empty
-    * table). Every manifest is retained, so any historical snapshot can be
-    * read back — the Iceberg `VERSION AS OF` analog. */
-  def committedBucketsAt(v: Int): Set[Int] = {
-    if (v <= 0) Set.empty
-    else {
-      val manifest = snapsDir.resolve(s"v$v.json")
-      require(Files.exists(manifest), s"no snapshot v$v under $snapsDir")
-      SnapshotLog.parseBuckets(new String(Files.readAllBytes(manifest), "UTF-8"))
-    }
-  }
 
   def bucketDataDir(bucket: Int): Path = dataDir.resolve(s"bucket=$bucket")
 
@@ -93,7 +92,8 @@ final class SnapshotLog(tableDir: String) {
     *
     * `stats` are the min/max bounds of exactly the rows being committed
     * and replace the bucket's previous entry; `None` (no rows, or bounds
-    * unknown) records none, so the bucket is never pruned.
+    * unknown) records none, so the bucket is never pruned. `schema` is the
+    * data files' schema; `None` carries the previous manifest's forward.
     *
     * The previous manifest is read and parsed ONCE per commit (round-5
     * review — the per-field helper calls re-read it several times). Each
@@ -102,7 +102,7 @@ final class SnapshotLog(tableDir: String) {
     * manifest lists, amortized there by multi-bucket commits; here each
     * staged bucket is one commit. */
   def commitBucket(bucket: Int, staged: Path,
-      stats: Option[BucketStats] = None): Unit = {
+      stats: Option[BucketStats] = None, schema: Option[StructType] = None): Unit = {
     val v0 = latestVersion()
     val dest = bucketDataDir(bucket)
     if (Files.exists(dest)) { // idempotent re-commit: move aside, swap, drop
@@ -112,15 +112,16 @@ final class SnapshotLog(tableDir: String) {
       Files.move(staged, dest, StandardCopyOption.ATOMIC_MOVE)
       deleteRecursively(aside)
     } else Files.move(staged, dest, StandardCopyOption.ATOMIC_MOVE)
-    val json0 =
-      if (v0 <= 0) ""
-      else new String(Files.readAllBytes(snapsDir.resolve(s"v$v0.json")), "UTF-8")
-    val newBuckets = SnapshotLog.parseBuckets(json0) + bucket
-    val newStats = SnapshotLog.parseStats(json0) - bucket ++ stats.map(bucket -> _)
+    val prev = manifest(v0)
+    val newBuckets = prev.buckets + bucket
+    val newStats = prev.stats - bucket ++ stats.map(bucket -> _)
     val v = v0 + 1
+    // the previous schema carries forward as written, without a parse
+    val schemaField = schema.map(t => SnapshotLog.esc(t.json)).orElse(prev.escapedSchema)
+      .map(t => s""","schema":"$t"""").getOrElse("")
     val json =
       s"""{"version":$v,"buckets":[${newBuckets.toVector.sorted.mkString(",")}],""" +
-        s""""stats":{${SnapshotLog.encodeStats(newStats)}}}"""
+        s""""stats":{${SnapshotLog.encodeStats(newStats)}}$schemaField}"""
     Files.write(snapsDir.resolve(s"v$v.json"), json.getBytes("UTF-8"))
     val tmpLatest = snapsDir.resolve(s"LATEST.tmp")
     Files.write(tmpLatest, v.toString.getBytes("UTF-8"))
@@ -131,13 +132,6 @@ final class SnapshotLog(tableDir: String) {
   /** Paths of all committed bucket dirs (for reading the table back). */
   def committedPaths(): Vector[String] =
     committedBuckets().toVector.sorted.map(b => bucketDataDir(b).toString)
-
-  /** Paths as of snapshot `v` (time travel). NOTE: valid for buckets whose
-    * data was not re-committed after v (re-commit replaces the bucket dir;
-    * this log keeps manifests, not data copies — same caveat as expiring
-    * snapshots in Iceberg). */
-  def committedPathsAt(v: Int): Vector[String] =
-    committedBucketsAt(v).toVector.sorted.map(b => bucketDataDir(b).toString)
 
   /** Recover from a commit killed mid-swap, then remove orphaned staging
     * dirs left under `_tmp` by runs killed during staging or the commit
@@ -202,6 +196,16 @@ final class SnapshotLog(tableDir: String) {
   private def deleteRecursively(p: Path): Unit = SnapshotLog.deleteRecursively(p)
 }
 
+/** One parsed manifest; `escapedSchema` is its `"schema"` field as
+  * written. */
+private[lake] final case class Manifest(buckets: Set[Int], stats: Map[Int, BucketStats],
+    escapedSchema: Option[String]) {
+  /** The table schema; `None` only in manifests written before the log
+    * recorded it (and in the empty table). */
+  def schema: Option[StructType] = escapedSchema.map(s =>
+    DataType.fromJson(SnapshotLog.unesc(s)).asInstanceOf[StructType])
+}
+
 /** Per-bucket column bounds recorded in a manifest at commit time — the
   * Iceberg per-file min/max stats analog, at the log's bucket granularity.
   * Bounds are the COMMITTED rows' actual min/max (inclusive). Timestamps
@@ -213,11 +217,11 @@ final case class BucketStats(urlMin: String, urlMax: String,
     langMin: String, langMax: String, tsMin: String = "", tsMax: String = "")
 
 /** A pushable bucket-pruning predicate: `col op value` with op in
-  * {"=", "<=", ">="} over the stats-tracked columns ("url", "lang",
-  * "warc_ts"). Pruning is CONSERVATIVE: a bucket is skipped only when its
-  * recorded bounds prove no row can match; missing stats keep the bucket.
-  * Callers must still apply the row-level filter — pruning only shrinks
-  * the scan.
+  * {"=", "<", "<=", ">", ">="} over the stats-tracked columns ("url",
+  * "lang", "warc_ts"). Pruning is CONSERVATIVE: a bucket is skipped only
+  * when its recorded bounds prove no row can match; missing stats keep the
+  * bucket. [[ManifestFileIndex]] derives these from a read's `.filter`
+  * conjuncts; [[column]] turns one back into that filter.
   *
   * warc_ts CONTRACT (ADVICE r5): manifest timestamp bounds are rendered in
   * UTC (`yyyy-MM-dd HH:mm:ss`), so a warc_ts `value` MUST be the UTC
@@ -229,12 +233,15 @@ final case class BucketStats(urlMin: String, urlMax: String,
 final case class ColBound(col: String, op: String, value: String) {
   require(col == "url" || col == "lang" || col == "warc_ts",
     s"no stats for column $col")
-  require(Set("=", "<=", ">=").contains(op), s"unsupported op $op")
+  require(Set("=", "<", "<=", ">", ">=").contains(op), s"unsupported op $op")
 
   /** True when `stats` PROVES no row of the bucket satisfies this bound.
     * String order: Spark compares strings by UTF-8 binary order while
     * Java's compareTo is UTF-16 code-unit order — identical for ASCII, so
-    * pruning only engages when every operand is ASCII (else conservative). */
+    * pruning only engages when every operand is ASCII (else conservative).
+    * warc_ts bounds and values are whole seconds, floored: a recorded max
+    * of 10 s stands for a true max below 11 s, so a strict comparison on
+    * warc_ts prunes only what its inclusive form prunes. */
   def prunes(stats: BucketStats): Boolean = {
     val (lo, hi) = col match {
       case "url" => (stats.urlMin, stats.urlMax)
@@ -242,12 +249,30 @@ final case class ColBound(col: String, op: String, value: String) {
       case _ => (stats.langMin, stats.langMax)
     }
     def ascii(s: String) = s.forall(_ < 128)
+    val strict = col != "warc_ts"
     if (lo.isEmpty || hi.isEmpty) false // bounds unknown: keep the bucket
     else if (!ascii(lo) || !ascii(hi) || !ascii(value)) false
     else op match {
       case "=" => value < lo || value > hi
+      case "<" => if (strict) lo >= value else lo > value
       case "<=" => lo > value // even the smallest row exceeds the bound
+      case ">" => if (strict) hi <= value else hi < value
       case ">=" => hi < value // even the largest row is below the bound
+    }
+  }
+
+  /** This bound as a row filter (warc_ts values read as UTC instants). */
+  def column: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col => c, lit}
+    val v = if (col == "warc_ts")
+      lit(java.sql.Timestamp.from(java.time.Instant.from(ColBound.utcFmt.parse(value))))
+    else lit(value)
+    op match {
+      case "=" => c(col) === v
+      case "<" => c(col) < v
+      case "<=" => c(col) <= v
+      case ">" => c(col) > v
+      case ">=" => c(col) >= v
     }
   }
 }
@@ -264,6 +289,16 @@ object ColBound {
     * with a re-parsed string. */
   def warcTs(op: String, at: java.time.Instant): ColBound =
     ColBound("warc_ts", op, utcFmt.format(at))
+
+  /** Epoch micros as the manifest renders warc_ts: whole UTC seconds,
+    * floored (pre-epoch values too). */
+  private[lake] def utcSeconds(micros: Long): String =
+    utcFmt.format(java.time.Instant.ofEpochSecond(Math.floorDiv(micros, 1000000L)))
+
+  /** The one bucket-pruning decision: true when `stats` prove that no row
+    * satisfies `clauses`, a conjunction of disjunctions of bounds. */
+  def prunes(stats: BucketStats, clauses: Seq[Seq[ColBound]]): Boolean =
+    clauses.exists(anyOf => anyOf.nonEmpty && anyOf.forall(_.prunes(stats)))
 }
 
 object SnapshotLog {
@@ -281,7 +316,7 @@ object SnapshotLog {
       case c => c.toString
     }
 
-  private def unesc(s: String): String = {
+  private[lake] def unesc(s: String): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
@@ -309,6 +344,9 @@ object SnapshotLog {
         s""""ts_min":"${esc(s.tsMin)}","ts_max":"${esc(s.tsMax)}"}"""
     }.mkString(",")
 
+  private[lake] def parseManifest(json: String): Manifest =
+    Manifest(parseBuckets(json), parseStats(json), schemaField.findFirstMatchIn(json).map(_.group(1)))
+
   /** Bucket list of a manifest json ({"version":K,"buckets":[1,2,3],...});
     * empty input parses as the empty table. */
   private[lake] def parseBuckets(json: String): Set[Int] =
@@ -322,6 +360,7 @@ object SnapshotLog {
   // run. The plain `(?:[^"\\]|\\.)*` alternation recurses once per char
   // in java.util.regex and overflowed the stack on a 5 KB url bound.
   private val str = """([^"\\]*+(?:\\.[^"\\]*+)*+)"""
+  private val schemaField = raw""""schema":"$str"""".r
   private val statsEntry =
     (raw""""(\d+)":\{"url_min":"$str","url_max":"$str",""" +
       raw""""lang_min":"$str","lang_max":"$str"""" +

@@ -41,6 +41,12 @@ object GraftBridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
+  /** `s` with every field, element and value nullable (`asNullable` is
+    * private[spark]): the schema a parquet read reports for files written
+    * with `s`. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Inverse: the Catalyst Expression behind a Column. */
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)

@@ -12,6 +12,12 @@ import graft.pipeline.Pipeline
   * metrics. One shared local session (startup is the expensive part). */
 class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
+  /** The scans of an executed plan, inside adaptive query stages too. */
+  private object ScanNodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    def fileScans(plan: org.apache.spark.sql.execution.SparkPlan) =
+      collect(plan) { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+  }
+
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
@@ -92,7 +98,7 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // time travel: snapshot v3 (after the "killed" run) sees exactly the
     // first 3 committed buckets' rows; latest sees all 500
-    val asOf3 = ResumableRun.readTableAsOf(spark, dir, 3)
+    val asOf3 = ResumableRun.readTable(spark, dir, version = Some(3))
     val expected3 = ResumableRun.readTable(spark, dir)
       .withColumn("b", Pipeline.saltedBucket(Pipeline.hotDomains(p).keySet, nBuckets))
       .filter(col("b").isin(first.map(Integer.valueOf): _*))
@@ -182,6 +188,52 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // doc has a title, so the title flag alone is degenerate-true)
     assert(flagCounts.exists(c => c > 0 && c < out.size),
       s"all presence flags degenerate: ${flagCounts.mkString(",")} of ${out.size}")
+  }
+
+  /** Direct `Extractor.extract` calls over the sf0.001 pages: the
+    * driver-side reference the x_* queries over the committed table are
+    * pinned to, one result per page url. */
+  private lazy val kernelRefs: Seq[(String, graft.model.ExtractResult)] =
+    pages.select("url", "html", "text", "warc_ts").collect().toSeq.map { r =>
+      r.getString(0) -> graft.extract.Extractor.extract(r.getAs[Array[Byte]](1),
+        r.getString(2), r.getTimestamp(3).getTime * 1000L)
+    }
+
+  /** `query` at sf0.001 equals `want` as a row multiset, column names and
+    * values both; the query must read the committed table through its
+    * manifest file index. */
+  private def assertQueryRows(query: String, columns: Seq[String], want: Seq[Seq[Any]]): Unit = {
+    val df = SparkEntry.queries(query)(spark, "/root/testdata/sf0.001")
+    val scans = df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location
+    }
+    assert(scans.nonEmpty && scans.forall(_.getClass.getSimpleName == "ManifestFileIndex"),
+      s"$query scans $scans")
+    assert(df.columns.toSeq == columns, s"$query columns")
+    def key(row: Seq[Any]) = row.map(String.valueOf).mkString("\u0001")
+    val got = df.collect().toSeq.map(r => key(r.toSeq)).sorted
+    assert(want.nonEmpty, s"$query: empty reference")
+    val same = got == want.map(key).sorted
+    assert(same, s"$query: ${got.size} rows, reference ${want.size}")
+  }
+
+  test("x_links equals the links of direct Extractor.extract calls") {
+    assertQueryRows("x_links", Seq("url", "page", "anchor", "target"),
+      kernelRefs.flatMap { case (url, r) => r.links.map(l => Seq(url, l.page, l.anchor, l.target)) })
+  }
+
+  test("x_scores equals the page scores of direct Extractor.extract calls") {
+    assertQueryRows("x_scores",
+      Seq("url", "page", "total_score", "probability", "n_titles", "n_subtitles", "n_content"),
+      kernelRefs.flatMap { case (url, r) => r.scores.map(sc => Seq(url, sc.page, sc.totalScore,
+        sc.probability, sc.titleCount, sc.subtitleCount, sc.contentCount)) })
+  }
+
+  test("x_scores_reportable equals the direct page scores with probability >= 40") {
+    val want = kernelRefs.flatMap { case (url, r) => r.scores.collect {
+      case sc if sc.probability >= 40 => Seq(url, sc.page, sc.totalScore, sc.probability) } }
+    assert(want.size < kernelRefs.map(_._2.scores.size).sum, "no score falls below the cut")
+    assertQueryRows("x_scores_reportable", Seq("url", "page", "total_score", "probability"), want)
   }
 
   test("graft_extract_doc Catalyst expression matches the kernel output") {
@@ -880,8 +932,7 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats(b).urlMax.isEmpty, "parquet kept a min/max over 4 KB: the unknown path is untested")
     val (kept, _) = ResumableRun.prunedPaths(dir, Seq(ColBound("url", "=", longUrl)))
     assert(kept.contains(log.bucketDataDir(b).toString))
-    assert(ResumableRun.readTablePruned(spark, dir, Seq(ColBound("url", "=", longUrl)))
-      .filter(col("url") === longUrl).count() == 1)
+    assert(ResumableRun.readTable(spark, dir).filter(col("url") === longUrl).count() == 1)
   }
 
   test("INT96 and INT64-staged buckets read back like an all-INT96 copy") {
@@ -913,12 +964,16 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.size == 500 && got == want)
   }
 
-  test("resumable run on empty input commits schema-bearing buckets; readTable still works") {
-    // ADVICE r3: an all-empty-bucket table used to have no parquet footers
-    // to infer schema from, so readTable failed on an empty input
+  test("resumable run on empty input commits empty buckets; readTable serves the manifest schema") {
+    // an all-empty-bucket table has no parquet footers to infer a schema
+    // from: the manifest carries it, and no bucket holds a file
     val dir = tmp()
     val none = pages.filter(lit(false))
     ResumableRun.run(spark, none, dir, nBuckets = 4)
+    val log = new SnapshotLog(dir)
+    assert(log.committedBuckets() == Set(0, 1, 2, 3))
+    log.committedBuckets().foreach(b =>
+      assert(graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).isEmpty, s"bucket $b"))
     val t = ResumableRun.readTable(spark, dir)
     assert(t.count() == 0)
     assert(t.schema.fieldNames.toSet.contains("extracted_text"))
@@ -948,10 +1003,12 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(skipped.nonEmpty, s"lang=$target pruned nothing: stats=$stats")
     assert(kept.size < log.committedPaths().size,
       s"pruned read must open fewer bucket paths (${kept.size} vs ${log.committedPaths().size})")
-    // correctness: pruned read + row filter == full read + row filter
-    val full = ResumableRun.readTable(spark, dir)
+    // correctness: a filtered read of the table == the filter over a plain
+    // parquet read of every committed bucket
+    def plain(d: String) = spark.read.parquet(new SnapshotLog(d).committedPaths(): _*)
+    val full = plain(dir)
       .filter(col("lang") === target).select("url").collect().map(_.getString(0)).toSet
-    val pruned = ResumableRun.readTablePruned(spark, dir, Seq(ColBound("lang", "=", target)))
+    val pruned = ResumableRun.readTable(spark, dir)
       .filter(col("lang") === target).select("url").collect().map(_.getString(0)).toSet
     assert(full.nonEmpty && pruned == full)
     // a bound beyond every recorded max prunes every stats-bearing bucket;
@@ -959,8 +1016,8 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val beyond = "https://" + "\u007f" // > any "https://<ascii-domain>" url
     val (keptAll, _) = ResumableRun.prunedPaths(dir, Seq(ColBound("url", ">=", beyond)))
     assert(keptAll.size == log.committedPaths().size - stats.size)
-    val none = ResumableRun.readTablePruned(spark, dir,
-      Seq(ColBound("url", ">=", beyond), ColBound("lang", "=", "zz")))
+    val none = ResumableRun.readTable(spark, dir)
+      .filter(col("url") >= beyond && col("lang") === "zz")
     assert(none.count() == 0 && none.columns.contains("extracted_text"))
     // compaction re-stages every bucket and re-reads its stats from the new
     // footers: the same rows give the same bounds
@@ -968,12 +1025,11 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(compacted.nonEmpty)
     val after = new SnapshotLog(dir).bucketStats()
     assert(after == stats, "compaction must keep bucket stats")
-    val prunedAfter = ResumableRun.readTablePruned(spark, dir,
-      Seq(ColBound("lang", "=", target)))
+    val prunedAfter = ResumableRun.readTable(spark, dir)
       .filter(col("lang") === target).select("url").collect().map(_.getString(0)).toSet
     assert(prunedAfter == full)
     // time travel to v1 still resolves (stats do not affect historical reads)
-    assert(ResumableRun.readTableAsOf(spark, dir, 1).count() >= 0)
+    assert(ResumableRun.readTable(spark, dir, version = Some(1)).count() >= 0)
 
     // time-range pruning: a crawl table partitioned by time window answers
     // "read the recent snapshot" without opening older buckets (warc_ts
@@ -986,12 +1042,96 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(ColBound("warc_ts", ">=", cut)))
     assert(skippedT.nonEmpty, "time cut pruned no buckets")
     assert(keptT.size < new SnapshotLog(dirT).committedPaths().size)
-    val fullT = ResumableRun.readTable(spark, dirT)
+    val fullT = plain(dirT)
       .filter(col("warc_ts") >= lit(cut).cast("timestamp")).count()
-    val prunedT = ResumableRun.readTablePruned(spark, dirT,
-      Seq(ColBound("warc_ts", ">=", cut)))
+    val prunedT = ResumableRun.readTable(spark, dirT)
       .filter(col("warc_ts") >= lit(cut).cast("timestamp")).count()
     assert(fullT > 0 && prunedT == fullT)
+  }
+
+  test("manifest reads equal plain parquet reads: schema, rows under filters, fewer files opened") {
+    import java.time.Instant
+    import org.apache.spark.sql.{Column, DataFrame}
+    import graft.lake.ColBound
+    def paths(dir: String) = new SnapshotLog(dir).committedPaths()
+    def plain(dir: String) = spark.read.parquet(paths(dir): _*)
+    def fileCount(dir: String, bucketDirs: Seq[String]) =
+      bucketDirs.map(d => graft.lake.Compaction.parquetFiles(java.nio.file.Paths.get(d)).size).sum
+    /** Parquet files the executed scan of `df` read (Spark's "number of files read"). */
+    def filesRead(df: DataFrame): Long = {
+      df.collect()
+      val scans = ScanNodes.fileScans(df.queryExecution.executedPlan)
+      assert(scans.size == 1, s"scans: $scans")
+      scans.head.metrics("numFiles").value
+    }
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toString).sorted
+
+    // schema: a fresh table, and one whose bucket 0 holds INT96 warc_ts
+    val fresh = tmp()
+    ResumableRun.run(spark, pages, fresh, nBuckets = 4)
+    assert(ResumableRun.readTable(spark, fresh).schema == plain(fresh).schema)
+    val log = new SnapshotLog(fresh)
+    val staged = log.stagingRoot()
+    plain(fresh).write.parquet(staged.toString)
+    log.commitBucket(0, staged, None)
+    assert(ResumableRun.readTable(spark, fresh).schema == plain(fresh).schema)
+
+    // a lang-clustered table, and a time-windowed one whose timestamps all
+    // sit 0.9 s past a whole second, so each bucket's true warc_ts max lies
+    // above its floored manifest bound
+    val byLang = tmp()
+    ResumableRun.run(spark, pages, byLang, nBuckets = 16,
+      bucketExpr = Some(pmod(xxhash64(col("lang")), lit(16))))
+    val byTime = tmp()
+    ResumableRun.run(spark, pages.withColumn("warc_ts", timestamp_micros(unix_micros(col("warc_ts")) + 900000L)),
+      byTime, nBuckets = 16, bucketExpr = Some(pmod(floor(col("warc_ts").cast("long") / 21600L), lit(16))))
+
+    val langs = pages.select("lang").distinct().collect().map(_.getString(0)).sorted
+    val (lo, mid, hi) = (langs.head, langs(langs.length / 2), langs.last)
+    val urls = pages.select("url").orderBy("url").collect().map(_.getString(0))
+    val tStats = new SnapshotLog(byTime).bucketStats()
+    val (tb, ts) = tStats.minBy(_._2.tsMax)
+    def instant(s: String) = java.time.LocalDateTime.parse(s.replace(' ', 'T'))
+      .toInstant(java.time.ZoneOffset.UTC)
+    val trueMax = instant(ts.tsMax).plusMillis(900)
+    def at(i: Instant): Column = lit(java.sql.Timestamp.from(i))
+    val justBelowMax = at(trueMax.minusMillis(200))
+    val (l, u, t) = (col("lang"), col("url"), col("warc_ts"))
+    val grid: Seq[(String, Column)] = Seq(
+      "lang = mid" -> (l === mid), "lang < mid" -> (l < mid), "lang <= mid" -> (l <= mid),
+      "lang > mid" -> (l > mid), "lang >= max" -> (l >= hi), "lang <= min" -> (l <= lo),
+      "mid = lang" -> (lit(mid) === l), "max <= lang" -> (lit(hi) <= l),
+      "lang IN" -> l.isin(lo, hi), "url IN (InSet)" -> u.isin(urls.take(12): _*),
+      "lang IS NULL" -> l.isNull, "OR" -> (l === lo || u === urls.last),
+      "NOT" -> not(l === mid), "url = " -> (u === urls(7)), "url < " -> (u < urls(100)),
+      "url >= max" -> (u >= urls.last), "url > " -> (u > urls(400)),
+      "non-ASCII url bound" -> (u >= "https://\u00e9"), "non-ASCII lang" -> (l < "\u00fcber"),
+      "ts >= just below a true max" -> (t >= justBelowMax),
+      "ts > just below a true max" -> (t > justBelowMax),
+      "ts = true max" -> (t === at(trueMax)), "ts < just below" -> (t < justBelowMax),
+      "ts <= just below" -> (t <= justBelowMax),
+      "ts window and lang" -> (t >= at(trueMax.minusSeconds(86400)) && t <= justBelowMax && l === mid))
+    Seq(byLang, byTime).foreach { dir =>
+      grid.foreach { case (name, p) =>
+        val (got, want) = (rows(ResumableRun.readTable(spark, dir).filter(p)), rows(plain(dir).filter(p)))
+        val same = got == want
+        assert(same, s"$name on $dir: ${got.size} rows, plain read ${want.size}")
+      }
+    }
+    // test setup: bucket tb's last row sits 0.9 s past its floored bound
+    assert(plain(byTime).filter(t === at(trueMax)).count() == 1, s"bucket $tb")
+
+    // pruning opens fewer files than the table has, exactly those of the
+    // buckets prunedPaths keeps; the ColBound shim reads the same rows
+    val langBound = Seq(ColBound("lang", "=", mid))
+    val pruned = ResumableRun.readTable(spark, byLang).filter(l === mid)
+    assert(filesRead(pruned) == fileCount(byLang, ResumableRun.prunedPaths(byLang, langBound)._1))
+    assert(filesRead(pruned) < fileCount(byLang, paths(byLang)))
+    assert(rows(ResumableRun.readTablePruned(spark, byLang, langBound)) == rows(pruned))
+    val cut = ColBound.warcTs(">=", trueMax)
+    val recent = ResumableRun.readTable(spark, byTime).filter(t >= at(trueMax))
+    assert(filesRead(recent) == fileCount(byTime, ResumableRun.prunedPaths(byTime, Seq(cut))._1))
+    assert(filesRead(recent) < fileCount(byTime, paths(byTime)))
   }
 
   test("hash-distributed staging writes one file per bucket; observe-stats equal a recomputation") {
@@ -1040,13 +1180,13 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(log.bucketStats() == aggregatedStats(dir))
     // time travel to a PRE-compaction version still reads (resolving to the
     // compacted files — the documented manifests-not-data-copies caveat)
-    assert(ResumableRun.readTableAsOf(spark, dir, vPre).count() == before)
+    assert(ResumableRun.readTable(spark, dir, version = Some(vPre)).count() == before)
 
     val removed = log.expireManifests(keepLast = 2)
     assert(removed.nonEmpty && removed.forall(_ <= log.latestVersion() - 2))
     assert(ResumableRun.readTable(spark, dir).count() == before) // LATEST untouched
     intercept[IllegalArgumentException] {
-      ResumableRun.readTableAsOf(spark, dir, removed.head)
+      ResumableRun.readTable(spark, dir, version = Some(removed.head))
     }
   }
 }

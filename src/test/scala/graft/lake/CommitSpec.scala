@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -53,6 +53,42 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     val writing = tasks.asScala.toVector.groupBy(_._1).filter(_._2.exists(_._2 > 0))
     assert(writing.size == 1, s"expected one stage writing records: $writing")
     writing.head._2.map(_._2)
+  }
+
+  /** Spark jobs started while `f` ran. */
+  private def jobsStarted(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try f finally { ListenerDrain(sc); sc.removeSparkListener(listener) }
+    jobs.get
+  }
+
+  test("reading the committed table starts no job before an action; a pruned count none extra") {
+    val dir = tmp()
+    ResumableRun.run(spark, pages, dir, nBuckets = 16,
+      bucketExpr = Some(pmod(xxhash64(col("lang")), lit(16))))
+    val lang = col("lang") === "en"
+    // schema, files and stats come from the manifest: nothing is inferred
+    val planning = jobsStarted {
+      val table = ResumableRun.readTable(spark, dir)
+      assert(table.schema.fieldNames.contains("extracted_text"))
+      table.filter(lang).queryExecution.executedPlan
+    }
+    assert(planning == 0, s"$planning jobs before any action")
+    // a pruned count runs the jobs of a count over a parquet read with a
+    // given schema, and no schema-inference job
+    val paths = new SnapshotLog(dir).committedPaths()
+    val schema = ResumableRun.readTable(spark, dir).schema
+    var (n, want) = (0L, 0L)
+    val read = jobsStarted { n = ResumableRun.readTable(spark, dir).filter(lang).count() }
+    val given = jobsStarted { want = spark.read.schema(schema).parquet(paths: _*).filter(lang).count() }
+    assert(n == want && n > 0)
+    assert(read == given, s"pruned read: $read jobs, read with a given schema: $given")
   }
 
   test("hot-domain pass equals a brute-force groupBy/count/cut") {

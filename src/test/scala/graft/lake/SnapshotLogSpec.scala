@@ -43,6 +43,29 @@ class SnapshotLogSpec extends AnyFunSuite {
     assert(!ColBound("warc_ts", ">=", "2024-01-01 00:00:00").prunes(parsed(4)))
   }
 
+  test("manifest schema: recorded at commit, carried forward, survives hostile field names") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("snaplog-test")
+    val log = new SnapshotLog(root.toString)
+    log.init()
+    def commit(b: Int, schema: Option[StructType]): Unit = {
+      val staged = root.resolve("_tmp").resolve(s"$b-stage")
+      Files.createDirectories(staged)
+      log.commitBucket(b, staged, Some(BucketStats("https://a", "https://b", "en", "en")), schema)
+    }
+    val schema = StructType(Seq(StructField("url", StringType),
+      StructField("q\"uote\\back\nslash", ArrayType(IntegerType, containsNull = true)),
+      StructField("warc_ts", TimestampType)))
+    commit(0, None)
+    assert(log.manifest(1).schema.isEmpty)
+    commit(1, Some(schema))
+    commit(2, None) // no schema given: the previous one carries forward
+    assert(log.manifest(2).schema.contains(schema) && log.manifest(3).schema.contains(schema))
+    assert(log.manifest(3).buckets == Set(0, 1, 2) && log.manifest(3).stats.size == 3)
+    SnapshotLog.deleteRecursively(root)
+  }
+
   test("mid-swap crash recovery: replaced-* restores a missing bucket dir, garbage still sweeps") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val root = Files.createTempDirectory("snaplog-test")
@@ -127,10 +150,19 @@ class SnapshotLogSpec extends AnyFunSuite {
     assert(!ColBound("url", ">=", "https://d").prunes(s))
     assert(ColBound("warc_ts", ">=", "2023-11-16 00:00:00").prunes(s))
     assert(!ColBound("warc_ts", ">=", "2023-11-14 12:00:00").prunes(s))
+    // strict ops on strings prune at the bound itself
+    assert(ColBound("lang", "<", "de").prunes(s) && !ColBound("lang", "<=", "de").prunes(s))
+    assert(ColBound("lang", ">", "fr").prunes(s) && !ColBound("lang", ">=", "fr").prunes(s))
+    // warc_ts bounds are floored seconds: a max of 00:00:00 may be 00:00:00.9,
+    // so a strict comparison prunes only what the inclusive one does
+    assert(!ColBound("warc_ts", ">", "2023-11-15 00:00:00").prunes(s))
+    assert(ColBound("warc_ts", ">", "2023-11-15 00:00:01").prunes(s))
+    assert(!ColBound("warc_ts", "<", "2023-11-14 00:00:00").prunes(s))
+    assert(ColBound("warc_ts", "<", "2023-11-13 23:59:59").prunes(s))
     // non-ASCII operands: conservative, never prune
     assert(!ColBound("lang", "=", "über").prunes(s))
     // unsupported column / op rejected eagerly
     intercept[IllegalArgumentException](ColBound("html", "=", "x"))
-    intercept[IllegalArgumentException](ColBound("url", "<", "x"))
+    intercept[IllegalArgumentException](ColBound("url", "!=", "x"))
   }
 }
