@@ -216,10 +216,6 @@ object StructureScore {
   def allPages(pages: Seq[PageBlocks]): Vector[PageScore] =
     pages.iterator.map(scorePage).toVector
 
-  /** Pages worth reporting: probability >= 40 (diagram_analyzer.py:80,93). */
-  def reportablePages(pages: Seq[PageBlocks]): Vector[PageScore] =
-    allPages(pages).filter(_.probability >= 40)
-
   /** Diagram-analysis report rendered into the output document
     * (diagram_analyzer.py:104-117: probability/score/reasons per reported
     * page plus component counts and the analysis-method line). Returns ""

@@ -14,16 +14,16 @@ import org.apache.spark.sql.SparkSession
   * `compact` re-stages every bucket holding more than `maxFiles` data
   * files through [[ResumableRun.stageAndCommit]] — the same single
   * staging job as a normal run, so each rewritten bucket is one file with
-  * stats read from its fresh footers — and re-commits it through the
-  * NORMAL snapshot protocol, single-writer like the rest of the log
-  * (ADVICE r4: the swap is move-aside + move-in, so a concurrent lister
-  * could still catch a brief not-found window between the two renames;
-  * readers must resolve paths from a manifest before or after the commit,
-  * never during). Each commit appends a new manifest version. Time
-  * travel: all manifests remain readable, but versions older than the
-  * compaction now resolve to the compacted files (the log keeps manifests,
-  * not data copies — the documented SnapshotLog caveat, same trade Iceberg
-  * makes once old files are expired). Pair with
+  * stats read from its fresh footers — and re-commits them all in ONE
+  * snapshot through the NORMAL protocol, single-writer like the rest of
+  * the log (ADVICE r4: each bucket's swap is move-aside + move-in, so a
+  * concurrent lister could still catch a brief not-found window between
+  * the two renames; readers must resolve paths from a manifest before or
+  * after the commit, never during). Each compaction appends one manifest
+  * version. Time travel: all manifests remain readable, but versions
+  * older than the compaction now resolve to the compacted files (the log
+  * keeps manifests, not data copies — the documented SnapshotLog caveat,
+  * same trade Iceberg makes once old files are expired). Pair with
   * `SnapshotLog.expireManifests` to bound manifest growth.
   */
 object Compaction {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.internal.SQLConf
 import graft.pipeline.Pipeline
 
 /** Resumable extraction run: pages are hashed into salted buckets
-  * (Pipeline.saltedBucket), each bucket is extracted and committed
+  * (Pipeline.saltedBucket), each run's buckets are extracted and committed
   * atomically via SnapshotLog, and a restarted run skips every committed
   * bucket — the BASELINE.json requirement "resumes from Iceberg snapshot
   * checkpoints so a killed run restarts at partition granularity".
@@ -26,13 +26,14 @@ import graft.pipeline.Pipeline
   * most one-per-core write tasks, which dynamic-partition-write them to
   * `_tmp/stage-<v>/bucket=N/` (one file per bucket, permission bits set
   * in-process by [[NioLocalFileSystem]]); each bucket's manifest stats are
-  * then read from the footers of the files it staged, and each staged
-  * bucket dir is atomically committed in its own snapshot. A run killed
-  * mid-job loses that whole job; a run killed in the commit loop keeps
-  * every bucket it committed. [[Compaction]] re-stages committed buckets
-  * through the same path. Stale `stage-*` dirs from previously killed runs
-  * are swept before staging (the next run's stagingRoot has a new version
-  * suffix, so leftovers would otherwise leak forever).
+  * then read from the footers of the files it staged, and the run's staged
+  * bucket dirs are committed together in ONE snapshot. A run killed before
+  * that snapshot's `LATEST` swap loses the whole run and commits none of
+  * it; `maxBuckets` bounds how much work one run risks. [[Compaction]]
+  * re-stages committed buckets through the same path. Stale `stage-*` dirs
+  * from previously killed runs are swept before staging (a run killed
+  * after its `LATEST` swap leaves a stage root no later run reuses, so it
+  * would otherwise leak forever).
   */
 object ResumableRun {
 
@@ -99,8 +100,8 @@ object ResumableRun {
   }
 
   /** Stage `rows` (carrying a BIGINT or INT `bucket` column, every value in
-    * `buckets`) in one job and commit each of `buckets` in its own snapshot
-    * with the min/max stats of the rows it staged and the data files'
+    * `buckets`) in one job and commit all of `buckets` in one snapshot, each
+    * with the min/max stats of the rows it staged, and the data files'
     * schema. A bucket with no rows commits an empty dir and no stats. */
   private[lake] def stageAndCommit(log: SnapshotLog, rows: DataFrame,
       buckets: Vector[Int]): Unit = {
@@ -137,13 +138,14 @@ object ResumableRun {
     // a parquet read of them reports it: every field nullable
     val dataSchema = org.apache.spark.sql.graftbridge.GraftBridge.asNullable(
       org.apache.spark.sql.types.StructType(rows.schema.filterNot(_.name == "bucket")))
-    phase("commit_loop") { buckets.foreach { b =>
-      val staged = stageRoot.resolve(s"bucket=$b")
+    phase("commit_loop") {
+      val staged = buckets.map(b => b -> stageRoot.resolve(s"bucket=$b")).toMap
       // a bucket with zero rows stages no dir: it commits an empty one, the
       // manifest carries the schema
-      if (!stats.contains(b)) java.nio.file.Files.createDirectories(staged)
-      log.commitBucket(b, staged, stats.get(b), Some(dataSchema))
-    } }
+      staged.foreach { case (b, dir) =>
+        if (!stats.contains(b)) java.nio.file.Files.createDirectories(dir) }
+      log.commit(staged, stats, dataSchema)
+    }
     // only write-protocol leftovers (_SUCCESS) remain under the stage root
     SnapshotLog.deleteRecursively(stageRoot)
   }

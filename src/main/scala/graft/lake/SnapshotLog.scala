@@ -1,7 +1,9 @@
 package graft.lake
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-style snapshot commit log over plain parquet (SURVEY.md §7:
@@ -17,18 +19,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   <table>/_snapshots/LATEST         current manifest version (atomic swap)
   *
   * The manifest's `"schema"` is the data files' Spark schema
-  * (`StructType.json`, escaped), so readers build the table from the
-  * manifest alone and never infer it from parquet footers. A bucket with
-  * no rows commits an empty dir: the schema lives in the manifest, not in
-  * a schema-only parquet file.
+  * (`StructType.json`, as a JSON string), so readers build the table from
+  * the manifest alone and never infer it from parquet footers. A bucket
+  * with no rows commits an empty dir: the schema lives in the manifest,
+  * not in a schema-only parquet file.
   *
-  * Commit protocol (crash-safe on POSIX rename semantics):
-  *   1. job writes bucket data to <table>/_tmp/stage-<K>/bucket=<N>/
-  *   2. staged dir atomically renamed to data/bucket=<N>/
-  *   3. new manifest v<K+1>.json written, then LATEST swapped via
-  *      temp-file + ATOMIC_MOVE
-  * A killed run leaves only _tmp garbage and an un-referenced data dir at
-  * worst; resume re-reads LATEST and skips committed buckets.
+  * Commit protocol, one snapshot per run (crash-safe on POSIX rename
+  * semantics):
+  *   1. one job writes every bucket of the run to
+  *      <table>/_tmp/stage-<K>/bucket=<N>/
+  *   2. each staged dir is atomically renamed to data/bucket=<N>/ (an
+  *      existing one is moved aside first and deleted after)
+  *   3. one manifest v<K+1>.json listing every bucket is written, then
+  *      LATEST is swapped via temp-file + ATOMIC_MOVE
+  * A reader resolving LATEST sees all of a run or none of it. A killed run
+  * leaves only _tmp garbage and un-referenced data dirs at worst; resume
+  * re-reads LATEST and re-stages every bucket it does not list.
   */
 final class SnapshotLog(tableDir: String) {
   private val root: Path = Paths.get(tableDir)
@@ -66,65 +72,58 @@ final class SnapshotLog(tableDir: String) {
     else {
       val path = snapsDir.resolve(s"v$v.json")
       require(Files.exists(path), s"no snapshot v$v under $snapsDir")
-      SnapshotLog.parseManifest(new String(Files.readAllBytes(path), "UTF-8"))
+      SnapshotLog.parseManifest(new String(Files.readAllBytes(path), UTF_8))
     }
 
   def bucketDataDir(bucket: Int): Path = dataDir.resolve(s"bucket=$bucket")
 
   /** A scratch ROOT for one job staging many buckets at once via
-    * `write.partitionBy("bucket")` — each `bucket=N` child dir is then
-    * committed individually with [[commitBucket]]. Single-writer assumption
-    * (same as the rest of the log): concurrent runs at the same version
-    * would collide here. */
+    * `write.partitionBy("bucket")` — its `bucket=N` child dirs are then
+    * published together by [[commit]]. Single-writer assumption (same as
+    * the rest of the log): concurrent runs at the same version would
+    * collide here. */
   def stagingRoot(): Path =
     tmpDir.resolve(s"stage-${latestVersion()}")
 
-  /** Publish a staged bucket dir and record it in a new snapshot.
+  /** Publish staged bucket dirs (bucket -> dir) and record them all in ONE
+    * new snapshot.
     *
     * Consistency contract (ADVICE r4): the log is SINGLE-WRITER and readers
     * are expected to resolve paths via a manifest BEFORE the swap or AFTER
-    * it — a reader listing the bucket dir during the swap can observe a
-    * missing dir for the instant between the two renames. Re-commit moves
-    * the old data ASIDE first and deletes it only after the new dir is in
-    * place, so the not-found window is two renames, not a recursive delete
-    * (the previous delete-then-move ordering left a half-deleted bucket
-    * visible for the whole delete).
+    * it — a reader listing a re-committed bucket dir during its swap can
+    * observe a missing dir for the instant between the two renames.
+    * Re-commit moves the old data ASIDE first and deletes it only after the
+    * new dir is in place, so the not-found window is two renames, not a
+    * recursive delete; [[sweepStaleStages]] restores a bucket whose swap
+    * died between them.
     *
     * `stats` are the min/max bounds of exactly the rows being committed
-    * and replace the bucket's previous entry; `None` (no rows, or bounds
-    * unknown) records none, so the bucket is never pruned. `schema` is the
-    * data files' schema; `None` carries the previous manifest's forward.
+    * and replace each bucket's previous entry; a staged bucket without one
+    * (no rows, or bounds unknown) records none, so it is never pruned.
+    * `schema` is the data files' schema.
     *
-    * The previous manifest is read and parsed ONCE per commit (round-5
-    * review — the per-field helper calls re-read it several times). Each
-    * manifest still lists every committed bucket, so a B-bucket table
-    * writes O(B) manifest bytes per commit — the same bound as Iceberg's
-    * manifest lists, amortized there by multi-bucket commits; here each
-    * staged bucket is one commit. */
-  def commitBucket(bucket: Int, staged: Path,
-      stats: Option[BucketStats] = None, schema: Option[StructType] = None): Unit = {
+    * The new manifest lists every committed bucket, so each commit writes
+    * O(B) manifest bytes for a B-bucket table — once per run, the bound of
+    * Iceberg's one manifest list per write. */
+  def commit(staged: Map[Int, Path], stats: Map[Int, BucketStats], schema: StructType): Unit = {
     val v0 = latestVersion()
-    val dest = bucketDataDir(bucket)
-    if (Files.exists(dest)) { // idempotent re-commit: move aside, swap, drop
-      val aside = tmpDir.resolve(s"replaced-$bucket-$v0")
-      if (Files.exists(aside)) deleteRecursively(aside)
-      Files.move(dest, aside, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(staged, dest, StandardCopyOption.ATOMIC_MOVE)
-      deleteRecursively(aside)
-    } else Files.move(staged, dest, StandardCopyOption.ATOMIC_MOVE)
+    staged.toVector.sortBy(_._1).foreach { case (bucket, dir) =>
+      val dest = bucketDataDir(bucket)
+      if (Files.exists(dest)) { // idempotent re-commit: move aside, swap, drop
+        val aside = tmpDir.resolve(s"replaced-$bucket-$v0")
+        if (Files.exists(aside)) deleteRecursively(aside)
+        Files.move(dest, aside, StandardCopyOption.ATOMIC_MOVE)
+        Files.move(dir, dest, StandardCopyOption.ATOMIC_MOVE)
+        deleteRecursively(aside)
+      } else Files.move(dir, dest, StandardCopyOption.ATOMIC_MOVE)
+    }
     val prev = manifest(v0)
-    val newBuckets = prev.buckets + bucket
-    val newStats = prev.stats - bucket ++ stats.map(bucket -> _)
+    val next = Manifest(prev.buckets ++ staged.keySet, prev.stats -- staged.keySet ++ stats,
+      Some(schema))
     val v = v0 + 1
-    // the previous schema carries forward as written, without a parse
-    val schemaField = schema.map(t => SnapshotLog.esc(t.json)).orElse(prev.escapedSchema)
-      .map(t => s""","schema":"$t"""").getOrElse("")
-    val json =
-      s"""{"version":$v,"buckets":[${newBuckets.toVector.sorted.mkString(",")}],""" +
-        s""""stats":{${SnapshotLog.encodeStats(newStats)}}$schemaField}"""
-    Files.write(snapsDir.resolve(s"v$v.json"), json.getBytes("UTF-8"))
+    Files.write(snapsDir.resolve(s"v$v.json"), SnapshotLog.renderManifest(v, next).getBytes(UTF_8))
     val tmpLatest = snapsDir.resolve(s"LATEST.tmp")
-    Files.write(tmpLatest, v.toString.getBytes("UTF-8"))
+    Files.write(tmpLatest, v.toString.getBytes(UTF_8))
     Files.move(tmpLatest, snapsDir.resolve("LATEST"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
@@ -135,10 +134,10 @@ final class SnapshotLog(tableDir: String) {
 
   /** Recover from a commit killed mid-swap, then remove orphaned staging
     * dirs left under `_tmp` by runs killed during staging or the commit
-    * loop (ADVICE r3): a restarted run computes a new stagingRoot from the
-    * advanced version and would never clean the old one, leaking staged
-    * parquet forever. Single-writer assumption (same as the rest of the
-    * log).
+    * (ADVICE r3): a run killed after its `LATEST` swap leaves its stage
+    * root behind, and no later run stages under that version again, so it
+    * would leak staged parquet forever. Single-writer assumption (same as
+    * the rest of the log).
     *
     * Recovery MUST run before deletion: a re-commit swap that died between
     * its two renames leaves the bucket's only committed data in
@@ -196,15 +195,10 @@ final class SnapshotLog(tableDir: String) {
   private def deleteRecursively(p: Path): Unit = SnapshotLog.deleteRecursively(p)
 }
 
-/** One parsed manifest; `escapedSchema` is its `"schema"` field as
-  * written. */
+/** One parsed manifest. `schema` is `None` only in the empty table and in
+  * manifests written before the log recorded it. */
 private[lake] final case class Manifest(buckets: Set[Int], stats: Map[Int, BucketStats],
-    escapedSchema: Option[String]) {
-  /** The table schema; `None` only in manifests written before the log
-    * recorded it (and in the empty table). */
-  def schema: Option[StructType] = escapedSchema.map(s =>
-    DataType.fromJson(SnapshotLog.unesc(s)).asInstanceOf[StructType])
-}
+    schema: Option[StructType])
 
 /** Per-bucket column bounds recorded in a manifest at commit time — the
   * Iceberg per-file min/max stats analog, at the log's bucket granularity.
@@ -308,69 +302,36 @@ object SnapshotLog {
     }
   }
 
-  private[lake] def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private val json = new ObjectMapper()
 
-  private[lake] def unesc(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case c => sb.append(c); i += 2
-        }
-      } else { sb.append(s.charAt(i)); i += 1 }
+  /** Manifest `version` as JSON: `version`, the sorted `buckets`, `stats`
+    * keyed by bucket with `url_min` … `ts_max`, and `schema` as a JSON
+    * string. */
+  private[lake] def renderManifest(version: Int, m: Manifest): String = {
+    val root = json.createObjectNode().put("version", version)
+    val buckets = root.putArray("buckets")
+    m.buckets.toVector.sorted.foreach(b => buckets.add(b))
+    val stats = root.putObject("stats")
+    m.stats.toVector.sortBy(_._1).foreach { case (b, s) =>
+      stats.putObject(b.toString).put("url_min", s.urlMin).put("url_max", s.urlMax)
+        .put("lang_min", s.langMin).put("lang_max", s.langMax)
+        .put("ts_min", s.tsMin).put("ts_max", s.tsMax)
     }
-    sb.toString
+    m.schema.foreach(t => root.put("schema", t.json))
+    json.writeValueAsString(root)
   }
 
-  // the ts fields are optional in the pattern so manifests written before
-  // timestamp bounds existed still parse (their ts bounds read as empty =
-  // unknown, which pruning treats as not-prunable)
-  /** The production stats encoder — also exercised directly by
-    * SnapshotLogSpec's round-trip vectors so the test cannot drift from
-    * the writer (round-5 review). */
-  private[lake] def encodeStats(stats: Map[Int, BucketStats]): String =
-    stats.toVector.sortBy(_._1).map { case (b, s) =>
-      s""""$b":{"url_min":"${esc(s.urlMin)}","url_max":"${esc(s.urlMax)}",""" +
-        s""""lang_min":"${esc(s.langMin)}","lang_max":"${esc(s.langMax)}",""" +
-        s""""ts_min":"${esc(s.tsMin)}","ts_max":"${esc(s.tsMax)}"}"""
-    }.mkString(",")
-
-  private[lake] def parseManifest(json: String): Manifest =
-    Manifest(parseBuckets(json), parseStats(json), schemaField.findFirstMatchIn(json).map(_.group(1)))
-
-  /** Bucket list of a manifest json ({"version":K,"buckets":[1,2,3],...});
-    * empty input parses as the empty table. */
-  private[lake] def parseBuckets(json: String): Set[Int] =
-    """"buckets"\s*:\s*\[([0-9,\s]*)\]""".r.findFirstMatchIn(json) match {
-      case Some(g) =>
-        g.group(1).split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSet
-      case None => Set.empty
-    }
-
-  // one JSON string body: runs of plain chars, each escape then another
-  // run. The plain `(?:[^"\\]|\\.)*` alternation recurses once per char
-  // in java.util.regex and overflowed the stack on a 5 KB url bound.
-  private val str = """([^"\\]*+(?:\\.[^"\\]*+)*+)"""
-  private val schemaField = raw""""schema":"$str"""".r
-  private val statsEntry =
-    (raw""""(\d+)":\{"url_min":"$str","url_max":"$str",""" +
-      raw""""lang_min":"$str","lang_max":"$str"""" +
-      raw"""(?:,"ts_min":"$str","ts_max":"$str")?\}""").r
-
-  private[lake] def parseStats(json: String): Map[Int, BucketStats] =
-    statsEntry.findAllMatchIn(json).map { m =>
-      m.group(1).toInt -> BucketStats(unesc(m.group(2)), unesc(m.group(3)),
-        unesc(m.group(4)), unesc(m.group(5)),
-        Option(m.group(6)).map(unesc).getOrElse(""),
-        Option(m.group(7)).map(unesc).getOrElse(""))
+  /** Parses what [[renderManifest]] writes. A missing `ts_min`/`ts_max`
+    * (manifests written before timestamp bounds existed) reads as ""
+    * (unknown, never prunes). */
+  private[lake] def parseManifest(text: String): Manifest = {
+    val root = json.readTree(text)
+    val stats = root.path("stats").properties().asScala.map { e =>
+      def field(k: String) = e.getValue.path(k).asText("")
+      e.getKey.toInt -> BucketStats(field("url_min"), field("url_max"),
+        field("lang_min"), field("lang_max"), field("ts_min"), field("ts_max"))
     }.toMap
+    Manifest(root.path("buckets").elements().asScala.map(_.asInt).toSet, stats,
+      Option(root.get("schema")).map(s => DataType.fromJson(s.asText).asInstanceOf[StructType]))
+  }
 }

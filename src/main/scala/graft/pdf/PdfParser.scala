@@ -328,7 +328,6 @@ object PdfParser {
       while (pos < n && isRegular(bytes(pos))) pos += 1
       new String(bytes, start, pos - start)
     }
-    def peekToken(): String = { val p = pos; val t = readToken(); pos = p; t }
 
     def readValue(doc: Doc): PVal = {
       skipWs()

@@ -4,22 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Unified readers/writers for the `pages` table and the links relation —
-  * the engine's source/sink surface (SURVEY.md S1/S3/S9/S10). Parquet is
-  * the canonical format (columnar scan + pushdown); CSV/JSON exist because
-  * the reference consumes/produces them (config.py:37-58 format table;
-  * app_v5.py:629-637 CSV link export). The binary html column is base64-
-  * encoded in text formats (CSV/JSON cannot carry raw bytes).
+/** Text-format readers/writers for the `pages` table and the links
+  * relation — the engine's source/sink surface (SURVEY.md S1/S3/S9/S10).
+  * Parquet is the canonical format (columnar scan + pushdown), read and
+  * written through Spark directly; CSV/JSON exist because the reference
+  * consumes/produces them (config.py:37-58 format table; app_v5.py:629-637
+  * CSV link export). The binary html column is hex-encoded in text formats
+  * (CSV/JSON cannot carry raw bytes).
   */
 object PagesSource {
 
   val pagesSchema: StructType = PagesDataSource.pagesSchema
-
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(pagesSchema).parquet(path)
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 
   // text-format pages: html carried as hex (single-line, unlike Spark's
   // RFC-2045 base64 which inserts line breaks and shreds CSV rows).

@@ -12,7 +12,6 @@ import org.apache.spark.sql.SparkSession
   * Usage: `sbt "runMain graft.tools.BenchExtra <mode> [args...]"`
   *   scale [factor] [nBuckets]     replicated corpus -> commit -> pruned read
   *   plans <outDir> <suffix> [q..] write .explain("formatted") per query
-  *   dump  <outDir> [q..]          write each query's output as parquet
   *   time  [q...]                  Bench-identical count() timing (default)
   *   noop  [q...]                  noop-sink timing (full-column compute)
   * An unknown mode exits 2 listing these. Reads SPARK_GRAFT_SF_DIR /
@@ -34,7 +33,7 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val mode = if (args.nonEmpty) args(0) else "time"
-    val modes = Seq("scale", "plans", "dump", "time", "noop")
+    val modes = Seq("scale", "plans", "time", "noop")
     if (!modes.contains(mode)) {
       System.err.println(s"unknown mode: $mode\nknown modes: ${modes.mkString(", ")}")
       sys.exit(2)
@@ -119,31 +118,6 @@ object BenchExtra {
           }
           println(s"range rows: full=$full pruned=$pruned equal=${full == pruned}")
         } finally graft.lake.SnapshotLog.deleteRecursively(base)
-
-      case "dump" =>
-        // materialize query outputs (all of them by default) to parquet
-        // (Verify-style) for before/after diffs when a declared query is
-        // reformulated. Row order within the single coalesced partition
-        // follows shuffle fetch order and varies between runs of the same
-        // code, so compare the rows as multisets: equal bytes prove equal
-        // output, unequal bytes prove nothing.
-        val outDir = java.nio.file.Paths.get(args(1))
-        val known = graft.SparkEntry.queries.keys.toSeq.sorted
-        val names = if (args.length > 2) args.drop(2).toSeq else known
-        val unknown = names.filterNot(known.contains)
-        if (unknown.nonEmpty) {
-          System.err.println(s"unknown queries: ${unknown.mkString(", ")}\n" +
-            s"known queries: ${known.mkString(", ")}")
-          s.stop()
-          sys.exit(2)
-        }
-        java.nio.file.Files.createDirectories(outDir)
-        names.foreach { q =>
-          graft.SparkEntry.queries(q)(s, sfDir)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(outDir.resolve(q).toString)
-          println(s"dumped $q")
-        }
 
       case "plans" =>
         val outDir = java.nio.file.Paths.get(args(1))

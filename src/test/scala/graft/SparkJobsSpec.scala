@@ -96,15 +96,16 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(resumedRows == fullRows)
     assert(resumedRows.size == 500)
 
-    // time travel: snapshot v3 (after the "killed" run) sees exactly the
-    // first 3 committed buckets' rows; latest sees all 500
-    val asOf3 = ResumableRun.readTable(spark, dir, version = Some(3))
-    val expected3 = ResumableRun.readTable(spark, dir)
+    // time travel: snapshot v1 (the "killed" run, one snapshot) sees
+    // exactly the first 3 committed buckets' rows; latest (v2) sees all 500
+    assert(new SnapshotLog(dir).latestVersion() == 2)
+    val asOf1 = ResumableRun.readTable(spark, dir, version = Some(1))
+    val expected1 = ResumableRun.readTable(spark, dir)
       .withColumn("b", Pipeline.saltedBucket(Pipeline.hotDomains(p).keySet, nBuckets))
       .filter(col("b").isin(first.map(Integer.valueOf): _*))
       .count()
-    assert(asOf3.count() == expected3)
-    assert(asOf3.count() < 500)
+    assert(asOf1.count() == expected1)
+    assert(asOf1.count() < 500)
   }
 
   test("salted bucketing bounds hot-domain skew") {
@@ -875,8 +876,9 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("url", "extracted_text").collect()
       .map(rw => (rw.getString(0), rw.getString(1))).toMap
     assert(got == expected)
-    // every bucket still committed individually: the log resumes per bucket
-    assert(new SnapshotLog(dir).latestVersion() == 66)
+    // the whole run is one snapshot: version 1 lists every bucket
+    val log = new SnapshotLog(dir)
+    assert(log.latestVersion() == 1 && log.committedBuckets() == (0 until 66).toSet)
   }
 
   test("a 66-bucket run: footer stats equal a groupBy aggregation past bucket 64") {
@@ -943,7 +945,8 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // re-commit bucket 0 from a plain write of this session: INT96 warc_ts
     val staged = log.stagingRoot()
     spark.read.parquet(log.bucketDataDir(0).toString).write.parquet(staged.toString)
-    log.commitBucket(0, staged, log.bucketStats().get(0))
+    log.commit(Map(0 -> staged), log.bucketStats().filter(_._1 == 0),
+      ResumableRun.readTable(spark, dir).schema)
     def tsTypes(b: Int): Set[PrimitiveTypeName] =
       graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).map { f =>
         val file = new org.apache.parquet.io.LocalInputFile(f)
@@ -1073,7 +1076,7 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val log = new SnapshotLog(fresh)
     val staged = log.stagingRoot()
     plain(fresh).write.parquet(staged.toString)
-    log.commitBucket(0, staged, None)
+    log.commit(Map(0 -> staged), Map.empty, ResumableRun.readTable(spark, fresh).schema)
     assert(ResumableRun.readTable(spark, fresh).schema == plain(fresh).schema)
 
     // a lang-clustered table, and a time-windowed one whose timestamps all
@@ -1163,7 +1166,8 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val staged0 = log.stagingRoot()
     spark.read.parquet(log.bucketDataDir(0).toString).repartition(3)
       .write.parquet(staged0.toString)
-    log.commitBucket(0, staged0, log.bucketStats().get(0)) // same rows, same bounds
+    log.commit(Map(0 -> staged0), log.bucketStats().filter(_._1 == 0), // same rows, same bounds
+      ResumableRun.readTable(spark, dir).schema)
     val before = ResumableRun.readTable(spark, dir).count()
     assert(before > 0)
     val vPre = log.latestVersion()

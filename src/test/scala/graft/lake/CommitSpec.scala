@@ -55,6 +55,16 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     writing.head._2.map(_._2)
   }
 
+  /** The committed table's rows as a sorted multiset of strings. */
+  private def tableRows(dir: String): Vector[String] =
+    ResumableRun.readTable(spark, dir).collect().map(_.toString).sorted.toVector
+
+  /** Nothing is left under the table's `_tmp`. */
+  private def assertSwept(dir: String, clue: String): Unit = {
+    val left = Files.list(Paths.get(dir, "_tmp"))
+    try assert(left.count() == 0, s"$clue: _tmp not swept") finally left.close()
+  }
+
   /** Spark jobs started while `f` ran. */
   private def jobsStarted(f: => Unit): Int = {
     val sc = spark.sparkContext
@@ -166,8 +176,102 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(done == (0 until 200).toVector)
     assert(perTask.size == spark.sparkContext.defaultParallelism, s"write tasks: $perTask")
     assert(perTask.sum == pages.count())
-    assert(new SnapshotLog(dir).latestVersion() == 200)
+    val log = new SnapshotLog(dir)
+    assert(log.latestVersion() == 1 && log.manifest(1).buckets == (0 until 200).toSet)
     assert(ResumableRun.readTable(spark, dir).count() == pages.count())
+  }
+
+  test("every run and every compaction adds one version listing all its buckets") {
+    val dir = tmp()
+    val bucket = Pipeline.saltedBucket(Pipeline.hotDomains(pages).keySet, 16)
+    val first = ResumableRun.run(spark, pages, dir, nBuckets = 16, maxBuckets = 5)
+    val rest = ResumableRun.run(spark, pages, dir, nBuckets = 16)
+    assert(first.size == 5 && rest.size == 11)
+    val log = new SnapshotLog(dir)
+    assert(log.latestVersion() == 2)
+    assert(log.manifest(1).buckets == first.toSet)
+    assert(log.manifest(2).buckets == (0 until 16).toSet)
+    // a reader pinned to v1 sees exactly the first run's rows and files
+    def pinned = ResumableRun.readTable(spark, dir, version = Some(1))
+    val firstRows = pages.filter(bucket.isin(first: _*)).count()
+    assert(firstRows > 0 && pinned.count() == firstRows)
+    val firstRunFiles = pinned.inputFiles.toSet
+    assert(firstRunFiles.nonEmpty && firstRunFiles.forall(f =>
+      first.exists(b => f.contains(s"/bucket=$b/"))), s"v1 reads $firstRunFiles")
+    // a compaction of every bucket is one more version
+    assert(Compaction.compact(spark, dir, maxFiles = 0) == (0 until 16).toVector)
+    assert(log.latestVersion() == 3 && log.manifest(3).buckets == (0 until 16).toSet)
+    assert(pinned.count() == firstRows)
+  }
+
+  test("a run killed at any commit step resumes to the uninterrupted table") {
+    val n = 8
+    val ref = tmp()
+    ResumableRun.run(spark, pages, ref, n)
+    val (refRows, refStats) = (tableRows(ref), new SnapshotLog(ref).bucketStats())
+    assert(refRows.size == pages.count() && refStats.size == n)
+    /** `run` with `onPhase` set to `hook`: its throw kills the run. */
+    def killedRun(dir: String)(hook: String => Unit): Unit = {
+      ResumableRun.onPhase = (ph: String, _: Double) => hook(ph)
+      try intercept[Exception](ResumableRun.run(spark, pages, dir, n))
+      finally ResumableRun.onPhase = null
+    }
+    def killAfter(phase: String)(dir: String): Unit =
+      killedRun(dir)(ph => if (ph == phase) throw new RuntimeException(s"killed after $ph"))
+    // each kill follows a completed 3-bucket run (v1) and hits the second
+    // run, which commits the other 5 buckets as v2
+    val kills: Seq[(String, (String, Vector[Int]) => Unit)] = Seq(
+      "after stage_write" -> ((dir, _) => killAfter("stage_write")(dir)),
+      "after stats_agg" -> ((dir, _) => killAfter("stats_agg")(dir)),
+      // the commit's third move finds no staged dir and fails: two of five
+      // buckets are in data/, no manifest names them
+      "mid-commit, 2 of 5 moved" -> ((dir, todo) => killedRun(dir) { ph =>
+        if (ph == "stats_agg") SnapshotLog.deleteRecursively(
+          new SnapshotLog(dir).stagingRoot().resolve(s"bucket=${todo(2)}"))
+      }),
+      "by hand: 4 of 5 moved, no manifest" -> { (dir, todo) =>
+        killAfter("stats_agg")(dir)
+        val log = new SnapshotLog(dir)
+        todo.take(4).foreach(b =>
+          Files.move(log.stagingRoot().resolve(s"bucket=$b"), log.bucketDataDir(b)))
+      },
+      "after commit_loop" -> ((dir, _) => killAfter("commit_loop")(dir)),
+      "by hand: v2.json written, LATEST still 1" -> { (dir, _) =>
+        ResumableRun.run(spark, pages, dir, n)
+        Files.write(Paths.get(dir, "_snapshots", "LATEST"), "1".getBytes("UTF-8")) })
+    kills.foreach { case (name, kill) =>
+      val dir = tmp()
+      val first = ResumableRun.run(spark, pages, dir, n, maxBuckets = 3)
+      val todo = (0 until n).filterNot(first.contains).toVector
+      kill(dir, todo)
+      val log = new SnapshotLog(dir)
+      assert(log.manifest(1).buckets == first.toSet, name)
+      ResumableRun.run(spark, pages, dir, n)
+      assert(log.latestVersion() == 2 && log.manifest(2).buckets == (0 until n).toSet, name)
+      val sameRows = tableRows(dir) == refRows
+      assert(sameRows, s"$name: rows differ from the uninterrupted run")
+      assert(log.bucketStats() == refStats, name)
+      assertSwept(dir, name)
+    }
+  }
+
+  test("a compaction killed between a bucket's two renames resumes without losing it") {
+    val dir = tmp()
+    ResumableRun.run(spark, pages, dir, nBuckets = 8)
+    val log = new SnapshotLog(dir)
+    val (before, stats) = (tableRows(dir), log.bucketStats())
+    // bucket 2's staged dir vanishes before the commit: its old data is
+    // moved aside, the move-in fails, and data/bucket=2 is missing
+    ResumableRun.onPhase = (ph: String, _: Double) => if (ph == "stats_agg")
+      SnapshotLog.deleteRecursively(log.stagingRoot().resolve("bucket=2"))
+    try intercept[Exception](Compaction.compact(spark, dir, maxFiles = 0))
+    finally ResumableRun.onPhase = null
+    assert(!Files.exists(log.bucketDataDir(2)) && log.latestVersion() == 1)
+    assert(Compaction.compact(spark, dir, maxFiles = 0) == (0 until 8).toVector)
+    assert(log.latestVersion() == 2)
+    val sameRows = tableRows(dir) == before
+    assert(sameRows && log.bucketStats() == stats)
+    assertSwept(dir, "compaction")
   }
 
   test("footer stats: UTF-8 byte order, floored seconds, unknown without min/max") {

@@ -2,67 +2,84 @@ package graft.lake
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pure-function vectors for the manifest stats encoding: the JSON
-  * escape/parse round trip must survive hostile strings (quotes,
-  * backslashes, control chars — all legal in real-crawl urls), and the
-  * pruning predicate must stay conservative on non-ASCII and unknown
-  * bounds. */
+/** Vectors for the manifest codec and the commit: manifests as the log
+  * wrote them before its JSON went through Jackson must parse to the same
+  * [[Manifest]], every manifest must survive a render/parse round trip
+  * with hostile strings (quotes, backslashes, control chars — all legal in
+  * real-crawl urls), a crash mid-swap must recover, and the pruning
+  * predicate must stay conservative on non-ASCII and unknown bounds. */
 class SnapshotLogSpec extends AnyFunSuite {
+  import SnapshotLogSpec._
 
-  private def roundTrip(stats: Map[Int, BucketStats]): Map[Int, BucketStats] = {
-    // uses the PRODUCTION encoder (SnapshotLog.encodeStats), so writer
-    // drift fails this spec instead of silently breaking real manifests
-    val json = s"""{"version":9,"buckets":[0],"stats":{${SnapshotLog.encodeStats(stats)}}}"""
-    SnapshotLog.parseStats(json)
-  }
+  /** `m` through the PRODUCTION renderer and parser, so writer drift fails
+    * this spec instead of silently breaking real manifests. */
+  private def roundTrip(m: Manifest): Manifest =
+    SnapshotLog.parseManifest(SnapshotLog.renderManifest(7, m))
 
   test("stats escape/parse round-trips hostile strings") {
     val nasty = BucketStats(
       urlMin = """https://a.example/path?q="x"&b=\ slash""",
-      urlMax = "https://z.example/control\nnewline",
+      urlMax = "https://z.example/control\nnewline",
       langMin = "de", langMax = "fr",
       tsMin = "2023-11-14 22:13:20", tsMax = "2023-11-18 09:33:20")
     val plain = BucketStats("https://a", "https://b", "en", "en")
-    val back = roundTrip(Map(3 -> nasty, 11 -> plain))
-    assert(back == Map(3 -> nasty, 11 -> plain))
+    // as the earlier codec wrote it: a control char as a six-char unicode
+    // escape, the schema escaped a second time inside its string
+    val written = """{"version":2,"buckets":[3,11],"stats":{"3":{"url_min":""" +
+      """"https://a.example/path?q=\"x\"&b=\\ slash","url_max":"https://z.example/control""" +
+      "\\u000a" + """newline","lang_min":"de","lang_max":"fr","ts_min":"2023-11-14 22:13:20",""" +
+      """"ts_max":"2023-11-18 09:33:20"},"11":{"url_min":"https://a","url_max":"https://b",""" +
+      """"lang_min":"en","lang_max":"en","ts_min":"","ts_max":""}},"schema":""" + hostileSchemaJson + "}"
+    val want = Manifest(Set(3, 11), Map(3 -> nasty, 11 -> plain), Some(hostileSchema))
+    assert(SnapshotLog.parseManifest(written) == want)
+    assert(roundTrip(want) == want)
   }
 
   test("stats parse round-trips bounds of several KB") {
     // a 5 KB url bound, and one made of escapes
     val long = BucketStats(urlMin = "https://l.example/" + "x" * 5000 + "?q=\"\\",
       urlMax = "https://m.example/" + "a\"" * 1500, langMin = "en", langMax = "en")
-    assert(roundTrip(Map(0 -> long, 1 -> long)) == Map(0 -> long, 1 -> long))
+    val entry = """{"url_min":"https://l.example/""" + "x" * 5000 + """?q=\"\\",""" +
+      """"url_max":"https://m.example/""" + """a\"""" * 1500 + """","lang_min":"en",""" +
+      """"lang_max":"en","ts_min":"","ts_max":""}"""
+    val written = s"""{"version":2,"buckets":[0,1],"stats":{"0":$entry,"1":$entry},""" +
+      s""""schema":$hostileSchemaJson}"""
+    val want = Manifest(Set(0, 1), Map(0 -> long, 1 -> long), Some(hostileSchema))
+    assert(SnapshotLog.parseManifest(written) == want)
+    assert(roundTrip(want) == want)
   }
 
   test("pre-timestamp manifests still parse (ts bounds read as unknown)") {
     val old = """{"version":2,"buckets":[0,4],"stats":{""" +
       """"4":{"url_min":"https://a","url_max":"https://b","lang_min":"en","lang_max":"fr"}}}"""
-    val parsed = SnapshotLog.parseStats(old)
-    assert(parsed == Map(4 -> BucketStats("https://a", "https://b", "en", "fr", "", "")))
+    val parsed = SnapshotLog.parseManifest(old)
+    val stats = BucketStats("https://a", "https://b", "en", "fr", "", "")
+    assert(parsed == Manifest(Set(0, 4), Map(4 -> stats), None))
+    assert(roundTrip(parsed) == parsed)
     // unknown ts bounds never prune
-    assert(!ColBound("warc_ts", ">=", "2024-01-01 00:00:00").prunes(parsed(4)))
+    assert(!ColBound("warc_ts", ">=", "2024-01-01 00:00:00").prunes(stats))
   }
 
-  test("manifest schema: recorded at commit, carried forward, survives hostile field names") {
+  test("manifest schema: recorded at commit, survives hostile field names") {
     import java.nio.file.Files
-    import org.apache.spark.sql.types._
     val root = Files.createTempDirectory("snaplog-test")
     val log = new SnapshotLog(root.toString)
     log.init()
-    def commit(b: Int, schema: Option[StructType]): Unit = {
-      val staged = root.resolve("_tmp").resolve(s"$b-stage")
-      Files.createDirectories(staged)
-      log.commitBucket(b, staged, Some(BucketStats("https://a", "https://b", "en", "en")), schema)
+    def commit(buckets: Int*): Unit = {
+      val staged = buckets.map { b =>
+        val dir = root.resolve("_tmp").resolve(s"$b-stage")
+        Files.createDirectories(dir)
+        b -> dir
+      }.toMap
+      log.commit(staged, buckets.map(_ -> BucketStats("https://a", "https://b", "en", "en")).toMap,
+        hostileSchema)
     }
-    val schema = StructType(Seq(StructField("url", StringType),
-      StructField("q\"uote\\back\nslash", ArrayType(IntegerType, containsNull = true)),
-      StructField("warc_ts", TimestampType)))
-    commit(0, None)
-    assert(log.manifest(1).schema.isEmpty)
-    commit(1, Some(schema))
-    commit(2, None) // no schema given: the previous one carries forward
-    assert(log.manifest(2).schema.contains(schema) && log.manifest(3).schema.contains(schema))
-    assert(log.manifest(3).buckets == Set(0, 1, 2) && log.manifest(3).stats.size == 3)
+    commit(0, 1)
+    commit(2)
+    assert(log.latestVersion() == 2)
+    assert(log.manifest(1).schema.contains(hostileSchema) && log.manifest(2).schema.contains(hostileSchema))
+    assert(log.manifest(1).buckets == Set(0, 1) && log.manifest(2).buckets == Set(0, 1, 2))
+    assert(log.manifest(2).stats.size == 3)
     SnapshotLog.deleteRecursively(root)
   }
 
@@ -75,7 +92,7 @@ class SnapshotLogSpec extends AnyFunSuite {
     val staged = root.resolve("_tmp").resolve("3-0-stage")
     Files.createDirectories(staged)
     Files.write(staged.resolve("part-0.parquet"), "ORIGINAL".getBytes("UTF-8"))
-    log.commitBucket(3, staged)
+    log.commit(Map(3 -> staged), Map.empty, hostileSchema)
     assert(log.committedBuckets() == Set(3))
     // simulate a re-commit killed BETWEEN its two renames: the committed
     // data sits in replaced-3-1, the bucket dir is gone, the new data is
@@ -115,7 +132,7 @@ class SnapshotLogSpec extends AnyFunSuite {
     val staged = root.resolve("_tmp").resolve("5-0-stage")
     Files.createDirectories(staged)
     Files.write(staged.resolve("part-0.parquet"), "V2".getBytes("UTF-8"))
-    log.commitBucket(5, staged)
+    log.commit(Map(5 -> staged), Map.empty, hostileSchema)
     // simulate the ADVICE r5 scenario: an OLD crashed swap left replaced-5-1
     // (stale data), then a newer re-commit to the same bucket also crashed
     // mid-swap, leaving the current committed data in replaced-5-3
@@ -165,4 +182,21 @@ class SnapshotLogSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ColBound("html", "=", "x"))
     intercept[IllegalArgumentException](ColBound("url", "!=", "x"))
   }
+}
+
+object SnapshotLogSpec {
+  import org.apache.spark.sql.types._
+
+  val hostileSchema: StructType = StructType(Seq(StructField("url", StringType),
+    StructField("q\"uote\\back\nslash", ArrayType(IntegerType, containsNull = true)),
+    StructField("warc_ts", TimestampType)))
+
+  /** [[hostileSchema]] as the earlier codec wrote its `"schema"` field:
+    * `StructType.json`, escaped once more. */
+  val hostileSchemaJson: String =
+    """"{\"type\":\"struct\",\"fields\":[{\"name\":\"url\",\"type\":\"string\",""" +
+      """\"nullable\":true,\"metadata\":{}},{\"name\":\"q\\\"uote\\\\back\\nslash\",""" +
+      """\"type\":{\"type\":\"array\",\"elementType\":\"integer\",\"containsNull\":true},""" +
+      """\"nullable\":true,\"metadata\":{}},{\"name\":\"warc_ts\",\"type\":\"timestamp\",""" +
+      """\"nullable\":true,\"metadata\":{}}]}""""
 }
