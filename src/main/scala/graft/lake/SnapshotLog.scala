@@ -34,7 +34,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *      LATEST is swapped via temp-file + ATOMIC_MOVE
   * A reader resolving LATEST sees all of a run or none of it. A killed run
   * leaves only _tmp garbage and un-referenced data dirs at worst; resume
-  * re-reads LATEST and re-stages every bucket it does not list.
+  * sweeps both ([[sweepStaleStages]]), re-reads LATEST and re-stages every
+  * bucket it does not list.
   */
 final class SnapshotLog(tableDir: String) {
   private val root: Path = Paths.get(tableDir)
@@ -136,8 +137,12 @@ final class SnapshotLog(tableDir: String) {
     * dirs left under `_tmp` by runs killed during staging or the commit
     * (ADVICE r3): a run killed after its `LATEST` swap leaves its stage
     * root behind, and no later run stages under that version again, so it
-    * would leak staged parquet forever. Single-writer assumption (same as
-    * the rest of the log).
+    * would leak staged parquet forever. Last, delete every `data/bucket=N`
+    * the latest manifest does not list: a bucket never leaves a manifest,
+    * so such a dir was moved in by a commit killed before its `LATEST`
+    * swap, and a later run with another `nBuckets` or `bucketExpr` might
+    * never re-commit (and so replace) it. Single-writer assumption (same
+    * as the rest of the log).
     *
     * Recovery MUST run before deletion: a re-commit swap that died between
     * its two renames leaves the bucket's only committed data in
@@ -174,6 +179,14 @@ final class SnapshotLog(tableDir: String) {
         Files.exists(p) && // not just restored above
           (n.startsWith("stage-") || n.endsWith("-stage") || n.startsWith("replaced-"))
       }.foreach(SnapshotLog.deleteRecursively)
+      if (Files.exists(dataDir)) {
+        val listed = committedBuckets().map(b => s"bucket=$b")
+        val data = Files.list(dataDir)
+        try data.iterator().asScala.toVector.filter { p =>
+          val n = p.getFileName.toString
+          n.startsWith("bucket=") && !listed.contains(n)
+        }.foreach(SnapshotLog.deleteRecursively) finally data.close()
+      }
     }
 
   /** Expire old manifests, keeping the most recent `keepLast` versions (the

@@ -59,10 +59,15 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def tableRows(dir: String): Vector[String] =
     ResumableRun.readTable(spark, dir).collect().map(_.toString).sorted.toVector
 
-  /** Nothing is left under the table's `_tmp`. */
+  /** Nothing is left under the table's `_tmp`, and `data/` holds exactly
+    * the buckets the latest manifest lists. */
   private def assertSwept(dir: String, clue: String): Unit = {
     val left = Files.list(Paths.get(dir, "_tmp"))
     try assert(left.count() == 0, s"$clue: _tmp not swept") finally left.close()
+    val data = Files.list(Paths.get(dir, "data"))
+    val dirs = try data.iterator().asScala.map(_.getFileName.toString).toSet finally data.close()
+    assert(dirs == new SnapshotLog(dir).committedBuckets().map(b => s"bucket=$b"),
+      s"$clue: data/ holds unlisted buckets")
   }
 
   /** Spark jobs started while `f` ran. */
@@ -225,10 +230,17 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
       "after stats_agg" -> ((dir, _) => killAfter("stats_agg")(dir)),
       // the commit's third move finds no staged dir and fails: two of five
       // buckets are in data/, no manifest names them
-      "mid-commit, 2 of 5 moved" -> ((dir, todo) => killedRun(dir) { ph =>
-        if (ph == "stats_agg") SnapshotLog.deleteRecursively(
-          new SnapshotLog(dir).stagingRoot().resolve(s"bucket=${todo(2)}"))
-      }),
+      // a re-run with fewer buckets, which never re-commits the two moved
+      // ones, must still sweep them from data/
+      "mid-commit, 2 of 5 moved" -> { (dir, todo) =>
+        killedRun(dir) { ph =>
+          if (ph == "stats_agg") SnapshotLog.deleteRecursively(
+            new SnapshotLog(dir).stagingRoot().resolve(s"bucket=${todo(2)}"))
+        }
+        assert(todo.take(2).forall(b => Files.exists(new SnapshotLog(dir).bucketDataDir(b))))
+        assert(ResumableRun.run(spark, pages, dir, todo.head).isEmpty)
+        assertSwept(dir, "mid-commit, re-run with fewer buckets")
+      },
       "by hand: 4 of 5 moved, no manifest" -> { (dir, todo) =>
         killAfter("stats_agg")(dir)
         val log = new SnapshotLog(dir)

@@ -19,15 +19,17 @@ class SnapshotLogSpec extends AnyFunSuite {
   test("stats escape/parse round-trips hostile strings") {
     val nasty = BucketStats(
       urlMin = """https://a.example/path?q="x"&b=\ slash""",
-      urlMax = "https://z.example/control\nnewline",
+      urlMax = "https://z.example/\u0001control\nnewline",
       langMin = "de", langMax = "fr",
       tsMin = "2023-11-14 22:13:20", tsMax = "2023-11-18 09:33:20")
+    assert(nasty.urlMax.count(_ < ' ') == 2) // the real U+0001 and newline
     val plain = BucketStats("https://a", "https://b", "en", "en")
     // as the earlier codec wrote it: a control char as a six-char unicode
     // escape, the schema escaped a second time inside its string
     val written = """{"version":2,"buckets":[3,11],"stats":{"3":{"url_min":""" +
-      """"https://a.example/path?q=\"x\"&b=\\ slash","url_max":"https://z.example/control""" +
-      "\\u000a" + """newline","lang_min":"de","lang_max":"fr","ts_min":"2023-11-14 22:13:20",""" +
+      """"https://a.example/path?q=\"x\"&b=\\ slash","url_max":"https://z.example/""" +
+      "\\u0001" + "control" + "\\u000a" + """newline","lang_min":"de","lang_max":"fr",""" +
+      """"ts_min":"2023-11-14 22:13:20",""" +
       """"ts_max":"2023-11-18 09:33:20"},"11":{"url_min":"https://a","url_max":"https://b",""" +
       """"lang_min":"en","lang_max":"en","ts_min":"","ts_max":""}},"schema":""" + hostileSchemaJson + "}"
     val want = Manifest(Set(3, 11), Map(3 -> nasty, 11 -> plain), Some(hostileSchema))
