@@ -52,6 +52,16 @@ object Bench {
     (d, s)
   }
 
+  /** Child JVM heap: SPARK_DRIVER_MEM when set, else max(2, min(8,
+    * MemTotal / 2 GiB)) GiB — the formula the tier-1 test command uses. */
+  private lazy val childHeap: String = sys.env.getOrElse("SPARK_DRIVER_MEM", {
+    val src = scala.io.Source.fromFile("/proc/meminfo")
+    val kb = try src.getLines().collectFirst {
+      case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong
+    }.getOrElse(4194304L) finally src.close()
+    s"${math.max(2L, math.min(8L, kb / 2097152L))}g"
+  })
+
   private def runChild(cores: Int, mainClass: String, args: Seq[String]): (Long, Double, Double) = {
     val javaHome = sys.props("java.home")
     val cp = sys.props("java.class.path")
@@ -65,7 +75,7 @@ object Bench {
       "java.base/sun.security.action", "java.base/sun.util.calendar"
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val cmd = Seq(s"$javaHome/bin/java", "-cp", cp) ++ addOpens ++ Seq(
-      "-Xms12g", "-Xmx12g", "-XX:+UseParallelGC",
+      s"-Xms$childHeap", s"-Xmx$childHeap", "-XX:+UseParallelGC",
       s"-XX:ActiveProcessorCount=$cores",
       // pin the child JVM locale too: the kernel uses Locale.ROOT everywhere,
       // but Spark/JDK internals (formatting, collation) should not drift with
@@ -121,15 +131,21 @@ object Bench {
     // host cool before the first (most load-bearing) trial rather than
     // inheriting whatever sustained load preceded the bench.
     (1 to 6).foreach(_ => cooldown())
+    // Below 16 cores N = cpus/16 and 4N = cpus/4 round to the same core
+    // count (local[1] against local[1] at 4 cores), so pair A is skipped
+    // there and reported as null.
+    val pairASkipped = cpus < 16
     val ratio = smallCores.toDouble / tinyCores
-    val trials = (0 until 5).map { trial =>
+    val trials = (0 until (if (pairASkipped) 0 else 5)).map { trial =>
       if (trial > 0) { cooldown(); cooldown(); cooldown() }
       val n = timeExtraction(tinyCores, sfDir, targetTiny)
       val n4 = timeExtraction(smallCores, sfDir, targetTiny)
       val eff = ((n4._1 / n4._2) / (n._1 / n._2)) / ratio
       (n, n4, eff)
     }
-    val ((docsT, secT), (docsTm, secTm), effA) = trials.sortBy(_._3)(Ordering.Double.TotalOrdering)(2)
+    val ((docsT, secT), (docsTm, secTm), effA) =
+      if (pairASkipped) ((0L, Double.NaN), (0L, Double.NaN), Double.NaN)
+      else trials.sortBy(_._3)(Ordering.Double.TotalOrdering)(2)
     val effAll = trials.map(_._3)
 
     // Pair-B roofline: the same N vs 4N levels running the PURE kernel in
@@ -217,7 +233,7 @@ object Bench {
     val failed = results.collect { case (n, _, _, false) => n }
     s2.stop()
 
-    def d(v: Double): String = f"$v%.3f"
+    def d(v: Double): String = if (v.isNaN) "null" else f"$v%.3f"
     val qs = results.map { case (k, _, w, _) => "\"" + k + "\":" + d(w) }
       .mkString("{", ",", "}")
     val qsCold = results.map { case (k, c, _, _) => "\"" + k + "\":" + d(c) }
@@ -232,7 +248,7 @@ object Bench {
       s""""docs_per_sec_n":${d(thrS)},"docs_per_sec_4n":${d(thrB)},""" +
       s""""efficiency":${d(efficiency)},""" +
       s""""cluster_proxy":{"cores_n":$tinyCores,"cores_4n":$smallCores,""" +
-      s""""docs":$docsTm,"sec_n":${d(secT)},"sec_4n":${d(secTm)},""" +
+      s""""docs":${if (pairASkipped) "null" else docsTm.toString},"sec_n":${d(secT)},"sec_4n":${d(secTm)},""" +
       s""""docs_per_sec_n":${d(docsT / secT)},"docs_per_sec_4n":${d(docsTm / secTm)},""" +
       s""""efficiency":${d(effA)},""" +
       s""""efficiency_trials":${effAll.map(d).mkString("[", ",", "]")}},""" +
@@ -268,6 +284,8 @@ object Bench {
       "faithful stand-in for N vs 4N executors on separate machines. Pair B's " +
       "4N level saturates the whole socket and additionally absorbs shared-" +
       "bandwidth contention that a real multi-machine cluster would not see.\n\n")
+    if (pairASkipped) md.append(s"Pair A is skipped on this $cpus-core host: N = cpus/16 and " +
+      "4N = cpus/4 round to the same core count below 16 cores.\n\n")
     md.append("| pair | parallelism | docs | wall sec | docs/sec | efficiency |\n")
     md.append("|---|---|---|---|---|---|\n")
     md.append(s"| A (cluster proxy) | local[$tinyCores] (N) | $docsT | ${d(secT)} | ${d(docsT / secT)} | |\n")

@@ -6,13 +6,15 @@ import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveComparator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.pipeline.Pipeline
 
 /** Resumable extraction run: pages are hashed into salted buckets
@@ -155,6 +157,33 @@ object ResumableRun {
   private lazy val footerOptions =
     ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
 
+  private def footer(f: Path): ParquetMetadata = {
+    val file = new LocalInputFile(f)
+    val in = file.newStream()
+    try ParquetFileReader.readFooter(file, footerOptions, in)
+    finally in.close()
+  }
+
+  /** The schema `spark.read.parquet(path)` infers for a local parquet file,
+    * or for a directory of parquet files that share one schema, read from
+    * one footer on the driver: the Spark schema a Spark writer records in
+    * the file's key-value metadata, else the converted parquet schema;
+    * every field nullable, as a parquet read reports it. Inference itself
+    * reads the footers in a Spark job; `spark.read.schema(footerSchema(p))`
+    * starts none. */
+  def footerSchema(path: String): StructType = {
+    val p = java.nio.file.Paths.get(path)
+    val file = if (java.nio.file.Files.isDirectory(p))
+      Compaction.parquetFiles(p).minOption
+        .getOrElse(throw new IllegalArgumentException(s"no parquet file under $path"))
+    else p
+    val meta = footer(file).getFileMetaData
+    val schema = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+    org.apache.spark.sql.graftbridge.GraftBridge.asNullable(schema)
+  }
+
   /** (url, lang, warc_ts) bounds of the parquet files in `dir`, folded over
     * the min/max every row group records in its file's footer — the Iceberg
     * per-file metrics, read instead of re-scanning rows. A column's bounds
@@ -165,14 +194,8 @@ object ResumableRun {
     * 10 s stands for a true max below 11 s, which [[ColBound.prunes]]
     * allows for. */
   private[lake] def footerStats(dir: Path): BucketStats = {
-    val chunks = Compaction.parquetFiles(dir).flatMap { f =>
-      val file = new LocalInputFile(f)
-      val in = file.newStream()
-      val footer =
-        try ParquetFileReader.readFooter(file, footerOptions, in)
-        finally in.close()
-      footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
-    }
+    val chunks = Compaction.parquetFiles(dir)
+      .flatMap(f => footer(f).getBlocks.asScala.flatMap(_.getColumns.asScala))
     def bounds(column: String)(render: Any => String): (String, String) = {
       var lo, hi: Any = null
       var unknown = false

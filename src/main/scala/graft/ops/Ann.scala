@@ -93,11 +93,16 @@ object Ann {
       GraftBridge.expression(e), bands, r, dims))
   }
 
-  /** (vec_id, embedding) exploded to one row per (band, sig) — the LSH
-    * bucket relation both near-dup and twin-ANN join on. */
+  /** (vec_id, embedding, ...) exploded to one row per (band, sig), every
+    * column of `e` carried along — the LSH bucket relation both near-dup
+    * and twin-ANN join on. A NULL embedding gives one row with a NULL band
+    * and sig, which no band join matches. (An inner posexplode would make
+    * the optimizer infer a filter on `embedding` and push it below
+    * dd_embed_neardup's groupBy on `embedding` in this consumer only; the
+    * groupBy's other consumers then no longer share its shuffle.) */
   def bandedSigs(e: DataFrame, bands: Int, r: Int, dims: Int): DataFrame =
-    e.select(col("vec_id"), col("embedding"),
-      posexplode(allBandSigs(col("embedding"), bands, r, dims)).as(Seq("band", "sig")))
+    e.select(e.columns.toSeq.map(col) :+
+      posexplode_outer(allBandSigs(col("embedding"), bands, r, dims)).as(Seq("band", "sig")): _*)
 
   /** Corpus ∪ deterministic near-duplicate twins: every vec_id % 5 == 0 row
     * gains a twin at vec_id + TwinOffset whose elements are nudged by
@@ -106,14 +111,18 @@ object Ann {
     * DuckDB SQL for the oracle. Non-twin pair sims max out at ~0.51, so a
     * 0.92 threshold separates twins exactly. */
   def withTwins(e: DataFrame): DataFrame = {
-    val base = e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     val twins = e.filter(pmod(col("vec_id"), lit(5)) === 0)
       .select((col("vec_id") + TwinOffset).as("vec_id"),
         transform(col("embedding"),
           x => x.cast("double") + sin(x.cast("double") * 57 + col("vec_id")) * TwinAmp)
           .as("embedding"))
-    base.unionAll(twins)
+    asDouble(e).unionAll(twins)
   }
+
+  /** (vec_id, embedding as ARRAY<DOUBLE>): the corpus rows of
+    * [[withTwins]]. */
+  def asDouble(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
 
   /** Probe order over k centroids: array of centroid indices sorted by
     * descending dot(e, centroid) — one codegen projection (k literal-array

@@ -69,7 +69,7 @@ object Multimodal {
     * the driver's scale factors). */
   def mediaTable(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    graft.OpsQueries.input(spark, s"$sfDir/embeddings.parquet")
       .select($"vec_id").as[Long].map(synthMedia)
   }
 

@@ -17,10 +17,16 @@ import graft.ops.Ann
   */
 object OpsQueries {
 
+  /** The parquet file or directory at `path`, read with the schema of its
+    * footer ([[graft.lake.ResumableRun.footerSchema]]): building the frame
+    * starts no Spark job, where `spark.read.parquet` infers the schema in
+    * one. */
+  private[graft] def input(s: SparkSession, path: String): DataFrame =
+    s.read.schema(graft.lake.ResumableRun.footerSchema(path)).parquet(path)
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    input(s, s"$dir/documents.parquet")
   private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    input(s, s"$dir/embeddings.parquet")
 
   private def toks(c: Column): Column = filter(split(c, " "), x => length(x) > 0)
 
@@ -100,14 +106,23 @@ object OpsQueries {
   // group membership afterward. The band join then sees one row per
   // DISTINCT content; the quadratic within-cluster pair set is produced by
   // a cheap array-pair generate at output time (provably jaccard 1.0 /
-  // cosine 1.0 — no rerank needed), never by the shuffle join.
+  // cosine 1.0), never by the shuffle join. A multi-member group's sorted
+  // member list rides on its band rows (NULL for the singletons that make
+  // up most of a corpus), and its representative also pairs with itself in
+  // the band join: that one diagonal pair expands to the within-cluster
+  // pairs, so the expansion needs no join back to the groups.
   // Cost: one extra groupBy shuffle carrying (md5, doc_id, sigs) — ~200
   // bytes/row — bought before the band join; at corpus scale that is the
   // price of deleting the |cluster|^2 blow-up.
 
+  /** A group's sorted member ids, or NULL for a one-member group. */
+  private def multiMembers(ids: Column): Column =
+    when(size(ids) > 1, array_sort(ids))
+
   /** Collapse exact text duplicates: one row per distinct md5(text) with the
-    * min-doc_id representative, its minhash signature, and the sorted member
-    * list. Input must be (doc_id, text, t) with non-empty t. */
+    * min-doc_id representative, its minhash signature, and `members`, the
+    * sorted member list of a multi-member group (NULL for a singleton).
+    * Input must be (doc_id, text, t) with non-empty t. */
   private[graft] def minhashGroups(base: DataFrame, k: Int, nHashes: Int): DataFrame =
     base
       .select(col("doc_id"), md5(col("text")).as("fp"),
@@ -115,21 +130,26 @@ object OpsQueries {
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("doc_id"),
         min_by(col("sigs"), col("doc_id")).as("sigs"),
-        array_sort(collect_list(col("doc_id"))).as("members"))
+        multiMembers(collect_list(col("doc_id"))).as("members"))
       .drop("fp")
 
-  /** (doc_id, band, bucket) band relation over signature rows. */
-  private[graft] def bandBuckets(sigs: DataFrame, nHashes: Int, bandRows: Int): DataFrame =
-    sigs.select(
-      col("doc_id"),
-      explode(array((0 until nHashes / bandRows).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64((0 until bandRows).map(r =>
-            element_at(col("sigs"), b * bandRows + r + 1)): _*).as("bucket"))
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+  /** The band relation of signature rows: one row per (row, band) with the
+    * band's bucket hash, every column of `sigs` but `sigs` carried along.
+    * The buckets are one fused expression (plans/BandHashes). */
+  private[graft] def bandBuckets(sigs: DataFrame, nHashes: Int, bandRows: Int): DataFrame = {
+    import org.apache.spark.sql.graftbridge.GraftBridge
+    val buckets = GraftBridge.column(graft.plans.BandHashes(
+      GraftBridge.expression(col("sigs")), nHashes / bandRows, bandRows))
+    sigs.select(sigs.columns.toSeq.filter(_ != "sigs").map(col) :+
+      posexplode(buckets).as(Seq("band", "bucket")): _*)
+  }
 
-  /** Distinct representative-level candidate pairs from a band relation.
+  /** Distinct representative-level candidate pairs (a_id, b_id, a_ms, b_ms)
+    * of a band relation (doc_id, band, bucket, members): a_id < b_id
+    * share a (band, bucket), and a row whose `members` is set also pairs
+    * with itself (a_id = b_id). a_ms/b_ms are the two rows' `members`.
+    * Both join sides are one subtree, so they share the shuffle beneath
+    * the band relation.
     *
     * `maxBucket` is the SECOND duplicate-cluster mitigation (VERDICT r4 #2
     * "and/or a bucket-width cap"), for the residual hazard the exact-text
@@ -151,47 +171,32 @@ object OpsQueries {
         bands.join(widths.filter(col("w") <= w).select("band", "bucket"),
           Seq("band", "bucket"))
     }
-    kept.select(col("band"), col("bucket"), col("doc_id").as("a_id"))
-      .join(kept.select(col("band"), col("bucket"), col("doc_id").as("b_id")),
-        Seq("band", "bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
+    val side = kept.select(col("band"), col("bucket"), col("doc_id"), col("members"))
+    side.as("a").join(side.as("b"),
+        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
+      .filter(col("a.doc_id") < col("b.doc_id") ||
+        (col("a.doc_id") === col("b.doc_id") && col("a.members").isNotNull))
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+        col("a.members").as("a_ms"), col("b.members").as("b_ms"))
+      .distinct()
   }
 
-  /** Expand representative-level pairs back to member-level pairs: the cross
-    * product of the two clusters' members for every rep pair (any extra
-    * columns on `repPairs`, e.g. jaccard, are carried through — exact
-    * duplicates have identical sets, so per-pair values transfer verbatim),
-    * plus all within-cluster pairs for every multi-member cluster tagged
-    * with `withinValues` (their similarity is 1.0 by construction). Member
-    * arrays are one row per DISTINCT content, so the generates are local —
-    * no shuffle sees the quadratic set. */
-  private[graft] def expandMemberPairs(repPairs: DataFrame, groups: DataFrame,
-      withinValues: Seq[(String, Column)] = Nil): DataFrame = {
-    // only MULTI-member clusters join the expansion (on real corpora the
-    // overwhelming majority of contents are singletons — joining the full
-    // membership relation would shuffle the whole corpus to expand what is
-    // usually nothing); singleton reps fall through the left joins and
-    // expand to themselves via the coalesce'd one-element array
-    val multi = groups.filter(size(col("members")) > 1)
-      .select(col("doc_id").as("rep_id"), col("members"))
-    val extra = repPairs.columns.filterNot(c => c == "a_id" || c == "b_id").toSeq
-    val cross = repPairs
-      .join(multi.select(col("rep_id").as("a_id"), col("members").as("a_ms")),
-        Seq("a_id"), "left")
-      .join(multi.select(col("rep_id").as("b_id"), col("members").as("b_ms")),
-        Seq("b_id"), "left")
+  /** Expand representative-level pairs (a_id, b_id, a_ms, b_ms, extra...)
+    * to member-level pairs: a pair of two reps becomes the cross product of
+    * their clusters' members (a NULL member list stands for the rep alone),
+    * a rep's pair with itself becomes every pair within its cluster. Extra
+    * columns (e.g. jaccard) are carried through verbatim: exact duplicates
+    * have identical sets, so per-pair values transfer, and a rep paired
+    * with itself scores 1.0. The generates are row-local — no shuffle sees
+    * the quadratic set. */
+  private def expandMemberPairs(repPairs: DataFrame): DataFrame = {
+    val extra = repPairs.columns.toSeq.filterNot(Set("a_id", "b_id", "a_ms", "b_ms"))
+    repPairs
       .withColumn("am", explode(coalesce(col("a_ms"), array(col("a_id")))))
       .withColumn("bm", explode(coalesce(col("b_ms"), array(col("b_id")))))
+      .filter(col("a_id") =!= col("b_id") || col("am") < col("bm"))
       .select(Seq(least(col("am"), col("bm")).as("a_id"),
         greatest(col("am"), col("bm")).as("b_id")) ++ extra.map(col): _*)
-    val within = groups.filter(size(col("members")) > 1)
-      .select(explode(flatten(transform(col("members"), (x, i) =>
-        transform(slice(col("members"), i + lit(2), size(col("members")) - i - lit(1)),
-          y => struct(x.as("a_id"), y.as("b_id")))))).as("p"))
-      .select(Seq(col("p.a_id"), col("p.b_id")) ++
-        withinValues.map { case (n, c) => c.as(n) }: _*)
-    cross.unionAll(within)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -262,15 +267,10 @@ object OpsQueries {
       val base = docs(s, dir)
         .select(col("doc_id"), col("text"), toks(col("text")).as("t"))
         .filter(size(col("t")) > 0)
-      // groups is referenced by the band self-join (twice) and the member
-      // expansion (three times); Spark re-executes a shared subtree per
-      // reference, so without materialization the corpus groupBy ran 5x
-      // (round 6, guide §3.3 "materialise an intermediate"). localCheckpoint
-      // runs it ONCE per invocation — within-query only, recomputed on
-      // every execution, so nothing is cached across runs.
-      val groups = minhashGroups(base, 3, nHashes).localCheckpoint()
-      val repPairs = repCandidates(bandBuckets(groups, nHashes, bandRows))
-      expandMemberPairs(repPairs, groups)
+      // groups feeds only the band self-join, whose two sides are one
+      // subtree: Spark shuffles it once, so it needs no materialization
+      val groups = minhashGroups(base, 3, nHashes)
+      expandMemberPairs(repCandidates(bandBuckets(groups, nHashes, bandRows)))
         .orderBy("a_id", "b_id")
     }),
 
@@ -296,44 +296,34 @@ object OpsQueries {
       val base = docs(s, dir)
         .select(col("doc_id"), col("text"), toks(col("text")).as("t"))
         .filter(size(col("t")) > 0)
-      // materialize-once discipline (round 6, VERDICT r5 #2): groups feeds
-      // the band join and the member expansion (5 references), and cand
-      // feeds the id union and both rerank joins (3 references) — without
-      // checkpoints Spark re-executes each shared subtree per reference,
-      // which is exactly why the round-5 candidate-only variants measured
-      // SLOWER (the band self-join re-ran three times). With cand
-      // materialized, a semi-prune costs one slim scan.
-      val groups = minhashGroups(base, 3, nHashes).localCheckpoint()
-      val cand = repCandidates(bandBuckets(groups, nHashes, bandRows))
-        .localCheckpoint()
-      // The shset relation now covers CANDIDATE ids only (the VERDICT r5
-      // scale flip): shingle sets are computed and shipped only for docs
-      // that survived banding, so shset shuffle bytes are proportional to
-      // candidate count, not corpus size. The semi-join's build side is the
-      // tiny materialized pair-id set; AQE picks broadcast at runtime from
-      // its actual size (and falls back to a shuffle join when a corpus's
-      // candidate set is genuinely large — the scale-adaptive behavior,
-      // not a tuned constant). Checkpointed so the a/b rerank joins read
-      // it instead of re-tokenizing the corpus twice.
-      val candIds = cand.select(col("a_id").as("doc_id"))
-        .unionAll(cand.select(col("b_id").as("doc_id")))
+      val cand = repCandidates(bandBuckets(minhashGroups(base, 3, nHashes), nHashes, bandRows))
+      // Shingle sets join BY ID to the candidate pairs only, both joins
+      // reading one subtree (one shuffle or broadcast, AQE picking from the
+      // runtime sizes). They are computed for every doc — a per-row map
+      // cheaper than the signature pass every doc already pays — because
+      // restricting them to candidate ids first (a semi-join on the union
+      // of the pair ids, the r5 formulation) referenced the candidates
+      // three times: the plan tripled, and its planning took longer than
+      // the shingling it saved. A semi-join at corpus scale shuffled the
+      // whole token relation anyway; the shset relation shuffled here is
+      // smaller (8-byte hashes). A rep paired with itself (a multi-member
+      // cluster) scores jaccard 1.0, the value its within pairs carry.
       val shsets = base
-        .join(candIds, Seq("doc_id"), "left_semi")
         .select(col("doc_id"), transform(col("t"), x => xxhash64(x)).as("th"))
         .select(col("doc_id"),
           array_distinct(shingleHashes(col("th"), 3)).as("shset"))
-        .localCheckpoint()
       val repPairs = cand
-        .join(shsets.select(col("doc_id").as("a_id"), col("shset").as("a_sh")), Seq("a_id"))
-        .join(shsets.select(col("doc_id").as("b_id"), col("shset").as("b_sh")), Seq("b_id"))
+        .join(shsets.as("sa"), col("a_id") === col("sa.doc_id"))
+        .join(shsets.as("sb"), col("b_id") === col("sb.doc_id"))
+        .select(col("a_id"), col("b_id"), col("a_ms"), col("b_ms"),
+          col("sa.shset").as("a_sh"), col("sb.shset").as("b_sh"))
         .withColumn("inter", size(array_intersect(col("a_sh"), col("b_sh"))))
         .withColumn("uni", size(col("a_sh")) + size(col("b_sh")) - col("inter"))
         .filter(col("uni") > 0)
         .withColumn("jaccard", round(col("inter").cast("double") / col("uni"), 4))
         .filter(col("jaccard") >= 0.8)
-        .select(col("a_id"), col("b_id"), col("jaccard"))
-      expandMemberPairs(repPairs, groups,
-        withinValues = Seq("jaccard" -> lit(1.0)))
+        .select(col("a_id"), col("b_id"), col("a_ms"), col("b_ms"), col("jaccard"))
+      expandMemberPairs(repPairs)
         .orderBy("a_id", "b_id")
     }),
 
@@ -365,50 +355,38 @@ object OpsQueries {
     // threshold makes it DuckDB-oracle-able (ids only; float noise cannot
     // flip 0.9999-vs-0.51 against a 0.92 cut). ------------------------------
     "dd_embed_neardup" -> ((s: SparkSession, dir: String) => {
-      // zero-norm vectors are dropped up front: their cosine is NaN, so
-      // direct banding could never emit them past the threshold — but the
-      // collapse's within-cluster expansion assumes similarity 1.0 "by
-      // construction", which only holds for vectors that HAVE a direction.
-      // Dropping them keeps the expanded output exactly equal to direct
-      // banding on every input (degenerate-vector dedup is dd_exact's
-      // kind of job, like empty docs for the text paths).
+      // zero-norm vectors are dropped up front: they have no direction, so
+      // no cosine (0/0 = NaN) says anything about them (degenerate-vector
+      // dedup is dd_exact's kind of job, like empty docs for the text
+      // paths).
       val corpus = Ann.withTwins(embs(s, dir))
         .filter(exists(col("embedding"), x => x =!= 0.0))
       // Exact-duplicate collapse (VERDICT r4 #2), embedding edition: one
       // banded representative per DISTINCT vector (groupBy on the embedding
       // itself — exact, no hash-collision risk), pairs re-expanded through
-      // membership at output time. Identical vectors have cosine 1.0 and
-      // identical cosines to everything else, so the expanded output equals
-      // banding every row — without |cluster|^2 candidates in the band join.
-      // groups is referenced seven times downstream (band relation, both
-      // rerank embedding joins, member expansion x3, within-pairs) and
-      // Spark re-executes a shared subtree per reference — the r5 plan ran
-      // this corpus groupBy SEVEN times with 14 parquet scans. Materialize
-      // it once per invocation (round 6, guide §3.3); nothing persists
-      // across runs.
+      // membership at output time. Identical vectors have identical
+      // cosines to everything else, so the expanded output equals banding
+      // every row — without |cluster|^2 candidates in the band join.
+      // groups feeds the band relation and both rerank joins; every
+      // reference reads the one shuffle of its groupBy (the rerank takes
+      // the member lists from its own side, so no reference prunes the
+      // collect_list and all compute the same aggregates)
       val groups = corpus.groupBy(col("embedding"))
         .agg(min(col("vec_id")).as("vec_id"),
-          array_sort(collect_list(col("vec_id"))).as("members"))
-        .localCheckpoint()
-      val reps = groups.select(col("vec_id"), col("embedding"))
-      // band-bucket self-join carries ONLY (vec_id, band, sig) — at corpus
-      // scale the 6x-replicated band relation must not drag the embedding
-      // array through the shuffle (round-3 change; ~10x shuffle bytes
-      // saved). Embeddings re-join by id for the exact cosine rerank.
-      val sigs = Ann.bandedSigs(reps, bands = 6, r = 12, dims = 64)
-        .select(col("vec_id"), col("band"), col("sig"))
-      val cand = sigs.select(col("band"), col("sig"), col("vec_id").as("a_id"))
-        .join(sigs.select(col("band"), col("sig"), col("vec_id").as("b_id")),
-          Seq("band", "sig"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id").dropDuplicates("a_id", "b_id")
-      val repPairs = cand
-        .join(reps.select(col("vec_id").as("a_id"), col("embedding").as("ae")), Seq("a_id"))
-        .join(reps.select(col("vec_id").as("b_id"), col("embedding").as("be")), Seq("b_id"))
-        .withColumn("sim", cosine(col("ae"), col("be")))
-        .filter(col("sim") >= 0.92)
-        .select(col("a_id"), col("b_id"))
-      expandMemberPairs(repPairs, groups.select(col("vec_id").as("doc_id"), col("members")))
+          multiMembers(collect_list(col("vec_id"))).as("members"))
+      // band-bucket self-join carries ONLY (vec_id, band, sig, members) — at
+      // corpus scale the 6x-replicated band relation must not drag the
+      // embedding array through the shuffle (round-3 change; ~10x shuffle
+      // bytes saved). Embeddings re-join by id for the exact cosine rerank;
+      // a rep paired with itself has cosine 1.0 (its vector is not zero).
+      val bands = Ann.bandedSigs(groups, bands = 6, r = 12, dims = 64)
+        .select(col("vec_id").as("doc_id"), col("members"), col("band"), col("sig").as("bucket"))
+      val repPairs = repCandidates(bands)
+        .join(groups.as("ra"), col("a_id") === col("ra.vec_id"))
+        .join(groups.as("rb"), col("b_id") === col("rb.vec_id"))
+        .filter(cosine(col("ra.embedding"), col("rb.embedding")) >= 0.92)
+        .select(col("a_id"), col("b_id"), col("ra.members").as("a_ms"), col("rb.members").as("b_ms"))
+      expandMemberPairs(repPairs)
         .orderBy("a_id", "b_id")
     }),
 
@@ -435,12 +413,14 @@ object OpsQueries {
     // generic low-sim top-k deliberately lives in ann_ivf instead (sign-LSH
     // cannot prune at sim ~0.3-0.4, see Ann scaladoc). --------------------
     "ann_lsh" -> ((s: SparkSession, dir: String) => {
-      val sigs = Ann.bandedSigs(Ann.withTwins(embs(s, dir)), bands = 6, r = 12, dims = 64)
-      val q = sigs.filter(col("vec_id") < 10)
+      val e = embs(s, dir)
+      // the queries are vec_id < 10 of the corpus itself, never twins
+      val q = Ann.bandedSigs(Ann.asDouble(e.filter(col("vec_id") < 10)), bands = 6, r = 12, dims = 64)
         .select(col("band"), col("sig"),
           col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val c = sigs.select(col("band"), col("sig"),
-        col("vec_id").as("cand_id"), col("embedding").as("ce"))
+      val c = Ann.bandedSigs(Ann.withTwins(e), bands = 6, r = 12, dims = 64)
+        .select(col("band"), col("sig"),
+          col("vec_id").as("cand_id"), col("embedding").as("ce"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("sim").desc, col("cand_id").asc)
       // round 6: compute sim BEFORE the multi-band dedup and dedup via

@@ -94,3 +94,55 @@ object MinhashSigs {
     sigs
   }
 }
+
+/** The LSH band buckets of a signature array in ONE pass: ARRAY<BIGINT> of
+  * length `bands`, element b equal to Spark's xxhash64 (seed 42) over
+  * signature elements b*rows .. b*rows+rows-1, skipping a NULL or missing
+  * element as xxhash64 skips a NULL argument. Equal to
+  * `array(xxhash64(element_at(sigs, b*rows+1), ..) for each b)`, whose
+  * exploded projection generated the two largest classes of the LSH
+  * queries. Null input null-propagates. */
+case class BandHashes(child: Expression, bands: Int, rows: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_band_hashes"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects ARRAY<BIGINT>, got $t")
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    new GenericArrayData(BandHashes.compute(input.asInstanceOf[ArrayData], bands, rows))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, e =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.plans.BandHashes.compute($e, $bands, $rows));""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): BandHashes =
+    copy(child = newChild)
+}
+
+object BandHashes {
+  private final val Seed = 42L // Spark's xxhash64 default seed
+
+  def compute(sigs: ArrayData, bands: Int, rows: Int): Array[Long] = {
+    val n = sigs.numElements()
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = Seed
+      var r = 0
+      while (r < rows) {
+        val i = b * rows + r
+        if (i < n && !sigs.isNullAt(i)) h = XXH64.hashLong(sigs.getLong(i), h)
+        r += 1
+      }
+      out(b) = h
+      b += 1
+    }
+    out
+  }
+}

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.lake.{ResumableRun, SnapshotLog}
 import graft.pipeline.Pipeline
+import scala.jdk.CollectionConverters._
 
 /** End-to-end Spark job tests: resumable lake runs, salting,
   * metrics. One shared local session (startup is the expensive part). */
@@ -35,7 +36,24 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def tmp(): String =
     Files.createTempDirectory("graft-test").toString
 
-  private def pages = Pipeline.pages(spark, "/root/testdata/sf0.001").cache()
+  /** Spark jobs started while `f` ran. */
+  private def jobsStarted(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try f finally { org.apache.spark.ListenerDrain(sc); sc.removeSparkListener(listener) }
+    jobs.get
+  }
+
+  /** The sf0.001 test tables (TESTDATA.md). */
+  private val sf0001 = "/root/testdata/sf0.001"
+
+  private def pages = Pipeline.pages(spark, sf0001).cache()
 
   /** The typed-Dataset formulation of the `pages` table: the independent
     * reference the DSv2 connector is cross-checked against. Catalyst cannot
@@ -235,6 +253,46 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       case sc if sc.probability >= 40 => Seq(url, sc.page, sc.totalScore, sc.probability) } }
     assert(want.size < kernelRefs.map(_._2.scores.size).sum, "no score falls below the cut")
     assertQueryRows("x_scores_reportable", Seq("url", "page", "total_score", "probability"), want)
+  }
+
+  test("x_meta equals the metadata of direct Extractor.extract calls") {
+    def round1(x: Double) =
+      new java.math.BigDecimal(x).setScale(1, java.math.RoundingMode.HALF_UP).doubleValue()
+    val want = kernelRefs.map { case (url, r) =>
+      val m = r.meta
+      val issues = Seq(m.title.isEmpty -> "No document title",
+        m.author.isEmpty -> "No author information",
+        (m.pageCount == 0) -> "No slides detected").collect { case (true, t) => t }
+      Seq(url, m.title, m.author, m.subject, m.keywords, m.category, m.comments,
+        m.pageCount, m.createdDate, m.modifiedDate, m.lastModifiedBy, m.revision,
+        m.lastPrinted, m.application, m.company, m.crawlDate, m.layoutTypes,
+        round1(Seq(m.title.nonEmpty, m.author.nonEmpty, m.pageCount > 0).count(identity) / 3.0 * 100.0),
+        issues.mkString("; "),
+        if (m.keywords.isEmpty) "Add keywords to improve searchability" else "")
+    }
+    // some derived column must take more than one value, or the check
+    // cannot tell the derivation from a constant
+    assert(Seq(17, 18, 19).exists(i => want.map(_(i)).distinct.size > 1))
+    assertQueryRows("x_meta", Seq("url", "title", "author", "subject", "keywords",
+      "category", "comments", "page_count", "created_date", "modified_date",
+      "last_modified_by", "revision", "last_printed", "application", "company",
+      "crawl_date", "layout_types", "completeness", "issues", "recommendations"), want)
+  }
+
+  test("x_content_stats equals text statistics of direct Extractor.extract calls") {
+    def count(re: String, t: String) = re.r.findAllMatchIn(t).size.toLong
+    val want = kernelRefs.map { case (url, r) =>
+      val t = r.extractedText
+      Seq(url, t.codePointCount(0, t.length).toLong,
+        t.split("\\s+").count(_.nonEmpty).toLong,
+        t.split("\n", -1).length.toLong,
+        count("(?m)^#{1,6} ", t),
+        count("\\[([^\\]]+)\\]\\(([^)]+)\\)", t),
+        count("(?m)^\\s*- ", t))
+    }
+    Seq(4, 5, 6).foreach(i => assert(want.exists(_(i) != 0L), s"column $i is 0 on every page"))
+    assertQueryRows("x_content_stats",
+      Seq("url", "chars", "words", "lines", "headers", "links", "bullets"), want)
   }
 
   test("graft_extract_doc Catalyst expression matches the kernel output") {
@@ -584,14 +642,16 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val clusterMembers = groupsBig.filter(col("doc_id") === srcId)
       .select(size(col("members"))).first.getInt(0)
     assert(clusterMembers >= 1001, s"cluster not collapsed onto $srcId: $clusterMembers")
-    // rep-level band candidates: EXACTLY the no-copies candidate set
+    // rep-level band candidates: EXACTLY the no-copies candidate set ...
     val candBase = OpsQueries.repCandidates(
       OpsQueries.bandBuckets(groupsBase, 16, 4)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val candBig = OpsQueries.repCandidates(
       OpsQueries.bandBuckets(groupsBig, 16, 4)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(candBig == candBase,
+    // ... plus the cluster rep's pair with itself, the one candidate that
+    // carries all its within-cluster pairs
+    assert(candBig == candBase + ((srcId, srcId)),
       s"planted copies changed the rep-level candidate set: ${candBig.size} vs ${candBase.size}")
 
     // expanded output: every within-cluster pair present, count exact
@@ -693,7 +753,8 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
         filter(split(col("text"), " "), x => length(x) > 0).as("t"))
       .filter(size(col("t")) > 0)
       .select(col("doc_id"),
-        OpsQueries.minhashFused(col("t"), 3, nHashes).as("sigs"))
+        OpsQueries.minhashFused(col("t"), 3, nHashes).as("sigs"),
+        lit(null).cast("array<bigint>").as("members"))
     val direct = OpsQueries.repCandidates(
       OpsQueries.bandBuckets(every, nHashes, bandRows)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -796,6 +857,30 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(err.getMessage.contains("non-null elements"), err.getMessage)
     both.unpersist()
+  }
+
+  test("fused graft_band_hashes equals xxhash64 over each band's signature elements") {
+    val sp = spark
+    import sp.implicits._
+    val toks = filter(split(col("text"), " "), x => length(x) > 0)
+    val sigs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(col("doc_id"), OpsQueries.minhashFused(toks, 3, 16).as("sigs"))
+      .unionAll(Seq((1L, Seq[java.lang.Long](1L, null, 3L, 4L, 5L, 6L))).toDF("doc_id", "sigs"))
+    def hashes(nHashes: Int, rows: Int) = {
+      import org.apache.spark.sql.graftbridge.GraftBridge
+      sigs.select(col("doc_id"),
+        GraftBridge.column(graft.plans.BandHashes(GraftBridge.expression(col("sigs")),
+          nHashes / rows, rows)).as("f"),
+        // the reference: Spark's own xxhash64, which skips a NULL argument
+        array((0 until nHashes / rows).map(b => xxhash64((0 until rows).map(r =>
+          try_element_at(col("sigs"), lit(b * rows + r + 1))): _*)): _*).as("r"))
+    }
+    Seq((16, 4), (6, 2), (16, 8)).foreach { case (n, rows) =>
+      val both = hashes(n, rows)
+      assert(both.count() == 501)
+      val diff = both.filter(not(col("f") === col("r")))
+      assert(diff.count() == 0, s"$n/$rows: " + diff.collect().take(3).mkString("; "))
+    }
   }
 
   test("fused graft_minhash_sigs equals the pure-Column xxhash64 reference formulation") {
@@ -1192,5 +1277,109 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       ResumableRun.readTable(spark, dir, version = Some(removed.head))
     }
+  }
+
+  private val lshQueries =
+    Seq("dd_minhash_lsh", "dd_jaccard_lsh", "dd_simhash", "dd_embed_neardup", "ann_lsh", "ann_ivf")
+
+  /** `query` over `dir` run as the benchmark's serving loop runs it: an
+    * observed row count into a no-op sink. */
+  private def runToSink(query: String, dir: String): Unit = {
+    val obs = org.apache.spark.sql.Observation()
+    SparkEntry.queries(query)(spark, dir).observe(obs, count(lit(1)).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    assert(obs.get("n").asInstanceOf[Long] > 0, s"$query: no rows")
+  }
+
+  test("the LSH/ANN queries run a fixed number of Spark jobs per execution") {
+    val dir = sf0001
+    lshQueries.foreach(runToSink(_, dir)) // ann_ivf trains its centroids once
+    val jobs = lshQueries.map(q => q -> jobsStarted(runToSink(q, dir))).toMap
+    assert(jobs == Map("dd_minhash_lsh" -> 6, "dd_jaccard_lsh" -> 7, "dd_simhash" -> 3,
+      "dd_embed_neardup" -> 7, "ann_lsh" -> 5, "ann_ivf" -> 5), jobs)
+  }
+
+  test("building the ops queries over parquet inputs starts no job before an action") {
+    val dir = sf0001
+    SparkEntry.queries("ann_ivf")(spark, dir) // trains and memoizes its centroids
+    val written = tmp() + "/documents.parquet"
+    spark.read.parquet(s"$dir/documents.parquet").repartition(3).write.parquet(written)
+    val building = jobsStarted {
+      OpsQueries.queries.keys.foreach(q => SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan)
+      graft.ops.Multimodal.mediaTable(spark, dir).queryExecution.executedPlan
+      OpsQueries.input(spark, written).queryExecution.executedPlan
+    }
+    assert(building == 0, s"$building jobs before any action")
+  }
+
+  test("footer schema equals the schema spark.read.parquet infers") {
+    val sp = spark
+    import sp.implicits._
+    val written = tmp() + "/t.parquet"
+    Seq((1L, "a", java.sql.Timestamp.valueOf("2024-01-02 03:04:05"), Seq(1.5f), Map("k" -> 2),
+        BigDecimal("1.25"), (3, "x")))
+      .toDF("id", "s", "ts", "floats", "m", "dec", "st")
+      .select(col("id"), col("s"), col("ts"), col("floats"), col("m"), col("dec"), col("st"),
+        array(struct(col("id").as("i"))).as("nested"))
+      .repartition(2).write.parquet(written)
+    // pyarrow-written files (no Spark schema in the footer), a Spark-written
+    // directory, and one Spark-written file
+    val part = Files.list(java.nio.file.Paths.get(written)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get.toString
+    Seq(s"$sf0001/documents.parquet", s"$sf0001/embeddings.parquet",
+        s"$sf0001/orders.parquet", written, part).foreach { p =>
+      assert(ResumableRun.footerSchema(p) == spark.read.parquet(p).schema, p)
+    }
+  }
+
+  /** sha256 of a frame's rows as sorted `Row.toString` lines. */
+  private def rowsDigest(df: org.apache.spark.sql.DataFrame): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(df.collect().map(_.toString).sorted.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+
+  test("the rewritten LSH/ANN queries return the rows of their earlier formulation") {
+    // digests of the rows the formulation with checkpointed groups, broadcast
+    // member joins and a separate within-cluster generate returned at sf0.001
+    val dir = sf0001
+    Map(
+      "dd_minhash_lsh" -> (28, "4b69c98ddc7dd3a56a99ac7d4cce33746999a6bda961eb9c5d97a48870b01daa"),
+      "dd_jaccard_lsh" -> (28, "adc3f694f3b06b369df5307801bd4402af8a598d74c91f5d73b90f27e2e0f2f2"),
+      "dd_embed_neardup" -> (100, "80e5f3a838f12f471439abec7e5e37ea7d88c57254941df5266656fa0d7aaa51"),
+      "ann_lsh" -> (27, "fed6b0bbf5bb65b7662ff4276a07da0b58738952cff0e2f69fad8ccd14e0b537")
+    ).foreach { case (q, (n, digest)) =>
+      val df = SparkEntry.queries(q)(spark, dir)
+      assert(df.count() == n, q)
+      assert(rowsDigest(df) == digest, q)
+    }
+  }
+
+  test("dd_jaccard_lsh: precision and recall against brute-force all-pairs shingle Jaccard") {
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1))
+    def shingles(t: String): Set[String] = {
+      val w = t.split(" ").filter(_.nonEmpty)
+      if (w.isEmpty) Set.empty else w.sliding(3).map(_.mkString(" ")).toSet
+    }
+    val sets = docs.map { case (id, t) => id -> shingles(t) }.filter(_._2.nonEmpty).sortBy(_._1)
+    val brute = (for {
+      i <- sets.indices; j <- i + 1 until sets.length
+      (a, sa) = sets(i); (b, sb) = sets(j)
+      inter = sa.intersect(sb).size
+      jac = new java.math.BigDecimal(inter.toDouble / (sa.size + sb.size - inter))
+        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+      if jac >= 0.8
+    } yield (a, b) -> jac).toMap
+    val got = SparkEntry.queries("dd_jaccard_lsh")(spark, sf0001).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(brute.nonEmpty)
+    val hits = got.keySet.intersect(brute.keySet)
+    // precision 1: every reported pair is a true pair with its exact value
+    assert(hits == got.keySet, s"false pairs: ${(got.keySet -- brute.keySet).take(5)}")
+    assert(hits.forall(p => got(p) == brute(p)), "jaccard values differ")
+    // recall: at J >= 0.8 a pair misses all 4 bands of 4 rows with
+    // probability <= (1 - 0.8^4)^4 = 0.12; these pairs sit far above it
+    assert(hits.size == brute.size, s"recall ${hits.size} of ${brute.size}: " +
+      s"missed ${(brute.keySet -- hits).take(5)}")
   }
 }
