@@ -60,16 +60,22 @@ private[lake] object ManifestFileIndex {
     val m = log.manifest(v)
     val schema = m.schema.getOrElse(throw new IllegalStateException(
       s"snapshot v$v of $tableDir records no schema (committed before manifests " +
-        "carried one); re-commit its buckets, e.g. Compaction.compact(spark, dir, maxFiles = 0)"))
-    val buckets = m.buckets.toVector.sorted.map(b => b -> listed(log.bucketDataDir(b)))
+        "carried one); re-run its extraction into a new table"))
+    val buckets = m.buckets.toVector.sorted.map(b => b -> listed(log.bucketDataDir(b), v))
     ManifestFileIndex(tableDir, v, schema, buckets, m.stats)
   }
 
-  private def listed(dir: Path): Vector[FileStatus] =
-    Compaction.parquetFiles(dir).sortBy(_.getFileName.toString).map { f =>
+  /** The data files of a bucket dir snapshot `v` lists. Every listed bucket
+    * has a dir (an empty bucket commits an empty one), so a missing dir is
+    * lost data, never zero rows. */
+  private def listed(dir: Path, v: Int): Vector[FileStatus] = {
+    if (!Files.isDirectory(dir)) throw new IllegalStateException(
+      s"snapshot v$v lists ${dir.getFileName}, but its dir $dir is missing")
+    SnapshotLog.parquetFiles(dir).sortBy(_.getFileName.toString).map { f =>
       val a = Files.readAttributes(f, classOf[BasicFileAttributes])
       new FileStatus(a.size, false, 1, a.size, a.lastModifiedTime.toMillis, new HPath(f.toUri))
     }
+  }
 
   /** `e` split into conjuncts, each translated to the disjunction of bounds
     * it implies; a conjunct that does not translate is left out (it prunes

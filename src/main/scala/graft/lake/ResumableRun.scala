@@ -31,11 +31,11 @@ import graft.pipeline.Pipeline
   * then read from the footers of the files it staged, and the run's staged
   * bucket dirs are committed together in ONE snapshot. A run killed before
   * that snapshot's `LATEST` swap loses the whole run and commits none of
-  * it; `maxBuckets` bounds how much work one run risks. [[Compaction]]
-  * re-stages committed buckets through the same path. Stale `stage-*` dirs
-  * from previously killed runs are swept before staging (a run killed
-  * after its `LATEST` swap leaves a stage root no later run reuses, so it
-  * would otherwise leak forever).
+  * it; `maxBuckets` bounds how much work one run risks. A run commits only
+  * buckets no manifest lists, and a committed bucket dir is never rewritten.
+  * What killed runs left under `_tmp` and unlisted bucket dirs are swept
+  * before staging (a run killed after its `LATEST` swap leaves a stage root
+  * no later run reuses, so it would otherwise leak forever).
   */
 object ResumableRun {
 
@@ -174,7 +174,7 @@ object ResumableRun {
   def footerSchema(path: String): StructType = {
     val p = java.nio.file.Paths.get(path)
     val file = if (java.nio.file.Files.isDirectory(p))
-      Compaction.parquetFiles(p).minOption
+      SnapshotLog.parquetFiles(p).minOption
         .getOrElse(throw new IllegalArgumentException(s"no parquet file under $path"))
     else p
     val meta = footer(file).getFileMetaData
@@ -194,7 +194,7 @@ object ResumableRun {
     * 10 s stands for a true max below 11 s, which [[ColBound.prunes]]
     * allows for. */
   private[lake] def footerStats(dir: Path): BucketStats = {
-    val chunks = Compaction.parquetFiles(dir)
+    val chunks = SnapshotLog.parquetFiles(dir)
       .flatMap(f => footer(f).getBlocks.asScala.flatMap(_.getColumns.asScala))
     def bounds(column: String)(render: Any => String): (String, String) = {
       var lo, hi: Any = null
@@ -222,8 +222,9 @@ object ResumableRun {
     * Schema, buckets and files come from the manifest through a
     * [[ManifestFileIndex]]: building the frame starts no Spark job and
     * infers nothing. A `.filter` on it prunes buckets by their manifest
-    * stats. Time travel resolves a bucket re-committed after `version` to
-    * its current files (the log keeps manifests, not data copies). */
+    * stats. Committed bucket dirs are write-once, so a version reads back
+    * exactly the rows it committed; a bucket dir the manifest lists but the
+    * disk lacks fails the read. */
   def readTable(spark: SparkSession, tableDir: String,
       version: Option[Int] = None): DataFrame = {
     val index = ManifestFileIndex(tableDir, version)

@@ -28,8 +28,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * semantics):
   *   1. one job writes every bucket of the run to
   *      <table>/_tmp/stage-<K>/bucket=<N>/
-  *   2. each staged dir is atomically renamed to data/bucket=<N>/ (an
-  *      existing one is moved aside first and deleted after)
+  *   2. each staged dir is atomically renamed to data/bucket=<N>/, which
+  *      no manifest lists yet: a committed bucket dir is write-once
   *   3. one manifest v<K+1>.json listing every bucket is written, then
   *      LATEST is swapped via temp-file + ATOMIC_MOVE
   * A reader resolving LATEST sees all of a run or none of it. A killed run
@@ -40,7 +40,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final class SnapshotLog(tableDir: String) {
   private val root: Path = Paths.get(tableDir)
   private val snapsDir = root.resolve("_snapshots")
-  private[lake] val dataDir = root.resolve("data")
+  private val dataDir = root.resolve("data")
   private val tmpDir = root.resolve("_tmp")
 
   def init(): Unit = {
@@ -89,38 +89,31 @@ final class SnapshotLog(tableDir: String) {
   /** Publish staged bucket dirs (bucket -> dir) and record them all in ONE
     * new snapshot.
     *
-    * Consistency contract (ADVICE r4): the log is SINGLE-WRITER and readers
-    * are expected to resolve paths via a manifest BEFORE the swap or AFTER
-    * it — a reader listing a re-committed bucket dir during its swap can
-    * observe a missing dir for the instant between the two renames.
-    * Re-commit moves the old data ASIDE first and deletes it only after the
-    * new dir is in place, so the not-found window is two renames, not a
-    * recursive delete; [[sweepStaleStages]] restores a bucket whose swap
-    * died between them.
+    * Committed bucket dirs are WRITE-ONCE: a bucket the latest manifest
+    * already lists fails the commit before anything moves (the manifest is
+    * checked, not the rename: a rename onto an existing EMPTY dir, the form
+    * an empty bucket commits in, replaces it). A listed dir therefore never
+    * changes, so a reader never races the writer on it and every manifest
+    * version reads back exactly its own rows. The log is SINGLE-WRITER.
     *
-    * `stats` are the min/max bounds of exactly the rows being committed
-    * and replace each bucket's previous entry; a staged bucket without one
-    * (no rows, or bounds unknown) records none, so it is never pruned.
-    * `schema` is the data files' schema.
+    * `stats` are the min/max bounds of exactly the rows being committed; a
+    * staged bucket without one (no rows, or bounds unknown) records none, so
+    * it is never pruned. `schema` is the data files' schema.
     *
     * The new manifest lists every committed bucket, so each commit writes
     * O(B) manifest bytes for a B-bucket table — once per run, the bound of
     * Iceberg's one manifest list per write. */
   def commit(staged: Map[Int, Path], stats: Map[Int, BucketStats], schema: StructType): Unit = {
     val v0 = latestVersion()
-    staged.toVector.sortBy(_._1).foreach { case (bucket, dir) =>
-      val dest = bucketDataDir(bucket)
-      if (Files.exists(dest)) { // idempotent re-commit: move aside, swap, drop
-        val aside = tmpDir.resolve(s"replaced-$bucket-$v0")
-        if (Files.exists(aside)) deleteRecursively(aside)
-        Files.move(dest, aside, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(dir, dest, StandardCopyOption.ATOMIC_MOVE)
-        deleteRecursively(aside)
-      } else Files.move(dir, dest, StandardCopyOption.ATOMIC_MOVE)
-    }
     val prev = manifest(v0)
-    val next = Manifest(prev.buckets ++ staged.keySet, prev.stats -- staged.keySet ++ stats,
-      Some(schema))
+    val listed = staged.keySet.intersect(prev.buckets)
+    if (listed.nonEmpty) throw new IllegalStateException(
+      s"buckets ${listed.toVector.sorted.mkString(", ")} are already listed in snapshot v$v0 " +
+        s"of $root; committed bucket dirs are write-once")
+    staged.toVector.sortBy(_._1).foreach { case (bucket, dir) =>
+      Files.move(dir, bucketDataDir(bucket), StandardCopyOption.ATOMIC_MOVE)
+    }
+    val next = Manifest(prev.buckets ++ staged.keySet, prev.stats ++ stats, Some(schema))
     val v = v0 + 1
     Files.write(snapsDir.resolve(s"v$v.json"), SnapshotLog.renderManifest(v, next).getBytes(UTF_8))
     val tmpLatest = snapsDir.resolve(s"LATEST.tmp")
@@ -133,76 +126,33 @@ final class SnapshotLog(tableDir: String) {
   def committedPaths(): Vector[String] =
     committedBuckets().toVector.sorted.map(b => bucketDataDir(b).toString)
 
-  /** Recover from a commit killed mid-swap, then remove orphaned staging
-    * dirs left under `_tmp` by runs killed during staging or the commit
-    * (ADVICE r3): a run killed after its `LATEST` swap leaves its stage
-    * root behind, and no later run stages under that version again, so it
-    * would leak staged parquet forever. Last, delete every `data/bucket=N`
-    * the latest manifest does not list: a bucket never leaves a manifest,
-    * so such a dir was moved in by a commit killed before its `LATEST`
-    * swap, and a later run with another `nBuckets` or `bucketExpr` might
-    * never re-commit (and so replace) it. Single-writer assumption (same
-    * as the rest of the log).
-    *
-    * Recovery MUST run before deletion: a re-commit swap that died between
-    * its two renames leaves the bucket's only committed data in
-    * `replaced-<bucket>-<v>` with `data/bucket=<bucket>` missing — that
-    * dir is the manifest's referenced data, not garbage, so it is MOVED
-    * BACK first (round-5 review: the earlier indiscriminate sweep would
-    * have destroyed it, turning a crash window into permanent loss).
-    * `replaced-*` dirs whose bucket dir EXISTS are leftovers of a swap
-    * that completed its second rename, and stage dirs (`stage-*`, and the
-    * `<bucket>-<v>-stage` dirs older compactions staged into) are
-    * re-creatable job output — both garbage. */
-  def sweepStaleStages(): Unit =
-    if (Files.exists(tmpDir)) {
-      val stream = Files.list(tmpDir)
-      val entries = try stream.iterator().asScala.toVector finally stream.close()
-      val replaced = "replaced-(\\d+)-(\\d+)".r
-      // ADVICE r5: if several replaced-<bucket>-<v> dirs for one bucket ever
-      // coexist (two crashed re-commits without an intervening sweep), the
-      // HIGHEST version is the newest committed data — restore that one and
-      // let the generic sweep below collect the stale lower versions, so
-      // filesystem listing order can never resurrect an old copy.
-      entries.flatMap { p =>
-        p.getFileName.toString match {
-          case replaced(b, v) => Some((b.toInt, v.toInt, p))
-          case _ => None
-        }
-      }.groupBy(_._1).foreach { case (b, dirs) =>
-        if (!Files.exists(bucketDataDir(b)))
-          Files.move(dirs.maxBy(_._2)._3, bucketDataDir(b),
-            StandardCopyOption.ATOMIC_MOVE)
-      }
-      entries.filter { p =>
-        val n = p.getFileName.toString
-        Files.exists(p) && // not just restored above
-          (n.startsWith("stage-") || n.endsWith("-stage") || n.startsWith("replaced-"))
-      }.foreach(SnapshotLog.deleteRecursively)
-      if (Files.exists(dataDir)) {
-        val listed = committedBuckets().map(b => s"bucket=$b")
-        val data = Files.list(dataDir)
-        try data.iterator().asScala.toVector.filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("bucket=") && !listed.contains(n)
-        }.foreach(SnapshotLog.deleteRecursively) finally data.close()
-      }
-    }
+  /** Remove what killed runs left behind. Under the single-writer rule
+    * `_tmp` holds nothing but staging output, and a run killed after its
+    * `LATEST` swap leaves a stage root no later run stages under again, so
+    * every entry of `_tmp` is deleted. Then every `data/bucket=N` the latest
+    * manifest does not list is deleted: a bucket never leaves a manifest, so
+    * such a dir was moved in by a commit killed before its `LATEST` swap.
+    * A later run with another `nBuckets` or `bucketExpr` might never commit
+    * that bucket again, and a commit's rename onto it fails while it holds
+    * files. */
+  def sweepStaleStages(): Unit = {
+    SnapshotLog.children(tmpDir).foreach(deleteRecursively)
+    val listed = committedBuckets().map(b => s"bucket=$b")
+    SnapshotLog.children(dataDir).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("bucket=") && !listed.contains(n)
+    }.foreach(deleteRecursively)
+  }
 
   /** Expire old manifests, keeping the most recent `keepLast` versions (the
     * Iceberg `expireSnapshots` analog — the operational half of snapshot
     * maintenance, bounding `_snapshots/` growth on a long-lived table).
     * Time travel to an expired version then fails by design; LATEST and
-    * data dirs are untouched. Returns the versions removed. */
+    * data dirs are untouched. Returns the versions this call deleted. */
   def expireManifests(keepLast: Int): Vector[Int] = {
     require(keepLast >= 1, "must keep at least the latest manifest")
-    val latest = latestVersion()
-    val expired = (1 to latest - keepLast).toVector
-    expired.foreach { v =>
-      val p = snapsDir.resolve(s"v$v.json")
-      if (Files.exists(p)) Files.delete(p)
-    }
-    expired
+    (1 to latestVersion() - keepLast).toVector
+      .filter(v => Files.deleteIfExists(snapsDir.resolve(s"v$v.json")))
   }
 
   private def deleteRecursively(p: Path): Unit = SnapshotLog.deleteRecursively(p)
@@ -309,6 +259,20 @@ object ColBound {
 }
 
 object SnapshotLog {
+  /** Entries of `dir`; none when it is missing. The directory stream is
+    * closed eagerly: `Files.list` holds an fd until GC. */
+  private def children(dir: Path): Vector[Path] =
+    if (!Files.isDirectory(dir)) Vector.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toVector finally s.close()
+    }
+
+  /** Data files of one bucket dir (parquet parts only); none when the dir
+    * is missing. */
+  def parquetFiles(dir: Path): Vector[Path] =
+    children(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+
   def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {
       Files.walk(p).iterator().asScala.toVector.reverse.foreach(Files.delete)

@@ -81,6 +81,18 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
         r.getString(2), r.getString(3), r.getString(4), r.getString(5), r.getString(6)))
       .toMap
 
+  /** Commits bucket `b` of the default `nBuckets` spec, which `dir` does
+    * not list yet, from a plain parquet write of its extracted rows: INT96
+    * `warc_ts`, as tables staged before `MicrosParquet` hold it. */
+  private def commitPlainBucket(dir: String, nBuckets: Int, b: Int): Unit = {
+    val p = pages
+    val bucket = Pipeline.saltedBucket(Pipeline.hotDomains(p).keySet, nBuckets)
+    val log = new SnapshotLog(dir)
+    val staged = log.stagingRoot()
+    Pipeline.extracted(p.filter(bucket === b)).write.parquet(staged.toString)
+    log.commit(Map(b -> staged), Map.empty, ResumableRun.readTable(spark, dir).schema)
+  }
+
   test("resumable run: killed run resumes at bucket granularity, result equals full run") {
     val p = pages
     val nBuckets = 8
@@ -1025,15 +1037,13 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("INT96 and INT64-staged buckets read back like an all-INT96 copy") {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val dir = tmp()
-    ResumableRun.run(spark, pages, dir, nBuckets = 4)
+    ResumableRun.run(spark, pages, dir, nBuckets = 4, maxBuckets = 3)
     val log = new SnapshotLog(dir)
-    // re-commit bucket 0 from a plain write of this session: INT96 warc_ts
-    val staged = log.stagingRoot()
-    spark.read.parquet(log.bucketDataDir(0).toString).write.parquet(staged.toString)
-    log.commit(Map(0 -> staged), log.bucketStats().filter(_._1 == 0),
-      ResumableRun.readTable(spark, dir).schema)
+    // bucket 3 from a plain write of this session: INT96 warc_ts
+    commitPlainBucket(dir, nBuckets = 4, b = 3)
+    assert(log.committedBuckets() == Set(0, 1, 2, 3))
     def tsTypes(b: Int): Set[PrimitiveTypeName] =
-      graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).map { f =>
+      SnapshotLog.parquetFiles(log.bucketDataDir(b)).map { f =>
         val file = new org.apache.parquet.io.LocalInputFile(f)
         val in = file.newStream()
         val schema = try org.apache.parquet.hadoop.ParquetFileReader.readFooter(file,
@@ -1041,8 +1051,8 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
           finally in.close()
         schema.getType(schema.getFieldIndex("warc_ts")).asPrimitiveType.getPrimitiveTypeName
       }.toSet
-    assert(tsTypes(0) == Set(PrimitiveTypeName.INT96))
-    (1 until 4).foreach(b => assert(tsTypes(b) == Set(PrimitiveTypeName.INT64), s"bucket $b"))
+    assert(tsTypes(3) == Set(PrimitiveTypeName.INT96))
+    (0 until 3).foreach(b => assert(tsTypes(b) == Set(PrimitiveTypeName.INT64), s"bucket $b"))
     val copy = tmp() + "/copy"
     Pipeline.extracted(pages).write.parquet(copy)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.getAs[String]("url"))
@@ -1061,13 +1071,13 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val log = new SnapshotLog(dir)
     assert(log.committedBuckets() == Set(0, 1, 2, 3))
     log.committedBuckets().foreach(b =>
-      assert(graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).isEmpty, s"bucket $b"))
+      assert(SnapshotLog.parquetFiles(log.bucketDataDir(b)).isEmpty, s"bucket $b"))
     val t = ResumableRun.readTable(spark, dir)
     assert(t.count() == 0)
     assert(t.schema.fieldNames.toSet.contains("extracted_text"))
   }
 
-  test("bucket-stats pruning skips whole buckets on a clustered column; compaction carries stats") {
+  test("bucket-stats pruning skips whole buckets on a clustered column") {
     // VERDICT r4 #6: manifests record per-bucket (url, lang) min/max at
     // commit time; a read with a pushable bound opens only buckets whose
     // bounds may match. Pruning needs the column CLUSTERED with the bucket
@@ -1107,15 +1117,6 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val none = ResumableRun.readTable(spark, dir)
       .filter(col("url") >= beyond && col("lang") === "zz")
     assert(none.count() == 0 && none.columns.contains("extracted_text"))
-    // compaction re-stages every bucket and re-reads its stats from the new
-    // footers: the same rows give the same bounds
-    val compacted = graft.lake.Compaction.compact(spark, dir, maxFiles = 0)
-    assert(compacted.nonEmpty)
-    val after = new SnapshotLog(dir).bucketStats()
-    assert(after == stats, "compaction must keep bucket stats")
-    val prunedAfter = ResumableRun.readTable(spark, dir)
-      .filter(col("lang") === target).select("url").collect().map(_.getString(0)).toSet
-    assert(prunedAfter == full)
     // time travel to v1 still resolves (stats do not affect historical reads)
     assert(ResumableRun.readTable(spark, dir, version = Some(1)).count() >= 0)
 
@@ -1144,7 +1145,7 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def paths(dir: String) = new SnapshotLog(dir).committedPaths()
     def plain(dir: String) = spark.read.parquet(paths(dir): _*)
     def fileCount(dir: String, bucketDirs: Seq[String]) =
-      bucketDirs.map(d => graft.lake.Compaction.parquetFiles(java.nio.file.Paths.get(d)).size).sum
+      bucketDirs.map(d => SnapshotLog.parquetFiles(java.nio.file.Paths.get(d)).size).sum
     /** Parquet files the executed scan of `df` read (Spark's "number of files read"). */
     def filesRead(df: DataFrame): Long = {
       df.collect()
@@ -1154,14 +1155,11 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     def rows(df: DataFrame) = df.collect().toSeq.map(_.toString).sorted
 
-    // schema: a fresh table, and one whose bucket 0 holds INT96 warc_ts
+    // schema: a fresh table, and one whose bucket 3 holds INT96 warc_ts
     val fresh = tmp()
-    ResumableRun.run(spark, pages, fresh, nBuckets = 4)
+    ResumableRun.run(spark, pages, fresh, nBuckets = 4, maxBuckets = 3)
     assert(ResumableRun.readTable(spark, fresh).schema == plain(fresh).schema)
-    val log = new SnapshotLog(fresh)
-    val staged = log.stagingRoot()
-    plain(fresh).write.parquet(staged.toString)
-    log.commit(Map(0 -> staged), Map.empty, ResumableRun.readTable(spark, fresh).schema)
+    commitPlainBucket(fresh, nBuckets = 4, b = 3)
     assert(ResumableRun.readTable(spark, fresh).schema == plain(fresh).schema)
 
     // a lang-clustered table, and a time-windowed one whose timestamps all
@@ -1230,7 +1228,7 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (Iceberg hash distribution), so each bucket dir holds at most one
     // data file instead of tasks-x-buckets fragments
     log.committedBuckets().foreach { b =>
-      assert(graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).size <= 1,
+      assert(SnapshotLog.parquetFiles(log.bucketDataDir(b)).size <= 1,
         s"bucket $b fragmented") }
     // manifest stats come from the staged files' parquet footers — they
     // must equal an independent aggregation over the committed data
@@ -1239,41 +1237,26 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats == aggregatedStats(dir))
   }
 
-  test("compaction rewrites fragmented buckets; time travel survives; manifest expiry bounds the log") {
+  test("time travel reads each version's rows; manifest expiry bounds the log") {
     val dir = tmp()
     val nBuckets = 4
-    ResumableRun.run(spark, pages, dir, nBuckets)
+    // one bucket per run: versions 1 to 4, and the row count after each
+    val counts = (1 to nBuckets).map { _ =>
+      ResumableRun.run(spark, pages, dir, nBuckets, maxBuckets = 1)
+      ResumableRun.readTable(spark, dir).count()
+    }
     val log = new SnapshotLog(dir)
-    // round 6: the hash-distributed staging write lays each bucket out as
-    // ONE file, so the write itself no longer fragments; fragment a bucket
-    // explicitly (the append / maxRecordsPerFile-split history compaction
-    // exists for) by re-committing the same rows as 3 files
-    val staged0 = log.stagingRoot()
-    spark.read.parquet(log.bucketDataDir(0).toString).repartition(3)
-      .write.parquet(staged0.toString)
-    log.commit(Map(0 -> staged0), log.bucketStats().filter(_._1 == 0), // same rows, same bounds
-      ResumableRun.readTable(spark, dir).schema)
-    val before = ResumableRun.readTable(spark, dir).count()
-    assert(before > 0)
-    val vPre = log.latestVersion()
-    assert((0 until nBuckets).exists(b =>
-      graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).size > 1),
-      "test setup: expected at least one fragmented bucket")
-
-    val compacted = graft.lake.Compaction.compact(spark, dir)
-    assert(compacted.nonEmpty)
-    compacted.foreach(b =>
-      assert(graft.lake.Compaction.parquetFiles(log.bucketDataDir(b)).size == 1))
-    assert(ResumableRun.readTable(spark, dir).count() == before)
-    // the compacted INT96 bucket's stats come from its fresh footers
+    assert(log.latestVersion() == nBuckets && counts.last == pages.count())
+    assert(counts.zip(counts.tail).forall { case (a, b) => a < b }, s"a run committed no rows: $counts")
     assert(log.bucketStats() == aggregatedStats(dir))
-    // time travel to a PRE-compaction version still reads (resolving to the
-    // compacted files — the documented manifests-not-data-copies caveat)
-    assert(ResumableRun.readTable(spark, dir, version = Some(vPre)).count() == before)
+    // committed bucket dirs never change: every version reads its own rows
+    (1 to nBuckets).foreach(v =>
+      assert(ResumableRun.readTable(spark, dir, version = Some(v)).count() == counts(v - 1), s"v$v"))
 
     val removed = log.expireManifests(keepLast = 2)
-    assert(removed.nonEmpty && removed.forall(_ <= log.latestVersion() - 2))
-    assert(ResumableRun.readTable(spark, dir).count() == before) // LATEST untouched
+    assert(removed == Vector(1, 2))
+    assert(log.expireManifests(keepLast = 2).isEmpty, "a second expiry reported deleted versions")
+    assert(ResumableRun.readTable(spark, dir).count() == counts.last) // LATEST untouched
     intercept[IllegalArgumentException] {
       ResumableRun.readTable(spark, dir, version = Some(removed.head))
     }

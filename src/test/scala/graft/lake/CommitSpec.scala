@@ -55,9 +55,10 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     writing.head._2.map(_._2)
   }
 
-  /** The committed table's rows as a sorted multiset of strings. */
-  private def tableRows(dir: String): Vector[String] =
-    ResumableRun.readTable(spark, dir).collect().map(_.toString).sorted.toVector
+  /** The committed table's rows at `version` (the latest when `None`) as a
+    * sorted multiset of strings. */
+  private def tableRows(dir: String, version: Option[Int] = None): Vector[String] =
+    ResumableRun.readTable(spark, dir, version).collect().map(_.toString).sorted.toVector
 
   /** Nothing is left under the table's `_tmp`, and `data/` holds exactly
     * the buckets the latest manifest lists. */
@@ -154,7 +155,7 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fresh.sum == perBucket.values.sum)
     val log = new SnapshotLog(dir)
     (0 until 16).foreach(b =>
-      assert(Compaction.parquetFiles(log.bucketDataDir(b)).size == 1, s"bucket $b files"))
+      assert(SnapshotLog.parquetFiles(log.bucketDataDir(b)).size == 1, s"bucket $b files"))
 
     // a resumed run over a strided subset: one bucket per task, so each
     // task writes exactly one bucket's rows
@@ -170,7 +171,7 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(resumed == strided)
     assert(perTask.sorted == strided.map(perBucket).sorted, s"write tasks: $perTask")
     strided.foreach(b =>
-      assert(Compaction.parquetFiles(logR.bucketDataDir(b)).size == 1, s"bucket $b files"))
+      assert(SnapshotLog.parquetFiles(logR.bucketDataDir(b)).size == 1, s"bucket $b files"))
     assert(ResumableRun.readTable(spark, dirR).count() == perBucket.values.sum)
   }
 
@@ -186,10 +187,11 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ResumableRun.readTable(spark, dir).count() == pages.count())
   }
 
-  test("every run and every compaction adds one version listing all its buckets") {
+  test("every run adds one version listing all its buckets; v1 reads its own rows") {
     val dir = tmp()
     val bucket = Pipeline.saltedBucket(Pipeline.hotDomains(pages).keySet, 16)
     val first = ResumableRun.run(spark, pages, dir, nBuckets = 16, maxBuckets = 5)
+    val v1Rows = tableRows(dir, Some(1))
     val rest = ResumableRun.run(spark, pages, dir, nBuckets = 16)
     assert(first.size == 5 && rest.size == 11)
     val log = new SnapshotLog(dir)
@@ -200,13 +202,21 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     def pinned = ResumableRun.readTable(spark, dir, version = Some(1))
     val firstRows = pages.filter(bucket.isin(first: _*)).count()
     assert(firstRows > 0 && pinned.count() == firstRows)
+    val sameRows = tableRows(dir, Some(1)) == v1Rows
+    assert(sameRows, "v1 reads other rows after the second run")
     val firstRunFiles = pinned.inputFiles.toSet
     assert(firstRunFiles.nonEmpty && firstRunFiles.forall(f =>
       first.exists(b => f.contains(s"/bucket=$b/"))), s"v1 reads $firstRunFiles")
-    // a compaction of every bucket is one more version
-    assert(Compaction.compact(spark, dir, maxFiles = 0) == (0 until 16).toVector)
-    assert(log.latestVersion() == 3 && log.manifest(3).buckets == (0 until 16).toSet)
-    assert(pinned.count() == firstRows)
+  }
+
+  test("a listed bucket whose dir is gone fails the read, naming bucket and version") {
+    val dir = tmp()
+    ResumableRun.run(spark, pages, dir, nBuckets = 4)
+    val log = new SnapshotLog(dir)
+    assert(log.committedBuckets() == Set(0, 1, 2, 3))
+    SnapshotLog.deleteRecursively(log.bucketDataDir(2))
+    val e = intercept[IllegalStateException](ResumableRun.readTable(spark, dir).count())
+    assert(e.getMessage.contains("snapshot v1 lists bucket=2"), e.getMessage)
   }
 
   test("a run killed at any commit step resumes to the uninterrupted table") {
@@ -267,25 +277,6 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("a compaction killed between a bucket's two renames resumes without losing it") {
-    val dir = tmp()
-    ResumableRun.run(spark, pages, dir, nBuckets = 8)
-    val log = new SnapshotLog(dir)
-    val (before, stats) = (tableRows(dir), log.bucketStats())
-    // bucket 2's staged dir vanishes before the commit: its old data is
-    // moved aside, the move-in fails, and data/bucket=2 is missing
-    ResumableRun.onPhase = (ph: String, _: Double) => if (ph == "stats_agg")
-      SnapshotLog.deleteRecursively(log.stagingRoot().resolve("bucket=2"))
-    try intercept[Exception](Compaction.compact(spark, dir, maxFiles = 0))
-    finally ResumableRun.onPhase = null
-    assert(!Files.exists(log.bucketDataDir(2)) && log.latestVersion() == 1)
-    assert(Compaction.compact(spark, dir, maxFiles = 0) == (0 until 8).toVector)
-    assert(log.latestVersion() == 2)
-    val sameRows = tableRows(dir) == before
-    assert(sameRows && log.bucketStats() == stats)
-    assertSwept(dir, "compaction")
-  }
-
   test("footer stats: UTF-8 byte order, floored seconds, unknown without min/max") {
     val sp = spark
     import sp.implicits._
@@ -340,7 +331,7 @@ class CommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     log.committedBuckets().foreach { b =>
       val bucketDir = log.bucketDataDir(b)
       assert(mode(bucketDir) == dirMode, s"bucket $b dir")
-      val data = Compaction.parquetFiles(bucketDir)
+      val data = SnapshotLog.parquetFiles(bucketDir)
       assert(data.nonEmpty)
       data.foreach { f =>
         assert(mode(f) == fileMode, s"$f")

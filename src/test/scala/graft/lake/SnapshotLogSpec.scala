@@ -1,13 +1,15 @@
 package graft.lake
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Vectors for the manifest codec and the commit: manifests as the log
   * wrote them before its JSON went through Jackson must parse to the same
   * [[Manifest]], every manifest must survive a render/parse round trip
   * with hostile strings (quotes, backslashes, control chars — all legal in
-  * real-crawl urls), a crash mid-swap must recover, and the pruning
-  * predicate must stay conservative on non-ASCII and unknown bounds. */
+  * real-crawl urls), a commit must refuse a bucket a manifest already
+  * lists, and the pruning predicate must stay conservative on non-ASCII
+  * and unknown bounds. */
 class SnapshotLogSpec extends AnyFunSuite {
   import SnapshotLogSpec._
 
@@ -85,68 +87,38 @@ class SnapshotLogSpec extends AnyFunSuite {
     SnapshotLog.deleteRecursively(root)
   }
 
-  test("mid-swap crash recovery: replaced-* restores a missing bucket dir, garbage still sweeps") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+  test("commit of a listed bucket fails and nothing moves") {
+    import java.nio.file.{Files, Path}
     val root = Files.createTempDirectory("snaplog-test")
     val log = new SnapshotLog(root.toString)
     log.init()
-    // commit bucket 3 with one data file
-    val staged = root.resolve("_tmp").resolve("3-0-stage")
-    Files.createDirectories(staged)
-    Files.write(staged.resolve("part-0.parquet"), "ORIGINAL".getBytes("UTF-8"))
-    log.commit(Map(3 -> staged), Map.empty, hostileSchema)
-    assert(log.committedBuckets() == Set(3))
-    // simulate a re-commit killed BETWEEN its two renames: the committed
-    // data sits in replaced-3-1, the bucket dir is gone, the new data is
-    // still in its stage dir
-    val aside = root.resolve("_tmp").resolve("replaced-3-1")
-    Files.move(log.bucketDataDir(3), aside, StandardCopyOption.ATOMIC_MOVE)
-    val deadStage = root.resolve("_tmp").resolve("3-1-stage")
-    Files.createDirectories(deadStage)
-    Files.write(deadStage.resolve("part-0.parquet"), "UNCOMMITTED".getBytes("UTF-8"))
-    assert(!Files.exists(log.bucketDataDir(3)))
-
-    log.sweepStaleStages()
-    // the manifest-referenced data is BACK, byte-identical
-    val restored = new String(Files.readAllBytes(
-      log.bucketDataDir(3).resolve("part-0.parquet")), "UTF-8")
-    assert(restored == "ORIGINAL")
-    // the dead stage and the (now consumed) aside dir are gone
-    assert(!Files.exists(deadStage) && !Files.exists(aside))
-
-    // a replaced-* whose bucket dir EXISTS is a completed swap's leftover:
-    // swept, and the live data untouched
-    val leftover = root.resolve("_tmp").resolve("replaced-3-2")
-    Files.createDirectories(leftover)
-    Files.write(leftover.resolve("part-0.parquet"), "OLD".getBytes("UTF-8"))
-    log.sweepStaleStages()
-    assert(!Files.exists(leftover))
-    assert(new String(Files.readAllBytes(
-      log.bucketDataDir(3).resolve("part-0.parquet")), "UTF-8") == "ORIGINAL")
-    SnapshotLog.deleteRecursively(root)
-  }
-
-  test("two coexisting replaced-* dirs: the HIGHEST version is restored, the stale one swept") {
-    import java.nio.file.{Files, StandardCopyOption}
-    val root = Files.createTempDirectory("snaplog-test")
-    val log = new SnapshotLog(root.toString)
-    log.init()
-    val staged = root.resolve("_tmp").resolve("5-0-stage")
-    Files.createDirectories(staged)
-    Files.write(staged.resolve("part-0.parquet"), "V2".getBytes("UTF-8"))
-    log.commit(Map(5 -> staged), Map.empty, hostileSchema)
-    // simulate the ADVICE r5 scenario: an OLD crashed swap left replaced-5-1
-    // (stale data), then a newer re-commit to the same bucket also crashed
-    // mid-swap, leaving the current committed data in replaced-5-3
-    val stale = root.resolve("_tmp").resolve("replaced-5-1")
-    Files.createDirectories(stale)
-    Files.write(stale.resolve("part-0.parquet"), "V1-STALE".getBytes("UTF-8"))
-    Files.move(log.bucketDataDir(5), root.resolve("_tmp").resolve("replaced-5-3"),
-      StandardCopyOption.ATOMIC_MOVE)
-    log.sweepStaleStages()
-    assert(new String(Files.readAllBytes(
-      log.bucketDataDir(5).resolve("part-0.parquet")), "UTF-8") == "V2")
-    assert(!Files.exists(stale))
+    def stage(name: String, content: Option[String]): Path = {
+      val dir = root.resolve("_tmp").resolve(name)
+      Files.createDirectories(dir)
+      content.foreach(c => Files.write(dir.resolve("part-0.parquet"), c.getBytes("UTF-8")))
+      dir
+    }
+    // v1: bucket 0 holds a file, bucket 1 is an empty dir; v2 adds bucket 2
+    log.commit(Map(0 -> stage("a", Some("V1")), 1 -> stage("b", None)), Map.empty, hostileSchema)
+    log.commit(Map(2 -> stage("c", Some("V2"))), Map.empty, hostileSchema)
+    /** Every file and dir under the table, file contents included. */
+    def tree(): Map[String, String] = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.map { p =>
+        root.relativize(p).toString ->
+          (if (Files.isDirectory(p)) "<dir>" else new String(Files.readAllBytes(p), "UTF-8"))
+      }.toMap finally s.close()
+    }
+    Seq("non-empty bucket" -> 0, "empty-dir bucket" -> 1).foreach { case (name, b) =>
+      // an unlisted bucket in the same commit must not move either
+      val staged = Map(b -> stage(s"listed-$b", Some("NEW")), 3 -> stage(s"unlisted-$b", Some("NEW")))
+      val before = tree()
+      assert(before.keySet.exists(_.startsWith("_snapshots/v")) && before.contains("_snapshots/LATEST"))
+      val e = intercept[IllegalStateException](log.commit(staged, Map.empty, hostileSchema))
+      assert(e.getMessage.contains(s"buckets $b are already listed in snapshot v2"), name)
+      assert(tree() == before, name)
+    }
+    assert(log.latestVersion() == 2 && log.committedBuckets() == Set(0, 1, 2))
     SnapshotLog.deleteRecursively(root)
   }
 
