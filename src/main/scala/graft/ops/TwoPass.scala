@@ -2,35 +2,28 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** The reference's hyperlink-aware two-pass flow (SURVEY.md §3.3 /
-  * app_v5.py:172-218) as REAL Spark relational ops over the extraction
-  * output — not kernel code:
-  *   extracted markdown -> posexplode(lines) -> page-marker regex ->
-  *   forward-fill `last(..., ignoreNulls)` window (W1) ->
-  *   markdown-link regex_extract_all (X16) -> links with inherited page.
+  * app_v5.py:172-218) over the extraction output — not kernel code:
+  *   extracted markdown -> fused page fill `graft_paged_link_lines`
+  *   (plans/PagedLinkLines: the link lines, each with the page of the last
+  *   page marker above it) -> inline -> markdown-link regexp_extract_all
+  *   (X16) -> links with inherited page.
+  * A document's lines all sit in its one committed row, so the forward fill
+  * runs inside the row: no Window, no shuffle before the output sort.
   * Anchor emphasis markers are stripped like app_v5.py:205 (`\*{1,3}`).
   */
 object TwoPass {
 
   // X16 pattern (app_v5.py:198): [text](url)
   private val linkPattern = "\\[([^\\]]+)\\]\\(([^)]+)\\)"
-  // the page marker the kernel emits (markdown_converter.py:28 analog)
-  private val markerPattern = "^<!-- Page (\\d+) -->$"
 
   def linksFromMarkdown(extracted: DataFrame): DataFrame = {
-    val lines = extracted
-      .select(col("url"), posexplode(split(col("extracted_text"), "\n"))
-        .as(Seq("line_no", "line")))
-    val withMarker = lines.withColumn("marker",
-      when(regexp_extract(col("line"), markerPattern, 1) =!= "",
-        regexp_extract(col("line"), markerPattern, 1).cast("int")))
-    val w = Window.partitionBy(col("url")).orderBy(col("line_no"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withPage = withMarker.withColumn("page",
-      coalesce(last(col("marker"), ignoreNulls = true).over(w), lit(1)))
-    withPage
+    val linkLines = GraftBridge.column(graft.plans.PagedLinkLines(
+      GraftBridge.expression(col("extracted_text"))))
+    extracted
+      .select(col("url"), inline(linkLines))
       .select(col("url"), col("page"), col("line_no"),
         explode(regexp_extract_all(col("line"), lit(linkPattern), lit(0))).as("m"))
       .select(col("url"), col("page"), col("line_no"),
@@ -119,14 +112,11 @@ object TwoPass {
     // reference's `.get('application', 'Unknown')` default (:592) is dead
     // code because _extract_application_properties always initializes the
     // key to '' (:314), so the summary emits '' for unknown applications.
-    // All columns scalar (per the x_meta lesson). The
-    // page-bytes join is a test-scale convenience — a production table
-    // stores file_size as a column at ingest; here it's recomputed from the
-    // pages scan (DSv2 prunes to url+html) and joined back by url.
+    // All columns scalar (per the x_meta lesson). The byte size is the
+    // `meta.file_size` the extraction stores at ingest (the html's byte
+    // length), so the query reads only the committed table.
     "x_meta_summary" -> ((s: SparkSession, dir: String) => {
       val extracted = graft.pipeline.Pipeline.extractedCommitted(s, dir)
-      val sizes = graft.pipeline.Pipeline.pages(s, dir)
-        .select(col("url"), length(col("html")).cast("bigint").as("file_size"))
       extracted.select(col("url"),
           (col("meta.title") =!= "").as("has_title"),
           (col("meta.author") =!= "").as("has_author"),
@@ -134,8 +124,8 @@ object TwoPass {
           col("meta.created_date").as("creation_date"),
           col("meta.modified_date").as("last_modified"),
           (col("meta.keywords") =!= "").as("has_keywords"),
-          col("meta.application").as("application"))
-        .join(sizes, Seq("url"))
+          col("meta.application").as("application"),
+          col("meta.file_size").as("file_size"))
         .withColumn("file_size_mb",
           when(col("file_size") > 0, bround(col("file_size") / 1048576.0, 2)))
         .drop("file_size")

@@ -78,7 +78,8 @@ object Pipeline {
           col("r.application").as("application"),
           col("r.company").as("company"),
           col("r.crawl_date").as("crawl_date"),
-          col("r.layout_types").as("layout_types")
+          col("r.layout_types").as("layout_types"),
+          col("r.file_size").as("file_size")
         ).as("meta"),
         col("r.scores").as("scores"),
         col("r.error").as("error"))

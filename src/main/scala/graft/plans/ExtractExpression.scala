@@ -21,7 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Null semantics (R1 error isolation, file_converter.py:99-100): null html
   * falls back to the text column; both null -> empty output; null warc_ts ->
-  * no crawl date. The expression itself NEVER returns null or throws. */
+  * no crawl date. The expression itself NEVER returns null or throws.
+  *
+  * Besides the kernel result, the struct carries `file_size`: the html's
+  * byte length as BIGINT, NULL when html is NULL (what `length(html)`
+  * gives), so a derived query reads the page size from the committed row
+  * instead of re-reading the page. */
 case class ExtractDoc(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with CodegenFallback {
 
@@ -46,7 +51,9 @@ case class ExtractDoc(first: Expression, second: Expression, third: Expression)
     val htmlBytes = if (html == null) Array.emptyByteArray else html.asInstanceOf[Array[Byte]]
     val textStr = if (text == null) "" else text.toString
     val tsUs = if (ts == null) Long.MinValue else ts.asInstanceOf[Long]
-    ExtractDoc.toRow(graft.extract.Extractor.extract(htmlBytes, textStr, tsUs))
+    val row = ExtractDoc.toRow(graft.extract.Extractor.extract(htmlBytes, textStr, tsUs))
+    if (html != null) row.setLong(23, htmlBytes.length.toLong)
+    row
   }
 
   override protected def withNewChildrenInternal(
@@ -76,12 +83,14 @@ object ExtractDoc {
     // round-4 M1 breadth fields (appended to keep earlier ordinals stable)
     s("subject"), s("comments"), s("category"),
     s("last_modified_by"), s("revision"), s("last_printed"),
-    s("application"), s("company")))
+    s("application"), s("company"),
+    StructField("file_size", LongType, nullable = true)))
 
-  /** ExtractResult -> InternalRow, written directly (no encoder). */
+  /** ExtractResult -> InternalRow, written directly (no encoder);
+    * `file_size` is left NULL. */
   def toRow(r: graft.model.ExtractResult): GenericInternalRow = {
     def u(x: String) = UTF8String.fromString(if (x == null) "" else x)
-    val row = new GenericInternalRow(23)
+    val row = new GenericInternalRow(24)
     row.update(0, u(r.extractedText))
     row.update(1, new GenericArrayData(r.spans.map { sp =>
       val x = new GenericInternalRow(3)

@@ -39,8 +39,9 @@ object PlanCheck {
     spark.sparkContext.setLogLevel("ERROR")
 
     val interesting = Vector(
-      "x_extract", "x_links", "q_agg", "q_join_collect", "q_forward_fill",
-      "q_topk", "q_topk_custom", "dd_minhash_lsh", "dd_jaccard_lsh", "dd_exact",
+      "x_extract", "x_links", "x_links_twopass", "x_meta_summary", "q_agg",
+      "q_join_collect", "q_forward_fill", "q_topk", "q_topk_custom",
+      "dd_minhash_lsh", "dd_jaccard_lsh", "dd_exact",
       "dd_embed_neardup", "ann_topk", "ann_ivf", "ta_langid",
       "q_time_window", "q_asof_join", "ta_sample", "dd_simhash",
       "q_bucketed_join")
@@ -141,6 +142,20 @@ object PlanCheck {
         case "x_links" =>
           check("reads the committed extraction table, kernel not re-run",
             !plan.contains("MapElements") && plan.contains("Scan parquet"))
+        case "x_links_twopass" =>
+          // a document's lines all sit in its one committed row: the page
+          // fill is the fused per-row graft_paged_link_lines, not a url Window
+          check("fused graft_paged_link_lines page fill planned",
+            plan.contains("graft_paged_link_lines"))
+          // the one Exchange is the output orderBy's range partitioning
+          val exchanges = "\\(\\d+\\) Exchange".r.findAllIn(plan).size
+          check("no Window; no Exchange below the output sort's",
+            !plan.contains("Window") && exchanges == 1 &&
+              plan.contains("rangepartitioning(url"))
+        case "x_meta_summary" =>
+          check("reads only the committed table: no graft_pages scan, no join",
+            plan.contains("Scan parquet") && !plan.contains("graft_pages") &&
+              !plan.contains("Join"))
         case "q_asof_join" =>
           // one union of two prepared sides through ONE user_id window;
           // shuffles: click pre-agg + window partitioning + final sort

@@ -6,9 +6,10 @@ import graft.plans.{TopKPerKeyNode, TopKStrategy}
 
 /** The single construction path for every custom Catalyst node. Custom
   * expressions (`ExtractDoc`, `CosineSim`, `DotProduct`, `Simhash64`,
-  * `MinhashSigs`, `HyperplaneSigs`, `CentroidArgsort`) enter a plan as
-  * typed Columns, `column(Node(expression(..)))`; none is registered under
-  * a SQL function name. The custom TopKPerKey logical node is exposed as a
+  * `MinhashSigs`, `BandHashes`, `HyperplaneSigs`, `CentroidArgsort`,
+  * `PagedLinkLines`) enter a plan as typed Columns,
+  * `column(Node(expression(..)))`; none is registered under a SQL function
+  * name. The custom TopKPerKey logical node is exposed as a
   * DataFrame -> DataFrame operator through Spark's private[sql] Dataset
   * constructor, and its planner strategy is registered on first use.
   * Lives under org.apache.spark.sql.* for access scope only — the standard

@@ -307,6 +307,62 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("url", "chars", "words", "lines", "headers", "links", "bullets"), want)
   }
 
+  /** The two-pass links of one markdown text, recomputed on the driver:
+    * split into lines, forward-fill the number of the last page-marker line
+    * (1 before any; a number past Int.MaxValue marks nothing), then every
+    * markdown link of each line with its emphasis-stripped anchor, skipping
+    * empty parts and image pseudo-links. Rows are (url, page, anchor,
+    * target). */
+  private def twoPassLinks(url: String, text: String): Seq[Seq[Any]] = {
+    val marker = java.util.regex.Pattern.compile("^<!-- Page (\\d+) -->$")
+    val link = "\\[([^\\]]+)\\]\\(([^)]+)\\)".r
+    val lines = text.split("\n", -1).toSeq
+    val pages = lines.scanLeft(1) { (page, line) =>
+      val m = marker.matcher(line)
+      if (m.find()) m.group(1).toIntOption.getOrElse(page) else page
+    }.tail
+    lines.zip(pages).flatMap { case (line, page) =>
+      link.findAllMatchIn(line).map(m => (m.group(1).replaceAll("\\*{1,3}", ""), m.group(2)))
+        .collect { case (a, t) if a.nonEmpty && t.nonEmpty && t != "image" => Seq(url, page, a, t) }
+    }
+  }
+
+  test("x_links_twopass equals a driver-side two-pass over the direct kernel texts") {
+    val want = kernelRefs.flatMap { case (url, r) => twoPassLinks(url, r.extractedText) }
+    assert(want.exists(_(1).asInstanceOf[Int] > 1), "no link below a page marker past page 1")
+    assertQueryRows("x_links_twopass", Seq("url", "page", "anchor", "target"), want)
+  }
+
+  test("page markers: a number past Int.MaxValue marks nothing; a link right under a marker takes its page") {
+    val sp = spark
+    import sp.implicits._
+    val html = "<html><body><p>&lt;!-- Page 2 --&gt;</p>" +
+      "<p>See <a href=\"https://a.example/one\">one</a>.</p>" +
+      "<p>&lt;!-- Page 99999999999 --&gt;</p>" +
+      "<p>See <a href=\"https://a.example/two\">two</a>.</p></body></html>"
+    val url = "https://hostile.example/p"
+    val dir = tmp()
+    ResumableRun.run(spark, Seq(graft.model.PageRow(url,
+      java.sql.Timestamp.valueOf("2024-01-02 03:04:05"), html.getBytes("UTF-8"), "", "en")).toDF(),
+      dir, nBuckets = 1)
+    val table = ResumableRun.readTable(spark, dir)
+    val text = table.select("extracted_text").head().getString(0)
+    assert(text.split("\n").contains("<!-- Page 99999999999 -->"), text)
+    val got = graft.ops.TwoPass.linksFromMarkdown(table)
+      .select("url", "page", "anchor", "target").collect().toSeq.map(_.toSeq)
+    assert(got.contains(Seq(url, 2, "two", "https://a.example/two")), got)
+    assert(got.sortBy(_.mkString("\u0001")) == twoPassLinks(url, text).sortBy(_.mkString("\u0001")))
+    // the kernel puts a blank line after every marker; a hand-built text
+    // puts links directly under markers, one of them ending in "\r"
+    val lines = "[a](x)\n<!-- Page 3 -->\n[b](y)\n<!-- Page 4 -->\r\n[c](z)\n" +
+      "<!-- Page 2147483648 -->\n[d](w)\n"
+    val direct = graft.ops.TwoPass.linksFromMarkdown(Seq(("u", lines)).toDF("url", "extracted_text"))
+      .select("url", "page", "anchor", "target").collect().toSeq.map(_.toSeq)
+    assert(direct == Seq(Seq("u", 1, "a", "x"), Seq("u", 3, "b", "y"), Seq("u", 4, "c", "z"),
+      Seq("u", 4, "d", "w")), direct)
+    assert(direct == twoPassLinks("u", lines))
+  }
+
   test("graft_extract_doc Catalyst expression matches the kernel output") {
     val p = pages.limit(20)
     // direct kernel calls on the same rows — the ground truth the
@@ -347,9 +403,14 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Row("no-html-no-text", ts, null, null, "en"),
       Row("no-ts", null, html, text, "en"),
       Row("with-ts", ts, html, text, "en")), schema)
-    val out = Pipeline.extracted(in)
-      .select(col("url"), col("extracted_text"), col("meta.crawl_date"))
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    val rows = Pipeline.extracted(in)
+      .select(col("url"), col("extracted_text"), col("meta.crawl_date"), col("meta.file_size"))
+      .collect()
+    val out = rows.map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    // the stored page size is the html's byte length, NULL without html
+    val sizes = rows.map(r => r.getString(0) -> r.get(3)).toMap
+    assert(sizes == Map("no-html" -> null, "no-html-no-text" -> null,
+      "no-ts" -> html.length.toLong, "with-ts" -> html.length.toLong), sizes)
     val kernel = graft.extract.Extractor
     assert(out("no-html")._1 == kernel.extract(Array.empty[Byte], text, tsUs).extractedText)
     assert(out("no-html")._1 == text)
@@ -1321,15 +1382,21 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .digest(df.collect().map(_.toString).sorted.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
-  test("the rewritten LSH/ANN queries return the rows of their earlier formulation") {
-    // digests of the rows the formulation with checkpointed groups, broadcast
-    // member joins and a separate within-cluster generate returned at sf0.001
+  test("the rewritten serve queries return the rows of their earlier formulation") {
+    // digests of the rows each query's earlier formulation returned at
+    // sf0.001: the LSH/ANN queries with checkpointed groups, broadcast member
+    // joins and a separate within-cluster generate; x_links_twopass with a
+    // url Window forward fill; x_meta_summary with a pages scan joined by url
     val dir = sf0001
     Map(
       "dd_minhash_lsh" -> (28, "4b69c98ddc7dd3a56a99ac7d4cce33746999a6bda961eb9c5d97a48870b01daa"),
       "dd_jaccard_lsh" -> (28, "adc3f694f3b06b369df5307801bd4402af8a598d74c91f5d73b90f27e2e0f2f2"),
       "dd_embed_neardup" -> (100, "80e5f3a838f12f471439abec7e5e37ea7d88c57254941df5266656fa0d7aaa51"),
-      "ann_lsh" -> (27, "fed6b0bbf5bb65b7662ff4276a07da0b58738952cff0e2f69fad8ccd14e0b537")
+      "ann_lsh" -> (27, "fed6b0bbf5bb65b7662ff4276a07da0b58738952cff0e2f69fad8ccd14e0b537"),
+      "dd_simhash" -> (500, "463761f610482552077998f5fc8d81ff0c333e50b591774c24c787aee9f09da7"),
+      "ann_ivf" -> (50, "f15f99195bba70ce07b25dd141e9ee48cb799a469d68f7c07ade585e31e28719"),
+      "x_links_twopass" -> (1301, "6a7059506d53ba965328daaffa33b5fc3362af897d261f4ab4cac54e6cd1cf3c"),
+      "x_meta_summary" -> (500, "fd1c9afa820f6938916f5a11c6c3af13c9871fc626c4e1b12bd0da719576e7f4")
     ).foreach { case (q, (n, digest)) =>
       val df = SparkEntry.queries(q)(spark, dir)
       assert(df.count() == n, q)
