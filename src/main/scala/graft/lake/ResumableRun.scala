@@ -39,9 +39,9 @@ import graft.pipeline.Pipeline
   */
 object ResumableRun {
 
-  /** Optional phase-timing hook for benchmarking (perfbench `--trace 1`,
-    * BenchExtra `scale`): called with (phase, seconds) after each internal
-    * phase of a run. Null (the default) disables timing entirely —
+  /** Optional phase-timing hook (perfbench `--trace 1` times the phases
+    * with it; CommitSpec kills runs through it after a chosen phase):
+    * called with (phase, seconds) after each internal phase of a run. Null (the default) disables timing entirely —
     * production paths never set it, so the hot path pays one volatile read
     * per phase, not per row. */
   @volatile private[graft] var onPhase: (String, Double) => Unit = null

@@ -22,11 +22,11 @@ import org.apache.spark.sql.functions._
   *    drops ~all true neighbors — sign-LSH prunes nothing at low similarity.
   *    Generic ANN instead uses the IVF path below, which adapts to the data.
   *  - IVF: k centroids trained on a deterministic hash sample, assignment is
-  *    one codegen projection per row (k literal-array dots), queries probe
-  *    their nprobe nearest centroids -> candidate fraction ~ nprobe/k per
-  *    query with measured recall@5 ~0.7 at nprobe/k = 1/4. Centroids are a
-  *    driver-side Array (k*dims doubles) broadcast into the plan as
-  *    literals; training shuffles only (cluster, pos) partial avgs.
+  *    one fused expression per row (plans/CentroidArgsort, k dots), queries
+  *    probe their nprobe nearest centroids -> candidate fraction ~ nprobe/k
+  *    per query with measured recall@5 ~0.7 at nprobe/k = 1/4. Centroids are
+  *    a driver-side Array (k*dims doubles) carried into the plan as a codegen
+  *    reference object; training shuffles only (cluster, pos) partial avgs.
   */
 object Ann {
 
@@ -34,59 +34,30 @@ object Ann {
   val TwinAmp = 0.002
 
   /** cosine(a, b) with double accumulation; arrays are float32 at rest.
-    * Planned as the native codegen expression (plans/CosineSim) — the
-    * previous aggregate(zip_with(...)) HOF chain evaluated interpreted per
-    * row with an allocated intermediate array per dot product; the fused
-    * loop stays inside WholeStageCodegen (round-3 change; equality with the
-    * HOF formulation pinned in SparkJobsSpec). */
+    * NULL when undefined (a zero norm or a null element). Planned as the
+    * native codegen expression (plans/CosineSim) — the previous
+    * aggregate(zip_with(...)) HOF chain evaluated interpreted per row with
+    * an allocated intermediate array per dot product; the fused loop stays
+    * inside WholeStageCodegen (equality with the HOF formulation pinned in
+    * SparkJobsSpec). */
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.GraftBridge
     GraftBridge.column(graft.plans.CosineSim(
       GraftBridge.expression(a), GraftBridge.expression(b)))
   }
 
-  /** The HOF formulation (kept as the equality-test reference). */
-  def cosineHof(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column) =
-      aggregate(zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0), (acc, v) => acc + v)
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  }
-
   /** Deterministic ±1 hyperplane component (xorshift64*-mixed of (p, d)) —
-    * evaluated at PLAN BUILD time into literal arrays so nothing is
-    * re-hashed per row (see ann_lsh history: literal planes are ~7x the
-    * throughput of per-row hashing). */
+    * evaluated once per plan into HyperplaneSigs' plane matrix so nothing
+    * is re-hashed per row (see ann_lsh history: precomputed planes are ~7x
+    * the throughput of per-row hashing). */
   def hyperplaneSign(p: Int, d: Int): Double = {
     var x = p.toLong * 1315423911L + d.toLong * 2654435761L + 17L
     x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27
     if (((x * 0x2545f4914f6cdd1dL) >>> 63) == 0L) 1.0 else -1.0
   }
 
-  /** dot(e, literal weight array) as the native codegen DotProduct — the
-    * constant side is a Literal ArrayData the generated loop reads
-    * directly. */
-  private def dotLit(e: Column, weights: Array[Double]): Column = {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.column(graft.plans.DotProduct(
-      GraftBridge.expression(e), GraftBridge.expression(array(weights.map(lit): _*))))
-  }
-
-  /** r-bit signature of `e` for band `band` (planes band*r .. band*r+r-1).
-    * Kept as the unfused reference formulation — production path is the
-    * fused HyperplaneSigs expression below; equality pinned in
-    * SparkJobsSpec. */
-  def bandSig(e: Column, band: Int, r: Int, dims: Int): Column = {
-    val bits = (0 until r).map { j =>
-      val plane = (0 until dims).map(d => hyperplaneSign(band * r + j, d)).toArray
-      when(dotLit(e, plane) > 0, shiftleft(lit(1), j)).otherwise(lit(0))
-    }
-    bits.reduce((x, y) => x.bitwiseOR(y))
-  }
-
   /** All band signatures in one fused matrix-vector expression (one pass
-    * over the embedding for all bands*r planes instead of 72 separate dot
-    * evaluations — see plans/HyperplaneSigs). */
+    * over the embedding for all bands*r planes — see plans/HyperplaneSigs). */
   def allBandSigs(e: Column, bands: Int, r: Int, dims: Int): Column = {
     import org.apache.spark.sql.graftbridge.GraftBridge
     GraftBridge.column(graft.plans.HyperplaneSigs(
@@ -125,23 +96,12 @@ object Ann {
     e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
 
   /** Probe order over k centroids: array of centroid indices sorted by
-    * descending dot(e, centroid) — one codegen projection (k literal-array
-    * dots; struct sort, no lambda comparator). */
+    * descending dot(e, centroid), ties by ascending index — one fused
+    * expression whose k*dims centroid matrix rides as a codegen reference
+    * object (plans/CentroidArgsort). */
   def centroidRanking(e: Column, cents: Array[Array[Double]]): Column = {
-    // fused expression: the k*dims centroid matrix rides as a codegen
-    // reference object — the literal-array struct-sort formulation put
-    // 1024 literals in the plan and its codegen COMPILE time dominated
-    // ann_ivf's training loop (round 3; equality pinned in SparkJobsSpec)
     import org.apache.spark.sql.graftbridge.GraftBridge
     GraftBridge.column(graft.plans.CentroidArgsort(GraftBridge.expression(e), cents))
-  }
-
-  /** The literal struct-sort formulation (equality-test reference). */
-  def centroidRankingLiteral(e: Column, cents: Array[Array[Double]]): Column = {
-    val entries = cents.zipWithIndex.map { case (c, i) =>
-      struct((-dotLit(e, c)).as("negd"), lit(i).as("i"))
-    }
-    transform(array_sort(array(entries: _*)), x => x.getField("i"))
   }
 
   /** Lloyd iterations for the IVF coarse quantizer, trained on a

@@ -13,25 +13,30 @@ import org.apache.spark.sql.types._
   * Replaces the `aggregate(zip_with(...))` higher-order-function chain in
   * the ANN/near-dup queries: Catalyst HOFs are interpreted per row (lambda
   * closures, boxed element iterators, an allocated intermediate array per
-  * zip_with), while this expression compiles to a primitive fused loop
-  * inside WholeStageCodegen. Semantics match the HOF formulation exactly:
-  * double accumulation in element order over min(len) elements,
-  * dot / (sqrt(dot(a,a)) * sqrt(dot(b,b))); both-zero vectors yield NaN
-  * either way. Null ARRAY inputs are null-propagated. A null ELEMENT
-  * yields NaN (parquet array columns are containsNull=true by default, so
-  * a strict rejection like Simhash64's would refuse every real embedding
-  * column — NaN is the honest "undefined similarity" and every threshold
-  * comparison drops it). The null guard is generated only
+  * zip_with), while this expression is one primitive loop, [[CosineSim.compute]],
+  * called from inside WholeStageCodegen. Semantics match the HOF
+  * formulation on defined inputs: double accumulation in element order over
+  * min(len) elements, dot / (sqrt(dot(a,a)) * sqrt(dot(b,b))). Null ARRAY
+  * inputs are null-propagated.
+  *
+  * An UNDEFINED similarity is NULL: a zero-norm side (0/0) or a null
+  * ELEMENT (parquet array columns are containsNull=true by default, so a
+  * strict rejection like Simhash64's would refuse every real embedding
+  * column). NaN would be the wrong answer here: Spark orders NaN above every
+  * double and `NaN >= t` is true, so a NaN similarity passes every
+  * threshold and ranks first; NULL fails every comparison, sorts last, and
+  * the ANN queries drop it before ranking. The null-element guard runs only
   * when an input's type says nulls are possible.
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "graft_cosine"
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  private def isFloat(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(e: Expression): Boolean = e.dataType match {
@@ -49,155 +54,56 @@ case class CosineSim(left: Expression, right: Expression)
       right.dataType.asInstanceOf[ArrayType].containsNull
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val lt = elemType(left); val rt = elemType(right)
-    val n = math.min(x.numElements(), y.numElements())
-    val guard = elemNullable
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (guard && (x.isNullAt(i) || y.isNullAt(i))) return Double.NaN
-      val xv = if (lt == FloatType) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rt == FloatType) y.getFloat(i).toDouble else y.getDouble(i)
-      dot += xv * yv; na += xv * xv; nb += yv * yv
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    val s = CosineSim.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      isFloat(left), isFloat(right), elemNullable)
+    if (s.isNaN) null else s
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      def get(arr: String, i: String, t: DataType): String = t match {
-        case FloatType => s"(double) $arr.getFloat($i)"
-        case _         => s"$arr.getDouble($i)"
-      }
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      val bad = ctx.freshName("bad")
-      val nullGuard =
-        if (elemNullable)
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { $bad = true; break; }"
-        else ""
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |boolean $bad = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $nullGuard
-         |  double $xv = ${get(a, i, elemType(left))};
-         |  double $yv = ${get(b, i, elemType(right))};
-         |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |}
-         |${ev.value} = $bad ? Double.NaN
-         |  : $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.plans.CosineSim.compute($a, $b,
+         |  ${isFloat(left)}, ${isFloat(right)}, $elemNullable);
+         |${ev.isNull} = Double.isNaN(${ev.value});""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
     copy(left = newLeft, right = newRight)
 }
 
-/** Native codegen'd dot product over two embedding arrays — the building
-  * block behind LSH hyperplane signatures and IVF centroid assignment
-  * (there the right side is a LITERAL plane/centroid array, so codegen
-  * reads it straight out of a constant ArrayData). Same accumulation
-  * semantics as the zip_with/aggregate HOF chain it replaces. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot"
-
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(e: Expression): Boolean = e.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _                                    => false
-    }
-    if (ok(left) && ok(right)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two ARRAY<FLOAT|DOUBLE> inputs, got " +
-        s"(${left.dataType}, ${right.dataType})")
-  }
-
-  // same null-ELEMENT policy as CosineSim: NaN when a slot is null, guard
-  // generated only for types that admit nulls
-  private def elemNullable: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val lt = elemType(left); val rt = elemType(right)
+object CosineSim {
+  /** The cosine loop, shared by interpreted eval and codegen; NaN when the
+    * similarity is undefined (a zero norm, or a null element while
+    * `nullGuard` is set). */
+  def compute(x: ArrayData, y: ArrayData, xFloat: Boolean, yFloat: Boolean,
+      nullGuard: Boolean): Double = {
     val n = math.min(x.numElements(), y.numElements())
-    val guard = elemNullable
-    var dot = 0.0
+    var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      if (guard && (x.isNullAt(i) || y.isNullAt(i))) return Double.NaN
-      val xv = if (lt == FloatType) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rt == FloatType) y.getFloat(i).toDouble else y.getDouble(i)
-      dot += xv * yv
+      if (nullGuard && (x.isNullAt(i) || y.isNullAt(i))) return Double.NaN
+      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      dot += xv * yv; na += xv * xv; nb += yv * yv
       i += 1
     }
-    dot
+    dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      def get(arr: String, i: String, t: DataType): String = t match {
-        case FloatType => s"(double) $arr.getFloat($i)"
-        case _         => s"$arr.getDouble($i)"
-      }
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val bad = ctx.freshName("bad")
-      val nullGuard =
-        if (elemNullable)
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { $bad = true; break; }"
-        else ""
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |boolean $bad = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $nullGuard
-         |  $dot += ${get(a, i, elemType(left))} * ${get(b, i, elemType(right))};
-         |}
-         |${ev.value} = $bad ? Double.NaN : $dot;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
 }
 
 /** All LSH band signatures of an embedding in ONE pass — `sigs[band]` is the
   * r-bit sign pattern of the embedding against hyperplanes band*r..band*r+r-1.
   *
-  * Replaces bands*r separate DotProduct evaluations per row (72 at the
-  * default 6x12 geometry, each re-reading the embedding array) with a single
-  * cache-friendly matrix-vector product: one pass over the embedding,
-  * accumulating all bands*r dots from a precomputed plane matrix carried as
-  * a codegen reference object. Bit/sign semantics identical to the unfused
-  * formulation (same per-plane accumulation order, bit j set iff dot > 0).
+  * One cache-friendly matrix-vector product instead of bands*r separate dot
+  * products per row (72 at the default 6x12 geometry, each re-reading the
+  * embedding array): one pass over the embedding accumulates all bands*r
+  * dots against a precomputed plane matrix carried as a codegen reference
+  * object. Bit j of band b is set iff the dot with plane b*r+j is > 0.
   *
-  * Length-mismatch semantics (ADVICE r3): an embedding with
-  * numElements != dims uses MIN-LENGTH partial dots — the same canonical
-  * semantics as the native DotProduct building block that the unfused
-  * `Ann.bandSig` reference is built on (equality on mismatched lengths is
-  * pinned in SparkJobsSpec). The zip_with/aggregate HOF cosine formulation
-  * differs on mismatch (zip_with pads with null, poisoning the dot) — the
-  * exact-HOF-equivalence claim holds for exactly-dims embeddings only,
-  * which is the only shape an embedding column contains.
+  * An embedding with numElements != dims uses MIN-LENGTH partial dots
+  * (SparkJobsSpec pins full and 48-of-64 inputs against a driver-side
+  * loop). The zip_with/aggregate HOF cosine formulation differs on mismatch
+  * (zip_with pads with null, poisoning the dot); an embedding column only
+  * holds exactly-dims vectors.
   */
 case class HyperplaneSigs(child: Expression, bands: Int, r: Int, dims: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -218,55 +124,45 @@ case class HyperplaneSigs(child: Expression, bands: Int, r: Int, dims: Int)
   private def isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val e = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      HyperplaneSigs.compute(input.asInstanceOf[ArrayData], isFloat, planes, r, dims))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val mat = ctx.addReferenceObj("planes", planes, "double[][]")
+    nullSafeCodeGen(ctx, ev, e =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.plans.HyperplaneSigs.compute($e, $isFloat, $mat, $r, $dims));""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): HyperplaneSigs =
+    copy(child = newChild)
+}
+
+object HyperplaneSigs {
+  /** The matrix-vector pass, shared by interpreted eval and codegen: the
+    * planes.length / r band signatures of `e` against `planes` (one row of
+    * `dims` signs per plane). Dots accumulate in element order. */
+  def compute(e: ArrayData, isFloat: Boolean, planes: Array[Array[Double]],
+      r: Int, dims: Int): Array[Int] = {
+    val nPlanes = planes.length
     val n = math.min(e.numElements(), dims)
-    val nPlanes = bands * r
     val dots = new Array[Double](nPlanes)
-    val fl = isFloat
     var d = 0
     while (d < n) {
-      val v = if (fl) e.getFloat(d).toDouble else e.getDouble(d)
+      val v = if (isFloat) e.getFloat(d).toDouble else e.getDouble(d)
       var p = 0
       while (p < nPlanes) { dots(p) += v * planes(p)(d); p += 1 }
       d += 1
     }
-    val sigs = new Array[Int](bands)
+    val sigs = new Array[Int](nPlanes / r)
     var p = 0
     while (p < nPlanes) {
       if (dots(p) > 0) sigs(p / r) |= 1 << (p % r)
       p += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(sigs)
+    sigs
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mat = ctx.addReferenceObj("planes", planes, "double[][]")
-    val get = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, e => {
-      val dots = ctx.freshName("dots"); val sigs = ctx.freshName("sigs")
-      val n = ctx.freshName("n"); val d = ctx.freshName("d")
-      val p = ctx.freshName("p"); val v = ctx.freshName("v")
-      s"""
-         |int $n = java.lang.Math.min($e.numElements(), $dims);
-         |double[] $dots = new double[${bands * r}];
-         |for (int $d = 0; $d < $n; $d++) {
-         |  double $v = (double) $e.$get($d);
-         |  for (int $p = 0; $p < ${bands * r}; $p++) {
-         |    $dots[$p] += $v * $mat[$p][$d];
-         |  }
-         |}
-         |int[] $sigs = new int[$bands];
-         |for (int $p = 0; $p < ${bands * r}; $p++) {
-         |  if ($dots[$p] > 0) $sigs[$p / $r] |= 1 << ($p % $r);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sigs);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSigs =
-    copy(child = newChild)
 }
 
 /** 64-bit SimHash of a token-hash array in ONE pass — `graft_simhash64(h)`.
@@ -335,9 +231,9 @@ object Simhash64 {
   * whose k*dims inline literals (1024 at k=16, dims=64) ballooned codegen
   * compile time (the dominant cost of ann_ivf's training loop, which builds
   * that plan fresh per Lloyd iteration). The centroid matrix rides along as
-  * a codegen reference object instead. Ordering semantics are identical to
-  * the struct-sort (same per-centroid accumulation order, descending dot,
-  * ascending index on ties). */
+  * a codegen reference object instead. Each centroid's dot accumulates in
+  * element order over min(len) elements (SparkJobsSpec pins the ranking
+  * against a driver-side sort). */
 case class CentroidArgsort(child: Expression, cents: Array[Array[Double]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
@@ -353,21 +249,15 @@ case class CentroidArgsort(child: Expression, cents: Array[Array[Double]])
   private def isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val e = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      CentroidArgsort.argsort(e, isFloat, cents))
-  }
+      CentroidArgsort.compute(input.asInstanceOf[ArrayData], isFloat, cents))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mat = ctx.addReferenceObj("cents", cents, "double[][]")
-    val fl = if (isFloat) "true" else "false"
-    nullSafeCodeGen(ctx, ev, e => {
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.plans.CentroidArgsort.argsort($e, $fl, $mat));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, e =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.plans.CentroidArgsort.compute($e, $isFloat, $mat));""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): CentroidArgsort =
@@ -376,7 +266,7 @@ case class CentroidArgsort(child: Expression, cents: Array[Array[Double]])
 
 object CentroidArgsort {
   /** dots + stable argsort, shared by interpreted eval and codegen. */
-  def argsort(e: ArrayData, isFloat: Boolean, cents: Array[Array[Double]]): Array[Int] = {
+  def compute(e: ArrayData, isFloat: Boolean, cents: Array[Array[Double]]): Array[Int] = {
     val k = cents.length
     val dots = new Array[Double](k)
     var c = 0

@@ -23,11 +23,15 @@ object PlanCheck {
       .filter(size(col("t")) > 0)
   }
 
-  /** Runs `df` and reports whether its executed (adaptive) plan reads a
-    * shuffle or broadcast through a ReusedExchange. */
-  private def reusesShuffles(df: org.apache.spark.sql.DataFrame): Boolean = {
-    df.collect()
-    df.queryExecution.executedPlan.toString.contains("ReusedExchange")
+  /** Whether every operator of a final adaptive plan (`executed`, the
+    * executed plan's tree string) that evaluates expression `fn` sits inside
+    * a WholeStageCodegen stage: its line carries a `*(n)` marker. A scan
+    * line only lists `fn` among its pushed DataFilters, which the Filter
+    * above it evaluates. */
+  private def codegenned(executed: String, fn: String): Boolean = {
+    val lines = executed.split("== Initial Plan ==").head.split("\n")
+      .filter(l => l.contains(fn) && !l.contains("FileScan"))
+    lines.nonEmpty && lines.forall(l => "^[\\s:|+-]*\\*\\(\\d+\\)".r.findFirstIn(l).isDefined)
   }
 
   def main(args: Array[String]): Unit = {
@@ -42,7 +46,7 @@ object PlanCheck {
       "x_extract", "x_links", "x_links_twopass", "x_meta_summary", "q_agg",
       "q_join_collect", "q_forward_fill", "q_topk", "q_topk_custom",
       "dd_minhash_lsh", "dd_jaccard_lsh", "dd_exact",
-      "dd_embed_neardup", "ann_topk", "ann_ivf", "ta_langid",
+      "dd_embed_neardup", "ann_topk", "ann_lsh", "ann_ivf", "ta_langid",
       "q_time_window", "q_asof_join", "ta_sample", "dd_simhash",
       "q_bucketed_join")
 
@@ -52,7 +56,8 @@ object PlanCheck {
     md.append("- extraction is one narrow map stage: no Exchange before the kernel\n")
     md.append("- parquet scans carry pruned ReadSchema (column pruning past the UDF)\n")
     md.append("- small-side joins broadcast (BroadcastHashJoin / BroadcastNestedLoopJoin)\n")
-    md.append("- aggregations are partial->final HashAggregate (map-side combine)\n\n")
+    md.append("- aggregations are partial->final HashAggregate (map-side combine)\n")
+    md.append("- the fused vector expressions run inside WholeStageCodegen stages\n\n")
 
     var failures = 0
     interesting.foreach { name =>
@@ -60,6 +65,9 @@ object PlanCheck {
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       md.append(s"## $name\n\n```\n$plan\n```\n\n")
+      // the final adaptive plan: AQE inserts the codegen stages and the
+      // reused exchanges only as the query runs
+      lazy val executed = { df.collect(); df.queryExecution.executedPlan.toString }
       def check(label: String, ok: Boolean): Unit = {
         md.append(s"- ${if (ok) "PASS" else "FAIL"}: $label\n")
         if (!ok) failures += 1
@@ -94,7 +102,7 @@ object PlanCheck {
         // properties are checked on the production helpers' own plans.
         case "dd_jaccard_lsh" =>
           check("shared subtrees run once (reused shuffles, no checkpoint)",
-            reusesShuffles(df) && !plan.contains("Scan ExistingRDD"))
+            executed.contains("ReusedExchange") && !plan.contains("Scan ExistingRDD"))
           check("rerank joins by candidate id (no BroadcastNestedLoopJoin)",
             !plan.contains("BroadcastNestedLoopJoin"))
           val groupsJ = graft.OpsQueries.minhashGroups(lshBase(spark, sfDir), 3, 16)
@@ -111,7 +119,7 @@ object PlanCheck {
               !candPlan.contains("CartesianProduct"))
         case "dd_minhash_lsh" =>
           check("shared subtrees run once (reused shuffles, no checkpoint)",
-            reusesShuffles(df) && !plan.contains("Scan ExistingRDD"))
+            executed.contains("ReusedExchange") && !plan.contains("Scan ExistingRDD"))
           // round 4: signatures are one fused per-row expression — no
           // shingle explode / min-agg before the join. The collapse
           // groupBy's min(doc_id)/min_by(sigs) rep selection is the ONLY
@@ -128,17 +136,24 @@ object PlanCheck {
             groupsPlan.contains("min_by"))
         case "dd_embed_neardup" =>
           check("shared subtrees run once (reused shuffles, no checkpoint)",
-            reusesShuffles(df) && !plan.contains("Scan ExistingRDD"))
+            executed.contains("ReusedExchange") && !plan.contains("Scan ExistingRDD"))
           check("no all-pairs BroadcastNestedLoopJoin",
             !plan.contains("BroadcastNestedLoopJoin"))
           check("candidate join is hash-keyed on (band, sig)",
             plan.contains("HashJoin") || plan.contains("SortMergeJoin"))
+          check("graft_hyperplane_sigs and graft_cosine run inside WholeStageCodegen",
+            codegenned(executed, "graft_hyperplane_sigs") && codegenned(executed, "graft_cosine"))
         case "ann_topk" =>
           check("broadcast on the query side", plan.contains("Broadcast"))
+        case "ann_lsh" =>
+          check("graft_hyperplane_sigs and graft_cosine run inside WholeStageCodegen",
+            codegenned(executed, "graft_hyperplane_sigs") && codegenned(executed, "graft_cosine"))
         case "ann_ivf" =>
           check("broadcast on the probe/query side", plan.contains("Broadcast"))
           check("no all-pairs BroadcastNestedLoopJoin",
             !plan.contains("BroadcastNestedLoopJoin"))
+          check("graft_centroid_argsort and graft_cosine run inside WholeStageCodegen",
+            codegenned(executed, "graft_centroid_argsort") && codegenned(executed, "graft_cosine"))
         case "x_links" =>
           check("reads the committed extraction table, kernel not re-run",
             !plan.contains("MapElements") && plan.contains("Scan parquet"))

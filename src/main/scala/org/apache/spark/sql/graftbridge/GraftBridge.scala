@@ -5,7 +5,7 @@ import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
 import graft.plans.{TopKPerKeyNode, TopKStrategy}
 
 /** The single construction path for every custom Catalyst node. Custom
-  * expressions (`ExtractDoc`, `CosineSim`, `DotProduct`, `Simhash64`,
+  * expressions (`ExtractDoc`, `CosineSim`, `Simhash64`,
   * `MinhashSigs`, `BandHashes`, `HyperplaneSigs`, `CentroidArgsort`,
   * `PagedLinkLines`) enter a plan as typed Columns,
   * `column(Node(expression(..)))`; none is registered under a SQL function

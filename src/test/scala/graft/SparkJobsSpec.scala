@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -35,6 +35,16 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-test").toString
+
+  /** `f` with the given session confs set, restored afterwards. */
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 
   /** Spark jobs started while `f` ran. */
   private def jobsStarted(f: => Unit): Int = {
@@ -760,42 +770,6 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(embOut.filter(col("a_id") === 3L && col("b_id") === 300001L).count() == 1)
   }
 
-  test("bucket-width cap bounds near-identical non-byte-equal pile-ups") {
-    // the residual hazard the md5(text) collapse cannot reach: whitespace
-    // variants have different raw text (distinct reps) but identical token
-    // sequences, hence identical signatures — one bucket, quadratic again.
-    // The maxBucket count pre-pass must drop the overflow bucket's pairs
-    // while leaving every other candidate untouched.
-    val sp = spark
-    import sp.implicits._
-    val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text").filter(col("doc_id") < 100)
-    val srcRow0 = base.filter(size(split(col("text"), "\\s+")) >= 40)
-      .orderBy("doc_id").limit(1).collect()(0)
-    val srcId0 = srcRow0.getLong(0) // same tokens as the variants: in-cluster
-    val srcText = srcRow0.getString(1)
-    val variants = (0 until 150).map(k => (600000L + k, srcText + (" " * (k + 1))))
-    val d = base.unionAll(variants.toDF("doc_id", "text"))
-      .select(col("doc_id"), col("text"),
-        filter(split(col("text"), " "), x => length(x) > 0).as("t"))
-      .filter(size(col("t")) > 0)
-    val groups = OpsQueries.minhashGroups(d, 3, 16)
-    // distinct raw texts => the collapse does NOT merge the variants
-    assert(groups.filter(col("doc_id") >= 600000L).count() == 150)
-    val bands = OpsQueries.bandBuckets(groups, 16, 4)
-    def inC(id: Long) = id == srcId0 || id >= 600000L // 151-member pile-up
-    val uncapped = OpsQueries.repCandidates(bands).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(uncapped.count { case (a, b) => inC(a) && inC(b) } ==
-      151 * 150 / 2, "expected the quadratic pile-up without a cap")
-    val capped = OpsQueries.repCandidates(bands, maxBucket = Some(64)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!capped.exists { case (a, b) => inC(a) && inC(b) },
-      "cap must drop the overflow bucket's pairs")
-    // every candidate outside the overflow bucket survives unchanged
-    assert(capped == uncapped.filterNot { case (a, b) => inC(a) && inC(b) })
-  }
-
   test("collapsed LSH banding equals direct banding of every doc (pair-set identity)") {
     // implementation-independent gate for the duplicate-cluster collapse:
     // on a corpus with duplicate clusters of sizes 1/2/3/7, the collapsed
@@ -844,7 +818,7 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val y = e.select((col("vec_id") - 1).as("id"), col("embedding").as("be"))
     val j = x.join(y, "id")
     val maxDiff = j.select(abs(graft.ops.Ann.cosine(col("ae"), col("be")) -
-        graft.ops.Ann.cosineHof(col("ae"), col("be"))).as("d"))
+        References.cosineHof(col("ae"), col("be"))).as("d"))
       .agg(max(col("d"))).first.getDouble(0)
     assert(maxDiff <= 1e-12, s"native cosine diverged from HOF by $maxDiff")
     // the fused loop must sit INSIDE a WholeStageCodegen stage ("*(" marker);
@@ -855,45 +829,146 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.split("\n").exists(l =>
       l.contains("graft_cosine") && l.trim.stripPrefix("+- ").startsWith("*(")), plan)
-    // null ELEMENTS yield NaN (round-5 review: the SQL-registered cosine
-    // previously read undefined bytes on a null slot); non-null arrays of
-    // a containsNull=true type still compute exactly
+    // an undefined similarity is NULL: a null ELEMENT, or a zero norm;
+    // non-null arrays of a containsNull=true type still compute exactly.
+    // Codegen and interpreted eval agree on all three.
     val sp2 = spark
     import sp2.implicits._
-    val nd = Seq((Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](1.0, 2.0)),
-      (Seq[java.lang.Double](1.0, 0.0), Seq[java.lang.Double](1.0, 0.0)))
-      .toDF("a", "b")
-      .select(graft.ops.Ann.cosine(col("a"), col("b")).as("s")).collect()
-    assert(nd(0).getDouble(0).isNaN)
-    assert(math.abs(nd(1).getDouble(0) - 1.0) < 1e-12)
+    // (read back from parquet: a local relation's projection is folded
+    // interpreted by the optimizer, whatever the codegen settings)
+    val pairsDir = tmp()
+    Seq((0, Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](1.0, 2.0)),
+      (1, Seq[java.lang.Double](0.0, 0.0), Seq[java.lang.Double](1.0, 2.0)),
+      (2, Seq[java.lang.Double](1.0, 0.0), Seq[java.lang.Double](1.0, 0.0)))
+      .toDF("i", "a", "b").write.mode("overwrite").parquet(pairsDir)
+    val pairs = spark.read.parquet(pairsDir).orderBy("i")
+    Seq("CODEGEN_ONLY", "NO_CODEGEN").foreach { mode =>
+      withConf("spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString) {
+        val nd = pairs.select(graft.ops.Ann.cosine(col("a"), col("b")).as("s")).collect()
+        assert(nd(0).isNullAt(0) && nd(1).isNullAt(0), s"$mode: ${nd.mkString(";")}")
+        assert(math.abs(nd(2).getDouble(0) - 1.0) < 1e-12, mode)
+      }
+    }
   }
 
-  test("fused HyperplaneSigs equals the per-band unfused signature formulation") {
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+  /** Asserts `Ann.bandedSigs` over `e` (n rows) equals the reference: band
+    * b's r sign bits from a driver-side loop over each collected embedding,
+    * plane b*r+j's dot accumulated in element order over min(len, dims)
+    * elements. */
+  private def assertHyperplaneSigs(e: DataFrame, n: Int): Unit = {
     val bands = 6; val r = 12; val dims = 64
     val fused = graft.ops.Ann.bandedSigs(e, bands, r, dims)
       .select("vec_id", "band", "sig").collect()
       .map(x => (x.getLong(0), x.getInt(1)) -> x.getInt(2)).toMap
-    val unfused = e.select(col("vec_id"),
-        explode(array((0 until bands).map(b => struct(lit(b).as("band"),
-          graft.ops.Ann.bandSig(col("embedding"), b, r, dims).as("sig"))): _*)).as("bs"))
-      .select(col("vec_id"), col("bs.band"), col("bs.sig")).collect()
-      .map(x => (x.getLong(0), x.getInt(1)) -> x.getInt(2)).toMap
-    assert(fused.size == unfused.size && fused.size == 500 * bands)
+    val unfused = e.collect().flatMap { row =>
+      val v = row.getSeq[Float](1)
+      (0 until bands).map { b =>
+        val sig = (0 until r).foldLeft(0) { (bits, j) =>
+          var dot = 0.0
+          (0 until math.min(v.length, dims)).foreach(d =>
+            dot += v(d).toDouble * graft.ops.Ann.hyperplaneSign(b * r + j, d))
+          if (dot > 0) bits | (1 << j) else bits
+        }
+        (row.getLong(0), b) -> sig
+      }
+    }.toMap
+    assert(fused.size == n * bands && unfused.size == n * bands)
     assert(fused == unfused)
   }
 
-  test("fused CentroidArgsort equals the literal struct-sort ranking") {
+  test("fused HyperplaneSigs equals the per-band unfused signature formulation") {
+    assertHyperplaneSigs(
+      spark.read.parquet(s"$sf0001/embeddings.parquet").select("vec_id", "embedding"), 500)
+  }
+
+  test("HyperplaneSigs min-length semantics pinned against the unfused formulation on truncated embeddings") {
+    // 48-of-64-dim arrays: the dots are min-length partial dots
+    assertHyperplaneSigs(
+      spark.read.parquet(s"$sf0001/embeddings.parquet").filter(col("vec_id") < 50)
+        .select(col("vec_id"), slice(col("embedding"), 1, 48).as("embedding")), 50)
+  }
+
+  test("fused CentroidArgsort equals a driver-side (dot desc, index asc) sort") {
+    // the reference: per collected embedding, k dots accumulated in element
+    // order, then a sortWith on (dot desc, index asc). Ties are planted so
+    // the tie rule is exercised: centroid 5 duplicates centroid 2 (tied on
+    // every row), and an all-zero vector ties every centroid at 0
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = graft.ops.Ann.trainCentroids(e, k = 16, iters = 1)
-    val fused = e.select(col("vec_id"),
+      .select("vec_id", "embedding")
+    val trained = graft.ops.Ann.trainCentroids(e, k = 16, iters = 1)
+    val cents = trained.updated(5, trained(2).clone())
+    val planted = e.unionAll(spark.range(1).select(lit(900001L).as("vec_id"),
+      array_repeat(lit(0.0f), 64).as("embedding")))
+    val fused = planted.select(col("vec_id"),
         graft.ops.Ann.centroidRanking(col("embedding"), cents).as("rk"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val literal = e.select(col("vec_id"),
-        graft.ops.Ann.centroidRankingLiteral(col("embedding"), cents).as("rk"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(fused.size == 500)
-    assert(fused == literal)
+    val reference = planted.collect().map { row =>
+      val v = row.getSeq[Float](1)
+      val dots = cents.map { c =>
+        var dot = 0.0
+        (0 until math.min(v.length, c.length)).foreach(i => dot += v(i).toDouble * c(i))
+        dot
+      }
+      row.getLong(0) -> (0 until cents.length).sortWith((a, b) =>
+        dots(a) > dots(b) || (dots(a) == dots(b) && a < b))
+    }.toMap
+    assert(fused.size == 501)
+    assert(fused == reference)
+    assert(fused(900001L) == (0 until 16))
+  }
+
+  test("an undefined cosine (zero vector, null element) is in no ANN or near-dup row") {
+    // an all-zero vector (0/0 with everything) and a copy of query vector 0
+    // with one null element; ids % 5 != 0, so withTwins adds no twins of
+    // them. A NaN similarity would pass the 0.92 cut and rank first.
+    val dir = tmp()
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet").select("vec_id", "embedding")
+    val zero = spark.range(1).select(lit(700001L).as("vec_id"),
+      array_repeat(lit(0.0f), 64).as("embedding"))
+    val holed = e.filter(col("vec_id") === 0L).select(lit(700002L).as("vec_id"),
+      transform(col("embedding"), (x, i) => when(i =!= 5, x)).as("embedding"))
+    e.unionAll(zero).unionAll(holed).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val planted = Set(700001L, 700002L)
+    Seq("ann_topk" -> Seq("cand_id"), "ann_lsh" -> Seq("cand_id"),
+        "ann_ivf" -> Seq("cand_id"), "dd_embed_neardup" -> Seq("a_id", "b_id"))
+      .foreach { case (q, ids) =>
+        val rows = SparkEntry.queries(q)(spark, dir).collect()
+        assert(rows.nonEmpty, q)
+        val hits = rows.filter(r => ids.exists(c => planted(r.getAs[Long](c))))
+        assert(hits.isEmpty, s"$q: ${hits.take(5).mkString("; ")}")
+      }
+    // the defined candidates still fill every query's five ranks
+    assert(SparkEntry.queries("ann_topk")(spark, dir).count() == 50)
+  }
+
+  test("q_approx estimates within their stated error of the exact values") {
+    // approx_count_distinct's default relative SD is 0.05 (HLL++): allow 3
+    // SDs. approx_percentile at accuracy 1000 answers rank ceil(n/2) within
+    // ceil(n/1000) ranks (Spark's QuantileSummaries target error is
+    // ceil(relativeError * n)): some rank of the returned median, (count
+    // below, count at or below], must lie that close. Prices carry 2
+    // decimals, so +-0.005 buckets the rounded output exactly.
+    Seq(sf0001, new java.io.File(sf0001).getParent + "/sf0.01").foreach { sf =>
+      val li = spark.read.parquet(s"$sf/lineitem.parquet")
+      val out = SparkEntry.queries("q_approx")(spark, sf).collect()
+      assert(out.length == 3, sf)
+      out.foreach { r =>
+        val flag = r.getAs[String]("l_returnflag")
+        val approx = r.getAs[Long]("approx_parts")
+        val exact = r.getAs[Long]("exact_parts")
+        assert(math.abs(approx - exact) <= 3 * 0.05 * exact, s"$sf $flag: $approx vs $exact")
+        val m = r.getAs[Double]("approx_median_price")
+        val g = li.filter(col("l_returnflag") === flag)
+        val n = g.count()
+        val target = (n + 1) / 2; val err = (n + 999) / 1000
+        val below = g.filter(col("l_extendedprice") < m - 0.005).count()
+        val atOrBelow = g.filter(col("l_extendedprice") <= m + 0.005).count()
+        assert(below + 1 <= target + err && atOrBelow >= target - err,
+          s"$sf $flag: median $m has rank ($below, $atOrBelow] of $n, target $target +- $err")
+        assert(exact == g.select(col("l_partkey")).distinct().count(), s"$sf $flag")
+      }
+    }
   }
 
   test("extraction plan is a single narrow map stage (no shuffle)") {
@@ -911,7 +986,7 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("hashes", transform(col("t"), x => xxhash64(x)))
     val both = d.select(col("doc_id"),
       OpsQueries.simhashFused(col("hashes")).as("f"),
-      OpsQueries.simhashHof(col("hashes")).as("h")).cache()
+      References.simhashHof(col("hashes")).as("h")).cache()
     assert(both.count() == 500)
     assert(both.filter(col("f") =!= col("h")).count() == 0,
       "fused simhash diverged from the HOF formulation")
@@ -969,7 +1044,7 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("doc_id"), toks.as("t"))
     val both = d.select(col("doc_id"),
       OpsQueries.minhashFused(col("t"), 3, 16).as("f"),
-      OpsQueries.minhashRef(col("t"), 3, 16).as("r")).cache()
+      References.minhashRef(col("t"), 3, 16).as("r")).cache()
     assert(both.count() == 505)
     val diff = both.filter(not(col("f") === col("r")))
     assert(diff.count() == 0, diff.collect().take(3).mkString("; "))
@@ -988,29 +1063,10 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("doc_id"), toks.as("t"))
       .select(col("doc_id"),
         OpsQueries.minhashFused(col("t"), 5, 8).as("f"),
-        OpsQueries.minhashRef(col("t"), 5, 8).as("r"))
+        References.minhashRef(col("t"), 5, 8).as("r"))
     val diff5 = short5.filter(not(col("f") === col("r")))
     assert(diff5.count() == 0, diff5.collect().mkString("; "))
     assert(short5.filter(size(col("f")) =!= 8).count() == 0)
-  }
-
-  test("HyperplaneSigs min-length semantics pinned against the unfused formulation on truncated embeddings") {
-    // ADVICE r3: length-mismatched embeddings use min-length partial dots —
-    // the same semantics as the DotProduct-based unfused bandSig. Pin the
-    // fused == unfused equality on 48-of-64-dim arrays explicitly.
-    val bands = 6; val r = 12; val dims = 64
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .limit(50).select(col("vec_id"), slice(col("embedding"), 1, 48).as("embedding"))
-    val fused = graft.ops.Ann.bandedSigs(e, bands, r, dims)
-      .select("vec_id", "band", "sig").collect()
-      .map(x => (x.getLong(0), x.getInt(1)) -> x.getInt(2)).toMap
-    val unfused = e.select(col("vec_id"),
-        explode(array((0 until bands).map(b => struct(lit(b).as("band"),
-          graft.ops.Ann.bandSig(col("embedding"), b, r, dims).as("sig"))): _*)).as("bs"))
-      .select(col("vec_id"), col("bs.band"), col("bs.sig")).collect()
-      .map(x => (x.getLong(0), x.getInt(1)) -> x.getInt(2)).toMap
-    assert(fused.size == 50 * bands)
-    assert(fused == unfused)
   }
 
   /** One 66-bucket run shared by the two tests below: its directory, what
