@@ -2,78 +2,20 @@ package graft.extract
 
 import graft.model._
 
-/** Exact ports of reference behaviors that have no load-bearing role for
-  * the HTML/PDF payload but are part of the reference's observable
-  * semantics (SURVEY.md §2 rows O2, X21, X22, S2, M2, X23). They are unit-
-  * tested against the reference's documented behavior so a user migrating
-  * PPTX-derived workloads gets identical decisions.
+/** Reference formatting and lookup tables the kernel and the queries
+  * share: the metadata comment block (M2) with its MB (X23), datetime and
+  * 1-dp renderings, and the input priority table `q_priority_order` reads
+  * (S2/O4).
   */
 object Fidelity {
 
-  /** X21: name-based semantic role classifier
-    * (accessibility_extractor_v2.py:216-231). Precedence: title (name has
-    * "title" but not "subtitle") > slide_number (name has "slide number") >
-    * content (has text) > other. */
-  def semanticRole(shapeName: String, textPreview: String): String = {
-    val n = Option(shapeName).getOrElse("").toLowerCase(java.util.Locale.ROOT)
-    if (n.contains("title") && !n.contains("subtitle")) "title"
-    else if (n.contains("slide number")) "slide_number"
-    else if (textPreview != null && textPreview.trim.nonEmpty) "content"
-    else "other"
-  }
-
-  /** O2: the reference's semantic reorder quirk — titles ++ REVERSED
-    * content ++ other; slide_number shapes are dropped from the output
-    * (accessibility_extractor_v2.py:240-250, order at :243). `roles` is
-    * parallel to `items`. */
-  def semanticOrder[A](items: Seq[A], roles: Seq[String]): Seq[A] = {
-    val titles = Vector.newBuilder[A]
-    val content = Vector.newBuilder[A]
-    val other = Vector.newBuilder[A]
-    items.zip(roles).foreach {
-      case (a, "title")        => titles += a
-      case (_, "slide_number") => () // dropped
-      case (a, "content")      => content += a
-      case (a, _)              => other += a
-    }
-    titles.result() ++ content.result().reverse ++ other.result()
-  }
-
-  /** X22: arrow-type membership — 17-entry list, substring match on the
-    * uppercased type name (content_extractor.py:513-537). */
-  private val arrowTypes = Array(
-    "LEFT_ARROW", "DOWN_ARROW", "UP_ARROW", "RIGHT_ARROW",
-    "LEFT_RIGHT_ARROW", "UP_DOWN_ARROW", "QUAD_ARROW",
-    "LEFT_RIGHT_UP_ARROW", "BENT_ARROW", "U_TURN_ARROW",
-    "CURVED_LEFT_ARROW", "CURVED_RIGHT_ARROW",
-    "CURVED_UP_ARROW", "CURVED_DOWN_ARROW",
-    "STRIPED_RIGHT_ARROW", "NOTCHED_RIGHT_ARROW", "BLOCK_ARC")
-
-  def isArrowShape(autoShapeType: String): Boolean = {
-    if (autoShapeType == null || autoShapeType.isEmpty) return false
-    val s = autoShapeType.toUpperCase(java.util.Locale.ROOT)
-    arrowTypes.exists(s.contains)
-  }
-
-  /** S2/O4: input priority table (config.py:78-92); unknown kinds sort last
-    * (folder_processor.py:102-114 returns 999 for unknown). */
+  /** S2/O4: input priority table (config.py:78-92). Unknown kinds are
+    * absent; `q_priority_order` sorts them last at 999
+    * (folder_processor.py:102-114). */
   val processingPriorities: Map[String, Int] = Map(
     "pptx" -> 1, "ppt" -> 1, "docx" -> 2, "doc" -> 2, "pdf" -> 3,
     "xlsx" -> 4, "xls" -> 4, "html" -> 5, "htm" -> 5,
     "csv" -> 6, "json" -> 6, "xml" -> 6, "zip" -> 7)
-
-  def processingPriority(kind: String): Int =
-    processingPriorities.getOrElse(Option(kind).getOrElse("").toLowerCase(java.util.Locale.ROOT), 999)
-
-  /** X5: bullet-level resolution precedence (text_processor.py:254-285):
-    * xml-bullet+xml-level > xml-bullet+ppt-level > xml-bullet+0 >
-    * ppt-level > -1. Our DOM analog (li nesting depth) uses this with
-    * xmlLevel = nesting depth; ported exactly for PPTX-derived workloads. */
-  def determineBulletLevel(isXmlBullet: Boolean, xmlLevel: Option[Int],
-      pptLevel: Option[Int]): Int = {
-    if (isXmlBullet) xmlLevel.getOrElse(pptLevel.getOrElse(0))
-    else pptLevel.getOrElse(-1)
-  }
 
   /** X23: MB formatting — bytes/1024^2 at 2 decimals
     * (metadata_extractor.py:504-505). */
@@ -147,8 +89,4 @@ object Fidelity {
     sb.append("-->\n")
     sb.toString
   }
-
-  /** prepend like add_pptx_metadata_for_claude (:380). */
-  def withMetadataComment(markdown: String, meta: DocMeta, sizeBytes: Long = -1L): String =
-    metadataComment(meta, sizeBytes) + markdown
 }

@@ -147,14 +147,17 @@ object Runs {
       i += 1
     }
     if (!needsMerge) return runs
-    val out = new ArrayBuffer[(String, Flags)]()
+    // one builder per group of equal-flag runs: re-concatenating the merged
+    // prefix for each run would copy O(chars²) on a wide paragraph
+    val out = Vector.newBuilder[(String, Flags)]
+    val sb = new java.lang.StringBuilder
+    var flags = runs.head._2
     runs.foreach { case (t, f) =>
-      if (out.nonEmpty && out.last._2 == f) {
-        val (pt, pf) = out.remove(out.length - 1)
-        out += ((pt + t, pf))
-      } else out += ((t, f))
+      if (f != flags) { out += ((sb.toString, flags)); sb.setLength(0); flags = f }
+      sb.append(t)
     }
-    out.toVector
+    out += ((sb.toString, flags))
+    out.result()
   }
 
   /** Strip the bullet prefix from the combined text and re-map onto runs

@@ -157,11 +157,3 @@ final case class ExtractResult(
     scores: Vector[PageScore],
     error: String // null when clean
 )
-
-/** Output row of the extraction pipeline (FIXTURES.md §2). */
-final case class ExtractedDoc(
-    url: String,
-    extracted_text: String,
-    spans: Seq[Span],
-    error: String
-)

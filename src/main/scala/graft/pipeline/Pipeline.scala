@@ -1,12 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.synth.Synth
 
 /** The Spark program (SURVEY.md §7.1 module 6): pages scan -> skew-aware
-  * repartition -> extraction kernel -> extracted / links / metrics outputs.
+  * repartition -> extraction kernel -> extracted / links outputs.
   *
   * Scale design notes (the 100 TB story):
   *  - The whole reference pipeline is ONE narrow map stage — no shuffle on
@@ -169,34 +169,5 @@ object Pipeline {
     val domain = domainOf
     val isHot = if (hot.isEmpty) lit(false) else domain.isin(hot.toSeq: _*)
     pmod(when(isHot, xxhash64(col("url"))).otherwise(xxhash64(domain)), lit(nBuckets))
-  }
-
-  // ---- metrics sidecar (A9-A11 analog + BASELINE.json lineage) -------------
-
-  final case class PartitionMetrics(partition_id: Int, docs: Long, errors: Long,
-      bytes: Long, elapsed_ms: Long, docs_per_sec: Double)
-
-  /** Per-partition lineage/metrics rows (R1/A11: success+error counters;
-    * BASELINE.json: "writes per-partition lineage and doc/sec metrics to a
-    * sidecar table"). Runs the kernel; timing fields are wall-clock and not
-    * golden-checked (FIXTURES.md §2). */
-  def metrics(spark: SparkSession, pages: DataFrame): Dataset[PartitionMetrics] = {
-    import spark.implicits._
-    pages.select(col("url"), col("html"), col("text"))
-      .as[(String, Array[Byte], String)]
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val t0 = System.nanoTime()
-        var docs = 0L; var errors = 0L; var bytes = 0L
-        it.foreach { case (_, html, text) =>
-          val r = graft.extract.Extractor.extract(html, text)
-          docs += 1
-          bytes += (if (html == null) 0 else html.length)
-          if (r.error != null) errors += 1
-        }
-        val ms = (System.nanoTime() - t0) / 1000000L
-        Iterator.single(PartitionMetrics(pid, docs, errors, bytes, ms,
-          if (ms > 0) docs * 1000.0 / ms else docs.toDouble))
-      }
   }
 }

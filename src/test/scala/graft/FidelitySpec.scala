@@ -6,44 +6,12 @@ import graft.model.DocMeta
 
 class FidelitySpec extends AnyFunSuite {
 
-  test("X21 semantic role precedence (accessibility_extractor_v2.py:216-231)") {
-    assert(Fidelity.semanticRole("Title 1", "hello") == "title")
-    assert(Fidelity.semanticRole("Subtitle 2", "hello") == "content") // subtitle excluded from title
-    assert(Fidelity.semanticRole("Slide Number Placeholder 3", "4") == "slide_number")
-    assert(Fidelity.semanticRole("TextBox 7", "body text") == "content")
-    assert(Fidelity.semanticRole("Oval 9", "") == "other")
-    assert(Fidelity.semanticRole("Oval 9", "   ") == "other")
-  }
-
-  test("O2 semantic order: titles ++ reversed(content) ++ other; slide numbers dropped") {
-    val items = Seq("t1", "c1", "c2", "sn", "o1", "c3", "t2")
-    val roles = Seq("title", "content", "content", "slide_number", "other", "content", "title")
-    assert(Fidelity.semanticOrder(items, roles) ==
-      Seq("t1", "t2", "c3", "c2", "c1", "o1"))
-  }
-
-  test("X22 arrow membership: substring match on 17-entry list") {
-    assert(Fidelity.isArrowShape("MSO_AUTO_SHAPE_TYPE.LEFT_ARROW"))
-    assert(Fidelity.isArrowShape("curved_up_arrow".toUpperCase))
-    assert(Fidelity.isArrowShape("BLOCK_ARC (95)"))
-    assert(!Fidelity.isArrowShape("RECTANGLE"))
-    assert(!Fidelity.isArrowShape(""))
-    assert(!Fidelity.isArrowShape(null))
-  }
-
-  test("S2 processing priorities (config.py:78-92); unknown -> 999") {
-    assert(Fidelity.processingPriority("pptx") == 1)
-    assert(Fidelity.processingPriority("PDF") == 3)
-    assert(Fidelity.processingPriority("zip") == 7)
-    assert(Fidelity.processingPriority("weird") == 999)
-  }
-
-  test("X5 bullet level precedence (text_processor.py:254-285)") {
-    assert(Fidelity.determineBulletLevel(true, Some(2), Some(1)) == 2)
-    assert(Fidelity.determineBulletLevel(true, None, Some(1)) == 1)
-    assert(Fidelity.determineBulletLevel(true, None, None) == 0)
-    assert(Fidelity.determineBulletLevel(false, Some(2), Some(1)) == 1)
-    assert(Fidelity.determineBulletLevel(false, None, None) == -1)
+  test("S2 priority table (config.py:78-92) that q_priority_order reads") {
+    val p = Fidelity.processingPriorities
+    assert(p.get("pptx").contains(1))
+    assert(p.get("pdf").contains(3))
+    assert(p.get("zip").contains(7))
+    assert(!p.contains("weird")) // q_priority_order filters it out, else 999
   }
 
   test("X23 MB formatting: 2dp of bytes/1024^2") {
@@ -63,12 +31,12 @@ class FidelitySpec extends AnyFunSuite {
 
   test("M2 metadata comment: prepended, only non-empty fields") {
     val meta = DocMeta("T", "", "D", "", "en", 2)
-    val out = Fidelity.withMetadataComment("# Body", meta)
+    val out = Fidelity.metadataComment(meta)
     assert(out.startsWith("\n<!-- DOCUMENT METADATA:\n"))
     assert(out.contains("Title: T\n"))
     assert(out.contains("Description: D\n"))
     assert(!out.contains("Author"))
     assert(out.contains("Pages: 2\n"))
-    assert(out.endsWith("-->\n# Body"))
+    assert(out.endsWith("-->\n"))
   }
 }

@@ -588,14 +588,16 @@ class KernelSpec extends AnyFunSuite {
     result.fold(e => throw e, identity)
   }
 
+  /** Best of 3 wall-clock extractions of `html`, each without error. */
+  private def minMs(html: Array[Byte]): Double = (1 to 3).map { _ =>
+    val t0 = System.nanoTime()
+    val r = Extractor.extract(html, "fb")
+    val ms = (System.nanoTime() - t0) / 1e6
+    assert(r.error == null, s"error: ${r.error}")
+    ms
+  }.min
+
   test("depth law: hostile nesting extracts without error in time linear in depth") {
-    def minMs(html: Array[Byte]): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      val r = Extractor.extract(html, "fb")
-      val ms = (System.nanoTime() - t0) / 1e6
-      assert(r.error == null, s"error: ${r.error}")
-      ms
-    }.min
     onSmallStack {
       val shallow = deepShapes(2000)
       val deep = deepShapes(16000).toMap
@@ -605,6 +607,26 @@ class KernelSpec extends AnyFunSuite {
         val t16k = minMs(deep(name).getBytes("UTF-8"))
         assert(t16k <= 24 * t2k, f"$name: 16k levels took $t16k%.2f ms, 2k levels $t2k%.2f ms")
       }
+    }
+  }
+
+  // ---- paragraph width: extraction is linear in the number of inline runs
+
+  /** One paragraph of `n` same-format inline units: each merges into the
+    * run before it. */
+  private def wideShapes(n: Int): Seq[(String, String)] = Seq(
+    "br" -> "a<br>", "span-space" -> "<span>w</span> ", "span" -> "<span>w</span>",
+    "link" -> "<a href=/x>l</a>"
+  ).map { case (name, unit) => name -> ("<html><body><p>" + unit * n + "</p></body></html>") }
+
+  test("width law: a paragraph of same-format runs extracts in time linear in width") {
+    val narrow = wideShapes(16000)
+    val wide = wideShapes(128000).toMap
+    narrow.foreach { case (_, h) => (1 to 5).foreach(_ => Extractor.extract(h.getBytes("UTF-8"), "fb")) }
+    narrow.foreach { case (name, h) =>
+      val t16k = minMs(h.getBytes("UTF-8"))
+      val t128k = minMs(wide(name).getBytes("UTF-8"))
+      assert(t128k <= 24 * t16k, f"$name: 128k units took $t128k%.2f ms, 16k units $t16k%.2f ms")
     }
   }
 

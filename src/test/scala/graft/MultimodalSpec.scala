@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Multimodal
-import graft.extract.FileNames
 
 class MultimodalSpec extends AnyFunSuite {
 
@@ -68,15 +67,5 @@ class MultimodalSpec extends AnyFunSuite {
     // degenerate inputs: empty and unknown-magic blobs yield the zero vector
     assert(Multimodal.histogram8(Array.emptyByteArray).forall(_ == 0.0))
     assert(Multimodal.histogram8(Array[Byte](1, 2, 3)).forall(_ == 0.0))
-  }
-
-  test("safe_filename port: reference semantics (file_utils.py:84-107)") {
-    assert(FileNames.safeFilename("my file.pptx") == "my_file.pptx")
-    assert(FileNames.safeFilename("a<b>c:d\"e/f\\g|h?i*j") == "a_b_c_d_e_f_g_h_i_j")
-    val long = ("x" * 300) + ".md"
-    val safe = FileNames.safeFilename(long)
-    assert(safe.length == 253 && safe.endsWith(".md"))
-    assert(FileNames.fileExtension("doc.PDF") == "pdf")
-    assert(FileNames.fileExtension("noext") == "")
   }
 }

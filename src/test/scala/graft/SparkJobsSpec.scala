@@ -10,7 +10,7 @@ import graft.pipeline.Pipeline
 import scala.jdk.CollectionConverters._
 
 /** End-to-end Spark job tests: resumable lake runs, salting,
-  * metrics. One shared local session (startup is the expensive part). */
+  * derived queries. One shared local session (startup is the expensive part). */
 class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The scans of an executed plan, inside adaptive query stages too. */
@@ -163,14 +163,6 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val noSalt = p.withColumn("b", Pipeline.saltedBucket(Set.empty, nBuckets))
     val worst = noSalt.groupBy("b").count().collect().map(_.getLong(1)).max
     assert(worst > sizes.max, "salting should strictly reduce the max bucket")
-  }
-
-  test("metrics sidecar counts docs and errors per partition") {
-    val p = pages.repartition(4)
-    val m = Pipeline.metrics(spark, p).collect()
-    assert(m.map(_.docs).sum == 500)
-    assert(m.map(_.errors).sum == 0)
-    assert(m.forall(_.docs_per_sec > 0))
   }
 
   test("two-pass markdown link re-extraction agrees with the kernel links table") {
@@ -520,26 +512,6 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("pages round-trip through csv/json sources; links csv sink (S10)") {
-    val p = pages.limit(50).cache()
-    val csvDir = tmp() + "/pages_csv"
-    graft.sources.PagesSource.writeCsv(p, csvDir)
-    val backCsv = graft.sources.PagesSource.readCsv(spark, csvDir)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.selectExpr("url", "md5(html) AS h", "text", "lang").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
-    assert(key(backCsv) == key(p))
-    val jsonDir = tmp() + "/pages_json"
-    graft.sources.PagesSource.writeJson(p, jsonDir)
-    assert(key(graft.sources.PagesSource.readJson(spark, jsonDir)) == key(p))
-    val links = Pipeline.linksTable(Pipeline.extracted(p))
-    val linksDir = tmp() + "/links_csv"
-    graft.sources.PagesSource.writeLinksCsv(links, linksDir)
-    val back = graft.sources.PagesSource.readLinksCsv(spark, linksDir)
-    assert(back.count() == links.count())
-    assert(back.collect().map(_.toSeq).toSet == links.collect().map(_.toSeq).toSet)
-  }
-
   test("custom TopKPerKey operator matches the window formulation, without a Sort") {
     import org.apache.spark.sql.graftbridge.GraftBridge
     import org.apache.spark.sql.expressions.{Window => W}
@@ -615,6 +587,52 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rank1.get(q).contains(q + graft.ops.Ann.TwinOffset),
         s"query $q: expected twin at rank 1, got ${rank1.get(q)}")
     }
+  }
+
+  test("ann_lsh rows agree with a driver-side brute-force cosine over the twin corpus") {
+    val out = SparkEntry.queries("ann_lsh")(spark, sf0001).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    val vecs = graft.ops.Ann.withTwins(spark.read.parquet(s"$sf0001/embeddings.parquet"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+    // CosineSim's loop, written again: None where the similarity is undefined
+    def brute(a: Seq[Any], b: Seq[Any]): Option[Double] = {
+      if (a == null || b == null) return None
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      var i = 0
+      while (i < math.min(a.length, b.length)) {
+        (a(i), b(i)) match {
+          case (x: Double, y: Double) => dot += x * y; na += x * x; nb += y * y
+          case _ => return None
+        }
+        i += 1
+      }
+      Some(dot / (math.sqrt(na) * math.sqrt(nb))).filterNot(_.isNaN)
+    }
+    def round4(d: Double) = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val byQuery = out.groupBy(_._1)
+    assert(byQuery.keySet.subsetOf((0L until 10L).toSet), byQuery.keySet)
+    var twins = 0
+    (0L until 10L).foreach { q =>
+      val rows = byQuery.getOrElse(q, Array.empty).sortBy(_._2)
+      assert(rows.map(_._2).toSeq == (1 to rows.length), s"query $q ranks: ${rows.map(_._2).toSeq}")
+      assert(rows.length <= 5, s"query $q: ${rows.length} rows")
+      val sims = rows.map { case (_, _, c, sim) =>
+        assert(c != q, s"query $q returned itself")
+        val b = brute(vecs(q), vecs(c))
+        assert(b.isDefined, s"query $q cand $c: undefined cosine in the output")
+        assert(sim == round4(b.get), s"query $q cand $c: sim $sim, brute ${b.get}")
+        (c, b.get)
+      }
+      sims.sliding(2).foreach {
+        case Array((c1, s1), (c2, s2)) =>
+          assert(s1 > s2 || (s1 == s2 && c1 < c2), s"query $q: ($c1, $s1) ranked before ($c2, $s2)")
+        case _ => ()
+      }
+      val close = vecs.keys.filter(c => c != q && brute(vecs(q), vecs(c)).exists(_ >= 0.9)).toSet
+      twins += close.size
+      assert(close.subsetOf(sims.map(_._1).toSet), s"query $q missed ${close -- sims.map(_._1)}")
+    }
+    assert(twins == 2) // the planted twins of queries 0 and 5
   }
 
   test("ann_ivf recall@5 vs brute-force ann_topk is at least 0.65") {
