@@ -422,8 +422,7 @@ object SparkEntry {
             lit("%PDF-".getBytes(java.nio.charset.StandardCharsets.US_ASCII)), "pdf")
             .otherwise("html").as("kind"))
         .filter(element_at(prio, col("kind")).isNotNull) // P1 supported filter
-        .withColumn("priority",
-          coalesce(element_at(prio, col("kind")), lit(999)).cast("int")) // O4 999 rule
+        .withColumn("priority", element_at(prio, col("kind")).cast("int"))
         .orderBy("priority", "doc_id")
     }),
 

@@ -10,7 +10,7 @@ import graft.model._
 object Fidelity {
 
   /** S2/O4: input priority table (config.py:78-92). Unknown kinds are
-    * absent; `q_priority_order` sorts them last at 999
+    * absent, and `q_priority_order` filters them out
     * (folder_processor.py:102-114). */
   val processingPriorities: Map[String, Int] = Map(
     "pptx" -> 1, "ppt" -> 1, "docx" -> 2, "doc" -> 2, "pdf" -> 3,

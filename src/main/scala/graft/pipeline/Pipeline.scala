@@ -150,7 +150,7 @@ object Pipeline {
     top.collect { case r if r.getLong(1) > cut => r.getString(0) -> r.getLong(1) }.toMap
   }
 
-  /** The query [[hotDomains]] runs (PlanCheck plans the same one):
+  /** The query [[hotDomains]] runs (PlanSpec plans the same one):
     * (domain, count) for the ⌈1 / share⌉ + 1 largest domains,
     * with the scan's row count observed into `rows` as `rows`. The groupBy
     * is map-side combinable, so shuffle bytes are bounded by

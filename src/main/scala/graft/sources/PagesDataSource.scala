@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - planInputPartitions = one partition per PARQUET ROW GROUP of the seed
   *    table (the natural split unit; at 100 TB this is the same granularity
   *    Spark's own parquet source plans by), SUB-SLICED into row ranges of
-  *    `sliceRows` (default 256, an `option`): each synthesized page is
+  *    `defaultSliceRows` (256 seed rows): each synthesized page is
   *    ~50x its seed row's bytes plus the downstream kernel cost, so a
   *    whole seed row group is far more work than its byte size suggests —
   *    without slicing, a small corpus plans 1 partition and extraction
@@ -47,9 +47,7 @@ class PagesDataSource extends TableProvider {
     PagesDataSource.pagesSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new PagesTable(properties.get("path"),
-      Option(properties.get("sliceRows")).map(_.toInt)
-        .getOrElse(PagesDataSource.defaultSliceRows))
+    new PagesTable(properties.get("path"))
   override def supportsExternalMetadata(): Boolean = false
 }
 
@@ -97,18 +95,17 @@ object PagesDataSource {
     if (sfDir.endsWith(".parquet")) sfDir else s"$sfDir/documents.parquet"
 }
 
-final class PagesTable(sfDir: String, sliceRows: Int = PagesDataSource.defaultSliceRows)
-    extends Table with SupportsRead {
+final class PagesTable(sfDir: String) extends Table with SupportsRead {
   require(sfDir != null && sfDir.nonEmpty, "graft-pages source needs option(\"path\", sfDir)")
   override def name(): String = s"graft_pages($sfDir)"
   override def schema(): StructType = PagesDataSource.pagesSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PagesScanBuilder(sfDir, options.getInt("sliceRows", sliceRows))
+    new PagesScanBuilder(sfDir)
 }
 
-final class PagesScanBuilder(sfDir: String, sliceRows: Int)
+final class PagesScanBuilder(sfDir: String)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = PagesDataSource.pagesSchema
@@ -141,12 +138,11 @@ final class PagesScanBuilder(sfDir: String, sliceRows: Int)
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
 
-  override def build(): Scan = new PagesScan(sfDir, required, pushed, sliceRows)
+  override def build(): Scan = new PagesScan(sfDir, required, pushed)
 }
 
 final class PagesScan(sfDir: String, required: StructType,
-    pushed: Array[org.apache.spark.sql.sources.Filter],
-    sliceRows: Int) extends Scan with Batch {
+    pushed: Array[org.apache.spark.sql.sources.Filter]) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -166,6 +162,7 @@ final class PagesScan(sfDir: String, required: StructType,
     val reader = ParquetFileReader.open(in, ParquetReadOptions.builder().build())
     try {
       val groups = reader.getRowGroups
+      val sliceRows = PagesDataSource.defaultSliceRows
       (0 until groups.size()).flatMap { i =>
         val rows = groups.get(i).getRowCount
         val nSlices = math.min(PagesDataSource.maxSlicesPerGroup.toLong,

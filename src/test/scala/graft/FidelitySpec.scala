@@ -11,7 +11,7 @@ class FidelitySpec extends AnyFunSuite {
     assert(p.get("pptx").contains(1))
     assert(p.get("pdf").contains(3))
     assert(p.get("zip").contains(7))
-    assert(!p.contains("weird")) // q_priority_order filters it out, else 999
+    assert(!p.contains("weird")) // q_priority_order filters it out
   }
 
   test("X23 MB formatting: 2dp of bytes/1024^2") {

@@ -461,10 +461,6 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a single partition made small-corpus extraction single-threaded)
     val n = Pipeline.pages(spark, dir).rdd.getNumPartitions
     assert(n == 2, s"expected 2 slices for 500 rows @256, got $n")
-    val n2 = spark.read.format("graft.sources.PagesDataSource")
-      .option("path", dir).option("sliceRows", "100").load()
-      .rdd.getNumPartitions
-    assert(n2 == 5, s"expected 5 slices for 500 rows @100, got $n2")
   }
 
   test("bucketed tables co-locate the join: no Exchange on either side") {
@@ -1478,7 +1474,11 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("dd_jaccard_lsh: precision and recall against brute-force all-pairs shingle Jaccard") {
+  /** Exact 3-gram shingle Jaccard of every sf0.001 doc pair (a < b) that
+    * shares a shingle, brute force on the driver over the space-split
+    * tokens the minhash queries shingle (a doc under 3 tokens is one
+    * shingle). */
+  private lazy val shingleJaccard: Map[(Long, Long), Double] = {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1))
     def shingles(t: String): Set[String] = {
@@ -1486,14 +1486,18 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (w.isEmpty) Set.empty else w.sliding(3).map(_.mkString(" ")).toSet
     }
     val sets = docs.map { case (id, t) => id -> shingles(t) }.filter(_._2.nonEmpty).sortBy(_._1)
-    val brute = (for {
+    (for {
       i <- sets.indices; j <- i + 1 until sets.length
       (a, sa) = sets(i); (b, sb) = sets(j)
       inter = sa.intersect(sb).size
-      jac = new java.math.BigDecimal(inter.toDouble / (sa.size + sb.size - inter))
-        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-      if jac >= 0.8
-    } yield (a, b) -> jac).toMap
+      if inter > 0
+    } yield (a, b) -> inter.toDouble / (sa.size + sb.size - inter)).toMap
+  }
+
+  test("dd_jaccard_lsh: precision and recall against brute-force all-pairs shingle Jaccard") {
+    val brute = shingleJaccard.map { case (p, j) =>
+      p -> new java.math.BigDecimal(j).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+    }.filter(_._2 >= 0.8)
     val got = SparkEntry.queries("dd_jaccard_lsh")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(brute.nonEmpty)
@@ -1505,5 +1509,37 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // probability <= (1 - 0.8^4)^4 = 0.12; these pairs sit far above it
     assert(hits.size == brute.size, s"recall ${hits.size} of ${brute.size}: " +
       s"missed ${(brute.keySet -- hits).take(5)}")
+  }
+
+  test("dd_minhash_lsh: precision and recall against brute-force all-pairs shingle Jaccard") {
+    val got = SparkEntry.queries("dd_minhash_lsh")(spark, sf0001).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // sf0.001 holds 28 pairs at J >= 0.85 and none in [0.15, 0.85); all 28
+    // are the 28 candidates. A pair is a candidate with probability
+    // 1 - (1 - J^4)^4 (4 bands of 4 rows): >= 0.88 at J >= 0.8, and
+    // <= 0.23 at J < 0.5, <= 2e-3 at the 4 pairs with 0.05 <= J < 0.15
+    val similar = shingleJaccard.filter(_._2 >= 0.8).keySet
+    assert(similar.nonEmpty)
+    assert(similar.subsetOf(got), s"recall: missed ${(similar -- got).take(5)}")
+    val low = got.filter(p => shingleJaccard.getOrElse(p, 0.0) < 0.5)
+    assert(low.isEmpty, s"precision: candidates below J 0.5: ${low.take(5)}")
+  }
+
+  test("dd_simhash: bands are the 16-bit slices of simhash; pairs within Hamming 3 share one") {
+    val rows = SparkEntry.queries("dd_simhash")(spark, sf0001).collect()
+      .map(r => (r.getLong(0), r.getLong(1), (2 to 5).map(r.getLong)))
+    // pigeonhole: 3 differing bits leave at least one of 4 disjoint bands equal
+    val near = for {
+      i <- rows.indices; j <- i + 1 until rows.length
+      d = java.lang.Long.bitCount(rows(i)._2 ^ rows(j)._2)
+      if d <= 3
+    } yield (rows(i), rows(j), d)
+    assert(near.exists(_._3 > 0)) // sf0.001: 4, 5, 9 and 9 pairs at distance 0 to 3
+    near.foreach { case ((a, _, ba), (b, _, bb), d) =>
+      assert(ba.zip(bb).exists { case (x, y) => x == y }, s"($a, $b) at Hamming $d share no band")
+    }
+    rows.foreach { case (id, h, bands) =>
+      assert(bands == (0 until 4).map(i => (h >>> (16 * i)) & 0xffffL), s"doc $id")
+    }
   }
 }
