@@ -105,7 +105,7 @@ object Extractor {
     val off = metaComment.length
     sb.append(bodyText)
     bodySpans.foreach(s => spans += Span(s.start + off, s.end + off, s.kind))
-    val linkSection = Links.formatHyperlinksSection(links, "Document")
+    val linkSection = Links.formatHyperlinksSection(links)
     if (linkSection.nonEmpty) {
       val st = sb.length
       sb.append(linkSection)

@@ -35,10 +35,10 @@ object Links {
 
   private val placeholderPrefixes = List("Link on page", "URL on page", "Go to page")
 
-  /** Port of `format_hyperlinks_section` (hyperlink_extractor.py:310-386).
-    * Returns "" when no valid links. containerName "Presentation" switches
-    * the per-page heading word to "Slide". */
-  def formatHyperlinksSection(links: Seq[LinkRow], containerName: String = "Document"): String = {
+  /** Port of `format_hyperlinks_section` (hyperlink_extractor.py:310-386)
+    * for a document: a "Hyperlinks in Document" section with one
+    * "Page N" heading per page. Returns "" when no valid links. */
+  def formatHyperlinksSection(links: Seq[LinkRow]): String = {
     if (links.isEmpty) return ""
     // page -> ordered link list (insertion order), with per-page URL tracking.
     // A lowercased-url -> index map gives O(1) dedup lookup (the naive
@@ -69,12 +69,11 @@ object Links {
       }
     }
     if (!pages.values.exists(_.nonEmpty)) return ""
-    val pageTitle = if (containerName == "Presentation") "Slide" else "Page"
-    val sb = new StringBuilder(s"\n\n## Hyperlinks in $containerName\n")
+    val sb = new StringBuilder("\n\n## Hyperlinks in Document\n")
     pages.keys.toVector.sorted.foreach { page =>
       val ls = pages(page)
       if (ls.nonEmpty) {
-        sb.append(s"\n### $pageTitle $page\n")
+        sb.append(s"\n### Page $page\n")
         ls.foreach { case (text, url) => sb.append(s"* [$text]($url)\n") }
       }
     }

@@ -38,21 +38,16 @@ final case class Hints(
     bulletLevel: Int,       // -1 = none (text_processor.py:254-285)
     isBullet: Boolean,
     isNumbered: Boolean,
-    shortText: Boolean,     // len < 100
     allCaps: Boolean,
     likelyHeading: Boolean  // 0 < len < 80
 )
 
 object Hints {
-  val none: Hints = Hints(-1, isBullet = false, isNumbered = false,
-    shortText = false, allCaps = false, likelyHeading = false)
-
   /** Port of text_processor.py:443-475 `_analyze_plain_text_hints`. */
   def ofPlainText(text: String): Hints = {
     val stripped = text.trim
     Hints(
       bulletLevel = -1, isBullet = false, isNumbered = false,
-      shortText = stripped.length < 100,
       allCaps = graft.extract.TextStats.isAllCaps(stripped),
       likelyHeading = stripped.nonEmpty && stripped.length < 80
     )

@@ -529,6 +529,17 @@ object OpsQueries {
     })
   )
 
+  /** DuckDB: `embedding`, or a NULL list when it holds a NULL element or
+    * no non-zero one, so its cosines are NULL as graft_cosine's are
+    * (list_cosine_similarity throws on a NULL element and gives -1.0 for a
+    * zero vector). The kept lists are copied through `list_transform`:
+    * DuckDB 1.0's list_cosine_similarity rejects NULL elements under a NULL
+    * row too, and the copy holds only the kept rows' elements. */
+  private val definedEmbedding =
+    """CASE WHEN list_bool_and(list_transform(embedding, x -> x IS NOT NULL))
+      |      AND list_bool_or(list_transform(embedding, x -> x <> 0))
+      |     THEN list_transform(embedding, x -> x) END AS embedding""".stripMargin
+
   def oracleSql: Map[String, String] = Map(
     "dd_exact" ->
       """SELECT fp, keep_id, n_dups FROM (
@@ -549,7 +560,7 @@ object OpsQueries {
         |HAVING COUNT(*)::DOUBLE / (a.tn + b.tn - COUNT(*)) >= 0.9
         |ORDER BY a_id, b_id""".stripMargin,
     "dd_embed_neardup" ->
-      """WITH tw AS (
+      s"""WITH tw AS (
         |  SELECT vec_id + 1000000 AS vec_id,
         |         list_transform(embedding,
         |           x -> CAST(x AS DOUBLE) + 0.002 * sin(CAST(x AS DOUBLE) * 57 + vec_id)) AS embedding
@@ -557,20 +568,23 @@ object OpsQueries {
         |u AS (
         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
         |  FROM embeddings
-        |  UNION ALL SELECT * FROM tw)
+        |  UNION ALL SELECT * FROM tw),
+        |d AS (SELECT vec_id, $definedEmbedding FROM u)
         |SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        |FROM u a JOIN u b ON a.vec_id < b.vec_id
+        |FROM d a JOIN d b ON a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.92
         |ORDER BY a_id, b_id""".stripMargin,
     "ann_topk" ->
-      """SELECT query_id, rank, cand_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |         ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        |           ORDER BY LIST_COSINE_SIMILARITY(q.embedding, c.embedding) DESC,
-        |                    c.vec_id ASC) AS rank
-        |  FROM embeddings q, embeddings c
-        |  WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id)
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+      s"""WITH d AS (SELECT vec_id, $definedEmbedding FROM embeddings)
+        |SELECT query_id, rank, cand_id FROM (
+        |  SELECT query_id, cand_id, sim,
+        |         ROW_NUMBER() OVER (PARTITION BY query_id
+        |           ORDER BY sim DESC NULLS LAST, cand_id ASC) AS rank
+        |  FROM (SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
+        |               LIST_COSINE_SIMILARITY(q.embedding, c.embedding) AS sim
+        |        FROM d q, d c
+        |        WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id))
+        |WHERE rank <= 5 AND sim IS NOT NULL ORDER BY query_id, rank""".stripMargin,
     "ta_langid" ->
       """WITH c AS (
         |  SELECT doc_id,

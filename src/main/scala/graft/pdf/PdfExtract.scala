@@ -85,7 +85,7 @@ object PdfExtract {
           spans += Span(start, sb.length, "pdf_page")
         }
       }
-      val section = Links.formatHyperlinksSection(links.toSeq, "Document")
+      val section = Links.formatHyperlinksSection(links.toSeq)
       if (section.nonEmpty) {
         val start = sb.length
         sb.append(section)

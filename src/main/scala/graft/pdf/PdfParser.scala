@@ -157,7 +157,6 @@ object PdfParser {
       * with /Type /Page when the catalog is unreachable. */
     def pages(): Vector[PDict] = {
       val out = new ArrayBuffer[PDict]()
-      val seen = scala.collection.mutable.HashSet[Int]()
       def walk(v: PVal): Unit = resolve(v) match {
         case d: PDict =>
           d.get("Type").map(resolve) match {
@@ -180,12 +179,9 @@ object PdfParser {
       if (out.isEmpty) {
         // degraded: collect /Type /Page objects in object-number order
         offsets.keys.toVector.sorted.foreach { n =>
-          if (!seen.contains(n)) {
-            seen += n
-            obj(n) match {
-              case d: PDict if d.get("Type").map(resolve).contains(PName("Page")) => out += d
-              case _ => ()
-            }
+          obj(n) match {
+            case d: PDict if d.get("Type").map(resolve).contains(PName("Page")) => out += d
+            case _ => ()
           }
         }
       }

@@ -23,12 +23,11 @@ object Pipeline {
 
   /** The `pages` table (input_hint shape), synthesized deterministically
     * from the driver's `documents` seed table — served through the DSv2
-    * connector (round 4, VERDICT r3 #5): every consumer now gets REAL
-    * column pruning (no body synthesis when html/text are pruned away —
-    * the hot-domain pre-pass and folder stats read urls only) and lang/url
-    * filter pushdown evaluated pre-synthesis. The previous typed
-    * Dataset.map formulation hid all of that from Catalyst (a typed map is
-    * a black box — nothing pushes through it). */
+    * connector (round 4, VERDICT r3 #5): every consumer gets REAL column
+    * pruning (no body synthesis when html/text are pruned away — the
+    * hot-domain pre-pass and folder stats read urls only). Spark evaluates
+    * filters after the scan. The previous typed Dataset.map formulation
+    * hid the pruning from Catalyst (a typed map is a black box). */
   def pages(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.format("graft.sources.PagesDataSource")
       .option("path", sfDir).load()
@@ -53,7 +52,8 @@ object Pipeline {
     * is planned as the native Catalyst expression `graft_extract_doc`
     * (plans/ExtractExpression.scala) — deterministic, null-tolerant, and
     * free of the case-class-encoder serialize hop a Scala UDF pays per row
-    * on this hottest path. */
+    * on this hottest path. Its struct is the committed row after the
+    * (url, warc_ts, lang) keys. */
   def extracted(pages: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.GraftBridge
     val doc = GraftBridge.column(graft.plans.ExtractDoc(
@@ -61,28 +61,7 @@ object Pipeline {
       GraftBridge.expression(col("warc_ts"))))
     pages
       .withColumn("r", doc)
-      .select(col("url"), col("warc_ts"), col("lang"),
-        col("r.extracted_text").as("extracted_text"),
-        col("r.spans").as("spans"),
-        col("r.links").as("links"),
-        struct(col("r.title").as("title"), col("r.author").as("author"),
-          col("r.subject").as("subject"),
-          col("r.description").as("description"), col("r.keywords").as("keywords"),
-          col("r.category").as("category"), col("r.comments").as("comments"),
-          col("r.html_lang").as("html_lang"), col("r.page_count").as("page_count"),
-          col("r.created_date").as("created_date"),
-          col("r.modified_date").as("modified_date"),
-          col("r.last_modified_by").as("last_modified_by"),
-          col("r.revision").as("revision"),
-          col("r.last_printed").as("last_printed"),
-          col("r.application").as("application"),
-          col("r.company").as("company"),
-          col("r.crawl_date").as("crawl_date"),
-          col("r.layout_types").as("layout_types"),
-          col("r.file_size").as("file_size")
-        ).as("meta"),
-        col("r.scores").as("scores"),
-        col("r.error").as("error"))
+      .select(col("url"), col("warc_ts"), col("lang"), col("r.*"))
   }
 
   private val committedDirs =

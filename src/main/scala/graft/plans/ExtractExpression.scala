@@ -23,10 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * falls back to the text column; both null -> empty output; null warc_ts ->
   * no crawl date. The expression itself NEVER returns null or throws.
   *
-  * Besides the kernel result, the struct carries `file_size`: the html's
-  * byte length as BIGINT, NULL when html is NULL (what `length(html)`
-  * gives), so a derived query reads the page size from the committed row
-  * instead of re-reading the page. */
+  * The struct is the committed row after its (url, warc_ts, lang) keys, so
+  * this module alone declares the committed layout. Besides the kernel
+  * result, `meta` carries `file_size`: the html's byte length as BIGINT,
+  * NULL when html is NULL (what `length(html)` gives), so a derived query
+  * reads the page size from the committed row instead of re-reading the
+  * page. */
 case class ExtractDoc(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with CodegenFallback {
 
@@ -51,9 +53,8 @@ case class ExtractDoc(first: Expression, second: Expression, third: Expression)
     val htmlBytes = if (html == null) Array.emptyByteArray else html.asInstanceOf[Array[Byte]]
     val textStr = if (text == null) "" else text.toString
     val tsUs = if (ts == null) Long.MinValue else ts.asInstanceOf[Long]
-    val row = ExtractDoc.toRow(graft.extract.Extractor.extract(htmlBytes, textStr, tsUs))
-    if (html != null) row.setLong(23, htmlBytes.length.toLong)
-    row
+    ExtractDoc.toRow(graft.extract.Extractor.extract(htmlBytes, textStr, tsUs),
+      if (html == null) null else java.lang.Long.valueOf(htmlBytes.length.toLong))
   }
 
   override protected def withNewChildrenInternal(
@@ -71,52 +72,48 @@ object ExtractDoc {
     i("probability"), i("block_count"), i("bullet_count"),
     i("n_titles"), i("n_subtitles"), i("n_content")))
 
+  val metaType: StructType = StructType(Seq(
+    s("title"), s("author"), s("subject"), s("description"), s("keywords"),
+    s("category"), s("comments"), s("html_lang"), i("page_count"),
+    s("created_date"), s("modified_date"), s("last_modified_by"),
+    s("revision"), s("last_printed"), s("application"), s("company"),
+    s("crawl_date"), s("layout_types"),
+    StructField("file_size", LongType, nullable = true)))
+
   val schema: StructType = StructType(Seq(
     s("extracted_text"),
     StructField("spans", ArrayType(spanType, containsNull = false), nullable = false),
     StructField("links", ArrayType(linkType, containsNull = false), nullable = false),
-    s("title"), s("author"), s("description"), s("keywords"), s("html_lang"),
-    i("page_count"),
-    s("created_date"), s("modified_date"), s("crawl_date"), s("layout_types"),
+    StructField("meta", metaType, nullable = false),
     StructField("scores", ArrayType(scoreType, containsNull = false), nullable = false),
-    StructField("error", StringType, nullable = true),
-    // round-4 M1 breadth fields (appended to keep earlier ordinals stable)
-    s("subject"), s("comments"), s("category"),
-    s("last_modified_by"), s("revision"), s("last_printed"),
-    s("application"), s("company"),
-    StructField("file_size", LongType, nullable = true)))
+    StructField("error", StringType, nullable = true)))
 
-  /** ExtractResult -> InternalRow, written directly (no encoder);
-    * `file_size` is left NULL. */
-  def toRow(r: graft.model.ExtractResult): GenericInternalRow = {
+  /** ExtractResult -> InternalRow, written directly (no encoder).
+    * `fileSize` is `meta.file_size`: the html's byte length, null without
+    * html. */
+  def toRow(r: graft.model.ExtractResult, fileSize: java.lang.Long): GenericInternalRow = {
     def u(x: String) = UTF8String.fromString(if (x == null) "" else x)
-    val row = new GenericInternalRow(24)
-    row.update(0, u(r.extractedText))
-    row.update(1, new GenericArrayData(r.spans.map { sp =>
-      val x = new GenericInternalRow(3)
-      x.setInt(0, sp.start); x.setInt(1, sp.end); x.update(2, u(sp.kind)); x
-    }.toArray[Any]))
-    row.update(2, new GenericArrayData(r.links.map { l =>
-      val x = new GenericInternalRow(3)
-      x.setInt(0, l.page); x.update(1, u(l.anchor)); x.update(2, u(l.target)); x
-    }.toArray[Any]))
-    row.update(3, u(r.meta.title)); row.update(4, u(r.meta.author))
-    row.update(5, u(r.meta.description)); row.update(6, u(r.meta.keywords))
-    row.update(7, u(r.meta.htmlLang)); row.setInt(8, r.meta.pageCount)
-    row.update(9, u(r.meta.createdDate)); row.update(10, u(r.meta.modifiedDate))
-    row.update(11, u(r.meta.crawlDate)); row.update(12, u(r.meta.layoutTypes))
-    row.update(13, new GenericArrayData(r.scores.map { sc =>
-      val x = new GenericInternalRow(8)
-      x.setInt(0, sc.page); x.setInt(1, sc.totalScore); x.setInt(2, sc.probability)
-      x.setInt(3, sc.blockCount); x.setInt(4, sc.bulletCount)
-      x.setInt(5, sc.titleCount); x.setInt(6, sc.subtitleCount)
-      x.setInt(7, sc.contentCount); x
-    }.toArray[Any]))
-    row.update(14, if (r.error == null) null else u(r.error))
-    row.update(15, u(r.meta.subject)); row.update(16, u(r.meta.comments))
-    row.update(17, u(r.meta.category)); row.update(18, u(r.meta.lastModifiedBy))
-    row.update(19, u(r.meta.revision)); row.update(20, u(r.meta.lastPrinted))
-    row.update(21, u(r.meta.application)); row.update(22, u(r.meta.company))
-    row
+    val m = r.meta
+    val meta = new GenericInternalRow(Array[Any](
+      u(m.title), u(m.author), u(m.subject), u(m.description), u(m.keywords),
+      u(m.category), u(m.comments), u(m.htmlLang), m.pageCount,
+      u(m.createdDate), u(m.modifiedDate), u(m.lastModifiedBy),
+      u(m.revision), u(m.lastPrinted), u(m.application), u(m.company),
+      u(m.crawlDate), u(m.layoutTypes), fileSize))
+    new GenericInternalRow(Array[Any](
+      u(r.extractedText),
+      new GenericArrayData(r.spans.map { sp =>
+        new GenericInternalRow(Array[Any](sp.start, sp.end, u(sp.kind)))
+      }.toArray[Any]),
+      new GenericArrayData(r.links.map { l =>
+        new GenericInternalRow(Array[Any](l.page, u(l.anchor), u(l.target)))
+      }.toArray[Any]),
+      meta,
+      new GenericArrayData(r.scores.map { sc =>
+        new GenericInternalRow(Array[Any](sc.page, sc.totalScore, sc.probability,
+          sc.blockCount, sc.bulletCount, sc.titleCount, sc.subtitleCount,
+          sc.contentCount))
+      }.toArray[Any]),
+      if (r.error == null) null else u(r.error)))
   }
 }

@@ -106,10 +106,8 @@ final class PagesTable(sfDir: String) extends Table with SupportsRead {
 }
 
 final class PagesScanBuilder(sfDir: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = PagesDataSource.pagesSchema
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit = {
     // keep source field order; empty projections (count(*)) keep url
     val names = requiredSchema.fieldNames.toSet
@@ -117,38 +115,15 @@ final class PagesScanBuilder(sfDir: String)
     required = if (pruned.isEmpty) StructType(PagesDataSource.pagesSchema.take(1)) else pruned
   }
 
-  /** Filters on `lang` (known from the seed row) and `url` (a pure id
-    * function) are accepted and evaluated in the reader BEFORE page-body
-    * synthesis — the V2 analog of parquet row-group filtering: a
-    * lang-restricted or domain-restricted read never pays for the bodies
-    * it drops. Everything else is left for Spark to evaluate post-scan. */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.sources._
-    val (sup, unsup) = filters.partition {
-      case EqualTo("lang", _: String)                          => true
-      case In("lang", vs) if vs.forall(_.isInstanceOf[String]) => true
-      case IsNotNull("lang") | IsNotNull("url")                => true
-      case StringStartsWith("url", _)                          => true
-      case StringContains("url", _)                            => true
-      case _                                                   => false
-    }
-    pushed = sup
-    unsup
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-
-  override def build(): Scan = new PagesScan(sfDir, required, pushed)
+  override def build(): Scan = new PagesScan(sfDir, required)
 }
 
-final class PagesScan(sfDir: String, required: StructType,
-    pushed: Array[org.apache.spark.sql.sources.Filter]) extends Scan with Batch {
+final class PagesScan(sfDir: String, required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"GraftPagesScan(seed=${PagesDataSource.seedPath(sfDir)}, " +
-      s"required=${required.fieldNames.mkString(",")}, " +
-      s"PushedFilters=[${pushed.mkString(", ")}])"
+      s"required=${required.fieldNames.mkString(",")})"
 
   // the SESSION's Hadoop conf (captured at scan build on the driver):
   // credentials/endpoints for non-local filesystems ride to the readers
@@ -176,7 +151,7 @@ final class PagesScan(sfDir: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PagesReaderFactory(required.fieldNames, pushed, hadoopConf)
+    new PagesReaderFactory(required.fieldNames, hadoopConf)
 }
 
 /** One slice = rows [rowFrom, rowUntil) of row group `rowGroup`. */
@@ -184,40 +159,22 @@ final case class PagesInputPartition(seedPath: String, rowGroup: Int,
     rowFrom: Long, rowUntil: Long) extends InputPartition
 
 final class PagesReaderFactory(requiredFields: Array[String],
-    pushed: Array[org.apache.spark.sql.sources.Filter],
     hadoopConf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PagesPartitionReader(partition.asInstanceOf[PagesInputPartition],
-      requiredFields, pushed, hadoopConf)
+      requiredFields, hadoopConf)
 }
 
 /** Reads one row group of the seed table with parquet-mr and synthesizes
-  * page rows. Body synthesis (html/text) is skipped when pruned away, and
-  * pushed lang/url filters are applied BEFORE body synthesis. */
+  * page rows. Body synthesis (html/text) is skipped when pruned away. */
 final class PagesPartitionReader(part: PagesInputPartition,
     requiredFields: Array[String],
-    pushed: Array[org.apache.spark.sql.sources.Filter],
     hadoopConf: SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
 
   private val needsBody =
     requiredFields.contains("html") || requiredFields.contains("text")
-
-  /** Pre-synthesis filter over (doc_id, lang): url is a pure id function. */
-  private def passes(id: Long, lang: String): Boolean = {
-    import org.apache.spark.sql.sources._
-    lazy val url = graft.synth.Synth.urlFor(id)
-    pushed.forall {
-      case EqualTo("lang", v: String)    => lang == v
-      case In("lang", vs)                => vs.contains(lang)
-      case IsNotNull("lang")             => lang != null
-      case IsNotNull("url")              => true
-      case StringStartsWith("url", p)    => url.startsWith(p)
-      case StringContains("url", p)      => url.contains(p)
-      case _                             => true // never reached: only accepted shapes are pushed
-    }
-  }
 
   private val seeds: Iterator[(Long, String, String)] = {
     val in = HadoopInputFile.fromPath(
@@ -261,13 +218,8 @@ final class PagesPartitionReader(part: PagesInputPartition,
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    var id = 0L; var text: String = null; var lang: String = null
-    var found = false
-    while (!found && seeds.hasNext) {
-      val s = seeds.next()
-      if (passes(s._1, s._3)) { id = s._1; text = s._2; lang = s._3; found = true }
-    }
-    if (!found) return false
+    if (!seeds.hasNext) return false
+    val (id, text, lang) = seeds.next()
     val values = if (needsBody) {
       val p = graft.synth.Synth.pageFor(id, text, lang)
       requiredFields.map {

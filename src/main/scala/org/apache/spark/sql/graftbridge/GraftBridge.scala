@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Descending, SortOrder}
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
 import graft.plans.{TopKPerKeyNode, TopKStrategy}
 
@@ -17,11 +17,11 @@ import graft.plans.{TopKPerKeyNode, TopKStrategy}
   */
 object GraftBridge {
 
-  /** Exact top-k rows per key, ordered by `orderCol`. Registers the planner
-    * strategy on first use (idempotent). */
+  /** Exact top-k rows per key, by descending `orderCol`. Registers the
+    * planner strategy on first use (idempotent). */
   def topKPerKey(dfIn: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
       keyCols: Seq[String], orderCol: String,
-      k: Int, descending: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val df = dfIn.asInstanceOf[DataFrame]
     val spark = df.sparkSession.asInstanceOf[SparkSession]
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))
@@ -33,7 +33,7 @@ object GraftBridge {
         throw new IllegalArgumentException(s"no column $c in ${plan.output}")))
     val ordAttr = plan.output.find(_.name == orderCol).getOrElse(
       throw new IllegalArgumentException(s"no column $orderCol"))
-    val order = SortOrder(ordAttr, if (descending) Descending else Ascending)
+    val order = SortOrder(ordAttr, Descending)
     Dataset.ofRows(spark, TopKPerKeyNode(keyExprs, order, k, plan))
   }
 

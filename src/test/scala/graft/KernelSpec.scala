@@ -38,7 +38,7 @@ class KernelSpec extends AnyFunSuite {
       LinkRow("", 1, "Example Link", "https://example.com"),
       LinkRow("", 1, "Another Link", "https://example.org"),
       LinkRow("", 2, "Page 2 Link", "https://test.com"))
-    val r = Links.formatHyperlinksSection(links, "Document")
+    val r = Links.formatHyperlinksSection(links)
     assert(r.contains("## Hyperlinks in Document"))
     assert(r.contains("### Page 1"))
     assert(r.contains("### Page 2"))
@@ -46,14 +46,6 @@ class KernelSpec extends AnyFunSuite {
     assert(r.contains("* [Another Link](https://example.org)"))
     assert(r.contains("* [Page 2 Link](https://test.com)"))
     assert(r.startsWith("\n\n## Hyperlinks in Document\n"))
-  }
-  test("hyperlinks section presentation naming") {
-    val links = Seq(
-      LinkRow("", 1, "Slide 1 Link", "https://example.com"),
-      LinkRow("", 2, "Slide 2 Link", "https://test.com"))
-    val r = Links.formatHyperlinksSection(links, "Presentation")
-    assert(r.contains("## Hyperlinks in Presentation"))
-    assert(r.contains("### Slide 1") && r.contains("### Slide 2"))
   }
   test("hyperlinks section duplicate keeps longer-and-contains text") {
     val links = Seq(
@@ -144,29 +136,29 @@ class KernelSpec extends AnyFunSuite {
   // ---- paragraph structure (markdown_converter.py:121-155)
   test("bullet indentation 2 spaces per level") {
     val p = Paragraph("item", Vector(r("item")),
-      Hints(2, isBullet = true, isNumbered = false, shortText = true,
+      Hints(2, isBullet = true, isNumbered = false,
         allCaps = false, likelyHeading = false))
     assert(Markdown.paragraphToMarkdown(p) == "    - item")
   }
   test("negative bullet level clamps to 0") {
     val p = Paragraph("item", Vector(r("item")),
-      Hints(-1, isBullet = true, isNumbered = false, shortText = true,
+      Hints(-1, isBullet = true, isNumbered = false,
         allCaps = false, likelyHeading = false))
     assert(Markdown.paragraphToMarkdown(p) == "- item")
   }
   test("numbered list") {
     val p = Paragraph("first", Vector(r("first")),
-      Hints(-1, isBullet = false, isNumbered = true, shortText = true,
+      Hints(-1, isBullet = false, isNumbered = true,
         allCaps = false, likelyHeading = false))
     assert(Markdown.paragraphToMarkdown(p) == "1. first")
   }
   test("likely heading short -> ##, long -> ###") {
     val short = Paragraph("Heading", Vector(r("Heading")),
-      Hints(-1, false, false, shortText = true, allCaps = false, likelyHeading = true))
+      Hints(-1, false, false, allCaps = false, likelyHeading = true))
     assert(Markdown.paragraphToMarkdown(short) == "## Heading")
     val long = Paragraph("A much longer heading that exceeds thirty chars",
       Vector(r("A much longer heading that exceeds thirty chars")),
-      Hints(-1, false, false, shortText = true, allCaps = false, likelyHeading = true))
+      Hints(-1, false, false, allCaps = false, likelyHeading = true))
     assert(Markdown.paragraphToMarkdown(long) == "### A much longer heading that exceeds thirty chars")
   }
 

@@ -61,7 +61,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = planned(query("x_extract"))
     assert(p.contains("graft_extract_doc"), p)
     assert(p.contains("GraftPagesScan") &&
-      p.contains("required=url,warc_ts,html,text, PushedFilters"), p)
+      p.contains("required=url,warc_ts,html,text)"), p)
   }
 
   test("the hot-domain pass reads urls only from the connector, no page bodies") {
