@@ -20,7 +20,7 @@ object SparkEntry {
     Pipeline.extracted(Pipeline.pages(spark, "/root/testdata/sf0.001"))
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    OpsQueries.input(spark, s"$dir/$name.parquet")
 
   private val bucketedDbs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -456,7 +456,7 @@ object SparkEntry {
     // synthesis; the oracle recomputes warc_ts algebraically from the
     // Synth clock rule: 1700000000s + 600s per doc) ------------------------
     "q_pages_dsv2" -> ((s: SparkSession, dir: String) => {
-      s.read.format("graft.sources.PagesDataSource").option("path", dir).load()
+      Pipeline.pages(s, dir)
         .select(
           regexp_extract(col("url"), "doc-(\\d+)$", 1).cast("bigint").as("doc_id"),
           unix_micros(col("warc_ts")).as("ts_us"), col("lang"))

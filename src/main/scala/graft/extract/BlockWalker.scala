@@ -67,21 +67,23 @@ object BlockWalker {
         val alt = el.attr("alt")
         if (Markdown.hasMeaningfulAltText(alt))
           blocks += ImageBlock("other", alt.trim, "")
-      case "a" if linkWrappedImage(el).isDefined =>
-        val img = linkWrappedImage(el).get
-        blocks += ImageBlock("other", img.attr("alt").trim, UrlFix.fixUrl(el.attr("href")))
+      case "a" =>
+        val inner = linkedBlock(el)
+        if (inner == null) pending += el
+        else {
+          val href = UrlFix.fixUrl(el.attr("href"))
+          blocks += (if (inner.tag == "img") ImageBlock("other", inner.attr("alt").trim, href)
+            else chartOf(inner, href))
+        }
       case "figure" if el.attr("data-chart").nonEmpty =>
         blocks += chartOf(el, "")
-      case "a" if linkWrappedChart(el).isDefined =>
-        blocks += chartOf(linkWrappedChart(el).get, UrlFix.fixUrl(el.attr("href")))
       case t if containerTags.contains(t) => cur.descend(el)
       case t if inlineTags.contains(t) => pending += el
       case _ => cur.descend(el) // unknown tags: walk into, err on inclusion
         // (content_extractor.py:289-300: "err on the side of inclusion")
     }
 
-    def isBlockImageAnchor(e: Elem): Boolean =
-      e.tag == "a" && (linkWrappedImage(e).isDefined || linkWrappedChart(e).isDefined)
+    def isBlockImageAnchor(e: Elem): Boolean = e.tag == "a" && linkedBlock(e) != null
 
     while (cur.depth > 0) {
       cur.nextChild() match {
@@ -100,19 +102,23 @@ object BlockWalker {
     blocks.toVector
   }
 
-  /** An <a> whose content is a single meaningful-alt <img> (and whitespace)
-    * renders as a linked image block (X13 hyperlink wrap). */
-  private def linkWrappedImage(a: Elem): Option[Elem] = {
-    // .toVector: ArrayBuffer is mutable.Seq — the immutable Seq extractor
-    // below would silently never match it (Scala 2.13)
-    val significant = a.children.filter {
-      case t: TextNode => t.value.exists(!_.isWhitespace)
-      case _           => true
-    }.toVector
-    significant match {
-      case Seq(img: Elem) if img.tag == "img" &&
-        Markdown.hasMeaningfulAltText(img.attr("alt")) => Some(img)
-      case _ => None
+  /** The block an <a> wraps, or null: when its sole significant child
+    * (whitespace text aside) is a meaningful-alt <img>, it renders as a
+    * linked image block (X13 hyperlink wrap); when it is a
+    * `<figure data-chart>`, as a hyperlink-wrapped chart
+    * (markdown_converter.py:323-325). */
+  private def linkedBlock(a: Elem): Elem = {
+    var sole: Node = null
+    var n = 0
+    a.children.foreach {
+      case t: TextNode if t.value.forall(_.isWhitespace) => ()
+      case c => sole = c; n += 1
+    }
+    sole match {
+      case e: Elem if n == 1 &&
+        ((e.tag == "img" && Markdown.hasMeaningfulAltText(e.attr("alt"))) ||
+          (e.tag == "figure" && e.attr("data-chart").nonEmpty)) => e
+      case _ => null
     }
   }
 
@@ -202,19 +208,5 @@ object BlockWalker {
       case row if row.nonEmpty => ChartSeries(row.head, row.tail)
     }
     ChartBlock("other", chartType, title, categories, series, hyperlink)
-  }
-
-  /** An <a> whose content is a single `<figure data-chart>` (and whitespace)
-    * renders as a hyperlink-wrapped chart (markdown_converter.py:323-325). */
-  private def linkWrappedChart(a: Elem): Option[Elem] = {
-    val significant = a.children.filter {
-      case t: TextNode => t.value.exists(!_.isWhitespace)
-      case _           => true
-    }.toVector
-    significant match {
-      case Seq(fig: Elem) if fig.tag == "figure" &&
-        fig.attr("data-chart").nonEmpty => Some(fig)
-      case _ => None
-    }
   }
 }

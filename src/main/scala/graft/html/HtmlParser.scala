@@ -114,35 +114,21 @@ object HtmlParser {
     * element of each tag name and, per entry, the next lower entry of the
     * same tag. The element a close tag or an implied end tag ends is then
     * found in O(1) instead of by scanning the stack, so parsing stays
-    * linear in nesting depth. Tag names are slots of an open-addressing
-    * table; the root (index 0) has no slot. */
-  private final class OpenElements(root: Elem) {
+    * linear in nesting depth. The root (index 0) is never indexed. */
+  private[graft] final class OpenElements(root: Elem) {
     private var elems = new Array[Elem](32)
     private var below = new Array[Int](32) // next lower index with the same tag, -1 = none
-    private var keys = new Array[String](32)
-    private var tops = new Array[Int](32) // topmost open index per slot, -1 = none
-    private var used = 0
+    // topmost open index per tag; a tag with none open has no entry
+    private val tops = new java.util.HashMap[String, Integer]()
     private var size = 1
     elems(0) = root
 
     def last: Elem = elems(size - 1)
 
-    /** the slot holding `tag`, or the empty slot where it belongs (-1 - slot) */
-    private def probe(tag: String): Int = {
-      val mask = keys.length - 1
-      val h = tag.hashCode
-      var i = (h ^ (h >>> 16)) & mask
-      while (keys(i) != null) {
-        if (keys(i) == tag) return i
-        i = (i + 1) & mask
-      }
-      -1 - i
-    }
-
     /** index of the topmost open element with this tag, -1 when none is open */
     def top(tag: String): Int = {
-      val s = probe(tag)
-      if (s < 0) -1 else tops(s)
+      val t = tops.get(tag)
+      if (t == null) -1 else t
     }
 
     def push(e: Elem): Unit = {
@@ -150,17 +136,9 @@ object HtmlParser {
         elems = java.util.Arrays.copyOf(elems, size * 2)
         below = java.util.Arrays.copyOf(below, size * 2)
       }
-      var s = probe(e.tag)
-      if (s < 0) {
-        if (2 * (used + 1) > keys.length) { rehash(); s = probe(e.tag) }
-        s = -1 - s
-        keys(s) = e.tag
-        tops(s) = -1
-        used += 1
-      }
+      val prev = tops.put(e.tag, size)
       elems(size) = e
-      below(size) = tops(s)
-      tops(s) = size
+      below(size) = if (prev == null) -1 else prev
       size += 1
     }
 
@@ -168,7 +146,8 @@ object HtmlParser {
     def popTo(from: Int): Unit =
       while (size > from) {
         size -= 1
-        tops(probe(elems(size).tag)) = below(size)
+        if (below(size) < 0) tops.remove(elems(size).tag)
+        else tops.put(elems(size).tag, below(size))
         elems(size) = null
       }
 
@@ -180,22 +159,6 @@ object HtmlParser {
         var k = 0
         while (k < scope.length) { bound = math.max(bound, top(scope(k))); k += 1 }
         if (t > bound) popTo(t)
-      }
-    }
-
-    private def rehash(): Unit = {
-      val oldKeys = keys
-      val oldTops = tops
-      keys = new Array[String](oldKeys.length * 2)
-      tops = new Array[Int](oldKeys.length * 2)
-      var i = 0
-      while (i < oldKeys.length) {
-        if (oldKeys(i) != null) {
-          val s = -1 - probe(oldKeys(i))
-          keys(s) = oldKeys(i)
-          tops(s) = oldTops(i)
-        }
-        i += 1
       }
     }
   }

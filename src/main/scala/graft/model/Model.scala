@@ -33,26 +33,16 @@ final case class Run(text: String, bold: Boolean, italic: Boolean, hyperlink: St
   def isEmpty: Boolean = text.isEmpty
 }
 
-/** Paragraph hints; mirrors text_processor.py:443-475 (plain-text fallback defaults). */
+/** Paragraph hints (text_processor.py:443-475 analog). List items carry
+  * their bullet level and kind; `likelyHeading` marks h3-h6 paragraphs (the
+  * X10 likely_heading path), never list items or plain paragraphs. */
 final case class Hints(
     bulletLevel: Int,       // -1 = none (text_processor.py:254-285)
     isBullet: Boolean,
     isNumbered: Boolean,
-    allCaps: Boolean,
-    likelyHeading: Boolean  // 0 < len < 80
+    allCaps: Boolean,       // TextStats.isAllCaps of the clean text
+    likelyHeading: Boolean
 )
-
-object Hints {
-  /** Port of text_processor.py:443-475 `_analyze_plain_text_hints`. */
-  def ofPlainText(text: String): Hints = {
-    val stripped = text.trim
-    Hints(
-      bulletLevel = -1, isBullet = false, isNumbered = false,
-      allCaps = graft.extract.TextStats.isAllCaps(stripped),
-      likelyHeading = stripped.nonEmpty && stripped.length < 80
-    )
-  }
-}
 
 final case class Paragraph(cleanText: String, runs: Vector[Run], hints: Hints)
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared embedding-similarity machinery: deterministic hyperplane banks,
@@ -111,12 +111,13 @@ object Ann {
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
 
-  /** Train-once-per-(app, corpus) memo: centroid training is a fixed
-    * driver-side cost (a few small jobs); repeated ann_ivf invocations in
-    * one session reuse the table. */
-  def trainCentroidsCached(e: DataFrame, cacheKey: String, k: Int,
-      iters: Int): Array[Array[Double]] =
-    centroidCache.computeIfAbsent(cacheKey, _ => trainCentroids(e, k, iters))
+  /** The IVF centroids ann_ivf probes for the corpus under `dir`: k = 16
+    * centroids after two Lloyd iterations over its embeddings. Trained once
+    * per (app, corpus): training is a fixed driver-side cost (a few small
+    * jobs); repeated ann_ivf invocations in one session reuse the table. */
+  def ivfCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
+    centroidCache.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ =>
+      trainCentroids(graft.OpsQueries.input(s, s"$dir/embeddings.parquet"), k = 16, iters = 2))
 
   def trainCentroids(e: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
     var cents: Array[Array[Double]] = e.filter(col("vec_id") < k).orderBy("vec_id")

@@ -207,12 +207,12 @@ object Multimodal {
         | CAST(CASE WHEN vec_id % 3 = 0 THEN 64 + vec_id % 64 ELSE 0 END AS INT) AS width,
         | CAST(CASE WHEN vec_id % 3 = 0 THEN 48 + vec_id % 48 ELSE 0 END AS INT) AS height,
         | CAST(CASE WHEN vec_id % 3 = 1 THEN 8000 + (vec_id % 5) * 8000 ELSE 0 END AS INT) AS sample_rate,
-        | CAST(CASE WHEN vec_id % 3 = 2 THEN 16 + vec_id % 240 ELSE 0 END AS INT) AS n_frames
+        | CAST(CASE WHEN vec_id % 3 NOT IN (0, 1) THEN 16 + vec_id % 240 ELSE 0 END AS INT) AS n_frames
         |FROM embeddings ORDER BY media_id""".stripMargin,
     "mm_framesample" ->
       """SELECT vec_id AS media_id,
         |       CAST(UNNEST(RANGE(0, 16 + vec_id % 240, 10)) AS INT) AS frame_index
-        |FROM embeddings WHERE vec_id % 3 = 2
+        |FROM embeddings WHERE vec_id % 3 NOT IN (0, 1)
         |ORDER BY media_id, frame_index""".stripMargin,
     "mm_resize" ->
       """SELECT vec_id AS media_id,

@@ -412,11 +412,9 @@ object OpsQueries {
     // deterministic hash sample; assignment + probe ranking are literal-
     // array dot products in one codegen projection. -----------------------
     "ann_ivf" -> ((s: SparkSession, dir: String) => {
-      val k = 16; val nprobe = 4
-      val e = embs(s, dir)
-      val cents = Ann.trainCentroidsCached(e,
-        s.sparkContext.applicationId + "|" + dir, k, iters = 2)
-      val ranked = e.withColumn("rk", Ann.centroidRanking(col("embedding"), cents))
+      val nprobe = 4
+      val ranked = embs(s, dir)
+        .withColumn("rk", Ann.centroidRanking(col("embedding"), Ann.ivfCentroids(s, dir)))
       val cand = ranked.select(col("vec_id").as("cand_id"),
         col("embedding").as("ce"), element_at(col("rk"), 1).as("probe"))
       val q = ranked.filter(col("vec_id") < 10)

@@ -3,7 +3,7 @@ package graft.sources
 import java.util
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.conf.Configuration
+import org.apache.spark.util.SerializableConfiguration
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -49,25 +49,6 @@ class PagesDataSource extends TableProvider {
       properties: util.Map[String, String]): Table =
     new PagesTable(properties.get("path"))
   override def supportsExternalMetadata(): Boolean = false
-}
-
-/** Java-serializable Hadoop Configuration carrier (the class itself is
-  * not Serializable; Spark's own wrapper is private[spark]) — lets the
-  * readers see the SESSION'S filesystem settings (s3a credentials,
-  * hdfs nameservices, spark.hadoop.*) instead of empty defaults
-  * (round-5 review: `new Configuration()` only works on a default local
-  * filesystem). */
-final class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
 }
 
 object PagesDataSource {
@@ -126,8 +107,9 @@ final class PagesScan(sfDir: String, required: StructType) extends Scan with Bat
       s"required=${required.fieldNames.mkString(",")})"
 
   // the SESSION's Hadoop conf (captured at scan build on the driver):
-  // credentials/endpoints for non-local filesystems ride to the readers
-  private val hadoopConf = new SerializableHadoopConf(
+  // credentials/endpoints for non-local filesystems (s3a, hdfs
+  // nameservices, spark.hadoop.*) ride to the readers
+  private val hadoopConf = new SerializableConfiguration(
     org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -159,7 +141,7 @@ final case class PagesInputPartition(seedPath: String, rowGroup: Int,
     rowFrom: Long, rowUntil: Long) extends InputPartition
 
 final class PagesReaderFactory(requiredFields: Array[String],
-    hadoopConf: SerializableHadoopConf)
+    hadoopConf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PagesPartitionReader(partition.asInstanceOf[PagesInputPartition],
@@ -170,7 +152,7 @@ final class PagesReaderFactory(requiredFields: Array[String],
   * page rows. Body synthesis (html/text) is skipped when pruned away. */
 final class PagesPartitionReader(part: PagesInputPartition,
     requiredFields: Array[String],
-    hadoopConf: SerializableHadoopConf)
+    hadoopConf: SerializableConfiguration)
     extends PartitionReader[InternalRow] {
 
   private val needsBody =

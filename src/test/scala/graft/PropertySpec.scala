@@ -3,8 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.extract.{Boilerplate, Extractor}
+import scala.collection.mutable.ArrayBuffer
+import graft.extract.{Boilerplate, Extractor, Runs}
 import graft.html.{Elem, HtmlParser, Node, TextNode}
+import graft.model.Run
 
 /** Property tests (SURVEY.md §5): the extractor is total, deterministic,
   * and its spans always form a sorted, non-overlapping index into the
@@ -13,6 +15,7 @@ import graft.html.{Elem, HtmlParser, Node, TextNode}
   * drawn with raw ScalaCheck generators from a fixed seed.)
   */
 class PropertySpec extends AnyFunSuite {
+  import PropertySpec.Seg
 
   /** Deterministically sample `n` values from `gen` and assert `f` on each. */
   private def forAll[A](gen: Gen[A], n: Int = 200)(f: A => Unit): Unit = {
@@ -212,6 +215,122 @@ class PropertySpec extends AnyFunSuite {
       s"checked $checked, furniture $furniture, containers at 49/50/51 words $atBoundary")
   }
 
+  // ---- paragraph runs against a char-level reference ----------------------
+
+  private def segNodes(s: Seg): Seq[Node] = {
+    var nodes: Seq[Node] =
+      new TextNode(s.text) +: (if (s.br) Seq(new Elem("br", Map.empty)) else Nil)
+    def wrap(tag: String, attrs: Map[String, String]): Unit = {
+      val e = new Elem(tag, attrs)
+      e.children ++= nodes
+      nodes = Seq(e)
+    }
+    if (s.link.nonEmpty) wrap("a", Map("href" -> s.link))
+    if (s.italic) wrap("i", Map.empty)
+    if (s.bold) wrap("b", Map.empty)
+    nodes
+  }
+
+  /** The runs of `segs` by definition: tag every char (a <br> is a '\n')
+    * with its segment's flags; with `collapse`, drop leading and trailing
+    * whitespace and turn every other whitespace stretch into one ' ' with
+    * the flags of its first char; then group equal flags. */
+  private def referenceRuns(segs: Seq[Seg], collapse: Boolean): Vector[Run] = {
+    val chars = segs.flatMap { s =>
+      (s.text + (if (s.br) "\n" else "")).map(c => Run(c.toString, s.bold, s.italic, s.link))
+    }
+    def ws(i: Int) = Character.isWhitespace(chars(i).text.charAt(0))
+    val kept = ArrayBuffer[Run]()
+    var i = 0
+    while (i < chars.length) {
+      if (collapse && ws(i)) {
+        var j = i
+        while (j < chars.length && ws(j)) j += 1
+        if (i > 0 && j < chars.length) kept += chars(i).copy(text = " ")
+        i = j
+      } else { kept += chars(i); i += 1 }
+    }
+    val runs = ArrayBuffer[Run]()
+    kept.foreach { c =>
+      if (runs.nonEmpty && runs.last.copy(text = c.text) == c)
+        runs(runs.length - 1) = runs.last.copy(text = runs.last.text + c.text)
+      else runs += c
+    }
+    runs.toVector
+  }
+
+  test("paragraph runs equal a char-level reference: whitespace collapse and format grouping") {
+    val pieces = Array("a", "bc", "Word", " ", "  ", "\t", "\n", "\r", "\u2003", "\u00a0", "")
+    val links = Array("", "", "https://a.example/1", "#top")
+    val r = new java.util.Random(5L)
+    var spaceAcrossFormats = 0
+    (1 to 3000).foreach { n =>
+      val segs = Vector.fill(1 + r.nextInt(6)) {
+        Seg(Seq.fill(r.nextInt(4))(pieces(r.nextInt(pieces.length))).mkString,
+          r.nextInt(3) == 0, r.nextInt(3) == 0, links(r.nextInt(links.length)),
+          r.nextInt(5) == 0)
+      }
+      // a <p> collapses whitespace; a <pre> keeps it (and, unlike <p>, is
+      // no block boundary that adds a '\n' at either end)
+      Seq(true, false).foreach { collapse =>
+        val p = new Elem(if (collapse) "p" else "pre", Map.empty)
+        segs.foreach(s => p.children ++= segNodes(s))
+        val expected = referenceRuns(segs, collapse)
+        val joined = expected.map(_.text).mkString
+        val clean = if (collapse) joined else joined.stripLineEnd
+        val got = Runs.paragraphOf(p, verbatim = !collapse)
+        if (clean.trim.isEmpty) assert(got.isEmpty, s"paragraph $n: $segs")
+        else {
+          assert(got.map(_.cleanText).contains(clean), s"paragraph $n: $segs")
+          assert(got.map(_.runs).contains(expected), s"paragraph $n, collapse $collapse: $segs")
+        }
+        if (collapse) spaceAcrossFormats += expected.sliding(2).count {
+          case Seq(a, b) => a.text.endsWith(" ") && !b.text.startsWith(" ")
+          case _ => false
+        }
+      }
+    }
+    assert(spaceAcrossFormats > 500, s"only $spaceAcrossFormats spaces at a format change")
+  }
+
+  test("open elements: the per-tag index equals a brute-force scan of the stack") {
+    val tags = Array("p", "li", "td", "tr", "table")
+    val r = new java.util.Random(11L)
+    var restored = 0 // pops that leave a lower open element of a popped tag
+    (1 to 300).foreach { round =>
+      val root = new Elem("#root", Map.empty)
+      val open = new HtmlParser.OpenElements(root)
+      val brute = ArrayBuffer[Elem](root)
+      def bruteTop(t: String): Int = brute.lastIndexWhere(_.tag == t)
+      def bruteCloseFrom(from: Int): Unit = {
+        val popped = brute.drop(from).map(_.tag).toSet
+        brute.dropRightInPlace(brute.length - from)
+        restored += popped.count(t => bruteTop(t) > 0)
+      }
+      (1 to 200).foreach { step =>
+        r.nextInt(10) match {
+          case k if k < 5 =>
+            val e = new Elem(tags(r.nextInt(tags.length)), Map.empty)
+            open.push(e)
+            brute += e
+          case k if k < 7 =>
+            val from = 1 + r.nextInt(brute.length)
+            open.popTo(from)
+            bruteCloseFrom(from)
+          case _ =>
+            val t = tags(r.nextInt(tags.length))
+            val scope = Array.fill(r.nextInt(3))(tags(r.nextInt(tags.length)))
+            open.closeInScope(t, scope)
+            val at = bruteTop(t)
+            if (at > 0 && scope.forall(bruteTop(_) < at)) bruteCloseFrom(at)
+        }
+        assert(open.last eq brute.last, s"round $round, step $step")
+        tags.foreach(t => assert(open.top(t) == bruteTop(t), s"round $round, step $step, <$t>"))
+      }
+    }
+    assert(restored > 1000, s"only $restored pops restored a lower same-tag entry")
+  }
+
   // ---- fused hash-kernel laws (implementation-independent properties, on
   // top of the exact-equality pins in SparkJobsSpec) -----------------------
 
@@ -258,4 +377,11 @@ class PropertySpec extends AnyFunSuite {
       assert(simhashOf(hs ++ hs) == base, "uniform duplication changed the fingerprint")
     }
   }
+}
+
+object PropertySpec {
+  /** One inline segment: `text` under the <b>/<i>/<a href> wrappers its
+    * flags ask for, followed inside them by a <br> when `br`. */
+  private final case class Seg(text: String, bold: Boolean, italic: Boolean,
+      link: String, br: Boolean)
 }

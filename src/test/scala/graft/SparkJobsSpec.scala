@@ -1485,12 +1485,14 @@ class SparkJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id"), col("s"), col("ts"), col("floats"), col("m"), col("dec"), col("st"),
         array(struct(col("id").as("i"))).as("nested"))
       .repartition(2).write.parquet(written)
-    // pyarrow-written files (no Spark schema in the footer), a Spark-written
-    // directory, and one Spark-written file
+    // every pyarrow-written input table (no Spark schema in the footer;
+    // events and lineitem hold timestamp[us]), a Spark-written directory,
+    // and one Spark-written file
     val part = Files.list(java.nio.file.Paths.get(written)).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get.toString
-    Seq(s"$sf0001/documents.parquet", s"$sf0001/embeddings.parquet",
-        s"$sf0001/orders.parquet", written, part).foreach { p =>
+    val inputs = Seq("customer", "documents", "embeddings", "events", "lineitem",
+      "nation", "orders", "part", "region", "supplier").map(t => s"$sf0001/$t.parquet")
+    (inputs ++ Seq(written, part)).foreach { p =>
       assert(ResumableRun.footerSchema(p) == spark.read.parquet(p).schema, p)
     }
   }
